@@ -6,11 +6,12 @@ import graft.ListenEvent
 import graft.operators.{IncrementalGraph, QueryService}
 import graft.sources.TaggedJson
 import org.apache.spark.sql.DataFrame
-import java.io.{BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
+import java.io.{BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
 import java.util.concurrent.LinkedBlockingQueue
+import scala.jdk.CollectionConverters._
 
 /** TCP tagged-JSON network façade — the reference's only network ingress
   * (reference: reactive_db/src/networking/client_connection.rs:56-76,
@@ -51,18 +52,25 @@ import java.util.concurrent.LinkedBlockingQueue
   * order is preserved by the writer queue.
   *
   * Scale note: this façade is the reference-parity POINT-QUERY surface
-  * (find/range/insert/delete/listen on graph tables) — results stream to
-  * the façade via toLocalIterator and a batch beyond [[maxResultRows]]
-  * fails that request loudly rather than buffering a cluster's output in
-  * the server heap. Bulk analytics belong on the DataFrame surface, not
-  * behind a socket.
+  * (find/range/insert/delete/listen on graph tables). Edits of a one-row
+  * InsertData are driver-local rows and render with `collect()`, no Spark
+  * job; query results and other edits stream off the cluster via
+  * toLocalIterator. Either way a batch beyond [[maxResultRows]] fails that
+  * request loudly rather than buffering a cluster's output in the server
+  * heap. Bulk analytics belong on the DataFrame surface, not behind a
+  * socket.
   *
   * Divergences from the reference, on purpose: a malformed frame or an
   * unknown listen table answers that CLIENT with an Err instead of
   * panicking the whole db thread (client_connection.rs:74, db_thread.rs:123
-  * crash the process). InsertData/DeleteData respond with ALL committed
-  * edits — source plus cascaded derived rows, like the reference
-  * (db_thread.rs:82-104) — with one rendering nuance: an aggregation
+  * crash the process). A frame that is not JSON is answered with an Err
+  * carrying the nil request_id; a request that fails in dispatch is
+  * answered with an Err carrying its request_id (nil when it has none); a
+  * negative length prefix, or one over a fixed frame cap, closes that
+  * connection, since the stream can no longer be framed.
+  * InsertData/DeleteData respond with ALL committed edits — source plus
+  * cascaded derived rows, like the reference (db_thread.rs:82-104) — with
+  * one rendering nuance: an aggregation
   * upsert (Update = delete old + insert new) surfaces as its new row in an
   * InsertData response and its removed rows in a DeleteData response;
   * both sides of every edit stream to StartListen subscribers.
@@ -71,6 +79,9 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
   private val mapper = new ObjectMapper()
   private val queries = new QueryService(graph.table _)
   private val NilUuid = "00000000-0000-0000-0000-000000000000"
+  /** Largest accepted request frame; a longer length prefix closes the
+    * connection instead of allocating it. */
+  private val MaxFrameBytes = 16 << 20
 
   /** Per-request cap on rows handed from the cluster to the façade. */
   @volatile var maxResultRows: Int = 1 << 20
@@ -101,7 +112,13 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
     try while (running) {
       val (client, root) = dispatchQueue.take()
       try dispatch(client, root)
-      catch { case e: Exception => System.err.println(s"[graft-net] dropped bad frame: $e") }
+      catch {
+        case e: Exception =>
+          // answer the caller: it is waiting on this request_id
+          System.err.println(s"[graft-net] request failed: $e")
+          val variant = if (queryKind(root).contains("FindOne")) "OneResult" else "ManyResults"
+          client.send(requestResponse(requestIdOf(root), errResponse(variant, e.getMessage)))
+      }
     } catch { case _: InterruptedException => }
   }
 
@@ -133,15 +150,23 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
     var live = true
     try while (live) {
       val size = in.readInt()
-      if (size == 0) { client.close(); clients.remove(client); live = false }
+      // zero closes (client_connection.rs:63-64); a bad length leaves no
+      // way to find the next frame, so it closes too
+      if (size <= 0 || size > MaxFrameBytes) live = false
       else {
         val buf = new Array[Byte](size)
         in.readFully(buf)
-        dispatchQueue.put((client, mapper.readTree(new String(buf, UTF_8))))
+        val root =
+          try mapper.readTree(new String(buf, UTF_8))
+          catch { case _: java.io.IOException => null }
+        if (root != null && root.isObject) dispatchQueue.put((client, root))
+        else client.send(requestResponse(NilUuid,
+          errResponse("ManyResults", "request frame is not a JSON object")))
       }
     } catch {
-      case _: EOFException | _: SocketException =>
-        client.close(); clients.remove(client)
+      case _: java.io.IOException => // EOF, reset, or closed by us
+    } finally {
+      client.close(); clients.remove(client)
     }
   }
 
@@ -150,9 +175,18 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
   private val queryKinds =
     Set("FindOne", "LessThan", "GetAll", "GreaterThan", "InsertData", "DeleteData")
 
+  private def requestIdOf(root: JsonNode): String =
+    Option(root.get("Query")).flatMap(q => Option(q.get("request_id")))
+      .filter(_.isTextual).map(_.asText()).getOrElse(NilUuid)
+
+  private def queryKind(root: JsonNode): Option[String] =
+    Option(root.get("Query")).flatMap(q => Option(q.get("query")))
+      .flatMap(_.fieldNames().asScala.nextOption())
+      .orElse(root.fieldNames().asScala.nextOption().filter(queryKinds))
+
   private def dispatch(client: Client, root: JsonNode): Unit = {
     val fields = root.properties().iterator()
-    if (!fields.hasNext) return
+    if (!fields.hasNext) throw new IllegalArgumentException("empty request frame")
     val top = fields.next()
     top.getKey match {
       case "Query" =>
@@ -167,7 +201,7 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
         // bare Query frame (test_requests.txt:1-3 shape, no request_id)
         client.send(requestResponse(NilUuid, handleQuery(legacy, top.getValue)))
       case other =>
-        System.err.println(s"[graft-net] unknown request kind: $other")
+        throw new IllegalArgumentException(s"unknown request kind: $other")
     }
   }
 
@@ -192,22 +226,19 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
         // all deleted entries, source + cascaded (database.rs:197-270)
         manyResults(
           graph.deleteWithEdits(table, column, key).flatMap { case (_, _, del) => entriesOf(del) })
+      case other => throw new IllegalArgumentException(s"unknown query kind: $other")
     }
   }
 
   private def startListen(client: Client, table: String, event: String): Unit = {
     // event values are DBResponse::ManyResults like the reference's
     // ListenerHook (listener_hook.rs:75-80)
-    def errValue(message: String): ObjectNode = {
-      val n = mapper.createObjectNode()
-      n.set[ObjectNode]("ManyResults", err(message))
-      n
-    }
     val kind = event match {
       case "Insert" => ListenEvent.Insert
       case "Delete" => ListenEvent.Delete
       case other =>
-        client.send(eventMessage(table, event, errValue(s"unknown listen event: $other")))
+        client.send(eventMessage(table, event,
+          errResponse("ManyResults", s"unknown listen event: $other")))
         return
     }
     try graph.listen(table, kind) { (ins, del) =>
@@ -216,19 +247,20 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
     } catch {
       // unknown table: tell the subscribing client instead of panicking the
       // dispatch thread (the reference's db_thread.rs:123 crashes here)
-      case e: Exception => client.send(eventMessage(table, event, errValue(e.getMessage)))
+      case e: Exception => client.send(eventMessage(table, event, errResponse("ManyResults", e.getMessage)))
     }
   }
 
   // ── result rendering ──────────────────────────────────────────────────
 
   /** Stream rows off the cluster with the same bounded, loud hand-off as
-    * the streaming listen path; entries use the tagged encoding with nulls
-    * omitted (the reference's sparse entries). */
+    * the streaming listen path; rows already in driver memory (a local
+    * edit's deltas) are collected without a job. Entries use the tagged
+    * encoding with nulls omitted (the reference's sparse entries). */
   private def entriesOf(df: DataFrame): Seq[String] = {
     val schema = df.schema
     val limit = maxResultRows
-    val it = df.toLocalIterator()
+    val it = if (IncrementalGraph.isLocal(df)) df.collect().iterator else df.toLocalIterator().asScala
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     while (it.hasNext) {
       buf += TaggedJson.toTaggedJson(it.next(), schema)
@@ -242,6 +274,13 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
   private def err(message: String): JsonNode = {
     val n = mapper.createObjectNode()
     n.put("Err", if (message == null) "error" else message)
+    n
+  }
+
+  /** A `DBResponse` of `variant` carrying `Err(message)`. */
+  private def errResponse(variant: String, message: String): ObjectNode = {
+    val n = mapper.createObjectNode()
+    n.set[ObjectNode](variant, err(message))
     n
   }
 

@@ -61,6 +61,19 @@ private[operators] object SourceOps {
         expr("concat(lpad(hex(unix_micros(current_timestamp())), 16, '0'), '-', uuid())"))
     withId.localCheckpoint(true)
   }
+
+  /** [[ensureEntryId]] for rows already in driver memory: the same
+    * `HEX16-uuid` ids, assigned here instead of in a Spark job. Returns the
+    * schema and rows with `_entryId` last, the [[sourceSchema]] order. */
+  def withEntryIds(schema: StructType, rows: Seq[Row]): (StructType, Seq[Row]) =
+    if (schema.fieldNames.contains(EntryId)) (schema, rows)
+    else {
+      val micros = java.time.temporal.ChronoUnit.MICROS
+        .between(java.time.Instant.EPOCH, java.time.Instant.now())
+      val prefix = f"$micros%016X-"
+      (schema.add(EntryId, StringType),
+        rows.map(r => Row.fromSeq(r.toSeq :+ (prefix + java.util.UUID.randomUUID()))))
+    }
 }
 
 final class PipelineGraph(

@@ -82,7 +82,8 @@ class GraftServerSpec extends SparkSpec {
       }
       throw new AssertionError(s"no matching message in $max frames")
     }
-    def sendCloseFrame(): Unit = { out.writeInt(0); out.flush() }
+    def sendCloseFrame(): Unit = sendLength(0)
+    def sendLength(n: Int): Unit = { out.writeInt(n); out.flush() }
     def close(): Unit = try socket.close() catch { case _: Exception => () }
   }
 
@@ -250,5 +251,96 @@ class GraftServerSpec extends SparkSpec {
         assert(response(c2.recv()).get("ManyResults").get("Ok").size() == 0)
       } finally c2.close()
     } finally { c1.close(); server.close() }
+  }
+
+  test("a request that fails in dispatch is answered with an Err on its request_id") {
+    val server = newServer()
+    val c = new WireClient(server.port)
+    def rr(m: JsonNode): JsonNode = m.get("RequestResponse")
+    try {
+      c.send("""{"Query":{"request_id":"44444444-4444-4444-4444-444444444444","query":{"Bogus":{}}}}""")
+      val r1 = rr(c.recv())
+      assert(r1.get("request_id").asText() == "44444444-4444-4444-4444-444444444444")
+      assert(r1.get("response").get("ManyResults").get("Err").asText().contains("Bogus"))
+      // no query body at all
+      c.send("""{"Query":{"request_id":"55555555-5555-5555-5555-555555555555"}}""")
+      val r2 = rr(c.recv())
+      assert(r2.get("request_id").asText() == "55555555-5555-5555-5555-555555555555")
+      assert(r2.get("response").get("ManyResults").has("Err"))
+      // an unknown top-level kind has no request_id: answered on the nil one
+      c.send("""{"Bogus":{}}""")
+      val r3 = rr(c.recv())
+      assert(r3.get("request_id").asText() == NilUuid)
+      assert(r3.get("response").get("ManyResults").has("Err"))
+    } finally { c.close(); server.close() }
+  }
+
+  test("a frame that is not JSON is answered with an Err on the nil request_id; the connection keeps serving") {
+    val server = newServer()
+    val c = new WireClient(server.port)
+    try {
+      c.send("""{"GetAll": not json""")
+      val r = c.recv().get("RequestResponse")
+      assert(r.get("request_id").asText() == NilUuid)
+      assert(r.get("response").get("ManyResults").has("Err"))
+      c.send("""{"GetAll":{"table":"users","column":"name","key":{"Str":"x"}}}""")
+      assert(response(c.recv()).get("ManyResults").get("Ok").size() == 0)
+    } finally { c.close(); server.close() }
+  }
+
+  /** A length prefix the server refuses: the connection closes, and the
+    * server keeps serving others. */
+  private def refusesLength(length: Int): Unit = {
+    val server = newServer()
+    val c1 = new WireClient(server.port)
+    try {
+      c1.sendLength(length)
+      val closed = intercept[java.io.IOException](c1.recv())
+      assert(!closed.isInstanceOf[java.net.SocketTimeoutException], "the connection was left open")
+      val c2 = new WireClient(server.port)
+      try {
+        c2.send("""{"GetAll":{"table":"users","column":"name","key":{"Str":"x"}}}""")
+        assert(response(c2.recv()).get("ManyResults").get("Ok").size() == 0)
+      } finally c2.close()
+    } finally { c1.close(); server.close() }
+  }
+
+  test("a negative length prefix closes the connection; the server keeps serving") {
+    refusesLength(-5)
+  }
+
+  test("a length prefix over the frame cap closes the connection without allocating it") {
+    refusesLength(Int.MaxValue)
+  }
+
+  test("a one-row InsertData through source→function→filter runs no Spark job, rendering included") {
+    val server = new GraftServer(new IncrementalGraph(spark, PipelineConfig.fromYaml(
+      """tables:
+        |  - name: testTable
+        |    kind: source
+        |    columns: {testForIndex: Integer, testForIteration: Integer}
+        |  - name: derived
+        |    kind: function
+        |    source_table: testTable
+        |    functions: ["newColumn ~ testForIteration + 2"]
+        |  - name: passing
+        |    kind: filter
+        |    source_table: derived
+        |    filter: "newColumn > 3"
+        |""".stripMargin)))
+    val c = new WireClient(server.port)
+    def insert(it: Int): JsonNode = {
+      c.send(s"""{"InsertData":{"table":"testTable","entry":{"testForIndex":{"Integer":1},"testForIteration":{"Integer":$it}}}}""")
+      response(c.recv()).get("ManyResults").get("Ok")
+    }
+    try {
+      insert(1)
+      var edits: JsonNode = null
+      val jobs = jobsDuring { edits = insert(5) }
+      assert(jobs == 0, s"$jobs Spark jobs for a one-row InsertData")
+      // source row, derived row, and the filter-passing row
+      assert(edits.size() == 3)
+      assert(edits.get(2).get("newColumn").get("Integer").asLong() == 7L)
+    } finally { c.close(); server.close() }
   }
 }

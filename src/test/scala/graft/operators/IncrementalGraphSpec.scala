@@ -3,6 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import graft.config.PipelineConfig
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
@@ -45,9 +46,10 @@ class IncrementalGraphSpec extends SparkSpec {
   private def rows(schema: StructType, rs: Row*): DataFrame =
     spark.createDataFrame(rs.asJava, schema)
 
-  private def canon(df: DataFrame): Set[Seq[Any]] = {
+  /** Rows as a multiset, lineage and ids ignored. */
+  private def bag(df: DataFrame): Seq[String] = {
     val keep = df.columns.filterNot(Seq("_entryId", "_sourceEntryId").contains).sorted
-    df.select(keep.head, keep.tail: _*).collect().map(_.toSeq).toSet
+    df.select(keep.head, keep.tail.toIndexedSeq: _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
   }
 
   test("incremental tables equal from-scratch recompute after mixed edits") {
@@ -65,7 +67,7 @@ class IncrementalGraphSpec extends SparkSpec {
     val scratch = new PipelineGraph(spark, cfg,
       Map("grades" -> inc.table("grades"), "users" -> inc.table("users")))
     Seq("curved", "passing", "stats", "profile").foreach { t =>
-      assert(canon(inc.table(t)) == canon(scratch.table(t)), s"table $t diverged")
+      assert(bag(inc.table(t)) == bag(scratch.table(t)), s"table $t diverged")
     }
     // spot-check semantics: Bob's group was fully rebuilt after delete+reinsert
     val stats = inc.table("stats").collect()
@@ -97,7 +99,7 @@ class IncrementalGraphSpec extends SparkSpec {
         StructType(Seq(StructField("grade", LongType)))))
     val scratch = new PipelineGraph(spark, cfg,
       Map("grades" -> inc.table("grades"), "users" -> inc.table("users")))
-    assert(canon(inc.table("stats")) == canon(scratch.table("stats")))
+    assert(bag(inc.table("stats")) == bag(scratch.table("stats")))
     val nullGroup = inc.table("stats").collect()
       .find(_.isNullAt(0)).getOrElse(fail("null group missing"))
     assert(nullGroup.getAs[Long]("sum") == 150L)
@@ -191,8 +193,9 @@ class IncrementalGraphSpec extends SparkSpec {
 
   test("mid-cascade failure rolls back every table and notifies nobody (reference database.rs:317-396)") {
     // a flaky action: bootstraps fine, then throws while the cascade
-    // computes the action table's delta — AFTER upstream tables already
-    // applied their part of the edit
+    // computes the action table's delta — AFTER the Function, Aggregation
+    // and Union nodes upstream of it in the cascade applied their part of
+    // the edit (local rows, tombstones, and on the batch edit a compaction)
     @volatile var explode = false
     ActionRegistry.register(GraftAction("flakyAction", identity,
       s => { if (explode) throw new RuntimeException("boom"); s }))
@@ -201,34 +204,127 @@ class IncrementalGraphSpec extends SparkSpec {
         |  - name: grades
         |    kind: source
         |    columns: {name: Str, grade: Integer}
+        |  - name: users
+        |    kind: source
+        |    columns: {name: Str, age: Integer}
+        |  - name: curved
+        |    kind: function
+        |    source_table: grades
+        |    functions: ["curvedGrade ~ grade + 5"]
         |  - name: stats
         |    kind: aggregation
         |    source_table: grades
         |    aggregated_column: name
         |    functions: ["cnt ~ memo.cnt + 1", "sum ~ memo.sum + grade"]
+        |  - name: profile
+        |    kind: union
+        |    tables_and_foreign_keys: [[users, name], [stats, aggregatedColumn]]
         |  - name: acted
         |    kind: action
         |    source_table: grades
         |    action: flakyAction
         |""".stripMargin)
+    val tables = Seq("grades", "users", "curved", "stats", "profile", "acted")
     val inc = new IncrementalGraph(spark, cfg)
     inc.insert("grades", rows(gradeSchema, Row("Alex", 90L)))
+    inc.insert("users", rows(userSchema, Row("Alex", 22L)))
     val calls = scala.collection.mutable.ArrayBuffer.empty[String]
-    Seq("grades", "stats", "acted").foreach(t => inc.listen(t)((_, _) => calls += t))
-    val before = Seq("grades", "stats", "acted").map(t => t -> canon(inc.table(t))).toMap
+    tables.foreach(t => inc.listen(t)((_, _) => calls += t))
+    val before = tables.map(t => t -> bag(inc.table(t))).toMap
 
     explode = true
-    assertThrows[RuntimeException](inc.insert("grades", rows(gradeSchema, Row("Alex", 80L))))
-    // every table — including those UPSTREAM of the failure — restored
-    Seq("grades", "stats", "acted").foreach { t =>
-      assert(canon(inc.table(t)) == before(t), s"$t not rolled back")
+    val batch = (0 to IncrementalGraph.CompactAt).map(i => Row(s"n$i", i.toLong))
+    Seq(rows(gradeSchema, Row("Alex", 80L)), rows(gradeSchema, batch: _*)).foreach { edit =>
+      assertThrows[RuntimeException](inc.insert("grades", edit))
+      // every table — including those UPSTREAM of the failure — restored
+      tables.foreach(t => assert(bag(inc.table(t)) == before(t), s"$t not rolled back"))
+      assert(calls.isEmpty, s"subscribers must not see a rolled-back edit: $calls")
     }
-    assert(calls.isEmpty, s"subscribers must not see a rolled-back edit: $calls")
 
-    // the graph stays usable: the same edit commits once the fault clears
+    // the graph stays usable: the same edits commit once the fault clears
     explode = false
     inc.insert("grades", rows(gradeSchema, Row("Alex", 80L)))
-    assert(canon(inc.table("stats")) != before("stats"))
+    inc.insert("grades", rows(gradeSchema, batch: _*))
     assert(calls.nonEmpty)
+    val alex = inc.table("profile").collect().filter(_.getAs[String]("matchingKey") == "Alex")
+    assert(alex.map(r => (r.getAs[Long]("age"), r.getAs[Long]("sum"))).toSeq == Seq((22L, 170L)))
+    assert(inc.table("acted").count() == 2 + batch.size)
+  }
+
+  test("incremental tables equal from-scratch recompute across compaction, local and non-local edits") {
+    val cfg = PipelineConfig.fromYaml(yaml)
+    val inc = new IncrementalGraph(spark, cfg)
+    def grades(rs: Row*): Unit = inc.insert("grades", rows(gradeSchema, rs: _*))
+
+    grades((0 until 20).map(i => Row(s"n$i", 40L + 3 * i)): _*)
+    // user names stay unique: the union upserts by key, a recompute would
+    // fan out a repeated one
+    inc.insert("users", rows(userSchema, (0 until 25).map(i => Row(s"n$i", 20L + i)): _*))
+    // a non-local insert: the rows come from a Spark job, not the driver
+    inc.insert("grades", spark.range(10)
+      .select(concat(lit("n"), col("id").cast("string")).as("name"), (col("id") * 7 + 30).as("grade")))
+    inc.delete("grades", "name", "n3")
+    (0 until 4).foreach(i => grades(Row(s"n${i * 5}", 61L + i)))
+    // one batch of new keys past the compaction cap of stats and profile
+    grades((0 to IncrementalGraph.CompactAt + 5).map(i => Row(s"m$i", i % 100L)): _*)
+    inc.insert("users", rows(userSchema, Row("m1", 40L)))
+    grades(Row("m1", 77L), Row("n1", 99L))
+    inc.delete("users", "name", "n7")
+    grades(Row(null, 55L))
+    inc.insert("grades", spark.range(1).select(lit("m2").as("name"), lit(12L).as("grade")))
+    grades(Row("m2", 13L))
+
+    val scratch = new PipelineGraph(spark, cfg,
+      Map("grades" -> inc.table("grades"), "users" -> inc.table("users")))
+    Seq("curved", "passing", "stats", "profile").foreach { t =>
+      assert(bag(inc.table(t)) == bag(scratch.table(t)), s"table $t diverged")
+    }
+    val stats = inc.table("stats").collect()
+      .map(r => r.getAs[String]("aggregatedColumn") -> r.getAs[Long]("sum")).toMap
+    assert(stats("m2") == 2L + 12L + 13L)
+    assert(!stats.contains("n3"))
+  }
+
+  test("driver-assigned _entryIds keep the time-prefixed format and sort after the seed's") {
+    val cfg = PipelineConfig.fromYaml(yaml)
+    val seed = spark.range(3)
+      .select(concat(lit("s"), col("id").cast("string")).as("name"), col("id").as("grade"))
+    val inc = new IncrementalGraph(spark, cfg, Map("grades" -> seed))
+    val seedIds = inc.table("grades").collect().map(_.getAs[String]("_entryId"))
+    val committed = inc.insert("grades", rows(gradeSchema, Row("a", 1L), Row("b", 2L)))
+    assert(IncrementalGraph.isLocal(committed))
+    val ids = committed.collect().map(_.getAs[String]("_entryId"))
+    val format = "[0-9A-F]{16}-[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    (seedIds ++ ids).foreach(id => assert(id.matches(format), s"bad id $id"))
+    assert(ids.distinct.length == 2)
+    // union rebuilds take max(_entryId) as the latest row of a key
+    assert(ids.min > seedIds.max)
+  }
+
+  test("a one-row insert through source→function→filter runs no Spark job") {
+    val cfg = PipelineConfig.fromYaml(
+      """tables:
+        |  - name: grades
+        |    kind: source
+        |    columns: {name: Str, grade: Integer}
+        |  - name: curved
+        |    kind: function
+        |    source_table: grades
+        |    functions: ["curvedGrade ~ grade + 5"]
+        |  - name: passing
+        |    kind: filter
+        |    source_table: curved
+        |    filter: "curvedGrade >= 60"
+        |""".stripMargin)
+    val inc = new IncrementalGraph(spark, cfg)
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 90L)))
+    var edits: Seq[(String, DataFrame, DataFrame)] = Nil
+    val jobs = jobsDuring {
+      edits = inc.insertWithEdits("grades", rows(gradeSchema, Row("Bob", 70L)))
+      edits.foreach { case (_, ins, del) => ins.collect(); del.collect() }
+    }
+    assert(jobs == 0, s"$jobs Spark jobs for a one-row local insert")
+    assert(edits.map(_._1) == Seq("grades", "curved", "passing"))
+    assert(inc.table("passing").count() == 2)
   }
 }
