@@ -3160,7 +3160,8 @@ object SparkEntry {
         val in = s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "8").parquet(inDir)
         val q = graft.streaming.StreamingOps.bm25AbsorbStream(
-          in, "doc_id", "text", tbl)()
+          in, "doc_id", "text", tbl,
+          checkpointLocation = Some(new java.io.File(base, "ckpt").getAbsolutePath))()
         try q.processAllAvailable() finally q.stop()
         s.catalog.refreshTable(tbl); s.catalog.refreshTable(tbl + "_stats")
         RetrievalOps.bm25SearchStore(s, tbl,
@@ -3484,7 +3485,8 @@ object SparkEntry {
         val in = s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "8").parquet(inDir)
         val q = graft.streaming.StreamingOps.cooccurrenceAbsorbStream(
-          in, "text", tbl, window = 2)()
+          in, "text", tbl, window = 2,
+          checkpointLocation = Some(new java.io.File(base, "ckpt").getAbsolutePath))()
         try q.processAllAvailable() finally q.stop()
         s.catalog.refreshTable(tbl)
         TextFunctions.ppmiFromStore(s, tbl, minCount = 5)
@@ -3719,7 +3721,8 @@ object SparkEntry {
         s.conf.set("spark.sql.shuffle.partitions", "8")
         try {
           val q = sess.writeStream.outputMode("append")
-            .format("memory").queryName(sink).start()
+            .format("memory").queryName(sink)
+            .option("checkpointLocation", new java.io.File(base, "ckpt").getAbsolutePath).start()
           try q.processAllAvailable() finally q.stop()
           s.table(sink)
             .select(col("user_id"),
@@ -4187,7 +4190,8 @@ object SparkEntry {
         val in = s.readStream.schema(emb.schema).parquet(inDir)
         val q = graft.streaming.StreamingOps.knnGraphAbsorbStream(
           in, "vec_id", "embedding", gtbl, vtbl, init64, "vec_id", k = 10,
-          cellAssign = Some(cells))()
+          cellAssign = Some(cells),
+          checkpointLocation = Some(new java.io.File(dirF, "ckpt").getAbsolutePath))()
         try q.processAllAvailable() finally q.stop()
         s.catalog.refreshTable(gtbl); s.catalog.refreshTable(vtbl)
         knnStoreGateTail(s, emb,
@@ -4232,7 +4236,8 @@ object SparkEntry {
         val in = s.readStream.schema(emb.schema).parquet(inDir)
         val q = graft.streaming.StreamingOps.knnGraphAbsorbStream(
           in, "vec_id", "embedding", gtbl, vtbl, init64, "vec_id", k = 10,
-          cellAssign = Some(cells))()
+          cellAssign = Some(cells),
+          checkpointLocation = Some(new java.io.File(dirF, "ckpt").getAbsolutePath))()
         try q.processAllAvailable() finally q.stop()
         s.catalog.refreshTable(gtbl); s.catalog.refreshTable(vtbl)
         knnStoreGateTail(s, emb,
@@ -4322,7 +4327,8 @@ object SparkEntry {
         val in = s.readStream.schema(emb.schema).parquet(inDir)
         val q = graft.streaming.StreamingOps.knnGraphAbsorbStream(
           in, "vec_id", "embedding", gtbl, vtbl, init64, "vec_id", k = 10,
-          cellAssign = Some(cells))()
+          cellAssign = Some(cells),
+          checkpointLocation = Some(new java.io.File(dirF, "ckpt").getAbsolutePath))()
         try {
           q.processAllAvailable() // trigger 1: batch 1 only
           emb.where(isNew2).repartition(2).write.mode("append").parquet(inDir)
@@ -5710,7 +5716,8 @@ object SparkEntry {
         s.conf.set("spark.sql.shuffle.partitions", "8")
         try {
           val q = deduped.select("user_id", "tag").writeStream
-            .outputMode("append").format("memory").queryName(sink).start()
+            .outputMode("append").format("memory").queryName(sink)
+            .option("checkpointLocation", new java.io.File(base, "ckpt").getAbsolutePath).start()
           try q.processAllAvailable() finally q.stop()
           val streamed = s.table(sink).select("user_id", "tag")
             .localCheckpoint(true)
@@ -5837,7 +5844,8 @@ object SparkEntry {
         s.conf.set("spark.sql.shuffle.partitions", "8")
         try {
           val q = joined.select("event_id", "click_id").writeStream
-            .outputMode("append").format("memory").queryName(sink).start()
+            .outputMode("append").format("memory").queryName(sink)
+            .option("checkpointLocation", new java.io.File(base, "ckpt").getAbsolutePath).start()
           try q.processAllAvailable() finally q.stop()
           val streamed = s.table(sink).select("event_id", "click_id")
             .localCheckpoint(true)
@@ -5997,7 +6005,8 @@ object SparkEntry {
         s.conf.set("spark.sql.shuffle.partitions", "8")
         try {
           val q = joined.select("event_id", "click_id").writeStream
-            .outputMode("append").format("memory").queryName(sink).start()
+            .outputMode("append").format("memory").queryName(sink)
+            .option("checkpointLocation", new java.io.File(base, "ckpt").getAbsolutePath).start()
           try q.processAllAvailable() finally q.stop()
           // the memory-format sink is GATE-SIDE instrumentation (joined
           // rows land in driver memory for the parity check) — a

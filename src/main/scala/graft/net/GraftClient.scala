@@ -2,7 +2,7 @@ package graft.net
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import java.io.{DataInputStream, DataOutputStream}
+import java.io.DataInputStream
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
@@ -26,7 +26,10 @@ final class GraftClient(host: String, port: Int, timeoutMs: Int = 60000)
   private val mapper = new ObjectMapper()
   private val socket = new Socket(host, port)
   socket.setSoTimeout(timeoutMs)
-  private val out = new DataOutputStream(socket.getOutputStream)
+  // with Nagle's algorithm a frame sent while an earlier one is unacked
+  // waits for the server's delayed ACK
+  socket.setTcpNoDelay(true)
+  private val out = socket.getOutputStream
   private val in = new DataInputStream(socket.getInputStream)
   private val pending = new ConcurrentHashMap[String, ArrayBlockingQueue[JsonNode]]()
   private val listeners = new CopyOnWriteArrayList[(String, String, JsonNode => Unit)]()
@@ -106,13 +109,14 @@ final class GraftClient(host: String, port: Int, timeoutMs: Int = 60000)
     n
   }
 
+  /** Length prefix and payload go out in ONE write: written apart on an
+    * unbuffered socket they are separate segments, and Nagle's algorithm
+    * holds the payload until the server's delayed ACK of the prefix. */
   private def sendFrame(root: JsonNode): Unit = {
     val payload = mapper.writeValueAsString(root).getBytes(UTF_8)
-    out.synchronized {
-      out.writeInt(payload.length)
-      out.write(payload)
-      out.flush()
-    }
+    val frame = java.nio.ByteBuffer.allocate(4 + payload.length)
+      .putInt(payload.length).put(payload).array() // big-endian, like the wire
+    out.synchronized(out.write(frame))
   }
 
   private def query(kind: String)(fill: ObjectNode => Unit): JsonNode = {

@@ -10,7 +10,8 @@ import java.io.{BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
-import java.util.concurrent.LinkedBlockingQueue
+import java.util.concurrent.{Callable, Executors, Future, LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 /** TCP tagged-JSON network façade — the reference's only network ingress
@@ -45,11 +46,19 @@ import scala.jdk.CollectionConverters._
   *     `{"ManyResults":{"Ok":[entry…]}}` / `{"OneResult":{"Ok":entry|null}}`
   *     / `{"…":{"Err":"message"}}`.
   *
-  * Threading mirrors the reference: one dispatch thread owns the graph
-  * (db_thread.rs serializes every query through one thread), a reader and
-  * a writer thread per connection (client_connection.rs:10-25). Requests
-  * across connections execute in arrival order; per-connection response
-  * order is preserved by the writer queue.
+  * Threading: one dispatch thread owns the graph, as the reference's
+  * db_thread.rs serializes every query through one thread, and each
+  * connection has a reader and a writer thread (client_connection.rs:10-25).
+  * Every request is planned on the dispatch thread in arrival order across
+  * connections. Edits and listens also run there. A read (FindOne, GetAll,
+  * LessThan, GreaterThan) only resolves its table's committed frame there;
+  * table states are immutable values, so the read sees exactly the edits
+  * dispatched before it. Its Spark jobs and rendering then run on a read
+  * pool of `defaultParallelism` threads, so an edit does not queue behind
+  * them. Per-connection order is kept: the read's pending answer takes its
+  * place in the connection's outbound queue at dispatch time, and the
+  * writer sends the queue in order. So a connection gets its responses and
+  * Events in dispatch order, and a read after an insert sees that insert.
   *
   * Scale note: this façade is the reference-parity POINT-QUERY surface
   * (find/range/insert/delete/listen on graph tables). Edits of a one-row
@@ -77,7 +86,6 @@ import scala.jdk.CollectionConverters._
   */
 final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
   private val mapper = new ObjectMapper()
-  private val queries = new QueryService(graph.table _)
   private val NilUuid = "00000000-0000-0000-0000-000000000000"
   /** Largest accepted request frame; a longer length prefix closes the
     * connection instead of allocating it. */
@@ -92,9 +100,12 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
   def port: Int = serverSocket.getLocalPort
 
   private object PoisonPill
+  /** One connection. Its outbound queue holds, in dispatch order, the
+    * frames to send: a rendered String, or the Future of a read's frame. */
   private final class Client(val id: UUID, val socket: Socket) {
     val out = new LinkedBlockingQueue[AnyRef]()
     def send(message: JsonNode): Unit = out.put(mapper.writeValueAsString(message))
+    def sendLater(frame: Future[String]): Unit = out.put(frame)
     def close(): Unit = { out.put(PoisonPill); try socket.close() catch { case _: Exception => } }
   }
 
@@ -108,16 +119,24 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
     t
   }
 
+  /** Runs planned reads. A task renders its whole response frame and never
+    * throws: a failed read is an Err on its request_id. */
+  private val readPool = {
+    val n = new AtomicInteger
+    Executors.newFixedThreadPool(graph.spark.sparkContext.defaultParallelism, { (r: Runnable) =>
+      val t = new Thread(r, s"graft-net-read-$port-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+  }
+
   private val dispatchThread = thread("graft-net-dispatch") {
     try while (running) {
       val (client, root) = dispatchQueue.take()
       try dispatch(client, root)
       catch {
-        case e: Exception =>
-          // answer the caller: it is waiting on this request_id
-          System.err.println(s"[graft-net] request failed: $e")
-          val variant = if (queryKind(root).contains("FindOne")) "OneResult" else "ManyResults"
-          client.send(requestResponse(requestIdOf(root), errResponse(variant, e.getMessage)))
+        // answer the caller: it is waiting on this request_id
+        case e: Exception => client.send(failed(requestIdOf(root), queryKind(root), e))
       }
     } catch { case _: InterruptedException => }
   }
@@ -125,6 +144,9 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
   private val acceptThread = thread("graft-net-accept") {
     try while (running) {
       val socket = serverSocket.accept()
+      // the writer sends a response over its 8 KiB buffer as two writes;
+      // with Nagle's algorithm the second waits for a delayed ACK
+      socket.setTcpNoDelay(true)
       val client = new Client(UUID.randomUUID(), socket)
       clients.add(client)
       startWriter(client)
@@ -134,15 +156,18 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
 
   private def startWriter(client: Client): Unit = thread(s"graft-net-writer-${client.id}") {
     val w = new DataOutputStream(new BufferedOutputStream(client.socket.getOutputStream))
+    def write(payload: String): Unit = {
+      val bytes = payload.getBytes(UTF_8)
+      w.writeInt(bytes.length) // DataOutputStream is big-endian, like the wire
+      w.write(bytes)
+      w.flush()
+    }
     var live = true
     try while (live) client.out.take() match {
       case PoisonPill => live = false
-      case payload: String =>
-        val bytes = payload.getBytes(UTF_8)
-        w.writeInt(bytes.length) // DataOutputStream is big-endian, like the wire
-        w.write(bytes)
-        w.flush()
-    } catch { case _: Exception => /* connection gone */ }
+      case payload: String => write(payload)
+      case read: Future[_] => write(read.get().asInstanceOf[String])
+    } catch { case _: Exception => /* connection gone, or the server closed */ }
   }
 
   private def startReader(client: Client): Unit = thread(s"graft-net-reader-${client.id}") {
@@ -172,8 +197,8 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
 
   // ── dispatch (db_thread.rs:52-113) ────────────────────────────────────
 
-  private val queryKinds =
-    Set("FindOne", "LessThan", "GetAll", "GreaterThan", "InsertData", "DeleteData")
+  private val readKinds = Set("FindOne", "LessThan", "GetAll", "GreaterThan")
+  private val queryKinds = readKinds ++ Set("InsertData", "DeleteData")
 
   private def requestIdOf(root: JsonNode): String =
     Option(root.get("Query")).flatMap(q => Option(q.get("request_id")))
@@ -192,28 +217,54 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
       case "Query" =>
         val requestId = top.getValue.get("request_id").asText()
         val q = top.getValue.get("query").properties().iterator().next()
-        client.send(requestResponse(requestId, handleQuery(q.getKey, q.getValue)))
+        handleQuery(client, requestId, q.getKey, q.getValue)
       case "StartListen" =>
         val table = top.getValue.get("table_name").asText()
         val event = top.getValue.get("event").asText()
         startListen(client, table, event)
       case legacy if queryKinds(legacy) =>
         // bare Query frame (test_requests.txt:1-3 shape, no request_id)
-        client.send(requestResponse(NilUuid, handleQuery(legacy, top.getValue)))
+        handleQuery(client, NilUuid, legacy, top.getValue)
       case other =>
         throw new IllegalArgumentException(s"unknown request kind: $other")
     }
   }
 
-  private def handleQuery(kind: String, body: JsonNode): ObjectNode = {
+  private def handleQuery(client: Client, requestId: String, kind: String, body: JsonNode): Unit =
+    if (readKinds(kind)) client.sendLater(readPool.submit(plannedRead(requestId, kind, body)))
+    else client.send(requestResponse(requestId, edit(kind, body)))
+
+  /** Plan a read on the dispatch thread: parse it and pin its table's
+    * committed frame, so it sees every edit dispatched before it and none
+    * after, whenever the pool runs it. */
+  private def plannedRead(requestId: String, kind: String, body: JsonNode): Callable[String] = {
+    val table = body.get("table").asText()
+    val column = body.get("column").asText()
+    val key = TaggedJson.parseValue(body.get("key"))
+    val frame = graph.table(table)
+    val queries = new QueryService(_ => frame)
+    () =>
+      try mapper.writeValueAsString(requestResponse(requestId, kind match {
+        case "FindOne" => oneResult(entriesOf(queries.findOne(table, column, key)).headOption)
+        case "LessThan" => manyResults(entriesOf(queries.lessThan(table, column, key)))
+        case "GreaterThan" => manyResults(entriesOf(queries.greaterThan(table, column, key)))
+        case _ => manyResults(entriesOf(queries.getAll(table, column, key)))
+      }))
+      catch { case e: Throwable => mapper.writeValueAsString(failed(requestId, Some(kind), e)) }
+  }
+
+  /** The Err answer to a request of `kind` that failed with `e`. */
+  private def failed(requestId: String, kind: Option[String], e: Throwable): JsonNode = {
+    System.err.println(s"[graft-net] request failed: $e")
+    val variant = if (kind.contains("FindOne")) "OneResult" else "ManyResults"
+    requestResponse(requestId, errResponse(variant, e.getMessage))
+  }
+
+  private def edit(kind: String, body: JsonNode): ObjectNode = {
     def table = body.get("table").asText()
     def column = body.get("column").asText()
     def key = TaggedJson.parseValue(body.get("key"))
     kind match {
-      case "FindOne" => oneResult(entriesOf(queries.findOne(table, column, key)).headOption)
-      case "LessThan" => manyResults(entriesOf(queries.lessThan(table, column, key)))
-      case "GreaterThan" => manyResults(entriesOf(queries.greaterThan(table, column, key)))
-      case "GetAll" => manyResults(entriesOf(queries.getAll(table, column, key)))
       case "InsertData" =>
         // all committed edits, source + cascaded (db_thread.rs:82-93);
         // upsert Updates surface as their inserted (new) row
@@ -329,12 +380,19 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
     n
   }
 
-  /** Stop accepting, drop every connection, stop the dispatch thread. */
+  /** Stop accepting, drop every connection, stop the dispatch thread and
+    * the read pool. Reads not yet started are cancelled, so no writer
+    * waits on them. */
   def close(): Unit = {
     running = false
     try serverSocket.close() catch { case _: Exception => }
     clients.forEach(_.close())
     clients.clear()
     dispatchThread.interrupt()
+    readPool.shutdownNow().forEach(r => r match {
+      case f: Future[_] => f.cancel(false)
+      case _ =>
+    })
+    readPool.awaitTermination(10, TimeUnit.SECONDS)
   }
 }

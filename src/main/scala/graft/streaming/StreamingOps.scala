@@ -981,14 +981,17 @@ object StreamingOps {
     * @param onAbsorbed called per micro-batch with its batchId */
   def cooccurrenceAbsorbStream(docs: DataFrame, textCol: String,
                                table: String, window: Int = 2,
-                               buckets: Int = 8)
+                               buckets: Int = 8,
+                               checkpointLocation: Option[String] = None)
                               (onAbsorbed: Long => Unit = _ => ()): StreamingQuery = {
     val body: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
       graft.functions.TextFunctions.cooccurrenceAbsorb(batch.toDF(), textCol,
         table, window, buckets)
       onAbsorbed(batchId)
     }
-    docs.writeStream.outputMode("append").foreachBatch(body).start()
+    val w = docs.writeStream.outputMode("append").foreachBatch(body)
+    checkpointLocation.fold(w)(cl => w.option("checkpointLocation", cl))
+      .start()
   }
 
   /** ONE batch of KMV sketch-store maintenance — the mergeability of

@@ -7,10 +7,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs. */
 object TestSpark {
+  /** Managed tables go to a per-JVM directory, not the checkout, so no
+    * table outlives the run or is shared with another test JVM. */
+  private lazy val warehouse: java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-test-warehouse").toFile
+    sys.addShutdownHook(Fixtures.deleteRecursively(dir))
+    dir
+  }
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .config("spark.sql.warehouse.dir", warehouse.getAbsolutePath)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -3,7 +3,11 @@ package graft.net
 import graft.SparkSpec
 import graft.config.PipelineConfig
 import graft.operators.{ActionRegistry, GraftAction, IncrementalGraph}
-import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import java.io.{DataInputStream, IOException}
+import java.net.ServerSocket
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 /** End-to-end client-SDK flow against the live server — the Scala
@@ -111,5 +115,39 @@ class GraftClientSpec extends SparkSpec {
       client.close()
       server.close()
     }
+  }
+
+  test("a round trip is not held by Nagle's algorithm and delayed ACKs") {
+    val mapper = new ObjectMapper()
+    val listening = new ServerSocket(0)
+    // a stub server: answers every request at once with a fixed response
+    // on its request_id, each frame in one write
+    val stub = new Thread(() => {
+      val socket = listening.accept()
+      socket.setTcpNoDelay(true)
+      val in = new DataInputStream(socket.getInputStream)
+      val out = socket.getOutputStream
+      try while (true) {
+        val buf = new Array[Byte](in.readInt())
+        in.readFully(buf)
+        val id = mapper.readTree(buf).get("Query").get("request_id").asText()
+        val payload =
+          s"""{"RequestResponse":{"request_id":"$id","response":{"OneResult":{"Ok":null}}}}""".getBytes(UTF_8)
+        out.write(ByteBuffer.allocate(4 + payload.length).putInt(payload.length).put(payload).array())
+      } catch { case _: IOException => } finally socket.close()
+    }, "graft-client-spec-stub")
+    stub.setDaemon(true)
+    stub.start()
+    val client = new GraftClient("127.0.0.1", listening.getLocalPort)
+    try {
+      (1 to 5).foreach(_ => client.findOne("t", "c", 1))
+      val ms = (1 to 30).map { _ =>
+        val t0 = System.nanoTime()
+        assert(client.findOne("t", "c", 1).isEmpty)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      // a frame split over several segments waits ~40 ms for a delayed ACK
+      assert(ms(ms.size / 2) < 20.0, f"median round trip ${ms(ms.size / 2)}%.1f ms")
+    } finally { client.close(); listening.close() }
   }
 }

@@ -6,8 +6,34 @@ import graft.config.PipelineConfig
 import graft.operators.{ActionRegistry, GraftAction, IncrementalGraph}
 import java.io.{DataInputStream, DataOutputStream}
 import java.net.Socket
+import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
+
+/** One-shot latches that hold a read inside a Spark task and a cascade
+  * inside its Action. Both run in task threads of the local-mode
+  * executor, so they live in an object, not in a closure. */
+object ReadGate {
+  val readRunning = new CountDownLatch(1)
+  val cascadeInAction = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
+
+  def open(): Unit = Seq(readRunning, cascadeInAction, release).foreach(_.countDown())
+  /** A read evaluating this waits until a cascade is in the Action. */
+  def holdRead(): Unit = {
+    readRunning.countDown()
+    cascadeInAction.await(20, TimeUnit.SECONDS)
+  }
+  /** The Action waits here until the test releases it. */
+  def holdAction(): Unit = {
+    cascadeInAction.countDown()
+    release.await(60, TimeUnit.SECONDS)
+  }
+}
 
 /** End-to-end protocol tests against the reference's own artifacts: the
   * pipeline is reactive_db/test_cfg.yaml, the legacy frames are
@@ -59,12 +85,22 @@ class GraftServerSpec extends SparkSpec {
   private final class WireClient(port: Int) {
     private val socket = new Socket("127.0.0.1", port)
     socket.setSoTimeout(60000)
+    socket.setTcpNoDelay(true)
     private val out = new DataOutputStream(socket.getOutputStream)
     private val in = new DataInputStream(socket.getInputStream)
     def sendRaw(payload: Array[Byte]): Unit = {
       out.writeInt(payload.length); out.write(payload); out.flush()
     }
     def send(json: String): Unit = sendRaw(json.getBytes(UTF_8))
+    /** Several frames in one write: the server has them all before it
+      * answers the first. */
+    def sendAll(jsons: String*): Unit = {
+      val payloads = jsons.map(_.getBytes(UTF_8))
+      val buf = ByteBuffer.allocate(payloads.map(4 + _.length).sum)
+      payloads.foreach(p => buf.putInt(p.length).put(p))
+      out.write(buf.array()); out.flush()
+    }
+    def pending: Int = in.available()
     def recv(): JsonNode = {
       val size = in.readInt()
       val buf = new Array[Byte](size)
@@ -88,6 +124,23 @@ class GraftServerSpec extends SparkSpec {
   }
 
   private def response(m: JsonNode): JsonNode = m.get("RequestResponse").get("response")
+  private def requestId(m: JsonNode): String = m.get("RequestResponse").get("request_id").asText()
+  private def idOf(id: Int): String = f"00000000-0000-0000-0000-$id%012d"
+  private def query(id: Int, q: String): String = s"""{"Query":{"request_id":"${idOf(id)}","query":$q}}"""
+
+  /** The test_cfg server with `testTable` seeded by a checkpointed frame,
+    * so reads of it run Spark jobs while a testTable insert runs none. */
+  private def seededServer(): GraftServer = {
+    ActionRegistry.register(GraftAction("TestAction", identity))
+    val seed = spark.createDataFrame(
+      (1L to 20L).map(i => Row(i, i)).asJava,
+      StructType(Seq(StructField("testForIndex", LongType), StructField("testForIteration", LongType))))
+    new GraftServer(new IncrementalGraph(spark, PipelineConfig.fromYaml(yaml), Map("testTable" -> seed)))
+  }
+
+  private def readThreads(port: Int): Seq[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith(s"graft-net-read-$port-"))
 
   test("replays reference test_requests.txt payloads byte-for-byte (legacy bare-Query frames)") {
     val server = newServer()
@@ -342,5 +395,108 @@ class GraftServerSpec extends SparkSpec {
       assert(edits.size() == 3)
       assert(edits.get(2).get("newColumn").get("Integer").asLong() == 7L)
     } finally { c.close(); server.close() }
+  }
+
+  test("a read is answered while an InsertData cascade is blocked in an Action; the cascade then commits") {
+    spark.udf.register("graftTestHoldRead", (x: Long) => { ReadGate.holdRead(); x })
+    ActionRegistry.register(GraftAction("HoldingAction", row => { ReadGate.holdAction(); row }))
+    val users = spark.createDataFrame(java.util.Arrays.asList(Row("Ann", 30L)),
+      StructType(Seq(StructField("name", StringType), StructField("age", LongType))))
+    val server = new GraftServer(new IncrementalGraph(spark, PipelineConfig.fromYaml(
+      """tables:
+        |  - name: users
+        |    kind: source
+        |    columns: {name: Str, age: Integer}
+        |  - name: heldUsers
+        |    kind: function
+        |    source_table: users
+        |    functions: ["heldAge ~ graftTestHoldRead(age)"]
+        |  - name: grades
+        |    kind: source
+        |    columns: {name: Str, grade: Integer}
+        |  - name: actionTest
+        |    kind: action
+        |    source_table: grades
+        |    action: HoldingAction
+        |""".stripMargin), Map("users" -> users)))
+    val reader = new WireClient(server.port)
+    val writer = new WireClient(server.port)
+    try {
+      reader.send(query(1, """{"FindOne":{"table":"heldUsers","column":"heldAge","key":{"Integer":30}}}"""))
+      assert(ReadGate.readRunning.await(30, TimeUnit.SECONDS),
+        s"the read never ran: ${if (reader.pending > 0) reader.recv() else "no answer"}")
+      // the read is running and waits for the cascade to reach the Action
+      writer.send(query(2, """{"InsertData":{"table":"grades","entry":{"name":{"Str":"Bo"},"grade":{"Integer":7}}}}"""))
+      val read = reader.recv()
+      assert(ReadGate.cascadeInAction.getCount == 0,
+        "the read was answered before the cascade started: it held the dispatch thread")
+      assert(requestId(read) == idOf(1))
+      assert(response(read).get("OneResult").get("Ok").get("heldAge").get("Integer").asLong() == 30L)
+      assert(writer.pending == 0, "the InsertData was answered while its Action was blocked")
+      ReadGate.release.countDown()
+      val edits = response(writer.recv()).get("ManyResults").get("Ok")
+      assert(edits.size() == 2, s"source and action rows: $edits")
+      reader.send(query(3, """{"GetAll":{"table":"actionTest","column":"name","key":{"Str":"Bo"}}}"""))
+      assert(response(reader.recv()).get("ManyResults").get("Ok").size() == 1)
+    } finally { ReadGate.open(); reader.close(); writer.close(); server.close() }
+  }
+
+  test("pipelined InsertData and reads on one connection are answered in send order, each read seeing the edits before it") {
+    val server = seededServer()
+    val c = new WireClient(server.port)
+    def insert(it: Int) =
+      s"""{"InsertData":{"table":"testTable","entry":{"testForIndex":{"Integer":7},"testForIteration":{"Integer":$it}}}}"""
+    val getAll = """{"GetAll":{"table":"testTable","column":"testForIndex","key":{"Integer":7}}}"""
+    def iterations(m: JsonNode): Set[Long] = {
+      val ok = response(m).get("ManyResults").get("Ok")
+      (0 until ok.size()).map(i => ok.get(i).get("testForIteration").get("Integer").asLong()).toSet
+    }
+    try {
+      // each read runs Spark jobs over the seeded base; the insert after
+      // it runs none, so it finishes first unless order is kept
+      c.sendAll(query(1, getAll), query(2, insert(500)), query(3, getAll), query(4, insert(501)),
+        query(5, getAll))
+      val answers = (1 to 5).map(_ => c.recv())
+      assert(answers.map(requestId) == (1 to 5).map(idOf))
+      assert(iterations(answers(0)) == Set(7L))
+      assert(iterations(answers(2)) == Set(7L, 500L))
+      assert(iterations(answers(4)) == Set(7L, 500L, 501L))
+    } finally { c.close(); server.close() }
+  }
+
+  test("a failing read gets an Err on its own request_id and the connection keeps serving") {
+    val server = seededServer()
+    server.maxResultRows = 3
+    val c = new WireClient(server.port)
+    try {
+      c.sendAll(
+        // fails on the read pool: no such column
+        query(1, """{"FindOne":{"table":"testTable","column":"nope","key":{"Integer":1}}}"""),
+        // fails while planned: no such table
+        query(2, """{"GetAll":{"table":"nope","column":"x","key":{"Integer":1}}}"""),
+        // fails on the read pool while rendering: over maxResultRows
+        query(3, """{"LessThan":{"table":"testTable","column":"testForIndex","key":{"Integer":200}}}"""),
+        query(4, """{"GetAll":{"table":"testTable","column":"testForIndex","key":{"Integer":5}}}"""))
+      val answers = (1 to 4).map(_ => c.recv())
+      assert(answers.map(requestId) == (1 to 4).map(idOf))
+      assert(response(answers(0)).get("OneResult").get("Err").asText().contains("No such column"))
+      assert(response(answers(1)).get("ManyResults").get("Err").asText().contains("nope"))
+      assert(response(answers(2)).get("ManyResults").get("Err").asText().contains("maxResultRows"))
+      assert(response(answers(3)).get("ManyResults").get("Ok").size() == 1)
+    } finally { c.close(); server.close() }
+  }
+
+  test("reads run on the server's read pool, and close() leaves none of its threads") {
+    val server = seededServer()
+    val port = server.port
+    val c = new WireClient(port)
+    try {
+      c.send(query(1, """{"GetAll":{"table":"testTable","column":"testForIndex","key":{"Integer":5}}}"""))
+      assert(response(c.recv()).get("ManyResults").get("Ok").size() == 1)
+      assert(readThreads(port).nonEmpty, "the read did not run on a read-pool thread")
+    } finally { c.close(); server.close() }
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(5)
+    while (readThreads(port).nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(readThreads(port).isEmpty, s"left after close(): ${readThreads(port).map(_.getName)}")
   }
 }
