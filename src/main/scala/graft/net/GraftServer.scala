@@ -13,6 +13,7 @@ import java.util.UUID
 import java.util.concurrent.{Callable, Executors, Future, LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** TCP tagged-JSON network façade — the reference's only network ingress
   * (reference: reactive_db/src/networking/client_connection.rs:56-76,
@@ -46,19 +47,22 @@ import scala.jdk.CollectionConverters._
   *     `{"ManyResults":{"Ok":[entry…]}}` / `{"OneResult":{"Ok":entry|null}}`
   *     / `{"…":{"Err":"message"}}`.
   *
-  * Threading: one dispatch thread owns the graph, as the reference's
-  * db_thread.rs serializes every query through one thread, and each
-  * connection has a reader and a writer thread (client_connection.rs:10-25).
-  * Every request is planned on the dispatch thread in arrival order across
-  * connections. Edits and listens also run there. A read (FindOne, GetAll,
-  * LessThan, GreaterThan) only resolves its table's committed frame there;
-  * table states are immutable values, so the read sees exactly the edits
-  * dispatched before it. Its Spark jobs and rendering then run on a read
-  * pool of `defaultParallelism` threads, so an edit does not queue behind
-  * them. Per-connection order is kept: the read's pending answer takes its
-  * place in the connection's outbound queue at dispatch time, and the
-  * writer sends the queue in order. So a connection gets its responses and
-  * Events in dispatch order, and a read after an insert sees that insert.
+  * Threading: one dispatch thread runs every edit and listen, in arrival
+  * order across connections, as the reference's db_thread.rs serializes
+  * every query through one thread; each connection has a reader and a
+  * writer thread (client_connection.rs:10-25). A read (FindOne, GetAll,
+  * LessThan, GreaterThan) is planned against the graph's last committed
+  * state ([[IncrementalGraph.atCommitted]]; table states are immutable
+  * values): by the connection's reader thread as it arrives, or, when that
+  * connection still has requests in the dispatch loop, by the dispatch
+  * thread after them. So a read never waits for another connection's edit,
+  * and a read after an insert on one connection sees that insert. Its
+  * Spark jobs and rendering then run on one read thread, so an edit does
+  * not queue behind them and at most one read's rows are held at a time.
+  * Per-connection order is kept: the read's pending answer takes its place
+  * in the connection's outbound queue when it is planned, after the Events
+  * of every edit it sees and before those of the edits it does not, and
+  * the writer sends the queue in order.
   *
   * Scale note: this façade is the reference-parity POINT-QUERY surface
   * (find/range/insert/delete/listen on graph tables). Edits of a one-row
@@ -104,6 +108,8 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
     * frames to send: a rendered String, or the Future of a read's frame. */
   private final class Client(val id: UUID, val socket: Socket) {
     val out = new LinkedBlockingQueue[AnyRef]()
+    /** This connection's requests in the dispatch loop, not yet answered. */
+    val queued = new AtomicInteger
     def send(message: JsonNode): Unit = out.put(mapper.writeValueAsString(message))
     def sendLater(frame: Future[String]): Unit = out.put(frame)
     def close(): Unit = { out.put(PoisonPill); try socket.close() catch { case _: Exception => } }
@@ -119,15 +125,13 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
     t
   }
 
-  /** Runs planned reads. A task renders its whole response frame and never
-    * throws: a failed read is an Err on its request_id. */
-  private val readPool = {
-    val n = new AtomicInteger
-    Executors.newFixedThreadPool(graph.spark.sparkContext.defaultParallelism, { (r: Runnable) =>
-      val t = new Thread(r, s"graft-net-read-$port-${n.incrementAndGet()}")
-      t.setDaemon(true)
-      t
-    })
+  /** Runs planned reads one at a time, so at most one read's rows are on
+    * the driver. A task renders its whole response frame and never throws:
+    * a failed read is an Err on its request_id. */
+  private val reads = Executors.newSingleThreadExecutor { (r: Runnable) =>
+    val t = new Thread(r, s"graft-net-read-$port")
+    t.setDaemon(true)
+    t
   }
 
   private val dispatchThread = thread("graft-net-dispatch") {
@@ -137,7 +141,7 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
       catch {
         // answer the caller: it is waiting on this request_id
         case e: Exception => client.send(failed(requestIdOf(root), queryKind(root), e))
-      }
+      } finally client.queued.decrementAndGet()
     } catch { case _: InterruptedException => }
   }
 
@@ -184,7 +188,7 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
         val root =
           try mapper.readTree(new String(buf, UTF_8))
           catch { case _: java.io.IOException => null }
-        if (root != null && root.isObject) dispatchQueue.put((client, root))
+        if (root != null && root.isObject) route(client, root)
         else client.send(requestResponse(NilUuid,
           errResponse("ManyResults", "request frame is not a JSON object")))
       }
@@ -209,6 +213,33 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
       .flatMap(_.fieldNames().asScala.nextOption())
       .orElse(root.fieldNames().asScala.nextOption().filter(queryKinds))
 
+  /** A read from a connection with nothing of its own in the dispatch loop
+    * is planned at once, so it does not wait for an edit in flight.
+    * Anything else, and a read that must see its connection's pending
+    * requests, goes to the dispatch loop. */
+  private def route(client: Client, root: JsonNode): Unit = readOf(root) match {
+    case Some((requestId, kind, body)) if client.queued.get == 0 =>
+      planRead(client, requestId, kind, body)
+    case _ =>
+      client.queued.incrementAndGet()
+      dispatchQueue.put((client, root))
+  }
+
+  /** (request_id, kind, body) of a well-formed read, wrapped or legacy. */
+  private def readOf(root: JsonNode): Option[(String, String, JsonNode)] =
+    root.properties().asScala.headOption.flatMap { top =>
+      top.getKey match {
+        case "Query" =>
+          for {
+            id <- Option(top.getValue.get("request_id")).filter(_.isTextual)
+            query <- Option(top.getValue.get("query"))
+            kind <- query.fieldNames().asScala.nextOption() if readKinds(kind)
+          } yield (id.asText(), kind, query.get(kind))
+        case legacy if readKinds(legacy) => Some((NilUuid, legacy, top.getValue))
+        case _ => None
+      }
+    }
+
   private def dispatch(client: Client, root: JsonNode): Unit = {
     val fields = root.properties().iterator()
     if (!fields.hasNext) throw new IllegalArgumentException("empty request frame")
@@ -231,27 +262,31 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
   }
 
   private def handleQuery(client: Client, requestId: String, kind: String, body: JsonNode): Unit =
-    if (readKinds(kind)) client.sendLater(readPool.submit(plannedRead(requestId, kind, body)))
+    if (readKinds(kind)) planRead(client, requestId, kind, body)
     else client.send(requestResponse(requestId, edit(kind, body)))
 
-  /** Plan a read on the dispatch thread: parse it and pin its table's
-    * committed frame, so it sees every edit dispatched before it and none
-    * after, whenever the pool runs it. */
-  private def plannedRead(requestId: String, kind: String, body: JsonNode): Callable[String] = {
-    val table = body.get("table").asText()
-    val column = body.get("column").asText()
-    val key = TaggedJson.parseValue(body.get("key"))
-    val frame = graph.table(table)
-    val queries = new QueryService(_ => frame)
-    () =>
-      try mapper.writeValueAsString(requestResponse(requestId, kind match {
-        case "FindOne" => oneResult(entriesOf(queries.findOne(table, column, key)).headOption)
-        case "LessThan" => manyResults(entriesOf(queries.lessThan(table, column, key)))
-        case "GreaterThan" => manyResults(entriesOf(queries.greaterThan(table, column, key)))
-        case _ => manyResults(entriesOf(queries.getAll(table, column, key)))
-      }))
-      catch { case e: Throwable => mapper.writeValueAsString(failed(requestId, Some(kind), e)) }
-  }
+  /** Pin the read's table frame as of the last committed edit and queue
+    * its answer on `client`; the Spark jobs and rendering run later on the
+    * read thread. A read that cannot be planned is answered at once. */
+  private def planRead(client: Client, requestId: String, kind: String, body: JsonNode): Unit =
+    try {
+      val table = body.get("table").asText()
+      val column = body.get("column").asText()
+      val key = TaggedJson.parseValue(body.get("key"))
+      graph.atCommitted { frames =>
+        val frame = frames(table)
+        val queries = new QueryService(_ => frame)
+        val answer: Callable[String] = () =>
+          try mapper.writeValueAsString(requestResponse(requestId, kind match {
+            case "FindOne" => oneResult(entriesOf(queries.findOne(table, column, key)).headOption)
+            case "LessThan" => manyResults(entriesOf(queries.lessThan(table, column, key)))
+            case "GreaterThan" => manyResults(entriesOf(queries.greaterThan(table, column, key)))
+            case _ => manyResults(entriesOf(queries.getAll(table, column, key)))
+          }))
+          catch { case NonFatal(e) => mapper.writeValueAsString(failed(requestId, Some(kind), e)) }
+        client.sendLater(reads.submit(answer))
+      }
+    } catch { case NonFatal(e) => client.send(failed(requestId, Some(kind), e)) }
 
   /** The Err answer to a request of `kind` that failed with `e`. */
   private def failed(requestId: String, kind: Option[String], e: Throwable): JsonNode = {
@@ -381,7 +416,7 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
   }
 
   /** Stop accepting, drop every connection, stop the dispatch thread and
-    * the read pool. Reads not yet started are cancelled, so no writer
+    * the read thread. Reads not yet started are cancelled, so no writer
     * waits on them. */
   def close(): Unit = {
     running = false
@@ -389,10 +424,10 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
     clients.forEach(_.close())
     clients.clear()
     dispatchThread.interrupt()
-    readPool.shutdownNow().forEach(r => r match {
+    reads.shutdownNow().forEach(r => r match {
       case f: Future[_] => f.cancel(false)
       case _ =>
     })
-    readPool.awaitTermination(10, TimeUnit.SECONDS)
+    reads.awaitTermination(10, TimeUnit.SECONDS)
   }
 }

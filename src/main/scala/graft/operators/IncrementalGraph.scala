@@ -48,6 +48,11 @@ import scala.jdk.CollectionConverters._
   * Aggregation/Union) and checkpointed as a new base, so lineage stays
   * O(1) in the number of edits.
   *
+  * Threading: the edits ([[insert]], [[delete]] and their `WithEdits`
+  * forms), [[listen]] and [[table]] are called from one thread at a time.
+  * [[atCommitted]] may be called from any thread; it sees the last
+  * committed state, never a cascade in progress.
+  *
   * Aggregation configs must use decomposable memo folds (the
   * [[Transforms.aggregation]] contract); order-dependent general folds
   * ([[Transforms.aggregationFold]]) need an explicit row order, which an
@@ -77,7 +82,11 @@ final class IncrementalGraph(
 
   private val byName = config.byName
   private val mat = scala.collection.mutable.Map.empty[String, Mat]
-  private val views = scala.collection.mutable.Map.empty[String, (DataFrame, DataFrame)]
+  private val views = new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
+  /** The table states as of the last committed edit; read and written
+    * under `commitLock` only. */
+  private var committed: Map[String, Mat] = Map.empty
+  private val commitLock = new Object
 
   private val downstream: Map[String, Seq[DerivedTableConfig]] =
     config.tables.collect { case d: DerivedTableConfig => d }
@@ -95,7 +104,7 @@ final class IncrementalGraph(
       mat(s.name) = Mat(initialSources.get(s.name)
         .map(df => SourceOps.ensureEntryId(SourceOps.alignForInsert(s, df)))
         .getOrElse(spark.createDataFrame(new java.util.ArrayList[Row](), SourceOps.sourceSchema(s))))
-    case v: DerivedTableConfig if isView(v) => view(v)
+    case v: DerivedTableConfig if isView(v) => table(v.name)
     case d: DerivedTableConfig =>
       val key = d match {
         case _: AggregationTableConfig => Some(AggregationKey)
@@ -104,6 +113,7 @@ final class IncrementalGraph(
       }
       mat(d.name) = Mat(checkpoint(compute(d, d.inputTables.map(n => n -> table(n)).toMap)), key)
   }
+  committed = mat.toMap
 
   private def compute(d: DerivedTableConfig, inputs: Map[String, DataFrame]): DataFrame = d match {
     case f: FunctionTableConfig => Transforms.function(inputs(f.sourceTable), f.functions)
@@ -115,23 +125,36 @@ final class IncrementalGraph(
     case a: ActionTableConfig => Transforms.action(inputs(a.sourceTable), ActionRegistry.get(a.actionName))
   }
 
-  def table(name: String): DataFrame = byName.get(name) match {
-    case Some(v: DerivedTableConfig) if isView(v) => view(v)
-    case Some(_) => mat(name).frame
-    case None => throw new NoSuchElementException(s"no table named $name")
+  def table(name: String): DataFrame = frameOf(name, mat)
+
+  /** Run `f` over the tables as of the last committed edit. Unlike
+    * [[table]], this may be called from any thread, also while an edit
+    * runs on another. Commits and their subscriber notifications wait for
+    * `f`, so whatever `f` hands on (say, to a connection's outbound queue)
+    * is ordered after the notifications of every edit it sees and before
+    * those of every edit it does not. Keep `f` short: it holds off the
+    * next commit. */
+  def atCommitted[A](f: (String => DataFrame) => A): A = commitLock.synchronized {
+    val state = committed
+    f(frameOf(_, state))
   }
 
-  /** A Function/Filter table over its input's current frame, rebuilt only
-    * when that frame changes. */
-  private def view(v: DerivedTableConfig): DataFrame = {
-    val src = v.inputTables.head
-    val in = table(src)
-    views.get(v.name) match {
-      case Some((cachedIn, out)) if cachedIn eq in => out
-      case _ =>
-        val out = compute(v, Map(src -> in))
-        views(v.name) = (in, out)
-        out
+  private def frameOf(name: String, state: scala.collection.Map[String, Mat]): DataFrame =
+    byName.get(name) match {
+      case Some(v: DerivedTableConfig) if isView(v) => view(v, frameOf(v.inputTables.head, state))
+      case Some(_) => state(name).frame
+      case None => throw new NoSuchElementException(s"no table named $name")
+    }
+
+  /** A Function/Filter table over its input frame `in`, rebuilt only when
+    * that frame changes. */
+  private def view(v: DerivedTableConfig, in: DataFrame): DataFrame = {
+    val cached = views.get(v.name)
+    if (cached != null && (cached._1 eq in)) cached._2
+    else {
+      val out = compute(v, Map(v.inputTables.head -> in))
+      views.put(v.name, (in, out))
+      out
     }
   }
 
@@ -184,7 +207,10 @@ final class IncrementalGraph(
         mat.clear(); mat ++= snapshot
         throw e
     }
-    pending.foreach { case (t, ins, del) => notifyListeners(t, ins, del) }
+    commitLock.synchronized {
+      committed = mat.toMap
+      pending.foreach { case (t, ins, del) => notifyListeners(t, ins, del) }
+    }
     pending.toList
   }
   private type Pending = scala.collection.mutable.ArrayBuffer[(String, DataFrame, DataFrame)]
@@ -425,6 +451,11 @@ object IncrementalGraph {
     case _ => false
   }
 
+  /** Always eager: the frame escapes only once its RDD is checkpointed.
+    * Readers run jobs over committed frames on other threads, and a job
+    * that marks a still-pending checkpoint while the DAG scheduler plans
+    * another job over the same RDD can deadlock Spark's checkpoint lock
+    * against that RDD's state lock. */
   private def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   private def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =

@@ -35,6 +35,16 @@ object ReadGate {
   }
 }
 
+/** Holds a cascade inside its Action until the test releases it. */
+object CascadeGate {
+  val inAction = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
+  def hold(): Unit = {
+    inAction.countDown()
+    release.await(60, TimeUnit.SECONDS)
+  }
+}
+
 /** End-to-end protocol tests against the reference's own artifacts: the
   * pipeline is reactive_db/test_cfg.yaml, the legacy frames are
   * reactive_db/test_requests.txt replayed byte-for-byte, and the listen
@@ -140,7 +150,13 @@ class GraftServerSpec extends SparkSpec {
 
   private def readThreads(port: Int): Seq[Thread] =
     Thread.getAllStackTraces.keySet.asScala.toSeq
-      .filter(t => t.isAlive && t.getName.startsWith(s"graft-net-read-$port-"))
+      .filter(t => t.isAlive && t.getName == s"graft-net-read-$port")
+
+  private def rows(m: JsonNode): JsonNode = {
+    val many = response(m).get("ManyResults")
+    assert(many.has("Ok"), s"not Ok: $m")
+    many.get("Ok")
+  }
 
   test("replays reference test_requests.txt payloads byte-for-byte (legacy bare-Query frames)") {
     val server = newServer()
@@ -486,17 +502,121 @@ class GraftServerSpec extends SparkSpec {
     } finally { c.close(); server.close() }
   }
 
-  test("reads run on the server's read pool, and close() leaves none of its threads") {
+  test("reads run on the server's read thread, and close() leaves none of its threads") {
     val server = seededServer()
     val port = server.port
     val c = new WireClient(port)
     try {
       c.send(query(1, """{"GetAll":{"table":"testTable","column":"testForIndex","key":{"Integer":5}}}"""))
       assert(response(c.recv()).get("ManyResults").get("Ok").size() == 1)
-      assert(readThreads(port).nonEmpty, "the read did not run on a read-pool thread")
+      assert(readThreads(port).nonEmpty, "the read did not run on the read thread")
     } finally { c.close(); server.close() }
     val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(5)
     while (readThreads(port).nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
     assert(readThreads(port).isEmpty, s"left after close(): ${readThreads(port).map(_.getName)}")
+  }
+
+  test("a read from another connection is answered from the committed state while a cascade is blocked, before that edit's Event") {
+    ActionRegistry.register(GraftAction("GatedAction", row => { CascadeGate.hold(); row }))
+    val server = new GraftServer(new IncrementalGraph(spark, PipelineConfig.fromYaml(
+      """tables:
+        |  - name: grades
+        |    kind: source
+        |    columns: {name: Str, grade: Integer}
+        |  - name: gatedTest
+        |    kind: action
+        |    source_table: grades
+        |    action: GatedAction
+        |""".stripMargin)))
+    val reader = new WireClient(server.port)
+    val writer = new WireClient(server.port)
+    val getBo = """{"GetAll":{"table":"grades","column":"name","key":{"Str":"Bo"}}}"""
+    try {
+      reader.send("""{"StartListen":{"table_name":"grades","event":"Insert"}}""")
+      // behind the StartListen in the dispatch loop: the listen is live
+      reader.send(query(1, getBo))
+      assert(rows(reader.recv()).size() == 0)
+      writer.send(query(2, """{"InsertData":{"table":"grades","entry":{"name":{"Str":"Bo"},"grade":{"Integer":7}}}}"""))
+      assert(CascadeGate.inAction.await(30, TimeUnit.SECONDS), "the cascade never reached its Action")
+      reader.send(query(3, getBo))
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(20)
+      while (reader.pending == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(reader.pending > 0, "the read waited for another connection's cascade")
+      val read = reader.recv()
+      assert(requestId(read) == idOf(3))
+      assert(rows(read).size() == 0, s"the read saw an uncommitted edit: $read")
+      assert(writer.pending == 0, "the InsertData was answered while its Action was blocked")
+      CascadeGate.release.countDown()
+      assert(rows(writer.recv()).size() == 2)
+      val event = reader.recv()
+      assert(event.has("Event"), s"the edit's Event should follow the read: $event")
+      reader.send(query(4, getBo))
+      assert(rows(reader.recv()).size() == 1)
+    } finally { CascadeGate.release.countDown(); reader.close(); writer.close(); server.close() }
+  }
+
+  test("reads pipelined beside deletes and compacting inserts on another connection never stall (3 rounds)") {
+    ActionRegistry.register(GraftAction("TestAction", identity))
+    val long = StructType(Seq(StructField("testForIndex", LongType), StructField("testForIteration", LongType)))
+    val graded = StructType(Seq(StructField("name", StringType), StructField("grade", LongType)))
+    val server = new GraftServer(new IncrementalGraph(spark, PipelineConfig.fromYaml(yaml), Map(
+      "testTable" -> spark.createDataFrame((1L to 20L).map(i => Row(i, i)).asJava, long),
+      "grades" -> spark.createDataFrame((0 until 12).map(i => Row(s"g${i % 4}", i.toLong)).asJava, graded))))
+    val reader = new WireClient(server.port)
+    val writer = new WireClient(server.port)
+    val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val readErrors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val readCount = new java.util.concurrent.atomic.AtomicInteger
+    // one connection reads a materialized aggregation, a Function view and
+    // the source the writer compacts, three frames in flight at a time
+    val readerThread = new Thread(() => try {
+      var id = 0
+      while (writing.get) {
+        val ids = (id + 1 to id + 3).toVector
+        id += 3
+        reader.sendAll(
+          query(ids(0), """{"GreaterThan":{"table":"aggregationTest","column":"count","key":{"Integer":0}}}"""),
+          query(ids(1), """{"LessThan":{"table":"derived","column":"newColumn","key":{"Integer":7}}}"""),
+          query(ids(2), """{"GreaterThan":{"table":"testTable","column":"testForIndex","key":{"Integer":18}}}"""))
+        ids.foreach { want =>
+          val m = reader.recv()
+          if (requestId(m) != idOf(want) || !response(m).get("ManyResults").has("Ok")) readErrors.add(m.toString)
+          readCount.incrementAndGet()
+        }
+      }
+    } catch { case e: Exception => readErrors.add(e.toString) }, "graft-test-pipelined-reader")
+    def edit(id: Int, q: String): JsonNode = {
+      writer.send(query(id, q))
+      writer.recv()
+    }
+    val work = scala.concurrent.Future {
+      var id = 10000
+      (0 until 3).foreach { round =>
+        id += 1
+        assert(rows(edit(id, s"""{"DeleteData":{"table":"grades","column":"name","key":{"Str":"g$round"}}}""")).size() > 0)
+        // past IncrementalGraph.CompactAt local rows: testTable compacts
+        (0 until 65).foreach { i =>
+          id += 1
+          val it = 1000 * (round + 1) + i
+          rows(edit(id, s"""{"InsertData":{"table":"testTable","entry":{"testForIndex":{"Integer":$it},"testForIteration":{"Integer":$it}}}}"""))
+        }
+        id += 1
+        rows(edit(id, s"""{"InsertData":{"table":"grades","entry":{"name":{"Str":"g3"},"grade":{"Integer":$round}}}}"""))
+      }
+    }(scala.concurrent.ExecutionContext.global)
+    try {
+      readerThread.start()
+      try scala.concurrent.Await.result(work, scala.concurrent.duration.Duration(240, "s"))
+      finally writing.set(false)
+      readerThread.join(TimeUnit.SECONDS.toMillis(60))
+      assert(!readerThread.isAlive, "the reader stalled")
+      assert(readErrors.isEmpty, readErrors.asScala.take(3).mkString("\n"))
+      assert(readCount.get > 0)
+      val all = edit(1, """{"GreaterThan":{"table":"testTable","column":"testForIndex","key":{"Integer":0}}}""")
+      assert(rows(all).size() == 20 + 3 * 65)
+      // g0..g2 were deleted, so only g3's group is left
+      val g3 = rows(edit(2, """{"GreaterThan":{"table":"aggregationTest","column":"count","key":{"Integer":0}}}"""))
+      assert(g3.size() == 1 && g3.get(0).get("count").get("Integer").asLong() == 3 + 3)
+    } finally { writing.set(false); reader.close(); writer.close(); server.close() }
   }
 }
