@@ -38,9 +38,9 @@ object GraphOps {
     * 2 driver round-trips per iteration: on a cluster this removes k
     * synchronization barriers (locally the cost is task overhead on the
     * model-sized frames, which shrinks with the AQE partition knobs, not
-    * with barrier count). Plans stay constant-size: `localCheckpoint(lazy)`
-    * rewrites each iteration's frame to an RDD scan at build time and the
-    * marked RDDs materialize as the final action's job walks the chain.
+    * with barrier count). Plans stay constant-size: `localCheckpoint`
+    * rewrites each iteration's frames to RDD scans, and the frames of the
+    * iteration before are released once the next one's are materialized.
     * Fixed iteration count (default 5): deterministic output, and rank
     * deltas decay as d^k — enough to order documents by centrality, which
     * is all a quality prior needs.
@@ -117,27 +117,6 @@ object GraphOps {
     PrGraph(e, deg, nodes, n, parts, nAgg)
   }
 
-  /** Rolling-release cadence for checkpointed iteration state: the lazy
-    * chain pins ~2 node-sized frames per iteration (~64 B a checkpointed
-    * row), so materialize-and-release every K iterations with K sized so
-    * the pinned window stays under a quarter of max heap (≈ the unified
-    * manager's protected storage fraction). K ≥ iters degenerates to one
-    * lazy cascade (zero extra jobs — the sf0.1 case); K = 1 degenerates
-    * to the old unconditional per-iteration eager release (the 60M-edge
-    * sf10 case, where it is the difference between the default 8 g heap
-    * and UNABLE_TO_ACQUIRE_MEMORY); in between it amortizes the
-    * synchronous materialization job over K iterations instead of paying
-    * it every round — same bounded peak, a fraction of the barrier cost. */
-  private def rollEvery(n: Long): Int =
-    // `graft.pr.rollEvery` pins the cadence for tests (the toy graphs
-    // can't reach the heap-derived threshold) and for cluster operators
-    // who know their executor storage budget better than the driver heap
-    sys.props.get("graft.pr.rollEvery").map(_.toInt).getOrElse {
-      val perIter = math.max(1L, n * 2L * 64L)
-      val k = Runtime.getRuntime.maxMemory / 4 / perIter
-      math.max(1L, math.min(k, Int.MaxValue.toLong)).toInt
-    }
-
   private def pageRankCore(edges: DataFrame, srcCol: String, dstCol: String,
                            init: Option[DataFrame],
                            damping: Double, iters: Int): DataFrame = {
@@ -151,15 +130,23 @@ object GraphOps {
                                    damping: Double, iters: Int): DataFrame = {
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val PrGraph(e, deg, nodes, n, parts, nAgg) = g
-    // Iteration state is localCheckpoint(lazy): the frame becomes an RDD
-    // scan at BUILD time, so plans stay constant-size across iterations.
+    val PrGraph(e, deg, nodes, _, parts, nAgg) = g
+    // Iteration state is localCheckpoint'd: the frame becomes an RDD
+    // scan, so plans stay constant-size across iterations.
     // (A persist() chain was tried instead — InMemoryRelation preserves
     // partitioning, which a checkpoint loses — but nested cached plans
     // re-print their children, so AQE's plan-string updates went
     // exponential in the iteration count and the driver hung in
     // explainString. Checkpoints are the only iteration boundary whose
-    // cost is flat in the round number.)
+    // cost is flat in the round number.) The rank ⋈ out-degree frame is
+    // checkpointed EAGERLY: it feeds two jobs that run at once (the
+    // dangling-mass broadcast and the contribution join), and a lazy
+    // checkpoint is marked by whichever job over it ends first, which can
+    // deadlock Spark's global checkpoint lock against that RDD's state
+    // lock. The ranks stay lazy: only the next iteration's eager join
+    // reads them, and its job materializes them. Once that join exists,
+    // the frames it read are released, so at most 3 node frames are
+    // pinned at any scale.
     var ranks = (init match {
       case None =>
         nodes.crossJoin(nAgg)
@@ -170,21 +157,12 @@ object GraphOps {
           .select(col("id"),
             coalesce(col("__r0"), lit(1.0) / col("__n")).as("r"))
     }).coalesce(parts).localCheckpoint(false)
-    // Rolling release (see [[rollEvery]]): every K iterations the current
-    // rank frame is materialized (one synchronous job — the cascade also
-    // materializes the window's lazy predecessors) and the window's
-    // checkpoints are dropped, so peak pinned state is bounded by
-    // K · 2 node frames + the edge cache at EVERY scale, while the
-    // barrier cost is iters/K jobs instead of iters. At sf0.1 (K ≥
-    // iters) this is one lazy cascade — zero extra jobs; at the 60M-edge
-    // sf10 decade it degenerates to the per-iteration eager release that
-    // keeps the default 8 g heap viable.
-    val relEvery = rollEvery(n)
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame](ranks)
-    for (i <- 1 to iters) {
+    var prev = Option.empty[DataFrame]
+    for (_ <- 1 to iters) {
       // rank ⋈ out-degree once per iteration, shared by the dangling-mass
-      // aggregate and the contribution join via the (lazy) checkpoint
-      val rd = ranks.join(deg, Seq("id"), "left").coalesce(parts).localCheckpoint(false)
+      // aggregate and the contribution join via the checkpoint
+      val rd = ranks.join(deg, Seq("id"), "left").coalesce(parts).localCheckpoint(true)
+      (prev.toSeq :+ ranks).foreach(releaseLocalCheckpoint)
       val dangling = rd.where(col("deg").isNull)
         .agg(coalesce(sum("r"), lit(0.0)).as("__dm"))
       val contrib = e.join(rd.where(col("deg").isNotNull), e("s") === rd("id"))
@@ -195,21 +173,11 @@ object GraphOps {
           (lit(1.0 - damping) / col("__n") +
             lit(damping) * (coalesce(col("c"), lit(0.0)) + col("__dm") / col("__n"))).as("r"))
         .coalesce(parts).localCheckpoint(false)
-      inter += rd
-      inter += next
       ranks = next
-      if (i % relEvery == 0 && i < iters) {
-        ranks.queryExecution.toRdd.count(): Unit // materialize the window
-        inter.filterNot(_ eq ranks).foreach(releaseLocalCheckpoint)
-        inter.clear()
-        inter += ranks
-      }
+      prev = Some(rd)
     }
-    // The final cascade materializes whatever the last window left lazy,
-    // then drops every intermediate checkpoint: the call exits with
-    // exactly one pinned RDD — the returned ranks.
     val out = ranks.localCheckpoint(true)
-    inter.foreach(releaseLocalCheckpoint)
+    (prev.toSeq :+ ranks).foreach(releaseLocalCheckpoint)
     out
   }
 
@@ -244,36 +212,29 @@ object GraphOps {
     val n = nodes.count()
     val parts = math.max(1, (n / (1L << 16)).toInt)
     val nAgg = nodes.agg(count(lit(1)).cast("double").as("__n"))
+    // checkpoints and their release as in [[pageRankIters]]
     var ranks = nodes.crossJoin(nAgg)
       .select(col("id"), (lit(1.0) / col("__n")).as("r"))
       .coalesce(parts).localCheckpoint(false)
-    // same rolling-release cadence as [[pageRankIters]]: bounded pinned
-    // window at every scale, one lazy cascade when it already fits
-    val relEvery = rollEvery(n)
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame](ranks)
-    for (i <- 1 to iters) {
-      val rd = ranks.join(wsum, Seq("id"), "left").coalesce(parts).localCheckpoint(false)
+    var prev = Option.empty[DataFrame]
+    for (_ <- 1 to iters) {
+      val rd = ranks.join(wsum, Seq("id"), "left").coalesce(parts).localCheckpoint(true)
+      (prev.toSeq :+ ranks).foreach(releaseLocalCheckpoint)
       val dangling = rd.where(col("ws").isNull)
         .agg(coalesce(sum("r"), lit(0.0)).as("__dm"))
       val contrib = e.join(rd.where(col("ws").isNotNull), e("s") === rd("id"))
         .groupBy(e("d").as("id")).agg(sum(col("r") * col("w") / col("ws")).as("c"))
-      ranks = nodes.join(contrib, Seq("id"), "left")
+      val next = nodes.join(contrib, Seq("id"), "left")
         .crossJoin(dangling).crossJoin(nAgg)
         .select(col("id"),
           (lit(1.0 - damping) / col("__n") +
             lit(damping) * (coalesce(col("c"), lit(0.0)) + col("__dm") / col("__n"))).as("r"))
         .coalesce(parts).localCheckpoint(false)
-      inter += rd
-      inter += ranks
-      if (i % relEvery == 0 && i < iters) {
-        ranks.queryExecution.toRdd.count(): Unit
-        inter.filterNot(_ eq ranks).foreach(releaseLocalCheckpoint)
-        inter.clear()
-        inter += ranks
-      }
+      ranks = next
+      prev = Some(rd)
     }
     val out = ranks.localCheckpoint(true)
-    inter.foreach(releaseLocalCheckpoint) // ≤1 pinned RDD after return
+    (prev.toSeq :+ ranks).foreach(releaseLocalCheckpoint) // ≤1 pinned RDD after return
     e.unpersist(blocking = false)
     wsum.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
@@ -324,38 +285,30 @@ object GraphOps {
       .select(col("id"),
         when(col("__ns") > 0, col("__isSeed").cast("double") / col("__ns"))
           .otherwise(lit(0.0)).as("p"))
-      .coalesce(parts).localCheckpoint(false)
+      .coalesce(parts).localCheckpoint(true)
+    // checkpoints and their release as in [[pageRankIters]]; pvec is read
+    // by EVERY iteration, so it is released only at the end
     var ranks = pvec.select(col("id"), col("p").as("r"))
       .coalesce(parts).localCheckpoint(false)
-    // same rolling-release cadence as [[pageRankIters]]; pvec is read by
-    // EVERY iteration, so it stays out of the rolling window and is
-    // released only at the end
-    val relEvery = rollEvery(n)
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame](ranks)
-    for (i <- 1 to iters) {
-      val rd = ranks.join(deg, Seq("id"), "left").coalesce(parts).localCheckpoint(false)
+    var prev = Option.empty[DataFrame]
+    for (_ <- 1 to iters) {
+      val rd = ranks.join(deg, Seq("id"), "left").coalesce(parts).localCheckpoint(true)
+      (prev.toSeq :+ ranks).foreach(releaseLocalCheckpoint)
       val dangling = rd.where(col("deg").isNull)
         .agg(coalesce(sum("r"), lit(0.0)).as("__dm"))
       val contrib = e.join(rd.where(col("deg").isNotNull), e("s") === rd("id"))
         .groupBy(e("d").as("id")).agg(sum(col("r") / col("deg")).as("c"))
-      ranks = pvec.join(contrib, Seq("id"), "left")
+      val next = pvec.join(contrib, Seq("id"), "left")
         .crossJoin(dangling)
         .select(col("id"),
           (lit(1.0 - damping) * col("p") +
             lit(damping) * (coalesce(col("c"), lit(0.0)) + col("__dm") * col("p"))).as("r"))
         .coalesce(parts).localCheckpoint(false)
-      inter += rd
-      inter += ranks
-      if (i % relEvery == 0 && i < iters) {
-        ranks.queryExecution.toRdd.count(): Unit
-        inter.filterNot(_ eq ranks).foreach(releaseLocalCheckpoint)
-        inter.clear()
-        inter += ranks
-      }
+      ranks = next
+      prev = Some(rd)
     }
     val out = ranks.localCheckpoint(true)
-    inter.foreach(releaseLocalCheckpoint)
-    releaseLocalCheckpoint(pvec) // ≤1 pinned RDD after return
+    (prev.toSeq :+ ranks :+ pvec).foreach(releaseLocalCheckpoint) // ≤1 pinned RDD after return
     e.unpersist(blocking = false)
     deg.unpersist(blocking = false)
     nodes.unpersist(blocking = false)

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.config._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,11 +22,12 @@ import scala.jdk.CollectionConverters._
   *   - Source, Aggregation, Union and Action tables are materialized, each
   *     as a checkpointed base, minus a null-safe set of dead keys (keyed
   *     Aggregation/Union tables only), plus driver-local rows.
-  *   - Aggregation/Union recompute ONLY the affected keys (the reference
-  *     re-reads exactly these groups per insert, transform.rs:239) and
-  *     upsert them; the old group rows become the Delete half of the
-  *     update, matching the reference's Update ≡ Delete(old)+Insert(new)
-  *     (database.rs:282-286).
+  *   - Aggregation/Union replace ONLY the affected keys (the reference
+  *     re-reads exactly these groups per insert, transform.rs:239): a
+  *     local insert folds its rows onto the keys' current rows, any other
+  *     edit recomputes the keys; the old group rows become the Delete half
+  *     of the update, matching the reference's Update ≡
+  *     Delete(old)+Insert(new) (database.rs:282-286).
   *
   * Cost model. An insert whose aligned rows plan to a LocalRelation (every
   * `createDataFrame` batch, every façade InsertData) is a LOCAL edit: its
@@ -34,11 +36,19 @@ import scala.jdk.CollectionConverters._
   *
   *   - source, Function and Filter nodes run no Spark job (Spark folds a
   *     projection or filter over local rows on the driver);
-  *   - an Action node runs one job (its row function is a mapPartitions);
-  *   - an Aggregation or Union node runs about one job to read the base
-  *     rows of the keys it replaces (none when they are all dead already)
-  *     and the jobs of recomputing those keys (none for a Union insert of
-  *     a new key); it appends the replacement rows and tombstones the keys;
+  *   - an Action node runs no job: its row function is applied to the
+  *     delta's rows on the driver ([[Transforms.actionRows]]);
+  *   - an Aggregation or Union node runs one job to read its current rows
+  *     under the keys it replaces (none when they are all dead already),
+  *     then folds the new rows onto them on the driver: a Union pairs them
+  *     by key and merges them as [[Transforms.union]] does; an Aggregation
+  *     whose accumulators fold exactly ([[Transforms.exactFold]]) folds each
+  *     key's new rows onto its group row. It appends the replacement rows
+  *     and tombstones the keys;
+  *   - an Aggregation that does not fold exactly (a Double sum, a `first()`
+  *     overwrite), and a Union fed an update (a delete, or an upstream
+  *     Aggregation's Delete+Insert), recompute the keys from their input
+  *     tables: one job to read them and the jobs of the recompute;
   *   - when a table's local rows plus dead keys pass [[IncrementalGraph.CompactAt]]
   *     the table compacts into a new checkpointed base: one job.
   *
@@ -82,6 +92,7 @@ final class IncrementalGraph(
 
   private val byName = config.byName
   private val mat = scala.collection.mutable.Map.empty[String, Mat]
+  private val folds = scala.collection.mutable.Map.empty[String, Option[Transforms.ExactFold]]
   private val views = new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
   /** The table states as of the last committed edit; read and written
     * under `commitLock` only. */
@@ -164,7 +175,7 @@ final class IncrementalGraph(
   //    (inserts, deletes) where an upsert surfaces as Delete(old)+
   //    Insert(new), the reference's Update encoding (database.rs:282-286).
   private val listeners = scala.collection.mutable.Map
-    .empty[String, List[(DataFrame, DataFrame) => Unit]]
+    .empty[String, List[(graft.ListenEvent, (DataFrame, DataFrame) => Unit)]]
 
   /** Subscribe to a table's change feed; `event` restricts delivery to one
     * change kind — the reference's per-kind listener map
@@ -174,18 +185,20 @@ final class IncrementalGraph(
   def listen(tableName: String, event: graft.ListenEvent = graft.ListenEvent.Both)
             (cb: (DataFrame, DataFrame) => Unit): Unit = {
     require(byName.contains(tableName), s"no table named $tableName")
-    val wrapped: (DataFrame, DataFrame) => Unit = event match {
-      case graft.ListenEvent.Both => cb
-      case graft.ListenEvent.Insert =>
-        (ins, del) => if (!ins.isEmpty) cb(ins, del.limit(0))
-      case graft.ListenEvent.Delete =>
-        (ins, del) => if (!del.isEmpty) cb(ins.limit(0), del)
-    }
-    listeners(tableName) = wrapped :: listeners.getOrElse(tableName, Nil)
+    listeners(tableName) = (event, cb) :: listeners.getOrElse(tableName, Nil)
   }
 
-  private def notifyListeners(tableName: String, ins: DataFrame, del: DataFrame): Unit =
-    listeners.getOrElse(tableName, Nil).foreach(cb => cb(ins, del))
+  /** An Insert subscriber gets an empty frame for the deletes, and a
+    * Delete subscriber one for the inserts. */
+  private def notifyListeners(tableName: String, ins: Delta, del: Delta): Unit =
+    listeners.getOrElse(tableName, Nil).foreach {
+      case (graft.ListenEvent.Both, cb) => cb(ins.df, del.df)
+      case (graft.ListenEvent.Insert, cb) => if (!ins.isEmpty) cb(ins.df, emptied(del))
+      case (graft.ListenEvent.Delete, cb) => if (!del.isEmpty) cb(emptied(ins), del.df)
+    }
+
+  private def emptied(d: Delta): DataFrame =
+    if (d.rows.exists(_.isEmpty)) d.df else localFrame(spark, Nil, d.df.schema)
 
   /** Run an edit transactionally — the reference's rollback
     * (database.rs:317-396), without the edit-inversion machinery: every
@@ -200,7 +213,7 @@ final class IncrementalGraph(
     * (as are the reference's embedded-Python actions). */
   private def transactional(body: Pending => Unit): Seq[(String, DataFrame, DataFrame)] = {
     val snapshot = mat.toMap
-    val pending = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame, DataFrame)]
+    val pending: Pending = scala.collection.mutable.ArrayBuffer.empty
     try body(pending)
     catch {
       case e: Throwable =>
@@ -211,9 +224,9 @@ final class IncrementalGraph(
       committed = mat.toMap
       pending.foreach { case (t, ins, del) => notifyListeners(t, ins, del) }
     }
-    pending.toList
+    pending.map { case (t, ins, del) => (t, ins.df, del.df) }.toList
   }
-  private type Pending = scala.collection.mutable.ArrayBuffer[(String, DataFrame, DataFrame)]
+  private type Pending = scala.collection.mutable.ArrayBuffer[(String, Delta, Delta)]
 
   /** Insert rows; all derived tables are brought current before this
     * returns (the reference's eager cascade). Returns the committed rows.
@@ -245,7 +258,7 @@ final class IncrementalGraph(
         case Some(rs) => m.append(rs)
         case None => m.rebased(m.frame.unionByName(committed.df))
       }
-      pending += ((tableName, committed.df, none.df))
+      pending += ((tableName, committed, none))
       propagate(tableName, committed, none, pending)
     }
   }
@@ -269,7 +282,7 @@ final class IncrementalGraph(
     val none = localDelta(deleted.df.schema, Nil)
     transactional { pending =>
       mat(tableName) = m.rebased(cur.filter(!(col(column) <=> lit(key))))
-      pending += ((tableName, none.df, deleted.df))
+      pending += ((tableName, none, deleted))
       propagate(tableName, none, deleted, pending)
     }
   }
@@ -298,15 +311,30 @@ final class IncrementalGraph(
           (add, rem)
         case a: AggregationTableConfig =>
           val keys = keysOf(Seq(inserted, deleted), Seq(a.aggregatedColumn))
-          upsert(a.name, keys) { _ =>
-            Transforms.aggregation(keys.select(table(a.sourceTable), a.aggregatedColumn),
-              a.aggregatedColumn, a.functions)
+          val fold = for {
+            rs <- inserted.rows if deleted.isEmpty
+            f <- folds.getOrElseUpdate(a.name,
+              Transforms.exactFold(inserted.df, a.aggregatedColumn, a.functions))
+          } yield (f, rs)
+          upsert(a.name, keys) { old =>
+            (fold, old.rows) match {
+              // the reference's per-row memo fold (transform.rs:244-271):
+              // each key's new rows onto its group row, or onto zero
+              case (Some((f, rs)), Some(olds)) =>
+                val k = old.df.schema.fieldIndex(AggregationKey)
+                val groupRows = olds.map(r => groupKey(r.get(k)) -> r).toMap
+                f(grouped(rs, inserted.df.schema.fieldIndex(a.aggregatedColumn))
+                  .map { case (key, rows) => (key, groupRows.get(groupKey(key)), rows) })
+              case _ =>
+                Transforms.aggregation(keys.select(table(a.sourceTable), a.aggregatedColumn),
+                  a.aggregatedColumn, a.functions)
+            }
           }
         case u: UnionTableConfig =>
           val fks = u.tablesAndForeignKeys.collect { case (t, fk) if t == src => fk }
           val insertOnly = deleted.isEmpty
           val keys = keysOf(if (insertOnly) Seq(inserted) else Seq(inserted, deleted), fks)
-          upsert(u.name, keys) { oldRows =>
+          upsert(u.name, keys) { old =>
             if (insertOnly) {
               // Pure insert — the reference's per-row upsert, applied per
               // batch: each incoming row merges ONTO the current derived
@@ -316,8 +344,11 @@ final class IncrementalGraph(
               // accumulated in an append-log source can never fan out into
               // duplicate derived rows. (Rows within ONE insert batch are
               // assumed key-unique per fk; the reference would fold them in
-              // arrival order, which a batch does not define.)
-              Transforms.union((oldRows, MatchingKey) +: fks.map(fk => (inserted.df, fk)))
+              // arrival order, which a batch does not define.) Local
+              // rows pair by key on the driver.
+              val inputs = (old.df, MatchingKey) +: fks.map(fk => (inserted.df, fk))
+              if (old.rows.isDefined && inserted.rows.isDefined) Transforms.union(inputs, localFullOuter)
+              else Transforms.union(inputs)
             } else {
               // Delete (or derived upsert = delete+insert): rebuild the
               // affected keys from the remaining input rows. An append-log
@@ -346,32 +377,36 @@ final class IncrementalGraph(
             }
           }
       }
-      pending += ((d.name, ins.df, del.df))
+      pending += ((d.name, ins, del))
       propagate(d.name, ins, del, pending)
     }
   }
 
   /** Delta `in` of `src` through row-wise table `d`, frozen like `in`. */
-  private def through(d: DerivedTableConfig, src: String, in: Delta): Delta = {
-    val out = compute(d, Map(src -> in.df))
-    if (in.rows.exists(_.isEmpty)) localDelta(out.schema, Nil)
-    else freeze(out, in.rows.isDefined)
+  private def through(d: DerivedTableConfig, src: String, in: Delta): Delta = (d, in.rows) match {
+    case (a: ActionTableConfig, Some(rs)) =>
+      val (schema, f) = Transforms.actionRows(ActionRegistry.get(a.actionName), in.df.schema)
+      localDelta(schema, rs.flatMap(r => f(new GenericRowWithSchema(r.toSeq.toArray, in.df.schema))))
+    case _ =>
+      val out = compute(d, Map(src -> in.df))
+      if (in.rows.exists(_.isEmpty)) localDelta(out.schema, Nil)
+      else freeze(out, in.rows.isDefined)
   }
 
   /** Replace the rows of keyed table `name` under `keys` with
     * `replacement(old rows)`; returns the (inserted, deleted) deltas. */
-  private def upsert(name: String, keys: Keys)(replacement: DataFrame => DataFrame): (Delta, Delta) = {
+  private def upsert(name: String, keys: Keys)(replacement: Delta => DataFrame): (Delta, Delta) = {
     val m = mat(name)
     val columns = m.base.columns.map(col).toIndexedSeq
     keys match {
       case LocalKeys(ks) =>
         val old = localDelta(m.schema, m.rowsUnder(ks))
-        val rep = freeze(replacement(old.df).select(columns: _*), local = true)
+        val rep = freeze(replacement(old).select(columns: _*), local = true)
         mat(name) = m.upsert(ks, rep.rows.get)
         (rep, old)
       case k: FrameKeys =>
         val old = Delta(checkpoint(k.select(m.frame, m.key.get)), None)
-        val rep = freeze(replacement(old.df).select(columns: _*), local = false)
+        val rep = freeze(replacement(old).select(columns: _*), local = false)
         mat(name) = m.rebased(k.drop(m.frame, m.key.get).unionByName(rep.df))
         (rep, old)
     }
@@ -379,10 +414,12 @@ final class IncrementalGraph(
 }
 
 object IncrementalGraph {
+  import SystemColumns._
+
   /** A frozen delta: driver-local `rows` (with `df` their LocalRelation)
     * when derived from a local edit, else a checkpointed frame. */
   private final case class Delta(df: DataFrame, rows: Option[Seq[Row]]) {
-    def isEmpty: Boolean = rows.fold(df.isEmpty)(_.isEmpty)
+    lazy val isEmpty: Boolean = rows.fold(df.isEmpty)(_.isEmpty)
   }
 
   /** One materialized table: the rows of the checkpointed `base` whose
@@ -460,6 +497,50 @@ object IncrementalGraph {
 
   private def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
+
+  /** A key value under Spark's key equality: floating-point -0.0 is 0.0
+    * and every NaN is one value, binary compares by content. */
+  private def groupKey(k: Any): Any = k match {
+    case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+    case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+    case b: Array[Byte] => b.toSeq
+    case other => other
+  }
+
+  /** `rows` grouped by the value of field `i` (null is a group, as in a
+    * GROUP BY): groups in first-arrival order, rows in arrival order. */
+  private def grouped(rows: Seq[Row], i: Int): Seq[(Any, Seq[Row])] = {
+    val groups = scala.collection.mutable.LinkedHashMap.empty[Any, (Any, Seq[Row])]
+    rows.foreach { r =>
+      val (key, rs) = groups.getOrElse(groupKey(r.get(i)), (r.get(i), Vector.empty))
+      groups(groupKey(key)) = (key, rs :+ r)
+    }
+    groups.values.toSeq
+  }
+
+  /** [[Transforms.fullOuterOnKey]] for two driver-local frames, paired on
+    * the driver: the same rows, every column nullable. As in the
+    * equi-join, a null key matches nothing. */
+  private def localFullOuter(l: DataFrame, r: DataFrame): DataFrame = {
+    val (li, ri) = (l.schema.fieldIndex(MatchingKey), r.schema.fieldIndex(MatchingKey))
+    if (l.schema(li).dataType != r.schema(ri).dataType) return Transforms.fullOuterOnKey(l, r)
+    val (lRest, rRest) = (l.schema.indices.filter(_ != li), r.schema.indices.filter(_ != ri))
+    val (lRows, rRows) = (l.collect().toSeq, r.collect().toSeq)
+    val byKey = rRows.filter(!_.isNullAt(ri)).groupBy(x => groupKey(x.get(ri)))
+    def row(key: Any, lr: Option[Row], rr: Option[Row]): Row = Row.fromSeq(key +:
+      (lRest.map(i => lr.map(_.get(i)).orNull) ++ rRest.map(i => rr.map(_.get(i)).orNull)))
+    val paired = lRows.flatMap { lr =>
+      val matches = if (lr.isNullAt(li)) Nil else byKey.getOrElse(groupKey(lr.get(li)), Nil)
+      if (matches.isEmpty) Seq(row(lr.get(li), Some(lr), None))
+      else matches.map(rr => row(lr.get(li), Some(lr), Some(rr)))
+    }
+    val matched = lRows.filter(!_.isNullAt(li)).map(x => groupKey(x.get(li))).toSet
+    val unmatched = rRows.filter(x => x.isNullAt(ri) || !matched(groupKey(x.get(ri))))
+      .map(rr => row(rr.get(ri), None, Some(rr)))
+    val schema = StructType((l.schema(li) +: (lRest.map(l.schema(_)) ++ rRest.map(r.schema(_))))
+      .map(_.copy(nullable = true)))
+    localFrame(l.sparkSession, paired ++ unmatched, schema)
+  }
 
   /** Null-safe `c ∈ keys`. */
   private def keyIn(c: Column, keys: Set[Any]): Column = {

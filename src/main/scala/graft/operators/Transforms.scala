@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.expr._
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** System columns (reference: reactive_db/src/constants.rs:2-5). */
 object SystemColumns {
@@ -64,9 +65,11 @@ object Transforms {
     *
     * Plan shape: a chain of full_outer joins on the same key — Catalyst
     * keeps the hash-partitioning on matchingKey across the chain so only
-    * the first join shuffles each input once.
+    * the first join shuffles each input once. `fullOuter` replaces that
+    * join, not the merge around it.
     */
-  def union(inputs: Seq[(DataFrame, String)]): DataFrame = {
+  def union(inputs: Seq[(DataFrame, String)],
+            fullOuter: (DataFrame, DataFrame) => DataFrame = fullOuterOnKey): DataFrame = {
     require(inputs.nonEmpty, "union needs at least one input")
     val renamed = inputs.map { case (df, fk) =>
       val dropped = Seq(EntryId, SourceEntryId).filter(df.columns.contains)
@@ -75,7 +78,7 @@ object Transforms {
     renamed.reduce { (left, right) =>
       val overlap = (left.columns.toSet intersect right.columns.toSet) - MatchingKey
       val l = overlap.foldLeft(left)((d, c) => d.withColumnRenamed(c, s"__l_$c"))
-      val joined = l.join(right, Seq(MatchingKey), "full_outer")
+      val joined = fullOuter(l, right)
       // incoming (right/later) overwrites existing (left/earlier)
       val merged = overlap.foldLeft(joined) { (d, c) =>
         d.withColumn(c, coalesce(col(c), col(s"__l_$c"))).drop(s"__l_$c")
@@ -83,6 +86,11 @@ object Transforms {
       merged
     }
   }
+
+  /** [[union]]'s join: `l` full-outer-joined with `r` on [[SystemColumns.MatchingKey]]
+    * — the key, then l's other columns, then r's. A caller may pass
+    * another join with that output, e.g. one that pairs driver-local rows. */
+  def fullOuterOnKey(l: DataFrame, r: DataFrame): DataFrame = l.join(r, Seq(MatchingKey), "full_outer")
 
   /** AggregationTransform: per-group memo fold → decomposed into Spark
     * aggregates (reference: transform.rs:229-275). Recognized statement
@@ -107,29 +115,23 @@ object Transforms {
     // memo-free — covers count via `memo.cnt + 1` and sum via
     // `memo.sum + col`); memo-only statements are deferred to pass two.
     val aggExprs = scala.collection.mutable.LinkedHashMap.empty[String, Typed]
-    parsed.foreach { case Assignment(dest, e) =>
-      e match {
-        case GExpr.BinOp("+", GExpr.MemoRef(d), sub) if d == dest && !GExpr.hasMemo(sub) =>
+    parsed.foreach { a =>
+      accumulation(a) match {
+        case Some((sub, negated)) =>
           val t = compile(sub, rowResolver)
-          aggExprs(dest) = Typed(coalesce(sum(t.col), lit(0)).cast(sparkType(t.t)), t.t)
-        // commutative form: `dest ~ term + memo.dest`
-        case GExpr.BinOp("+", sub, GExpr.MemoRef(d)) if d == dest && !GExpr.hasMemo(sub) =>
-          val t = compile(sub, rowResolver)
-          aggExprs(dest) = Typed(coalesce(sum(t.col), lit(0)).cast(sparkType(t.t)), t.t)
-        case GExpr.BinOp("-", GExpr.MemoRef(d), sub) if d == dest && !GExpr.hasMemo(sub) =>
-          val t = compile(sub, rowResolver)
-          aggExprs(dest) = Typed((lit(0) - coalesce(sum(t.col), lit(0))).cast(sparkType(t.t)), t.t)
-        case _ if !GExpr.hasMemo(e) =>
+          val summed = coalesce(sum(t.col), lit(0))
+          aggExprs(a.dest) = Typed((if (negated) lit(0) - summed else summed).cast(sparkType(t.t)), t.t)
+        case None if !GExpr.hasMemo(a.expr) =>
           // per-row overwrite: the reference's last-row-wins collapses to an
           // arbitrary representative; `first` for determinism within a task
-          val t = compile(e, rowResolver)
-          aggExprs(dest) = Typed(first(t.col), t.t)
-        case _ if GExpr.hasColRef(e) =>
+          val t = compile(a.expr, rowResolver)
+          aggExprs(a.dest) = Typed(first(t.col), t.t)
+        case None if GExpr.hasColRef(a.expr) =>
           throw ExprTypeException(
-            s"unsupported memo accumulation for $dest: only `dest ~ memo.dest ± rowExpr` " +
+            s"unsupported memo accumulation for ${a.dest}: only `dest ~ memo.dest ± rowExpr` " +
               "folds decompose into distributed aggregates — use aggregationFold for " +
               "general order-dependent memo folds")
-        case _ => // memo-only → post-aggregation pass
+        case None => // memo-only → post-aggregation pass
       }
     }
 
@@ -143,23 +145,139 @@ object Transforms {
       .groupBy(col(aggregatedColumn).as(AggregationKey))
       .agg(aggExprs.head._2.col.as(aggExprs.head._1),
            aggExprs.tail.map { case (d, t) => t.col.as(d) }.toSeq: _*)
+    postAggregation(grouped, parsed, aggExprs.toSeq.map { case (d, t) => d -> t.t })
+  }
 
-    // second pass: memo-only post-aggregation statements
+  /** `dest ~ memo.dest + term`, `dest ~ term + memo.dest` or
+    * `dest ~ memo.dest - term` with a memo-free term: the term, and
+    * whether it is subtracted. */
+  private def accumulation(a: Assignment): Option[(GExpr, Boolean)] = a.expr match {
+    case GExpr.BinOp("+", GExpr.MemoRef(d), sub) if d == a.dest && !GExpr.hasMemo(sub) => Some((sub, false))
+    case GExpr.BinOp("+", sub, GExpr.MemoRef(d)) if d == a.dest && !GExpr.hasMemo(sub) => Some((sub, false))
+    case GExpr.BinOp("-", GExpr.MemoRef(d), sub) if d == a.dest && !GExpr.hasMemo(sub) => Some((sub, true))
+    case _ => None
+  }
+
+  /** [[aggregation]]'s second pass: over `grouped` (the key and one column
+    * per aggregated dest, of the given types), the memo-only statements;
+    * output = the key and every statement's dest, in statement order. */
+  private def postAggregation(grouped: DataFrame, parsed: Seq[Assignment],
+                              aggregated: Seq[(String, ExprCompiler.GType)]): DataFrame = {
+    import ExprCompiler._
+    val types = scala.collection.mutable.LinkedHashMap.empty[String, GType] ++= aggregated
     val memoResolver: Resolver = { name =>
-      aggExprs.get(name) match {
-        case Some(t) => Typed(col(name), t.t)
+      types.get(name) match {
+        case Some(t) => Typed(col(name), t)
         case None    => throw ExprTypeException(s"memo.$name not yet defined")
       }
     }
     val postCols = parsed.map { case Assignment(dest, e) =>
-      if (aggExprs.contains(dest)) col(dest)
+      if (types.contains(dest)) col(dest)
       else {
         val t = compile(e, memoResolver, memoResolver)
-        aggExprs(dest) = Typed(col(dest), t.t)
+        types(dest) = t.t
         t.col.as(dest)
       }
     }
     grouped.select(col(AggregationKey) +: postCols: _*)
+  }
+
+  /** [[aggregation]] resumed from each group's previous row, for configs
+    * where that is exact: every accumulator sums an integer term, or a
+    * decimal term whose sum type keeps every digit through Spark's decimal
+    * addition (sum precision below 38, or scale at most 6), and every other
+    * statement is memo-only. `None` for any other config: a Double sum
+    * folded in another order can differ from the recompute in its last
+    * bits, and `first()` overwrites and general folds do not decompose.
+    * `input` is any frame of the aggregation's input schema. */
+  private[operators] def exactFold(input: DataFrame, aggregatedColumn: String,
+                                   statements: Seq[String]): Option[ExactFold] = {
+    graft.expr.GraftFunctions.register(input.sparkSession)
+    import ExprCompiler._
+    val schema = input.schema
+    val parsed = statements.map(ExprParser.parseAssignment)
+    val accs = parsed.flatMap(a => accumulation(a).map(a.dest -> _))
+    val memoOnly = parsed.filter(a => accumulation(a).isEmpty)
+    if (accs.isEmpty || parsed.map(_.dest).distinct.size != parsed.size ||
+        memoOnly.exists(a => !GExpr.hasMemo(a.expr) || GExpr.hasColRef(a.expr))) return None
+    val terms = accs.map { case (_, (sub, _)) => compile(sub, schemaResolver(schema)) }
+    val foldTypes = terms.zip(input.select(terms.map(_.col): _*).schema.map(_.dataType)).map {
+      case (Typed(_, GInt), ByteType | ShortType | IntegerType | LongType) => Some(LongType)
+      case (Typed(_, GDec), d: DecimalType) if d.precision + 10 < 38 || d.scale <= 6 =>
+        Some(DecimalType(math.min(38, d.precision + 10), d.scale))
+      case _ => None
+    }
+    if (foldTypes.contains(None)) None
+    else Some(new ExactFold(input.sparkSession, schema, aggregatedColumn, parsed,
+      accs.zip(terms).zip(foldTypes.flatten).map {
+        case (((dest, (sub, negated)), t), ft) => Accumulator(dest, sub, negated, t.t, ft)
+      }))
+  }
+
+  private[operators] final case class Accumulator(dest: String, term: GExpr, negated: Boolean,
+                                                  t: ExprCompiler.GType, foldType: DataType)
+
+  /** An [[exactFold]]: new input rows folded onto their groups' rows. */
+  private[operators] final class ExactFold(spark: SparkSession, schema: StructType,
+                                           aggregatedColumn: String, parsed: Seq[Assignment],
+                                           accs: Seq[Accumulator]) {
+    import ExprCompiler._
+    private val needed = accs.flatMap(a => GExpr.collectCols(a.term)).distinct
+      .filter(schema.fieldNames.contains)
+
+    /** The group rows [[aggregation]] would give over each group's old and
+    * new input rows. `groups` holds, per key, its current group row
+    * ([[aggregation]]'s output columns; None for a new key) and its new
+    * input rows in arrival order. One projection of a Spark `aggregate`
+    * over a LocalRelation with one row per key, which Spark evaluates on
+    * the driver. */
+    def apply(groups: Seq[(Any, Option[Row], Seq[Row])]): DataFrame = {
+      val rowType = StructType(needed.map(n => schema(n).copy(nullable = true)))
+      val memoType = StructType(accs.map(a => StructField(a.dest, sparkType(a.t))))
+      val rowIdx = needed.map(schema.fieldIndex)
+      val memoIdx = accs.map(a => 1 + parsed.indexWhere(_.dest == a.dest))
+      val zero = accs.map(a => if (a.t == GInt) 0L else java.math.BigDecimal.ZERO)
+      val local = spark.createDataFrame(groups.map { case (key, old, rows) =>
+        Row(key, Row.fromSeq(old.fold[Seq[Any]](zero)(r => memoIdx.map(r.get))),
+          rows.map(r => Row.fromSeq(rowIdx.map(r.get))))
+      }.asJava, StructType(Seq(
+        StructField(AggregationKey, schema(aggregatedColumn).dataType),
+        StructField("__memo", memoType),
+        StructField("__rows", ArrayType(rowType)))))
+      val init = struct(accs.map(a => col("__memo").getField(a.dest).cast(a.foldType).as(a.dest)): _*)
+      val folded = aggregate(col("__rows"), init, (acc, x) => {
+        val rowRes: Resolver = n => Typed(x.getField(n), toGType(schema(n).dataType))
+        memoStep(acc, accs.map(a => (a.dest, a.t, a.foldType)), accs.map { a =>
+          a.dest -> { (memo: Resolver) =>
+            val term = coalesce(compile(a.term, rowRes).col, lit(0)).cast(a.foldType)
+            if (a.negated) memo(a.dest).col - term else memo(a.dest).col + term
+          }
+        })
+      })
+      val grouped = local.select(col(AggregationKey), folded.as("__m"))
+        .select(col(AggregationKey) +:
+          accs.map(a => col("__m").getField(a.dest).cast(sparkType(a.t)).as(a.dest)): _*)
+      postAggregation(grouped, parsed, accs.map(a => a.dest -> a.t))
+    }
+  }
+
+  /** One step of a memo fold: `updates` run in order over the memo struct
+    * `acc`, each seeing the memo as the updates before it left it (earlier
+    * statements' results for the same row), each result cast to its memo
+    * field's type. Returns the next memo struct. */
+  private def memoStep(acc: Column, memo: Seq[(String, ExprCompiler.GType, DataType)],
+                       updates: Seq[(String, ExprCompiler.Resolver => Column)]): Column = {
+    import ExprCompiler._
+    val env = scala.collection.mutable.LinkedHashMap.empty[String, Typed] ++=
+      memo.map { case (d, t, _) => d -> Typed(acc.getField(d), t) }
+    val types = memo.map { case (d, t, dt) => d -> (t, dt) }.toMap
+    updates.foreach { case (dest, update) =>
+      val memoRes: Resolver = d => env.getOrElse(d,
+        throw ExprTypeException(s"memo.$d not yet defined"))
+      val (t, dt) = types(dest)
+      env(dest) = Typed(update(memoRes).cast(dt), t)
+    }
+    struct(memo.map { case (d, _, _) => env(d).col.as(d) }: _*)
   }
 
   /** General memo fold for statements that do NOT decompose into Spark
@@ -213,18 +331,11 @@ object Transforms {
     val rowsCol = array_sort(collect_list(struct(needed.map(col): _*)))
     val init = struct(dests.map(d => lit(0).cast(sparkType(memoTypes(d))).as(d)): _*)
     val folded = aggregate(rowsCol, init, (acc, x) => {
-      val env = scala.collection.mutable.LinkedHashMap.empty[String, Typed] ++=
-        dests.map(d => d -> Typed(acc.getField(d), memoTypes(d)))
-      parsed.foreach { case Assignment(dest, e) =>
-        val rowRes: Resolver = n =>
-          if (needed.contains(n)) Typed(x.getField(n), toGType(schema(n).dataType))
-          else throw ExprTypeException(s"No such column $n exists")
-        val memoRes: Resolver = d => env.getOrElse(d,
-          throw ExprTypeException(s"memo.$d not yet defined"))
-        val t = compile(e, rowRes, memoRes)
-        env(dest) = Typed(t.col.cast(sparkType(memoTypes(dest))), memoTypes(dest))
-      }
-      struct(dests.map(d => env(d).col.as(d)): _*)
+      val rowRes: Resolver = n =>
+        if (needed.contains(n)) Typed(x.getField(n), toGType(schema(n).dataType))
+        else throw ExprTypeException(s"No such column $n exists")
+      memoStep(acc, dests.map(d => (d, memoTypes(d), sparkType(memoTypes(d)))),
+        parsed.map(a => a.dest -> ((memoRes: Resolver) => compile(a.expr, rowRes, memoRes).col)))
     })
     input.groupBy(col(aggregatedColumn).as(AggregationKey))
       .agg(folded.as("__m"))
@@ -246,30 +357,37 @@ object Transforms {
     * SURVEY.md §2.7). Rows that throw are dropped with a warning, matching
     * the reference's error-drops-row behavior. */
   def action(input: DataFrame, act: GraftAction): DataFrame = {
-    val outSchema0 = act.outputSchema(input.schema)
-    val hasEntry = input.schema.fieldNames.contains(EntryId)
+    val (outSchema, apply) = actionRows(act, input.schema)
+    input.mapPartitions(_.flatMap(apply))(Encoders.row(outSchema)).toDF()
+  }
+
+  /** An Action's output schema over input rows of `inSchema`, and its
+    * per-row function: `act.fn` applied to the row, with the row's
+    * `_entryId` appended as `_sourceEntryId`; a row that throws is dropped
+    * with a warning. [[action]] maps it over partitions; a caller holding
+    * the rows on the driver may apply it there. */
+  private[operators] def actionRows(act: GraftAction,
+                                    inSchema: StructType): (StructType, Row => Option[Row]) = {
+    val outSchema0 = act.outputSchema(inSchema)
+    val hasEntry = inSchema.fieldNames.contains(EntryId)
     val outSchema =
       if (hasEntry && !outSchema0.fieldNames.contains(SourceEntryId))
         outSchema0.add(SourceEntryId, StringType)
       else outSchema0
-    val fn = act.fn
-    val inSchema = input.schema
-    val mapped = input.mapPartitions { it =>
-      it.flatMap { row =>
-        try {
-          val out = fn(row)
-          if (hasEntry) {
-            val src = row.getAs[Any](inSchema.fieldIndex(SystemColumns.EntryId))
-            Some(Row.fromSeq(out.toSeq :+ src))
-          } else Some(out)
-        } catch {
-          case e: Exception =>
-            System.err.println(s"[graft] action ${act.name} dropped row: ${e.getMessage}")
-            None
-        }
+    val (name, fn) = (act.name, act.fn)
+    val apply: Row => Option[Row] = row =>
+      try {
+        val out = fn(row)
+        if (hasEntry) {
+          val src = row.getAs[Any](inSchema.fieldIndex(SystemColumns.EntryId))
+          Some(Row.fromSeq(out.toSeq :+ src))
+        } else Some(out)
+      } catch {
+        case e: Exception =>
+          System.err.println(s"[graft] action $name dropped row: ${e.getMessage}")
+          None
       }
-    }(Encoders.row(outSchema))
-    mapped.toDF()
+    (outSchema, apply)
   }
 }
 

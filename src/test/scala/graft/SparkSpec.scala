@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,21 +37,32 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   override def afterAll(): Unit = () // keep the shared session alive
 
-  /** Number of Spark jobs started while `body` runs, on any thread.
-    * Listener events arrive asynchronously but in order, so a marker job
-    * before and after `body` brackets exactly its jobs. */
-  def jobsDuring(body: => Unit): Int = {
+  /** The Spark jobs started while `body` runs, on any thread, each named
+    * by its call site: that of the DataFrame action it runs for, else its
+    * own. Listener events arrive asynchronously but in order, so a marker
+    * job before and after `body` brackets exactly its jobs. */
+  def jobsDuring(body: => Unit): Jobs = {
     val sc = spark.sparkContext
     val marker = s"jobsDuring-${java.util.UUID.randomUUID()}"
-    val count = new java.util.concurrent.atomic.AtomicInteger
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val actions = new java.util.concurrent.ConcurrentHashMap[String, String]
     val markers = new java.util.concurrent.Semaphore(0)
     @volatile var counting = false
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker)) {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => actions.put(s.executionId.toString, s.description)
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.job.description").contains(marker)) {
           counting = !counting
           markers.release()
-        } else if (counting) count.incrementAndGet()
+        } else if (counting)
+          sites.add(prop("spark.sql.execution.id").flatMap(id => Option(actions.get(id)))
+            .orElse(prop("callSite.short")).orElse(e.stageInfos.lastOption.map(_.name)).getOrElse("?"))
+      }
     }
     def markerJob(): Unit = {
       sc.setJobDescription(marker)
@@ -62,7 +74,16 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       body
       markerJob()
       assert(markers.tryAcquire(2, 60, java.util.concurrent.TimeUnit.SECONDS), "marker jobs not seen")
-      count.get
+      import scala.jdk.CollectionConverters._
+      Jobs(sites.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
+}
+
+/** Spark jobs counted by [[SparkSpec.jobsDuring]]; prints as the count and
+  * each job's call site, so a failed count names what ran the jobs. */
+final case class Jobs(callSites: Seq[String]) {
+  def count: Int = callSites.size
+  override def toString: String =
+    s"$count Spark jobs" + (if (callSites.isEmpty) "" else callSites.mkString(" (", "; ", ")"))
 }

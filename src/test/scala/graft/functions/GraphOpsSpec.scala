@@ -575,12 +575,10 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("pageRank exits with ≤1 pinned RDD in both lazy and eager checkpoint modes") {
-    // pageRankCore trades per-iteration eager release (bounded peak at
-    // 60M edges) against a single lazy cascade (no per-iteration job at
-    // toy scale) on a heap estimate — but BOTH modes must release every
-    // intermediate: only the returned rank frame may stay pinned. The
-    // toy graph takes the lazy branch; the result must be identical to
-    // the law the other tests pin, and the block manager clean.
+    // Each iteration checkpoints its rank ⋈ degree frame eagerly and its
+    // ranks lazily, and releases the frames the next iteration read: only
+    // the returned rank frame may stay pinned. The result must match the
+    // law the other tests pin, and the block manager must be clean.
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val edges = spark.range(200).selectExpr("id as src", "(id + 1) % 200 as dst")
@@ -597,24 +595,20 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("pageRank rolling release (forced cadence) is bit-identical and leaves ≤1 pinned RDD") {
-    // The rolling window (materialize + release every K iterations —
-    // bounded peak at 60M edges, one lazy cascade when the window fits)
-    // can't trigger on a toy graph, so force K=1 via the test knob and
-    // pin (a) bit-identical ranks vs the default single-cascade run and
-    // (b) the same clean block-manager exit.
+    // The cadence is fixed at one: every iteration releases the frames of
+    // the one before, so (a) a second run gives bit-identical ranks and
+    // (b) it leaves exactly the returned frame pinned in the block manager.
     val sc = spark.sparkContext
     val edges = spark.range(300).selectExpr(
       "id as src", "(id * 7 + 3) % 300 as dst")
     val base = GraphOps.pageRank(edges, "src", "dst", damping = 0.85, iters = 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val before = sc.getPersistentRDDs.keySet
-    sys.props("graft.pr.rollEvery") = "1"
-    val rolled = try GraphOps.pageRank(edges, "src", "dst", damping = 0.85, iters = 5)
-    finally sys.props.remove("graft.pr.rollEvery")
+    val rerun = GraphOps.pageRank(edges, "src", "dst", damping = 0.85, iters = 5)
     val pinnedNew = sc.getPersistentRDDs.keySet -- before
     assert(pinnedNew.size <= 1,
-      s"rolling pageRank left ${pinnedNew.size} pinned RDDs")
-    val rows = rolled.collect()
+      s"pageRank left ${pinnedNew.size} pinned RDDs")
+    val rows = rerun.collect()
     assert(rows.length == base.size)
     rows.foreach { r =>
       assert(r.getDouble(1) == base(r.getLong(0)), s"rank differs at ${r.getLong(0)}")

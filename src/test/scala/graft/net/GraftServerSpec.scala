@@ -406,7 +406,7 @@ class GraftServerSpec extends SparkSpec {
       insert(1)
       var edits: JsonNode = null
       val jobs = jobsDuring { edits = insert(5) }
-      assert(jobs == 0, s"$jobs Spark jobs for a one-row InsertData")
+      assert(jobs.count == 0, s"$jobs for a one-row InsertData")
       // source row, derived row, and the filter-passing row
       assert(edits.size() == 3)
       assert(edits.get(2).get("newColumn").get("Integer").asLong() == 7L)

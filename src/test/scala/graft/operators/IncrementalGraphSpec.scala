@@ -323,8 +323,225 @@ class IncrementalGraphSpec extends SparkSpec {
       edits = inc.insertWithEdits("grades", rows(gradeSchema, Row("Bob", 70L)))
       edits.foreach { case (_, ins, del) => ins.collect(); del.collect() }
     }
-    assert(jobs == 0, s"$jobs Spark jobs for a one-row local insert")
+    assert(jobs.count == 0, s"$jobs for a one-row local insert")
     assert(edits.map(_._1) == Seq("grades", "curved", "passing"))
     assert(inc.table("passing").count() == 2)
+  }
+
+  /** The reference `test_cfg.yaml` cascade (FIXTURES.md §A): a grades
+    * insert reaches a Union, then an Aggregation, then an Action. */
+  private val testCfg =
+    """tables:
+      |  - name: testTable
+      |    kind: source
+      |    columns: {testForIndex: Integer, testForIteration: Integer}
+      |  - name: users
+      |    kind: source
+      |    columns: {name: Str, age: Integer}
+      |  - name: grades
+      |    kind: source
+      |    columns: {name: Str, grade: Integer}
+      |  - name: derived
+      |    kind: function
+      |    source_table: testTable
+      |    functions: ["newColumn ~ testForIteration + 2"]
+      |  - name: unionTest
+      |    kind: union
+      |    tables_and_foreign_keys: [[users, name], [grades, name]]
+      |  - name: filterTest
+      |    kind: filter
+      |    source_table: testTable
+      |    filter: "(testForIndex < 11) && (testForIteration > 14)"
+      |  - name: aggregationTest
+      |    kind: aggregation
+      |    source_table: grades
+      |    aggregated_column: name
+      |    functions: ["count ~ memo.count + 1", "sum ~ memo.sum + grade", "average ~ memo.sum / memo.count"]
+      |  - name: actionTest
+      |    kind: action
+      |    source_table: grades
+      |    action: IdentityAction
+      |""".stripMargin
+  private val testCfgTables = Seq("testTable", "users", "grades", "derived", "unionTest",
+    "filterTest", "aggregationTest", "actionTest")
+
+  private def testCfgGraph(): IncrementalGraph = {
+    ActionRegistry.register(GraftAction("IdentityAction", identity))
+    new IncrementalGraph(spark, PipelineConfig.fromYaml(testCfg))
+  }
+
+  test("a one-row grades insert through test_cfg runs at most 2 Spark jobs: the keyed base reads") {
+    val inc = testCfgGraph()
+    inc.insert("users", rows(userSchema, Row("Alex", 22L)))
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 90L)))
+    // compact, so the key's rows are read from a checkpointed base
+    inc.insert("grades", rows(gradeSchema, (0 to IncrementalGraph.CompactAt).map(i => Row(s"n$i", 1L)): _*))
+    var edits: Seq[(String, Seq[Row], Seq[Row])] = Nil
+    val jobs = jobsDuring {
+      edits = inc.insertWithEdits("grades", rows(gradeSchema, Row("n1", 80L)))
+        .map { case (t, ins, del) => (t, ins.collect().toSeq, del.collect().toSeq) }
+    }
+    assert(jobs.count <= 2, s"$jobs for a one-row grades insert")
+    assert(edits.map(_._1) == Seq("grades", "unionTest", "aggregationTest", "actionTest"))
+    val byTable = edits.map(e => e._1 -> e).toMap
+    val union = byTable("unionTest")
+    assert(union._2.map(r => (r.getAs[String]("matchingKey"), r.getAs[Long]("grade"))) == Seq("n1" -> 80L))
+    assert(union._3.map(_.getAs[Long]("grade")) == Seq(1L))
+    val agg = byTable("aggregationTest")
+    assert(agg._2.map(r => (r.getAs[Long]("count"), r.getAs[Long]("sum"))) == Seq((2L, 81L)))
+    assert(agg._3.map(r => (r.getAs[Long]("count"), r.getAs[Long]("sum"))) == Seq((1L, 1L)))
+    assert(byTable("actionTest")._2.map(_.getAs[Long]("grade")) == Seq(80L))
+  }
+
+  test("local batches fold onto aggregation groups exactly as a from-scratch recompute") {
+    val cfg = PipelineConfig.fromYaml(
+      yaml.replace("\"avg ~ memo.sum / memo.cnt\"",
+        "\"neg ~ memo.neg - grade\", \"avg ~ memo.sum / memo.cnt\""))
+    val inc = new IncrementalGraph(spark, cfg)
+    def grades(rs: Row*): Unit = inc.insert("grades", rows(gradeSchema, rs: _*))
+    // several rows per key in one batch, new keys, the null key twice
+    grades(Row("Alex", 90L), Row("Alex", 70L), Row("Bob", 50L), Row(null, 40L), Row(null, 30L))
+    inc.insert("users", rows(userSchema, Row("Alex", 22L), Row("Cara", 30L)))
+    // Alex's group row is dead in the base and lives in the local rows;
+    // a null grade counts but adds nothing to the sums
+    grades(Row("Alex", 10L), Row("Cara", 88L), Row("Cara", 12L), Row(null, 5L), Row("Dan", null))
+    inc.delete("grades", "name", "Bob")
+    grades(Row("Bob", 65L), Row("Alex", 1L), Row("Bob", 1L))
+    val scratch = new PipelineGraph(spark, cfg,
+      Map("grades" -> inc.table("grades"), "users" -> inc.table("users")))
+    Seq("curved", "passing", "stats", "profile").foreach { t =>
+      assert(bag(inc.table(t)) == bag(scratch.table(t)), s"table $t diverged")
+    }
+    val stats = inc.table("stats").collect()
+      .map(r => Option(r.getAs[String]("aggregatedColumn")) -> ((r.getAs[Long]("cnt"), r.getAs[Long]("sum"))))
+      .toMap
+    assert(stats(Some("Alex")) == ((4L, 171L)))
+    assert(stats(None) == ((3L, 75L)))
+    assert(stats(Some("Dan")) == ((1L, 0L)))
+  }
+
+  test("union pairing and action rows on the driver equal the Spark join and mapPartitions path") {
+    // the same edits, once as local batches and once as frames that plan
+    // to a Spark job (which take the join, recompute and mapPartitions path)
+    val (local, planned) = (testCfgGraph(), testCfgGraph())
+    def both(table: String, schema: StructType, rs: Row*): Unit = {
+      local.insert(table, rows(schema, rs: _*))
+      val df = rows(schema, rs: _*).repartition(1)
+      assert(!IncrementalGraph.isLocal(df))
+      planned.insert(table, df)
+    }
+    both("users", userSchema, Row("Alex", 22L), Row("Cara", 30L), Row(null, 40L))
+    both("grades", gradeSchema, Row("Alex", 90L), Row("Bob", 50L), Row(null, 7L))
+    // an existing key, a new key, the null key again (a null never
+    // matches, so it adds a row), and two rows for one key in one batch
+    both("grades", gradeSchema,
+      Row("Cara", 88L), Row("Dan", 60L), Row(null, 8L), Row("Alex", 1L), Row("Alex", 2L))
+    both("users", userSchema, Row("Dan", 41L), Row("Bob", 23L))
+    testCfgTables.foreach { t =>
+      assert(bag(local.table(t)) == bag(planned.table(t)), s"table $t diverged")
+    }
+    val alex = local.table("unionTest").collect().filter(_.getAs[String]("matchingKey") == "Alex")
+    assert(alex.map(r => (r.getAs[Long]("age"), r.getAs[Long]("grade"))).toSet == Set((22L, 1L), (22L, 2L)))
+  }
+
+  test("aggregations that do not fold exactly (Double sum, first() overwrite) still equal the recompute") {
+    val cfg = PipelineConfig.fromYaml(
+      """tables:
+        |  - name: scores
+        |    kind: source
+        |    columns: {name: Str, grade: Integer, score: Float}
+        |  - name: doubles
+        |    kind: aggregation
+        |    source_table: scores
+        |    aggregated_column: name
+        |    functions: ["cnt ~ memo.cnt + 1", "total ~ memo.total + score"]
+        |  - name: firsts
+        |    kind: aggregation
+        |    source_table: scores
+        |    aggregated_column: name
+        |    functions: ["sum ~ memo.sum + grade", "last ~ grade"]
+        |""".stripMargin)
+    val schema = StructType(Seq(StructField("name", StringType), StructField("grade", LongType),
+      StructField("score", DoubleType)))
+    val inc = new IncrementalGraph(spark, cfg)
+    val probe = rows(schema)
+    cfg.tables.collect { case a: graft.config.AggregationTableConfig => a }.foreach { a =>
+      assert(Transforms.exactFold(probe, a.aggregatedColumn, a.functions).isEmpty,
+        s"${a.name} must recompute")
+    }
+    inc.insert("scores", rows(schema, Row("a", 1L, 0.1), Row("a", 2L, 0.2), Row("b", 3L, 0.3)))
+    inc.insert("scores", rows(schema, Row("a", 4L, 0.3)))
+    inc.insert("scores", rows(schema, Row("b", 5L, 0.25), Row("c", 6L, 1e16), Row("c", 7L, 1.0)))
+    val scratch = new PipelineGraph(spark, cfg, Map("scores" -> inc.table("scores")))
+    Seq("doubles", "firsts").foreach { t =>
+      assert(bag(inc.table(t)) == bag(scratch.table(t)), s"table $t diverged")
+    }
+  }
+
+  /** Whether `e` or one of its causes reports an arithmetic overflow. */
+  private def overflowed(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(x => x.isInstanceOf[ArithmeticException] || String.valueOf(x.getMessage).contains("overflow"))
+
+  /** Every edit of `edits` fails on an ANSI overflow, restores every
+    * table and notifies nobody; the graph then still takes `ok`. */
+  private def assertRollsBack(inc: IncrementalGraph, tables: Seq[String], edits: Seq[() => Unit]): Unit = {
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    tables.foreach(t => inc.listen(t)((_, _) => calls += t))
+    val before = tables.map(t => t -> bag(inc.table(t))).toMap
+    edits.foreach { edit =>
+      val e = intercept[Exception](edit())
+      assert(overflowed(e), s"expected an arithmetic overflow, got $e")
+      tables.foreach(t => assert(bag(inc.table(t)) == before(t), s"$t not rolled back"))
+      assert(calls.isEmpty, s"subscribers must not see a rolled-back edit: $calls")
+    }
+  }
+
+  test("an overflow in the Aggregation fold, after the Union merged its row, rolls every table back") {
+    val inc = testCfgGraph()
+    inc.insert("users", rows(userSchema, Row("Alex", 22L)))
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 90L)))
+    val crafted = Row("Alex", Long.MaxValue)
+    assertRollsBack(inc, testCfgTables, Seq(
+      () => inc.insert("grades", rows(gradeSchema, crafted)),
+      () => inc.insert("grades", rows(gradeSchema, crafted).repartition(1))))
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 10L)))
+    val alex = inc.table("aggregationTest").collect().filter(_.getAs[String]("aggregatedColumn") == "Alex")
+    assert(alex.map(_.getAs[Long]("sum")).toSeq == Seq(100L))
+  }
+
+  test("an overflow at a Function node, after the Union and Aggregation applied the edit, rolls every table back") {
+    val cfg = PipelineConfig.fromYaml(
+      """tables:
+        |  - name: grades
+        |    kind: source
+        |    columns: {name: Str, grade: Integer}
+        |  - name: users
+        |    kind: source
+        |    columns: {name: Str, age: Integer}
+        |  - name: profile
+        |    kind: union
+        |    tables_and_foreign_keys: [[users, name], [grades, name]]
+        |  - name: stats
+        |    kind: aggregation
+        |    source_table: grades
+        |    aggregated_column: name
+        |    functions: ["cnt ~ memo.cnt + 1", "sum ~ memo.sum + grade"]
+        |  - name: curved
+        |    kind: function
+        |    source_table: grades
+        |    functions: ["curvedGrade ~ grade + 5"]
+        |""".stripMargin)
+    val inc = new IncrementalGraph(spark, cfg)
+    inc.insert("users", rows(userSchema, Row("Alex", 22L), Row("Zed", 40L)))
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 90L)))
+    // a new key: the fold and the merge succeed, the Function overflows
+    val crafted = Row("Zed", Long.MaxValue)
+    val tables = Seq("grades", "users", "profile", "stats", "curved")
+    assertRollsBack(inc, tables, Seq(
+      () => inc.insert("grades", rows(gradeSchema, crafted)),
+      () => inc.insert("grades", rows(gradeSchema, crafted).repartition(1))))
+    inc.insert("grades", rows(gradeSchema, Row("Zed", 1L)))
+    assert(inc.table("curved").count() == 2)
   }
 }
