@@ -5,7 +5,7 @@ package graft
   * (reference: reactive_db/src/networking/network_types.rs:33-37,
   * listener_hook.rs:62-74 keys its fan-out map by the event kind).
   * [[ListenEvent.Both]] is the engine-internal superset used by callers
-  * that want the full (inserts, deletes) pair per commit/micro-batch.
+  * that want the full (inserts, deletes) pair per commit.
   */
 sealed trait ListenEvent
 object ListenEvent {

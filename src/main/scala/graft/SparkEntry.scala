@@ -4636,7 +4636,7 @@ object SparkEntry {
     }),
     // ── extension: CDC-DRIVEN ANN INDEX MAINTENANCE — the lifecycle
     //    capstone for the kNN-graph store: ONE op-tagged changefeed
-    //    (the CdcOps Insert/Delete envelope) maintains the vector store
+    //    (an `op` column of I/D per row) maintains the vector store
     //    + graph store pair through a real StreamingQuery. Batch 1
     //    INSERTS the vec_id ≡ 5 mod 8 increment (lands + absorbs); the
     //    query is KILLED; a new query resumes from the checkpoint and

@@ -28,10 +28,8 @@ object Transforms {
   import SystemColumns._
 
   /** FunctionTransform: output = computed columns only + lineage
-    * (reference: transform.rs:128-148). `carry` names envelope columns
-    * (e.g. a CDC `_op`) passed through untouched when present. */
-  def function(input: DataFrame, assignments: Seq[String],
-               carry: Seq[String] = Nil): DataFrame = {
+    * (reference: transform.rs:128-148). */
+  def function(input: DataFrame, assignments: Seq[String]): DataFrame = {
     graft.expr.GraftFunctions.register(input.sparkSession)
     val schema = input.schema
     val cols = assignments.map { s =>
@@ -40,8 +38,7 @@ object Transforms {
     }
     val lineage =
       if (schema.fieldNames.contains(EntryId)) Seq(col(EntryId).as(SourceEntryId)) else Nil
-    val carried = carry.filter(schema.fieldNames.contains).map(col)
-    input.select(cols ++ lineage ++ carried: _*)
+    input.select(cols ++ lineage: _*)
   }
 
   /** FilterTransform: passing rows keep ALL source columns + lineage

@@ -36,7 +36,9 @@ object StreamingOps {
 
   /** Gap-based sessionization as a streaming aggregation: one output row
     * per (key, session window), closed when the watermark passes the gap —
-    * the streaming analog of the batch q30 window-lag formulation. */
+    * the streaming analog of the batch q30 window-lag formulation. A row
+    * is dropped as late when its own session `[ts, ts + gap)` ends at or
+    * before the watermark, so the late boundary is watermark − gap. */
   def sessionize(df: DataFrame, tsCol: String, keyCol: String,
                  gap: String, watermarkDelay: String,
                  aggs: Seq[Column] = Seq(count(lit(1)).as("n_events"))): DataFrame = {
@@ -62,10 +64,9 @@ object StreamingOps {
     * not a stop signal: a row that would cross the boundary is dropped but
     * later rows that still fit are admitted. Within a micro-batch, rows
     * are admitted in ASCENDING token order — flatMapGroupsWithState gives
-    * no intra-group arrival order after the shuffle (the cdcUnion lesson,
-    * StreamingPipeline seq sort), so the batch-internal order must be a
-    * deterministic function of the data; smallest-first also maximizes
-    * the number of admitted rows.
+    * no intra-group arrival order after the shuffle, so the batch-internal
+    * order must be a deterministic function of the data; smallest-first
+    * also maximizes the number of admitted rows.
     *
     * Input must be a streaming Dataset with (`groupCol`: String,
     * `tokenCol`: Long) columns; emits the admitted rows as
@@ -406,8 +407,8 @@ object StreamingOps {
   /** ONE batch of CDC-DRIVEN kNN-graph maintenance — the foreachBatch
     * body of [[knnGraphCdcStream]], exposed so a batch chain (and the
     * q263 parity gate) runs the IDENTICAL call sequence. The batch is an
-    * OP-TAGGED changefeed (the [[graft.streaming.CdcOps]] `_op`
-    * envelope, reduced to Insert/Delete — an update is Delete + Insert):
+    * OP-TAGGED changefeed: `opCol` holds `I` (insert), `D` (delete) or
+    * `U` (re-embed update, below) per row:
     *
     *  - INSERTS land in the vector store and absorb into the graph via
     *    the [[knnGraphAbsorbBatch]] sequence, scoring against the LIVE

@@ -52,6 +52,14 @@ class IncrementalGraphSpec extends SparkSpec {
     df.select(keep.head, keep.tail.toIndexedSeq: _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
   }
 
+  /** Each of `tables` equals a from-scratch recompute: a lazy graph seeded
+    * with the SAME current source contents (ids included). */
+  private def assertRecomputes(inc: IncrementalGraph, tables: Seq[String]): Unit = {
+    val sources = inc.config.tables.collect { case s: graft.config.SourceTableConfig => s.name }
+    val scratch = new PipelineGraph(spark, inc.config, sources.map(s => s -> inc.table(s)).toMap)
+    tables.foreach(t => assert(bag(inc.table(t)) == bag(scratch.table(t)), s"table $t diverged"))
+  }
+
   test("incremental tables equal from-scratch recompute after mixed edits") {
     val cfg = PipelineConfig.fromYaml(yaml)
     val inc = new IncrementalGraph(spark, cfg)
@@ -62,13 +70,7 @@ class IncrementalGraphSpec extends SparkSpec {
     inc.delete("grades", "name", "Bob")
     inc.insert("grades", rows(gradeSchema, Row("Bob", 65L)))
 
-    // from-scratch reference: a lazy graph seeded with the SAME final
-    // source contents (ids included)
-    val scratch = new PipelineGraph(spark, cfg,
-      Map("grades" -> inc.table("grades"), "users" -> inc.table("users")))
-    Seq("curved", "passing", "stats", "profile").foreach { t =>
-      assert(bag(inc.table(t)) == bag(scratch.table(t)), s"table $t diverged")
-    }
+    assertRecomputes(inc, Seq("curved", "passing", "stats", "profile"))
     // spot-check semantics: Bob's group was fully rebuilt after delete+reinsert
     val stats = inc.table("stats").collect()
       .map(r => r.getAs[String]("aggregatedColumn") -> r.getAs[Long]("sum")).toMap
@@ -97,9 +99,7 @@ class IncrementalGraphSpec extends SparkSpec {
     inc.insert("grades",
       spark.createDataFrame(Seq(Row(70L), Row(80L)).asJava,
         StructType(Seq(StructField("grade", LongType)))))
-    val scratch = new PipelineGraph(spark, cfg,
-      Map("grades" -> inc.table("grades"), "users" -> inc.table("users")))
-    assert(bag(inc.table("stats")) == bag(scratch.table("stats")))
+    assertRecomputes(inc, Seq("stats"))
     val nullGroup = inc.table("stats").collect()
       .find(_.isNullAt(0)).getOrElse(fail("null group missing"))
     assert(nullGroup.getAs[Long]("sum") == 150L)
@@ -274,11 +274,7 @@ class IncrementalGraphSpec extends SparkSpec {
     inc.insert("grades", spark.range(1).select(lit("m2").as("name"), lit(12L).as("grade")))
     grades(Row("m2", 13L))
 
-    val scratch = new PipelineGraph(spark, cfg,
-      Map("grades" -> inc.table("grades"), "users" -> inc.table("users")))
-    Seq("curved", "passing", "stats", "profile").foreach { t =>
-      assert(bag(inc.table(t)) == bag(scratch.table(t)), s"table $t diverged")
-    }
+    assertRecomputes(inc, Seq("curved", "passing", "stats", "profile"))
     val stats = inc.table("stats").collect()
       .map(r => r.getAs[String]("aggregatedColumn") -> r.getAs[Long]("sum")).toMap
     assert(stats("m2") == 2L + 12L + 13L)
@@ -396,7 +392,7 @@ class IncrementalGraphSpec extends SparkSpec {
   test("local batches fold onto aggregation groups exactly as a from-scratch recompute") {
     val cfg = PipelineConfig.fromYaml(
       yaml.replace("\"avg ~ memo.sum / memo.cnt\"",
-        "\"neg ~ memo.neg - grade\", \"avg ~ memo.sum / memo.cnt\""))
+        "\"neg ~ memo.neg - grade\", \"avg ~ memo.sum / memo.cnt\", \"avg2 ~ memo.avg * 2\""))
     val inc = new IncrementalGraph(spark, cfg)
     def grades(rs: Row*): Unit = inc.insert("grades", rows(gradeSchema, rs: _*))
     // several rows per key in one batch, new keys, the null key twice
@@ -407,17 +403,15 @@ class IncrementalGraphSpec extends SparkSpec {
     grades(Row("Alex", 10L), Row("Cara", 88L), Row("Cara", 12L), Row(null, 5L), Row("Dan", null))
     inc.delete("grades", "name", "Bob")
     grades(Row("Bob", 65L), Row("Alex", 1L), Row("Bob", 1L))
-    val scratch = new PipelineGraph(spark, cfg,
-      Map("grades" -> inc.table("grades"), "users" -> inc.table("users")))
-    Seq("curved", "passing", "stats", "profile").foreach { t =>
-      assert(bag(inc.table(t)) == bag(scratch.table(t)), s"table $t diverged")
-    }
+    assertRecomputes(inc, Seq("curved", "passing", "stats", "profile"))
+    // avg2 reads avg, an earlier post statement
     val stats = inc.table("stats").collect()
-      .map(r => Option(r.getAs[String]("aggregatedColumn")) -> ((r.getAs[Long]("cnt"), r.getAs[Long]("sum"))))
+      .map(r => Option(r.getAs[String]("aggregatedColumn")) ->
+        ((r.getAs[Long]("cnt"), r.getAs[Long]("sum"), r.getAs[Long]("avg2"))))
       .toMap
-    assert(stats(Some("Alex")) == ((4L, 171L)))
-    assert(stats(None) == ((3L, 75L)))
-    assert(stats(Some("Dan")) == ((1L, 0L)))
+    assert(stats(Some("Alex")) == ((4L, 171L, 84L)))
+    assert(stats(None) == ((3L, 75L, 50L)))
+    assert(stats(Some("Dan")) == ((1L, 0L, 0L)))
   }
 
   test("union pairing and action rows on the driver equal the Spark join and mapPartitions path") {
@@ -472,26 +466,25 @@ class IncrementalGraphSpec extends SparkSpec {
     inc.insert("scores", rows(schema, Row("a", 1L, 0.1), Row("a", 2L, 0.2), Row("b", 3L, 0.3)))
     inc.insert("scores", rows(schema, Row("a", 4L, 0.3)))
     inc.insert("scores", rows(schema, Row("b", 5L, 0.25), Row("c", 6L, 1e16), Row("c", 7L, 1.0)))
-    val scratch = new PipelineGraph(spark, cfg, Map("scores" -> inc.table("scores")))
-    Seq("doubles", "firsts").foreach { t =>
-      assert(bag(inc.table(t)) == bag(scratch.table(t)), s"table $t diverged")
-    }
+    assertRecomputes(inc, Seq("doubles", "firsts"))
   }
 
   /** Whether `e` or one of its causes reports an arithmetic overflow. */
-  private def overflowed(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-      .exists(x => x.isInstanceOf[ArithmeticException] || String.valueOf(x.getMessage).contains("overflow"))
+  private def overflowed(e: Throwable): Boolean = causes(e)
+    .exists(x => x.isInstanceOf[ArithmeticException] || String.valueOf(x.getMessage).contains("overflow"))
 
-  /** Every edit of `edits` fails on an ANSI overflow, restores every
-    * table and notifies nobody; the graph then still takes `ok`. */
-  private def assertRollsBack(inc: IncrementalGraph, tables: Seq[String], edits: Seq[() => Unit]): Unit = {
+  private def causes(e: Throwable): Iterator[Throwable] = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+
+  /** Every edit of `edits` fails as `expected` holds (by default, on an
+    * ANSI overflow), restores every table and notifies nobody. */
+  private def assertRollsBack(inc: IncrementalGraph, tables: Seq[String], edits: Seq[() => Unit],
+                              expected: Throwable => Boolean = overflowed): Unit = {
     val calls = scala.collection.mutable.ArrayBuffer.empty[String]
     tables.foreach(t => inc.listen(t)((_, _) => calls += t))
     val before = tables.map(t => t -> bag(inc.table(t))).toMap
     edits.foreach { edit =>
       val e = intercept[Exception](edit())
-      assert(overflowed(e), s"expected an arithmetic overflow, got $e")
+      assert(expected(e), s"unexpected failure $e")
       tables.foreach(t => assert(bag(inc.table(t)) == before(t), s"$t not rolled back"))
       assert(calls.isEmpty, s"subscribers must not see a rolled-back edit: $calls")
     }
@@ -543,5 +536,330 @@ class IncrementalGraphSpec extends SparkSpec {
       () => inc.insert("grades", rows(gradeSchema, crafted).repartition(1))))
     inc.insert("grades", rows(gradeSchema, Row("Zed", 1L)))
     assert(inc.table("curved").count() == 2)
+  }
+
+  /** Grades reach two Aggregations, one through a Function and one
+    * through a Filter; a Function and a Filter then read the first
+    * Aggregation, and a Union merges users with grades. */
+  private val cascadeYaml =
+    """tables:
+      |  - name: grades
+      |    kind: source
+      |    columns: {name: Str, grade: Integer}
+      |  - name: users
+      |    kind: source
+      |    columns: {name: Str, age: Integer}
+      |  - name: curved
+      |    kind: function
+      |    source_table: grades
+      |    functions: ["name ~ name", "curved ~ grade + 5"]
+      |  - name: passing
+      |    kind: filter
+      |    source_table: grades
+      |    filter: "grade >= 60"
+      |  - name: aggOverFunction
+      |    kind: aggregation
+      |    source_table: curved
+      |    aggregated_column: name
+      |    functions: ["count ~ memo.count + 1", "sum ~ memo.sum + curved", "average ~ memo.sum / memo.count"]
+      |  - name: aggOverFilter
+      |    kind: aggregation
+      |    source_table: passing
+      |    aggregated_column: name
+      |    functions: ["count ~ memo.count + 1", "sum ~ memo.sum + grade"]
+      |  - name: fnOverAgg
+      |    kind: function
+      |    source_table: aggOverFunction
+      |    functions: ["name ~ aggregatedColumn", "doubled ~ sum * 2"]
+      |  - name: filterOverAgg
+      |    kind: filter
+      |    source_table: aggOverFunction
+      |    filter: "sum > 100"
+      |  - name: unionTest
+      |    kind: union
+      |    tables_and_foreign_keys: [[users, name], [grades, name]]
+      |""".stripMargin
+  /** The derived tables but the Union: a Union's inputs must be
+    * key-unique, so it is compared only where each source holds at most
+    * one row per name. */
+  private val cascadeTables = Seq("curved", "passing", "aggOverFunction", "aggOverFilter",
+    "fnOverAgg", "filterOverAgg")
+
+  /** Each edit's (inserted, deleted) rows on `table`, one entry per call. */
+  private def recordEdits(inc: IncrementalGraph, table: String,
+                          event: graft.ListenEvent = graft.ListenEvent.Both)
+      : scala.collection.mutable.ArrayBuffer[(Seq[Row], Seq[Row])] = {
+    val calls = scala.collection.mutable.ArrayBuffer.empty[(Seq[Row], Seq[Row])]
+    inc.listen(table, event)((i, d) => calls += ((i.collect().toSeq, d.collect().toSeq)))
+    calls
+  }
+
+  /** (key, count, sum) of aggregation rows. */
+  private def groups(rs: Seq[Row]): Seq[(String, Long, Long)] =
+    rs.map(r => (r.getAs[String]("aggregatedColumn"), r.getAs[Long]("count"), r.getAs[Long]("sum")))
+
+  /** Three Alex grades and one of Bob's; Alex's 80 is then deleted. */
+  private def deleteOneOfThree(inc: IncrementalGraph): Unit = {
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 90L), Row("Alex", 80L), Row("Alex", 50L), Row("Bob", 70L)))
+    inc.delete("grades", "grade", 80L)
+  }
+
+  /** The last delete of a group: its row goes, pushed as a Delete alone. */
+  private def assertGroupLeaves(inc: IncrementalGraph, table: String,
+                                calls: Seq[(Seq[Row], Seq[Row])], old: (String, Long, Long)): Unit = {
+    assert(calls.last._1.isEmpty && groups(calls.last._2) == Seq(old))
+    assert(groups(inc.table(table).collect().toSeq).map(_._1) == Seq("Bob"), s"$table kept Alex")
+  }
+
+  test("a delete through a Function into an Aggregation corrects the group; the last one removes it as a Delete") {
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(cascadeYaml))
+    val overFn = recordEdits(inc, "aggOverFunction")
+    deleteOneOfThree(inc)
+    assert(groups(overFn.head._1).toSet == Set(("Alex", 3L, 235L), ("Bob", 1L, 75L)))
+    assert(groups(overFn.last._1) == Seq(("Alex", 2L, 150L)))
+    assert(overFn.last._1.head.getAs[Long]("average") == 75L)
+    assert(groups(overFn.last._2) == Seq(("Alex", 3L, 235L)))
+    assertRecomputes(inc, cascadeTables)
+
+    inc.delete("grades", "grade", 50L)
+    assert(groups(overFn.last._1) == Seq(("Alex", 1L, 95L)))
+    inc.delete("grades", "grade", 90L)
+    assertGroupLeaves(inc, "aggOverFunction", overFn.toSeq, ("Alex", 1L, 95L))
+    assertRecomputes(inc, cascadeTables)
+  }
+
+  test("a delete through a Filter into an Aggregation corrects the group; the last one removes it as a Delete") {
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(cascadeYaml))
+    val overFilter = recordEdits(inc, "aggOverFilter")
+    deleteOneOfThree(inc)
+    assert(groups(overFilter.head._1).toSet == Set(("Alex", 2L, 170L), ("Bob", 1L, 70L)))
+    assert(groups(overFilter.last._1) == Seq(("Alex", 1L, 90L)))
+    assert(groups(overFilter.last._2) == Seq(("Alex", 2L, 170L)))
+    assertRecomputes(inc, cascadeTables)
+
+    // 50 never passed the filter, so its delete leaves aggOverFilter as is
+    val filterCalls = overFilter.length
+    inc.delete("grades", "grade", 50L)
+    assert(overFilter.length == filterCalls)
+    inc.delete("grades", "grade", 90L)
+    assertGroupLeaves(inc, "aggOverFilter", overFilter.toSeq, ("Alex", 1L, 90L))
+    assertRecomputes(inc, cascadeTables)
+  }
+
+  test("a Union fed by two sources: delete one source's contribution, then the whole key") {
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(cascadeYaml))
+    inc.insert("users", rows(userSchema, Row("Alex", 22L)))
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 95L)))
+    val calls = recordEdits(inc, "unionTest")
+    def merged(rs: Seq[Row]): Seq[(String, Any, Any)] =
+      rs.map(r => (r.getAs[String]("matchingKey"), r.getAs[Any]("age"), r.getAs[Any]("grade")))
+
+    inc.delete("grades", "name", "Alex")
+    assert(calls.length == 1)
+    assert(merged(calls.last._1) == Seq(("Alex", 22L, null)))
+    assert(merged(calls.last._2) == Seq(("Alex", 22L, 95L)))
+    assert(merged(inc.table("unionTest").collect().toSeq) == Seq(("Alex", 22L, null)))
+    assertRecomputes(inc, cascadeTables :+ "unionTest")
+
+    inc.delete("users", "name", "Alex")
+    assert(calls.length == 2)
+    assert(calls.last._1.isEmpty)
+    assert(merged(calls.last._2) == Seq(("Alex", 22L, null)))
+    assert(inc.table("unionTest").isEmpty)
+    assertRecomputes(inc, cascadeTables :+ "unionTest")
+  }
+
+  /** Alex's sum crosses 100 and Bob's stays under it; then a non-local
+    * insert, a delete that drops Alex back under 100, and Bob's whole
+    * group goes. `check` runs after each step with the step's number. */
+  private def editsAroundTheBound(inc: IncrementalGraph)(check: Int => Unit): Unit = {
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 90L), Row("Bob", 40L)))
+    check(0)
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 80L), Row("Bob", 10L)))
+    check(1)
+    assertRecomputes(inc, cascadeTables)
+    inc.insert("grades", rows(gradeSchema, Row("Cara", 99L), Row("Bob", 60L)).repartition(1))
+    inc.delete("grades", "grade", 80L)
+    check(2)
+    assertRecomputes(inc, cascadeTables)
+    inc.delete("grades", "name", "Bob")
+    check(3)
+    assertRecomputes(inc, cascadeTables)
+  }
+
+  test("a Function downstream of an Aggregation equals the recompute under inserts and deletes") {
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(cascadeYaml))
+    def doubled(): Map[String, Long] = inc.table("fnOverAgg").collect()
+      .map(r => r.getAs[String]("name") -> r.getAs[Long]("doubled")).toMap
+    editsAroundTheBound(inc) {
+      case 0 => assert(doubled() == Map("Alex" -> 190L, "Bob" -> 90L))
+      case 1 => assert(doubled() == Map("Alex" -> 360L, "Bob" -> 120L))
+      case 2 => assert(doubled() == Map("Alex" -> 190L, "Bob" -> 250L, "Cara" -> 208L))
+      case _ => assert(doubled() == Map("Alex" -> 190L, "Cara" -> 208L))
+    }
+  }
+
+  test("a Filter downstream of an Aggregation equals the recompute under inserts and deletes") {
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(cascadeYaml))
+    def filtered(): Map[String, Long] = inc.table("filterOverAgg").collect()
+      .map(r => r.getAs[String]("aggregatedColumn") -> r.getAs[Long]("sum")).toMap
+    editsAroundTheBound(inc) {
+      case 0 => assert(filtered().isEmpty)
+      case 1 => assert(filtered() == Map("Alex" -> 180L))
+      case 2 => assert(filtered() == Map("Bob" -> 125L, "Cara" -> 104L))
+      case _ => assert(filtered() == Map("Cara" -> 104L))
+    }
+  }
+
+  test("listen by event kind: Insert and Delete subscribers each get their half of an edit") {
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(cascadeYaml))
+    val inserts = recordEdits(inc, "aggOverFilter", graft.ListenEvent.Insert)
+    val deletes = recordEdits(inc, "aggOverFilter", graft.ListenEvent.Delete)
+
+    // a new group: an insert-only edit
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 90L)))
+    assert(inserts.map(c => groups(c._1)) == Seq(Seq(("Alex", 1L, 90L))) && inserts.forall(_._2.isEmpty))
+    assert(deletes.isEmpty)
+    // an upsert of that group: Insert(new) to one, Delete(old) to the other
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 80L)))
+    assert(inserts.length == 2 && groups(inserts.last._1) == Seq(("Alex", 2L, 170L)) && inserts.last._2.isEmpty)
+    assert(deletes.length == 1 && deletes.last._1.isEmpty && groups(deletes.last._2) == Seq(("Alex", 1L, 90L)))
+    // the group's removal: a delete-only edit
+    inc.delete("grades", "name", "Alex")
+    assert(inserts.length == 2)
+    assert(deletes.length == 2 && deletes.last._1.isEmpty && groups(deletes.last._2) == Seq(("Alex", 2L, 170L)))
+  }
+
+  test("two listeners on a table downstream of an Aggregation each see every edit once") {
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(cascadeYaml))
+    def doubled(calls: Seq[(Seq[Row], Seq[Row])]): Seq[(Seq[Long], Seq[Long])] =
+      calls.map { case (i, d) => (i.map(_.getAs[Long]("doubled")), d.map(_.getAs[Long]("doubled"))) }
+    val (first, second) = (recordEdits(inc, "fnOverAgg"), recordEdits(inc, "fnOverAgg"))
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 9L)))
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 1L)))
+    inc.delete("grades", "name", "Alex")
+    Seq(first, second).foreach { calls =>
+      assert(doubled(calls.toSeq) == Seq((Seq(28L), Nil), (Seq(40L), Seq(28L)), (Nil, Seq(40L))))
+    }
+  }
+
+  test("listen on an unknown table throws; the graph's subscribers keep getting each edit once") {
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(cascadeYaml))
+    val calls = recordEdits(inc, "curved")
+    assertThrows[IllegalArgumentException](inc.listen("noSuchTable")((_, _) => ()))
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 95L)))
+    assert(calls.map(_._1.map(_.getAs[Long]("curved"))) == Seq(Seq(100L)))
+  }
+
+  test("a group whose rows are all deleted leaves as a Delete; a null value counts but adds nothing; post statements chain") {
+    val cfg = PipelineConfig.fromYaml(
+      yaml.replace("\"avg ~ memo.sum / memo.cnt\"", "\"avg ~ memo.sum / memo.cnt\", \"avg2 ~ memo.avg * 2\""))
+    val inc = new IncrementalGraph(spark, cfg)
+    val calls = recordEdits(inc, "stats")
+    def cara(rs: Seq[Row]): Seq[(Long, Long, Long)] =
+      rs.map(r => (r.getAs[Long]("cnt"), r.getAs[Long]("sum"), r.getAs[Long]("avg2")))
+    inc.insert("grades", rows(gradeSchema, Row("Cara", 50L), Row("Cara", null)))
+    // avg2 = (50 / 2) * 2
+    assert(cara(inc.table("stats").collect().toSeq) == Seq((2L, 50L, 50L)))
+    assertRecomputes(inc, Seq("stats"))
+
+    inc.delete("grades", "grade", 50L)
+    assert(cara(calls.last._1) == Seq((1L, 0L, 0L)) && cara(calls.last._2) == Seq((2L, 50L, 50L)))
+    inc.delete("grades", "grade", null)
+    assert(calls.last._1.isEmpty && cara(calls.last._2) == Seq((1L, 0L, 0L)))
+    assert(inc.table("stats").isEmpty)
+    assertRecomputes(inc, Seq("stats", "profile"))
+  }
+
+  test("one Union key: insert then delete, and delete then re-insert, as consecutive edits equal the recompute") {
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(cascadeYaml))
+    def ages(key: String): Seq[Any] = inc.table("unionTest").collect().toSeq
+      .filter(_.getAs[String]("matchingKey") == key).map(_.getAs[Any]("age"))
+    inc.insert("users", rows(userSchema, Row("a", 1L)))
+    inc.delete("users", "name", "a")
+    assert(ages("a").isEmpty)
+    assertRecomputes(inc, cascadeTables :+ "unionTest")
+
+    inc.insert("users", rows(userSchema, Row("b", 1L)))
+    inc.delete("users", "name", "b")
+    inc.insert("users", rows(userSchema, Row("b", 101L)))
+    assert(ages("b") == Seq(101L))
+    // later edits on other keys and sources leave "a" dead and "b" single
+    inc.insert("grades", rows(gradeSchema, Row("b", 70L), Row("c", 60L)))
+    inc.insert("users", rows(userSchema, Row("c", 3L)))
+    assert(ages("a").isEmpty && ages("b") == Seq(101L))
+    assertRecomputes(inc, cascadeTables :+ "unionTest")
+  }
+
+  test("an overflow at a Filter node, after the Union and Aggregation applied the edit, rolls every table back") {
+    val cfg = PipelineConfig.fromYaml(
+      """tables:
+        |  - name: grades
+        |    kind: source
+        |    columns: {name: Str, grade: Integer}
+        |  - name: users
+        |    kind: source
+        |    columns: {name: Str, age: Integer}
+        |  - name: profile
+        |    kind: union
+        |    tables_and_foreign_keys: [[users, name], [grades, name]]
+        |  - name: stats
+        |    kind: aggregation
+        |    source_table: grades
+        |    aggregated_column: name
+        |    functions: ["cnt ~ memo.cnt + 1", "sum ~ memo.sum + grade"]
+        |  - name: passing
+        |    kind: filter
+        |    source_table: grades
+        |    filter: "grade + 10 >= 60"
+        |""".stripMargin)
+    val inc = new IncrementalGraph(spark, cfg)
+    inc.insert("users", rows(userSchema, Row("Alex", 22L), Row("Zed", 40L)))
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 90L)))
+    // a new key: the fold and the merge succeed, the predicate overflows
+    val crafted = Row("Zed", Long.MaxValue)
+    val tables = Seq("grades", "users", "profile", "stats", "passing")
+    assertRollsBack(inc, tables, Seq(
+      () => inc.insert("grades", rows(gradeSchema, crafted)),
+      () => inc.insert("grades", rows(gradeSchema, crafted).repartition(1))))
+    inc.insert("grades", rows(gradeSchema, Row("Zed", 55L)))
+    assert(inc.table("passing").count() == 2)
+  }
+
+  test("a failing merge at a Union node, after the Aggregation applied the edit, rolls every table back") {
+    // `tag` is a number in users and a string in grades: the merged column
+    // takes the common type, and a grades tag that is not a number fails
+    // its cast under ANSI when the Union merges it
+    val cfg = PipelineConfig.fromYaml(
+      """tables:
+        |  - name: users
+        |    kind: source
+        |    columns: {name: Str, tag: Integer}
+        |  - name: grades
+        |    kind: source
+        |    columns: {name: Str, tag: Str, grade: Integer}
+        |  - name: stats
+        |    kind: aggregation
+        |    source_table: grades
+        |    aggregated_column: name
+        |    functions: ["cnt ~ memo.cnt + 1", "sum ~ memo.sum + grade"]
+        |  - name: profile
+        |    kind: union
+        |    tables_and_foreign_keys: [[users, name], [grades, name]]
+        |""".stripMargin)
+    val taggedGrades = StructType(Seq(StructField("name", StringType), StructField("tag", StringType),
+      StructField("grade", LongType)))
+    val inc = new IncrementalGraph(spark, cfg)
+    inc.insert("users", rows(StructType(Seq(StructField("name", StringType), StructField("tag", LongType))),
+      Row("Alex", 1L), Row("Zed", 2L)))
+    inc.insert("grades", rows(taggedGrades, Row("Alex", "7", 90L)))
+    val crafted = Row("Zed", "x", 1L)
+    assertRollsBack(inc, Seq("users", "grades", "stats", "profile"), Seq(
+      () => inc.insert("grades", rows(taggedGrades, crafted)),
+      () => inc.insert("grades", rows(taggedGrades, crafted).repartition(1))),
+      expected = e => causes(e).exists(x => String.valueOf(x.getMessage).contains("CAST_INVALID_INPUT")))
+    inc.insert("grades", rows(taggedGrades, Row("Zed", "8", 1L)))
+    assert(inc.table("profile").collect().map(r => r.getAs[String]("matchingKey") -> r.get(r.fieldIndex("tag")).toString)
+      .toMap == Map("Alex" -> "7", "Zed" -> "8"))
   }
 }

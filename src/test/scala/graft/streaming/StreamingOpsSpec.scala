@@ -8,7 +8,7 @@ import java.sql.Timestamp
 class StreamingOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ts(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
+  private def ts(h: Int, m: Int, s: Int = 0) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:$s%02d")
 
   test("exactDedupStream keeps first row per fingerprint within watermark") {
     implicit val sqlCtx = spark.sqlContext
@@ -74,6 +74,70 @@ class StreamingOpsSpec extends SparkSpec {
         "SELECT user, n_events FROM session_stream WHERE user = 'u1' ORDER BY session_start")
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       assert(rows == Seq(("u1", 3L), ("u1", 1L)))
+    } finally q.stop()
+  }
+
+  test("sessionize drops a row behind the watermark and keeps one just ahead of it") {
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[(Timestamp, String)]
+    val sessions = StreamingOps.sessionize(
+      ms.toDF().toDF("ts", "user"), "ts", "user", "5 minutes", "10 minutes")
+    val q = sessions.writeStream.outputMode("append").format("memory")
+      .queryName("session_late").start()
+    try {
+      // watermark = max event time 12:00 − 10 min delay = 11:50
+      ms.addData((ts(12, 0), "w"))
+      q.processAllAvailable()
+      // one key per probe, so no two probes share a session
+      ms.addData(
+        (ts(11, 40), "behind"),            // session [11:40, 11:45)
+        (ts(11, 44, 59), "endJustBehind"), // session ends 11:49:59
+        (ts(11, 45), "endAtWm"),           // session ends exactly at 11:50
+        (ts(11, 48), "inGap"),             // behind 11:50, session ends 11:53
+        (ts(11, 50), "atWm"),              // event time exactly at 11:50
+        (ts(11, 50, 1), "ahead"))
+      q.processAllAvailable()
+      // a far-ahead row moves the watermark past every session above
+      ms.addData((ts(15, 0), "z"))
+      q.processAllAvailable()
+      val got = spark.sql("SELECT user FROM session_late").collect().map(_.getString(0)).toSet
+      // Spark drops a row as late when its own session window
+      // [ts, ts + gap) ends at or before the watermark, not when `ts`
+      // itself is behind it: the late boundary of sessionize is
+      // watermark − gap. So a row behind the watermark by less than the
+      // gap still opens a session, and a session ending exactly at the
+      // watermark is dropped.
+      assert(got == Set("w", "inGap", "atWm", "ahead"), s"kept $got")
+    } finally q.stop()
+  }
+
+  test("exactDedupStream re-admits an expired key only in the batch after the one whose watermark passed it") {
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[(Timestamp, Long, String)]
+    val deduped = StreamingOps.exactDedupStream(
+      ms.toDF().toDF("ts", "doc_id", "text"), "text", "ts", "10 minutes")
+    // every batch carries data: a no-data batch would run the state
+    // cleanup between the batches this test places rows in
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    val q = try deduped.writeStream.outputMode("append").format("memory")
+      .queryName("dedup_evict").start()
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    def batch(rows: (Timestamp, Long, String)*): Unit = { ms.addData(rows); q.processAllAvailable() }
+    try {
+      // hello's state expires at 10:00 + 10 min = 10:10
+      batch((ts(10, 0), 1L, "hello world"))
+      // this batch moves the watermark to 10:30 − 10 min = 10:20, past
+      // 10:10; its own duplicate still meets live state and is dropped
+      batch((ts(10, 30), 2L, "advance"), (ts(10, 5), 3L, "HELLO  world"))
+      // the next batch runs with that watermark, but looks the key up
+      // before its cleanup evicts it: still a duplicate
+      batch((ts(10, 25), 4L, "hello world"))
+      // from the batch after, the key is new again
+      batch((ts(10, 40), 5L, "hello world"))
+      val ids = spark.sql("SELECT doc_id FROM dedup_evict").collect().map(_.getLong(0)).toSet
+      assert(ids == Set(1L, 2L, 5L), s"admitted $ids")
     } finally q.stop()
   }
 
