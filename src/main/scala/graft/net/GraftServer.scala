@@ -5,7 +5,8 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.ListenEvent
 import graft.operators.{IncrementalGraph, QueryService}
 import graft.sources.TaggedJson
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.StructType
 import java.io.{BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -65,13 +66,14 @@ import scala.util.control.NonFatal
   * the writer sends the queue in order.
   *
   * Scale note: this façade is the reference-parity POINT-QUERY surface
-  * (find/range/insert/delete/listen on graph tables). Edits of a one-row
-  * InsertData are driver-local rows and render with `collect()`, no Spark
-  * job; query results and other edits stream off the cluster via
-  * toLocalIterator. Either way a batch beyond [[maxResultRows]] fails that
-  * request loudly rather than buffering a cluster's output in the server
-  * heap. Bulk analytics belong on the DataFrame surface, not behind a
-  * socket.
+  * (find/range/insert/delete/listen on graph tables). An InsertData's
+  * entry goes to the graph as a driver row, and its edits come back as
+  * driver rows, which the response and every Event render directly: no
+  * frame, no Spark job. Query results and other edits stream off the
+  * cluster via toLocalIterator. Either way a batch beyond
+  * [[maxResultRows]] fails that request loudly rather than buffering a
+  * cluster's output in the server heap. Bulk analytics belong on the
+  * DataFrame surface, not behind a socket.
   *
   * Divergences from the reference, on purpose: a malformed frame or an
   * unknown listen table answers that CLIENT with an Err instead of
@@ -304,14 +306,13 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
         // all committed edits, source + cascaded (db_thread.rs:82-93);
         // upsert Updates surface as their inserted (new) row
         manyResults {
-          val (schema, row) = TaggedJson.parseEntry(mapper.writeValueAsString(body.get("entry")))
-          val df = graph.spark.createDataFrame(java.util.Arrays.asList(row), schema)
-          graph.insertWithEdits(table, df).flatMap { case (_, ins, _) => entriesOf(ins) }
+          val (schema, row) = TaggedJson.parseEntry(body.get("entry"))
+          graph.insertRows(table, schema, Seq(row)).flatMap { case (_, ins, _) => entriesOf(ins) }
         }
       case "DeleteData" =>
         // all deleted entries, source + cascaded (database.rs:197-270)
         manyResults(
-          graph.deleteWithEdits(table, column, key).flatMap { case (_, _, del) => entriesOf(del) })
+          graph.deleteDeltas(table, column, key).flatMap { case (_, _, del) => entriesOf(del) })
       case other => throw new IllegalArgumentException(s"unknown query kind: $other")
     }
   }
@@ -327,9 +328,8 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
           errResponse("ManyResults", s"unknown listen event: $other")))
         return
     }
-    try graph.listen(table, kind) { (ins, del) =>
-      val df = if (kind == ListenEvent.Insert) ins else del
-      client.send(eventMessage(table, event, manyResults(entriesOf(df))))
+    try graph.listenDeltas(table, kind) { (ins, del) =>
+      client.send(eventMessage(table, event, manyResults(entriesOf(if (kind == ListenEvent.Insert) ins else del))))
     } catch {
       // unknown table: tell the subscribing client instead of panicking the
       // dispatch thread (the reference's db_thread.rs:123 crashes here)
@@ -340,16 +340,22 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
   // ── result rendering ──────────────────────────────────────────────────
 
   /** Stream rows off the cluster with the same bounded, loud hand-off as
-    * the streaming listen path; rows already in driver memory (a local
-    * edit's deltas) are collected without a job. Entries use the tagged
-    * encoding with nulls omitted (the reference's sparse entries). */
-  private def entriesOf(df: DataFrame): Seq[String] = {
-    val schema = df.schema
+    * the streaming listen path. Entries use the tagged encoding with
+    * nulls omitted (the reference's sparse entries). */
+  private def entriesOf(df: DataFrame): Seq[ObjectNode] =
+    entriesOf(df.toLocalIterator().asScala, df.schema)
+
+  /** An edit's entries: a local edit's rows as they are, else its frame's. */
+  private def entriesOf(delta: IncrementalGraph.Delta): Seq[ObjectNode] = delta.rows match {
+    case Some(rows) => entriesOf(rows.iterator, delta.schema)
+    case None => entriesOf(delta.df)
+  }
+
+  private def entriesOf(it: Iterator[Row], schema: StructType): Seq[ObjectNode] = {
     val limit = maxResultRows
-    val it = if (IncrementalGraph.isLocal(df)) df.collect().iterator else df.toLocalIterator().asScala
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    val buf = scala.collection.mutable.ArrayBuffer.empty[ObjectNode]
     while (it.hasNext) {
-      buf += TaggedJson.toTaggedJson(it.next(), schema)
+      buf += TaggedJson.toTaggedNode(it.next(), schema)
       if (buf.length > limit)
         throw new IllegalStateException(
           s"result exceeded maxResultRows=$limit; narrow the query or raise the cap")
@@ -370,10 +376,9 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
     n
   }
 
-  private def okMany(entries: Seq[String]): JsonNode = {
+  private def okMany(entries: Seq[ObjectNode]): JsonNode = {
     val ok = mapper.createObjectNode()
-    val arr = ok.putArray("Ok")
-    entries.foreach(e => arr.add(mapper.readTree(e)))
+    ok.putArray("Ok").addAll(entries.asJava)
     ok
   }
 
@@ -385,14 +390,14 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
     n
   }
 
-  private def manyResults(entries: => Seq[String]): ObjectNode =
+  private def manyResults(entries: => Seq[ObjectNode]): ObjectNode =
     wrap("ManyResults")(okMany(entries))
 
-  private def oneResult(entry: => Option[String]): ObjectNode =
+  private def oneResult(entry: => Option[ObjectNode]): ObjectNode =
     wrap("OneResult") {
       val ok = mapper.createObjectNode()
       entry match {
-        case Some(e) => ok.set[ObjectNode]("Ok", mapper.readTree(e))
+        case Some(e) => ok.set[ObjectNode]("Ok", e)
         case None    => ok.putNull("Ok")
       }
       ok

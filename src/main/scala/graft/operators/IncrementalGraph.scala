@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.config._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -29,22 +30,29 @@ import scala.jdk.CollectionConverters._
   *     of the update, matching the reference's Update ≡
   *     Delete(old)+Insert(new) (database.rs:282-286).
   *
-  * Cost model. An insert whose aligned rows plan to a LocalRelation (every
-  * `createDataFrame` batch, every façade InsertData) is a LOCAL edit: its
-  * `_entryId`s are assigned on the driver and every delta of its cascade
-  * is frozen by `collect()` into driver-local rows. Then:
+  * Cost model. An insert of rows already on the driver (a façade
+  * InsertData, [[insertRows]], or a frame that plans to a LocalRelation,
+  * such as a `createDataFrame` batch) is a LOCAL edit: its `_entryId`s
+  * are assigned on the driver and its deltas are driver rows, which flow
+  * from node to node with no Catalyst planning. The first local edit
+  * through a node binds the node's expressions once: they are taken from
+  * the analyzed plan of the same [[Transforms]] call over an empty
+  * relation of the delta's schema, and every later edit evaluates them
+  * row by row ([[RowPlan]]). A delta builds its frame only for a caller
+  * that asks for one ([[insertWithEdits]], a [[listen]] subscriber).
+  * Then:
   *
-  *   - source, Function and Filter nodes run no Spark job (Spark folds a
-  *     projection or filter over local rows on the driver);
+  *   - the source's alignment and casts, and the Function and Filter
+  *     nodes, run the bound expressions over the delta's rows: no job;
   *   - an Action node runs no job: its row function is applied to the
   *     delta's rows on the driver ([[Transforms.actionRows]]);
   *   - an Aggregation or Union node runs one job to read its current rows
   *     under the keys it replaces (none when they are all dead already),
-  *     then folds the new rows onto them on the driver: a Union pairs them
-  *     by key and merges them as [[Transforms.union]] does; an Aggregation
-  *     whose accumulators fold exactly ([[Transforms.exactFold]]) folds each
-  *     key's new rows onto its group row. It appends the replacement rows
-  *     and tombstones the keys;
+  *     then folds the new rows onto them with bound expressions: a Union
+  *     pairs them by key and merges them as [[Transforms.union]] does; an
+  *     Aggregation whose accumulators fold exactly ([[Transforms.exactFold]])
+  *     folds each key's new rows onto its group row. It appends the
+  *     replacement rows and tombstones the keys;
   *   - an Aggregation that does not fold exactly (a Double sum, a `first()`
   *     overwrite), and a Union fed an update (a delete, or an upstream
   *     Aggregation's Delete+Insert), recompute the keys from their input
@@ -75,16 +83,19 @@ final class IncrementalGraph(
     initialSources: Map[String, DataFrame] = Map.empty) {
   import IncrementalGraph._
   import SystemColumns._
+  import Transforms.groupKey
 
   private def localDelta(schema: StructType, rows: Seq[Row]): Delta =
-    Delta(localFrame(spark, rows, schema), Some(rows))
+    new Delta(schema, Some(rows), () => localFrame(spark, rows, schema))
+
+  private def frameDelta(df: DataFrame): Delta = new Delta(df.schema, None, () => df)
 
   private def freeze(df: DataFrame, local: Boolean): Delta =
-    if (local) localDelta(df.schema, df.collect().toSeq) else Delta(checkpoint(df), None)
+    if (local) localDelta(df.schema, df.collect().toSeq) else frameDelta(checkpoint(df))
 
   private def keysOf(deltas: Seq[Delta], columns: Seq[String]): Keys =
     if (deltas.forall(_.rows.isDefined))
-      LocalKeys((for (d <- deltas; c <- columns; i = d.df.schema.fieldIndex(c); r <- d.rows.get)
+      LocalKeys((for (d <- deltas; c <- columns; i = d.schema.fieldIndex(c); r <- d.rows.get)
         yield r.get(i)).toSet)
     else
       FrameKeys((for (d <- deltas; c <- columns) yield d.df.select(col(c).as("__k")))
@@ -93,6 +104,14 @@ final class IncrementalGraph(
   private val byName = config.byName
   private val mat = scala.collection.mutable.Map.empty[String, Mat]
   private val folds = scala.collection.mutable.Map.empty[String, Option[Transforms.ExactFold]]
+  /** What a node binds on its first local edit, per node and input
+    * schemas: row plans, a Union's bound merge. An entry is small; the
+    * cap only bounds what clients sending entries of ever-new shapes can
+    * make the graph hold. */
+  private val bound = new java.util.LinkedHashMap[(String, Seq[StructType]), AnyRef](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[(String, Seq[StructType]), AnyRef]): Boolean =
+      size > 256
+  }
   private val views = new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
   /** The table states as of the last committed edit; read and written
     * under `commitLock` only. */
@@ -157,6 +176,12 @@ final class IncrementalGraph(
       case None => throw new NoSuchElementException(s"no table named $name")
     }
 
+  /** What node `name` binds over input `schemas`, made on first use. */
+  private def boundFor[A <: AnyRef](name: String, schemas: StructType*)(make: => A): A = {
+    val key = (name, schemas)
+    Option(bound.get(key)).getOrElse { val made = make; bound.put(key, made); made }.asInstanceOf[A]
+  }
+
   /** A Function/Filter table over its input frame `in`, rebuilt only when
     * that frame changes. */
   private def view(v: DerivedTableConfig, in: DataFrame): DataFrame = {
@@ -175,7 +200,7 @@ final class IncrementalGraph(
   //    (inserts, deletes) where an upsert surfaces as Delete(old)+
   //    Insert(new), the reference's Update encoding (database.rs:282-286).
   private val listeners = scala.collection.mutable.Map
-    .empty[String, List[(graft.ListenEvent, (DataFrame, DataFrame) => Unit)]]
+    .empty[String, List[(graft.ListenEvent, (Delta, Delta) => Unit)]]
 
   /** Subscribe to a table's change feed; `event` restricts delivery to one
     * change kind — the reference's per-kind listener map
@@ -183,22 +208,28 @@ final class IncrementalGraph(
     * Insert subscriber is never invoked for delete-only edits and vice
     * versa. */
   def listen(tableName: String, event: graft.ListenEvent = graft.ListenEvent.Both)
-            (cb: (DataFrame, DataFrame) => Unit): Unit = {
+            (cb: (DataFrame, DataFrame) => Unit): Unit =
+    listenDeltas(tableName, event)((ins, del) => cb(ins.df, del.df))
+
+  /** [[listen]] with each edit's deltas, whose frames are built only if
+    * `cb` asks for them. */
+  private[graft] def listenDeltas(tableName: String, event: graft.ListenEvent = graft.ListenEvent.Both)
+                                 (cb: (Delta, Delta) => Unit): Unit = {
     require(byName.contains(tableName), s"no table named $tableName")
     listeners(tableName) = (event, cb) :: listeners.getOrElse(tableName, Nil)
   }
 
-  /** An Insert subscriber gets an empty frame for the deletes, and a
+  /** An Insert subscriber gets an empty delta for the deletes, and a
     * Delete subscriber one for the inserts. */
   private def notifyListeners(tableName: String, ins: Delta, del: Delta): Unit =
     listeners.getOrElse(tableName, Nil).foreach {
-      case (graft.ListenEvent.Both, cb) => cb(ins.df, del.df)
-      case (graft.ListenEvent.Insert, cb) => if (!ins.isEmpty) cb(ins.df, emptied(del))
-      case (graft.ListenEvent.Delete, cb) => if (!del.isEmpty) cb(emptied(ins), del.df)
+      case (graft.ListenEvent.Both, cb) => cb(ins, del)
+      case (graft.ListenEvent.Insert, cb) => if (!ins.isEmpty) cb(ins, emptied(del))
+      case (graft.ListenEvent.Delete, cb) => if (!del.isEmpty) cb(emptied(ins), del)
     }
 
-  private def emptied(d: Delta): DataFrame =
-    if (d.rows.exists(_.isEmpty)) d.df else localFrame(spark, Nil, d.df.schema)
+  private def emptied(d: Delta): Delta =
+    if (d.rows.exists(_.isEmpty)) d else localDelta(d.schema, Nil)
 
   /** Run an edit transactionally — the reference's rollback
     * (database.rs:317-396), without the edit-inversion machinery: every
@@ -211,7 +242,7 @@ final class IncrementalGraph(
     * Checkpoints already written for a rolled-back edit are orphaned, not
     * visible. Impure Action functions are outside the transaction boundary
     * (as are the reference's embedded-Python actions). */
-  private def transactional(body: Pending => Unit): Seq[(String, DataFrame, DataFrame)] = {
+  private def transactional(body: Pending => Unit): Seq[(String, Delta, Delta)] = {
     val snapshot = mat.toMap
     val pending: Pending = scala.collection.mutable.ArrayBuffer.empty
     try body(pending)
@@ -224,7 +255,7 @@ final class IncrementalGraph(
       committed = mat.toMap
       pending.foreach { case (t, ins, del) => notifyListeners(t, ins, del) }
     }
-    pending.map { case (t, ins, del) => (t, ins.df, del.df) }.toList
+    pending.toList
   }
   private type Pending = scala.collection.mutable.ArrayBuffer[(String, Delta, Delta)]
 
@@ -241,17 +272,32 @@ final class IncrementalGraph(
     * edits, including cascaded derived-table writes; an Update edit
     * surfaces as its delete+insert pair here). */
   def insertWithEdits(tableName: String, rows: DataFrame): Seq[(String, DataFrame, DataFrame)] = {
-    val cfg = byName.get(tableName) match {
-      case Some(s: SourceTableConfig) => s
-      case _ => throw new IllegalArgumentException(s"$tableName is not a source table")
+    val edits = localRows(rows) match {
+      case Some((schema, local)) => insertRows(tableName, schema, local)
+      case None => commitInsert(tableName,
+        frameDelta(SourceOps.ensureEntryId(SourceOps.alignForInsert(sourceConfig(tableName), rows))))
     }
-    val aligned = SourceOps.alignForInsert(cfg, rows)
-    val committed =
-      if (isLocal(aligned)) {
-        val (schema, withIds) = SourceOps.withEntryIds(aligned.schema, aligned.collect().toSeq)
-        localDelta(schema, withIds)
-      } else Delta(SourceOps.ensureEntryId(aligned), None)
-    val none = localDelta(committed.df.schema, Nil)
+    // each edit's frames are built when the caller reaches it
+    edits.to(LazyList).map { case (t, ins, del) => (t, ins.df, del.df) }
+  }
+
+  /** [[insertWithEdits]] for rows of `schema` on the driver, returning each
+    * edit's deltas: the edit runs as a local edit, and no frame is built. */
+  private[graft] def insertRows(tableName: String, schema: StructType,
+                                rows: Seq[Row]): Seq[(String, Delta, Delta)] = {
+    val cfg = sourceConfig(tableName)
+    val align = boundFor(tableName, schema)(RowPlan.over(spark, schema)(SourceOps.alignForInsert(cfg, _)))
+    val (withIds, local) = SourceOps.withEntryIds(align.schema, align(rows))
+    commitInsert(tableName, localDelta(withIds, local))
+  }
+
+  private def sourceConfig(tableName: String): SourceTableConfig = byName.get(tableName) match {
+    case Some(s: SourceTableConfig) => s
+    case _ => throw new IllegalArgumentException(s"$tableName is not a source table")
+  }
+
+  private def commitInsert(tableName: String, committed: Delta): Seq[(String, Delta, Delta)] = {
+    val none = localDelta(committed.schema, Nil)
     transactional { pending =>
       val m = mat(tableName)
       mat(tableName) = committed.rows match {
@@ -271,15 +317,19 @@ final class IncrementalGraph(
   /** [[delete]], returning every committed edit of the cascade (the
     * reference's DeleteData response — all deleted entries, source and
     * derived). */
-  def deleteWithEdits(tableName: String, column: String, key: Any): Seq[(String, DataFrame, DataFrame)] = {
+  def deleteWithEdits(tableName: String, column: String, key: Any): Seq[(String, DataFrame, DataFrame)] =
+    deleteDeltas(tableName, column, key).map { case (t, ins, del) => (t, ins.df, del.df) }
+
+  /** [[deleteWithEdits]], returning each edit's deltas. */
+  private[graft] def deleteDeltas(tableName: String, column: String, key: Any): Seq[(String, Delta, Delta)] = {
     val m = mat.getOrElse(tableName,
       throw new IllegalArgumentException(s"no table named $tableName"))
     require(byName.get(tableName).exists(_.isInstanceOf[SourceTableConfig]),
       s"$tableName is not a source table")
     // null-safe on BOTH sides — see PipelineGraph.delete
     val cur = m.frame
-    val deleted = Delta(checkpoint(cur.filter(col(column) <=> lit(key))), None)
-    val none = localDelta(deleted.df.schema, Nil)
+    val deleted = frameDelta(checkpoint(cur.filter(col(column) <=> lit(key))))
+    val none = localDelta(deleted.schema, Nil)
     transactional { pending =>
       mat(tableName) = m.rebased(cur.filter(!(col(column) <=> lit(key))))
       pending += ((tableName, none, deleted))
@@ -314,20 +364,22 @@ final class IncrementalGraph(
           val fold = for {
             rs <- inserted.rows if deleted.isEmpty
             f <- folds.getOrElseUpdate(a.name,
-              Transforms.exactFold(inserted.df, a.aggregatedColumn, a.functions))
+              Transforms.exactFold(spark, inserted.schema, a.aggregatedColumn, a.functions))
           } yield (f, rs)
           upsert(a.name, keys) { old =>
             (fold, old.rows) match {
               // the reference's per-row memo fold (transform.rs:244-271):
               // each key's new rows onto its group row, or onto zero
               case (Some((f, rs)), Some(olds)) =>
-                val k = old.df.schema.fieldIndex(AggregationKey)
+                val k = old.schema.fieldIndex(AggregationKey)
                 val groupRows = olds.map(r => groupKey(r.get(k)) -> r).toMap
-                f(grouped(rs, inserted.df.schema.fieldIndex(a.aggregatedColumn))
-                  .map { case (key, rows) => (key, groupRows.get(groupKey(key)), rows) })
+                val plan = boundFor(a.name, inserted.schema)(
+                  RowPlan.over(spark, f.localSchema)(local => inOrder(f(local), old.schema)))
+                localDelta(plan.schema, plan(f.localRows(grouped(rs, inserted.schema.fieldIndex(a.aggregatedColumn))
+                  .map { case (key, rows) => (key, groupRows.get(groupKey(key)), rows) })))
               case _ =>
-                Transforms.aggregation(keys.select(table(a.sourceTable), a.aggregatedColumn),
-                  a.aggregatedColumn, a.functions)
+                freeze(inOrder(Transforms.aggregation(keys.select(table(a.sourceTable), a.aggregatedColumn),
+                  a.aggregatedColumn, a.functions), old.schema), old.rows.isDefined)
             }
           }
         case u: UnionTableConfig =>
@@ -345,10 +397,17 @@ final class IncrementalGraph(
               // duplicate derived rows. (Rows within ONE insert batch are
               // assumed key-unique per fk; the reference would fold them in
               // arrival order, which a batch does not define.) Local
-              // rows pair by key on the driver.
-              val inputs = (old.df, MatchingKey) +: fks.map(fk => (inserted.df, fk))
-              if (old.rows.isDefined && inserted.rows.isDefined) Transforms.union(inputs, localFullOuter)
-              else Transforms.union(inputs)
+              // rows pair by key on the driver and merge through the
+              // bound plan, unless the keys differ in type.
+              val merged = (old.rows, inserted.rows) match {
+                case (Some(olds), Some(rs)) =>
+                  boundFor(s"${u.name} <- $src", old.schema, inserted.schema)(Transforms.unionRows(spark,
+                    (old.schema, MatchingKey) +: fks.map(fk => (inserted.schema, fk)), inOrder(_, old.schema)))
+                    .map { case (schema, f) => localDelta(schema, f(olds +: fks.map(_ => rs))) }
+                case _ => None
+              }
+              merged.getOrElse(freeze(inOrder(Transforms.union(
+                (old.df, MatchingKey) +: fks.map(fk => (inserted.df, fk))), old.schema), old.rows.isDefined))
             } else {
               // Delete (or derived upsert = delete+insert): rebuild the
               // affected keys from the remaining input rows. An append-log
@@ -362,7 +421,7 @@ final class IncrementalGraph(
               // arrival order like the reference — the arrival order of
               // edits across tables is not recorded, so a rebuild cannot
               // reproduce it.
-              Transforms.union(u.tablesAndForeignKeys.map { case (t, fk) =>
+              freeze(inOrder(Transforms.union(u.tablesAndForeignKeys.map { case (t, fk) =>
                 val affected = keys.select(table(t), fk)
                 val collapsed =
                   if (!affected.columns.contains(EntryId)) affected
@@ -373,7 +432,7 @@ final class IncrementalGraph(
                       .where(col("__rn") === 1).drop("__rn")
                   }
                 (collapsed, fk)
-              })
+              }), old.schema), old.rows.isDefined)
             }
           }
       }
@@ -385,28 +444,28 @@ final class IncrementalGraph(
   /** Delta `in` of `src` through row-wise table `d`, frozen like `in`. */
   private def through(d: DerivedTableConfig, src: String, in: Delta): Delta = (d, in.rows) match {
     case (a: ActionTableConfig, Some(rs)) =>
-      val (schema, f) = Transforms.actionRows(ActionRegistry.get(a.actionName), in.df.schema)
-      localDelta(schema, rs.flatMap(r => f(new GenericRowWithSchema(r.toSeq.toArray, in.df.schema))))
-    case _ =>
-      val out = compute(d, Map(src -> in.df))
-      if (in.rows.exists(_.isEmpty)) localDelta(out.schema, Nil)
-      else freeze(out, in.rows.isDefined)
+      val (schema, f) = Transforms.actionRows(ActionRegistry.get(a.actionName), in.schema)
+      localDelta(schema, rs.flatMap(r => f(new GenericRowWithSchema(r.toSeq.toArray, in.schema))))
+    case (_, Some(rs)) =>
+      val plan = boundFor(d.name, in.schema)(RowPlan.over(spark, in.schema)(df => compute(d, Map(src -> df))))
+      localDelta(plan.schema, plan(rs))
+    case _ => frameDelta(checkpoint(compute(d, Map(src -> in.df))))
   }
 
   /** Replace the rows of keyed table `name` under `keys` with
-    * `replacement(old rows)`; returns the (inserted, deleted) deltas. */
-  private def upsert(name: String, keys: Keys)(replacement: Delta => DataFrame): (Delta, Delta) = {
+    * `replacement(old rows)`, which are in the table's column order and
+    * frozen like the old rows; returns the (inserted, deleted) deltas. */
+  private def upsert(name: String, keys: Keys)(replacement: Delta => Delta): (Delta, Delta) = {
     val m = mat(name)
-    val columns = m.base.columns.map(col).toIndexedSeq
     keys match {
       case LocalKeys(ks) =>
         val old = localDelta(m.schema, m.rowsUnder(ks))
-        val rep = freeze(replacement(old).select(columns: _*), local = true)
+        val rep = replacement(old)
         mat(name) = m.upsert(ks, rep.rows.get)
         (rep, old)
       case k: FrameKeys =>
-        val old = Delta(checkpoint(k.select(m.frame, m.key.get)), None)
-        val rep = freeze(replacement(old).select(columns: _*), local = false)
+        val old = frameDelta(checkpoint(k.select(m.frame, m.key.get)))
+        val rep = replacement(old)
         mat(name) = m.rebased(k.drop(m.frame, m.key.get).unionByName(rep.df))
         (rep, old)
     }
@@ -415,10 +474,13 @@ final class IncrementalGraph(
 
 object IncrementalGraph {
   import SystemColumns._
+  import Transforms.groupKey
 
-  /** A frozen delta: driver-local `rows` (with `df` their LocalRelation)
-    * when derived from a local edit, else a checkpointed frame. */
-  private final case class Delta(df: DataFrame, rows: Option[Seq[Row]]) {
+  /** One table's change in an edit, frozen: driver-local `rows` of
+    * `schema` when the edit is local, else a checkpointed frame. Local
+    * rows get their frame, a LocalRelation, only when it is asked for. */
+  private[graft] final class Delta(val schema: StructType, val rows: Option[Seq[Row]], frame: () => DataFrame) {
+    lazy val df: DataFrame = frame()
     lazy val isEmpty: Boolean = rows.fold(df.isEmpty)(_.isEmpty)
   }
 
@@ -481,7 +543,24 @@ object IncrementalGraph {
 
   /** True when `df` plans to driver-local rows, which `collect()` returns
     * without running a Spark job. */
-  def isLocal(df: DataFrame): Boolean = df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+  def isLocal(df: DataFrame): Boolean = localRelation(df).isDefined
+
+  /** The LocalRelation `df` plans to: its analyzed plan when that is one,
+    * as a frame of rows built by `createDataFrame` is, so it needs no
+    * optimizer run; else its optimized plan. */
+  private def localRelation(df: DataFrame): Option[LocalRelation] = df.queryExecution.analyzed match {
+    case l: LocalRelation => Some(l)
+    case _ => df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l)
+      case _ => None
+    }
+  }
+
+  /** The schema and rows of a `df` that plans to driver-local rows. */
+  private def localRows(df: DataFrame): Option[(StructType, Seq[Row])] = localRelation(df).map { l =>
+    val toRow = CatalystTypeConverters.createToScalaConverter(l.schema)
+    (l.schema, l.data.map(toRow(_).asInstanceOf[Row]))
+  }
 
   private def isView(d: DerivedTableConfig): Boolean = d match {
     case _: FunctionTableConfig | _: FilterTableConfig => true
@@ -498,14 +577,9 @@ object IncrementalGraph {
   private def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
-  /** A key value under Spark's key equality: floating-point -0.0 is 0.0
-    * and every NaN is one value, binary compares by content. */
-  private def groupKey(k: Any): Any = k match {
-    case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
-    case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
-    case b: Array[Byte] => b.toSeq
-    case other => other
-  }
+  /** `df`'s columns in the order of `schema`'s. */
+  private def inOrder(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fieldNames.toIndexedSeq.map(col): _*)
 
   /** `rows` grouped by the value of field `i` (null is a group, as in a
     * GROUP BY): groups in first-arrival order, rows in arrival order. */
@@ -516,30 +590,6 @@ object IncrementalGraph {
       groups(groupKey(key)) = (key, rs :+ r)
     }
     groups.values.toSeq
-  }
-
-  /** [[Transforms.fullOuterOnKey]] for two driver-local frames, paired on
-    * the driver: the same rows, every column nullable. As in the
-    * equi-join, a null key matches nothing. */
-  private def localFullOuter(l: DataFrame, r: DataFrame): DataFrame = {
-    val (li, ri) = (l.schema.fieldIndex(MatchingKey), r.schema.fieldIndex(MatchingKey))
-    if (l.schema(li).dataType != r.schema(ri).dataType) return Transforms.fullOuterOnKey(l, r)
-    val (lRest, rRest) = (l.schema.indices.filter(_ != li), r.schema.indices.filter(_ != ri))
-    val (lRows, rRows) = (l.collect().toSeq, r.collect().toSeq)
-    val byKey = rRows.filter(!_.isNullAt(ri)).groupBy(x => groupKey(x.get(ri)))
-    def row(key: Any, lr: Option[Row], rr: Option[Row]): Row = Row.fromSeq(key +:
-      (lRest.map(i => lr.map(_.get(i)).orNull) ++ rRest.map(i => rr.map(_.get(i)).orNull)))
-    val paired = lRows.flatMap { lr =>
-      val matches = if (lr.isNullAt(li)) Nil else byKey.getOrElse(groupKey(lr.get(li)), Nil)
-      if (matches.isEmpty) Seq(row(lr.get(li), Some(lr), None))
-      else matches.map(rr => row(lr.get(li), Some(lr), Some(rr)))
-    }
-    val matched = lRows.filter(!_.isNullAt(li)).map(x => groupKey(x.get(li))).toSet
-    val unmatched = rRows.filter(x => x.isNullAt(ri) || !matched(groupKey(x.get(ri))))
-      .map(rr => row(rr.get(ri), None, Some(rr)))
-    val schema = StructType((l.schema(li) +: (lRest.map(l.schema(_)) ++ rRest.map(r.schema(_))))
-      .map(_.copy(nullable = true)))
-    localFrame(l.sparkSession, paired ++ unmatched, schema)
   }
 
   /** Null-safe `c ∈ keys`. */

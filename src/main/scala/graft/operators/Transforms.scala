@@ -2,6 +2,9 @@ package graft.operators
 
 import graft.expr._
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, InterpretedMutableProjection, Predicate, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -88,6 +91,65 @@ object Transforms {
     * — the key, then l's other columns, then r's. A caller may pass
     * another join with that output, e.g. one that pairs driver-local rows. */
   def fullOuterOnKey(l: DataFrame, r: DataFrame): DataFrame = l.join(r, Seq(MatchingKey), "full_outer")
+
+  /** [[union]] followed by `finish`, bound for driver rows: `inputs` are
+    * each input's schema and foreign key, and the result maps each
+    * input's rows to the output rows. The renames before each join and
+    * the merge after it are the plan's own expressions ([[RowPlan]]); the
+    * join pairs rows on the key on the driver, as [[fullOuterOnKey]] pairs
+    * them: every column nullable, and a null key matches nothing. None when
+    * two joined keys differ in type, which the join would cast. Returns
+    * the output schema and the row function. */
+  private[operators] def unionRows(spark: SparkSession, inputs: Seq[(StructType, String)],
+                                   finish: DataFrame => DataFrame)
+      : Option[(StructType, Seq[Seq[Row]] => Seq[Row])] = {
+    // union joins left to right: join i's left side is bound over the
+    // rows of join i-1 (of the first input, for join 0), its right side
+    // over input i+1, and the merge after the last join over its rows
+    val joins = scala.collection.mutable.ArrayBuffer.empty[(RowPlan, RowPlan)]
+    var sameKeys = true
+    val merged = union(inputs.map { case (schema, fk) => (RowPlan.empty(spark, schema), fk) }, { (l, r) =>
+      joins += ((new RowPlan(l), new RowPlan(r)))
+      sameKeys &&= l.schema(MatchingKey).dataType == r.schema(MatchingKey).dataType
+      RowPlan.empty(spark, StructType((l.schema(MatchingKey) +:
+        (l.schema.filter(_.name != MatchingKey) ++ r.schema.filter(_.name != MatchingKey)))
+        .map(_.copy(nullable = true))))
+    })
+    if (!sameKeys) return None
+    val top = new RowPlan(finish(merged))
+    Some((top.schema, { rowsPerInput =>
+      top(joins.zip(rowsPerInput.tail).foldLeft(rowsPerInput.head) { case (left, ((l, r), right)) =>
+        pairOnKey(l.schema, l(left), r.schema, r(right))
+      })
+    }))
+  }
+
+  /** [[fullOuterOnKey]] over driver rows of equal key types: the key,
+    * then l's other columns, then r's. */
+  private def pairOnKey(ls: StructType, lRows: Seq[Row], rs: StructType, rRows: Seq[Row]): Seq[Row] = {
+    val (li, ri) = (ls.fieldIndex(MatchingKey), rs.fieldIndex(MatchingKey))
+    val (lRest, rRest) = (ls.indices.filter(_ != li), rs.indices.filter(_ != ri))
+    val byKey = rRows.filter(!_.isNullAt(ri)).groupBy(x => groupKey(x.get(ri)))
+    def row(key: Any, lr: Option[Row], rr: Option[Row]): Row = Row.fromSeq(key +:
+      (lRest.map(i => lr.map(_.get(i)).orNull) ++ rRest.map(i => rr.map(_.get(i)).orNull)))
+    val paired = lRows.flatMap { lr =>
+      val matches = if (lr.isNullAt(li)) Nil else byKey.getOrElse(groupKey(lr.get(li)), Nil)
+      if (matches.isEmpty) Seq(row(lr.get(li), Some(lr), None))
+      else matches.map(rr => row(lr.get(li), Some(lr), Some(rr)))
+    }
+    val matched = lRows.filter(!_.isNullAt(li)).map(x => groupKey(x.get(li))).toSet
+    paired ++ rRows.filter(x => x.isNullAt(ri) || !matched(groupKey(x.get(ri))))
+      .map(rr => row(rr.get(ri), None, Some(rr)))
+  }
+
+  /** A key value under Spark's key equality: floating-point -0.0 is 0.0
+    * and every NaN is one value, binary compares by content. */
+  private[operators] def groupKey(k: Any): Any = k match {
+    case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+    case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+    case b: Array[Byte] => b.toSeq
+    case other => other
+  }
 
   /** AggregationTransform: per-group memo fold → decomposed into Spark
     * aggregates (reference: transform.rs:229-275). Recognized statement
@@ -186,12 +248,12 @@ object Transforms {
     * statement is memo-only. `None` for any other config: a Double sum
     * folded in another order can differ from the recompute in its last
     * bits, and `first()` overwrites and general folds do not decompose.
-    * `input` is any frame of the aggregation's input schema. */
-  private[operators] def exactFold(input: DataFrame, aggregatedColumn: String,
+    * `schema` is the aggregation's input schema. */
+  private[operators] def exactFold(spark: SparkSession, schema: StructType, aggregatedColumn: String,
                                    statements: Seq[String]): Option[ExactFold] = {
-    graft.expr.GraftFunctions.register(input.sparkSession)
+    graft.expr.GraftFunctions.register(spark)
     import ExprCompiler._
-    val schema = input.schema
+    val input = RowPlan.empty(spark, schema)
     val parsed = statements.map(ExprParser.parseAssignment)
     val accs = parsed.flatMap(a => accumulation(a).map(a.dest -> _))
     val memoOnly = parsed.filter(a => accumulation(a).isEmpty)
@@ -205,7 +267,7 @@ object Transforms {
       case _ => None
     }
     if (foldTypes.contains(None)) None
-    else Some(new ExactFold(input.sparkSession, schema, aggregatedColumn, parsed,
+    else Some(new ExactFold(schema, aggregatedColumn, parsed,
       accs.zip(terms).zip(foldTypes.flatten).map {
         case (((dest, (sub, negated)), t), ft) => Accumulator(dest, sub, negated, t.t, ft)
       }))
@@ -215,32 +277,35 @@ object Transforms {
                                                   t: ExprCompiler.GType, foldType: DataType)
 
   /** An [[exactFold]]: new input rows folded onto their groups' rows. */
-  private[operators] final class ExactFold(spark: SparkSession, schema: StructType,
-                                           aggregatedColumn: String, parsed: Seq[Assignment],
-                                           accs: Seq[Accumulator]) {
+  private[operators] final class ExactFold(schema: StructType, aggregatedColumn: String,
+                                           parsed: Seq[Assignment], accs: Seq[Accumulator]) {
     import ExprCompiler._
     private val needed = accs.flatMap(a => GExpr.collectCols(a.term)).distinct
       .filter(schema.fieldNames.contains)
+    private val rowIdx = needed.map(schema.fieldIndex)
+    private val memoIdx = accs.map(a => 1 + parsed.indexWhere(_.dest == a.dest))
+    private val zero = accs.map(a => if (a.t == GInt) 0L else java.math.BigDecimal.ZERO)
 
-    /** The group rows [[aggregation]] would give over each group's old and
-    * new input rows. `groups` holds, per key, its current group row
-    * ([[aggregation]]'s output columns; None for a new key) and its new
-    * input rows in arrival order. One projection of a Spark `aggregate`
-    * over a LocalRelation with one row per key, which Spark evaluates on
-    * the driver. */
-    def apply(groups: Seq[(Any, Option[Row], Seq[Row])]): DataFrame = {
-      val rowType = StructType(needed.map(n => schema(n).copy(nullable = true)))
-      val memoType = StructType(accs.map(a => StructField(a.dest, sparkType(a.t))))
-      val rowIdx = needed.map(schema.fieldIndex)
-      val memoIdx = accs.map(a => 1 + parsed.indexWhere(_.dest == a.dest))
-      val zero = accs.map(a => if (a.t == GInt) 0L else java.math.BigDecimal.ZERO)
-      val local = spark.createDataFrame(groups.map { case (key, old, rows) =>
+    /** One row per key: the key, its current memo (the accumulators of its
+      * group row, zero for a new key) and its new input rows' terms. */
+    val localSchema: StructType = StructType(Seq(
+      StructField(AggregationKey, schema(aggregatedColumn).dataType),
+      StructField("__memo", StructType(accs.map(a => StructField(a.dest, sparkType(a.t))))),
+      StructField("__rows", ArrayType(StructType(needed.map(n => schema(n).copy(nullable = true)))))))
+
+    /** [[localSchema]] rows for `groups`: per key, its current group row
+      * ([[aggregation]]'s output columns; None for a new key) and its new
+      * input rows in arrival order. */
+    def localRows(groups: Seq[(Any, Option[Row], Seq[Row])]): Seq[Row] =
+      groups.map { case (key, old, rows) =>
         Row(key, Row.fromSeq(old.fold[Seq[Any]](zero)(r => memoIdx.map(r.get))),
           rows.map(r => Row.fromSeq(rowIdx.map(r.get))))
-      }.asJava, StructType(Seq(
-        StructField(AggregationKey, schema(aggregatedColumn).dataType),
-        StructField("__memo", memoType),
-        StructField("__rows", ArrayType(rowType)))))
+      }
+
+    /** The group rows [[aggregation]] would give over each group's old and
+      * new input rows, over `local`, a frame of [[localRows]]: one
+      * projection of a Spark `aggregate` per key. */
+    def apply(local: DataFrame): DataFrame = {
       val init = struct(accs.map(a => col("__memo").getField(a.dest).cast(a.foldType).as(a.dest)): _*)
       val folded = aggregate(col("__rows"), init, (acc, x) => {
         val rowRes: Resolver = n => Typed(x.getField(n), toGType(schema(n).dataType))
@@ -403,4 +468,64 @@ object ActionRegistry {
   def get(name: String): GraftAction =
     actions.getOrElse(name, throw new NoSuchElementException(s"no action named $name"))
   def clear(): Unit = actions.clear()
+}
+
+/** A plan of Projects and Filters over one LocalRelation, bound once for
+  * driver rows. Each row goes through the ANALYZED plan's own expressions
+  * in interpreted mode, with no planning, codegen or job per call, so a
+  * row gets what the plan gives it: the same casts, ANSI errors, null
+  * handling, decimal precision and output schema. The analyzed plan is
+  * taken rather than the optimized one because the optimizer folds a
+  * Project over an empty LocalRelation away. Each expression must be
+  * deterministic: a row-at-a-time evaluation of another would diverge
+  * from the plan. Not thread-safe: the evaluators hold per-row state. */
+private[operators] final class RowPlan(df: DataFrame) {
+  val schema: StructType = df.schema
+  private val (leaf, steps) = RowPlan.bind(df.queryExecution.analyzed)
+  private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(leaf.schema)
+  private val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+
+  /** The rows this plan gives over a LocalRelation of `rows`, in order. */
+  def apply(rows: Seq[Row]): Seq[Row] = rows.flatMap { r =>
+    steps.foldLeft(Option(toCatalyst(r).asInstanceOf[InternalRow]))((row, step) => row.flatMap(step))
+      .map(toScala(_).asInstanceOf[Row])
+  }
+}
+
+private[operators] object RowPlan {
+  /** An empty frame of `schema`: the leaf to build a plan to bind over. */
+  def empty(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** `plan` over a relation of `schema`, bound. */
+  def over(spark: SparkSession, schema: StructType)(plan: DataFrame => DataFrame): RowPlan =
+    new RowPlan(plan(empty(spark, schema)))
+
+  private type Step = InternalRow => Option[InternalRow]
+
+  /** The plan's leaf and its operators as row steps, bottom up. */
+  private def bind(plan: LogicalPlan): (LocalRelation, Vector[Step]) = plan match {
+    case l: LocalRelation => (l, Vector.empty)
+    case Project(list, child) =>
+      val (leaf, steps) = bind(child)
+      val p = new InterpretedMutableProjection(list.map(evaluable), child.output)
+      p.initialize(0)
+      (leaf, steps :+ ((r: InternalRow) => Some(p(r).copy())))
+    case Filter(condition, child) =>
+      val (leaf, steps) = bind(child)
+      val p = Predicate.createInterpreted(BindReferences.bindReference(evaluable(condition), child.output))
+      p.initialize(0)
+      (leaf, steps :+ ((r: InternalRow) => if (p.eval(r)) Some(r) else None))
+    case other =>
+      throw new IllegalArgumentException(s"cannot bind a ${other.nodeName} for driver rows")
+  }
+
+  /** `e` with each runtime-replaceable expression replaced, as the
+    * optimizer replaces it before execution. */
+  private def evaluable(e: Expression): Expression = {
+    val replaced = e.transform { case r: RuntimeReplaceable => r.replacement }
+    if (!replaced.deterministic)
+      throw new IllegalArgumentException(s"cannot bind a non-deterministic expression for driver rows: ${e.sql}")
+    replaced
+  }
 }

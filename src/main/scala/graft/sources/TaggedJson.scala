@@ -84,8 +84,9 @@ object TaggedJson {
     valueOf(f.getKey, f.getValue)
   }
 
-  private def parseEntryRaw(json: String): (StructType, Row) = {
-    val node = mapper.readTree(json).asInstanceOf[ObjectNode]
+  private def parseEntryRaw(node: JsonNode): (StructType, Row) = {
+    if (node == null || !node.isObject)
+      throw new IllegalArgumentException("an entry must be a JSON object of tagged values")
     val fields = node.properties().iterator().asScala.toSeq.map { e =>
       val f = e.getValue.properties().iterator().next()
       (StructField(e.getKey, rawDataTypeOf(f.getKey, f.getValue)), valueOf(f.getKey, f.getValue))
@@ -95,8 +96,11 @@ object TaggedJson {
 
   /** Parse one tagged entry into (schema, row). Column order follows the
     * JSON object order (the reference's Entry is an ordered map). */
-  def parseEntry(json: String): (StructType, Row) = {
-    val (s, r) = parseEntryRaw(json)
+  def parseEntry(json: String): (StructType, Row) = parseEntry(mapper.readTree(json))
+
+  /** [[parseEntry]] of an entry already parsed as JSON. */
+  def parseEntry(node: JsonNode): (StructType, Row) = {
+    val (s, r) = parseEntryRaw(node)
     (normalizeEmpty(s).asInstanceOf[StructType], r)
   }
 
@@ -104,7 +108,7 @@ object TaggedJson {
     * reference's first-row inference, storage_manager_table.rs:334-350). */
   def parseEntries(jsons: Seq[String]): (StructType, Seq[Row]) = {
     require(jsons.nonEmpty, "no entries")
-    val (rawSchema, first) = parseEntryRaw(jsons.head)
+    val (rawSchema, first) = parseEntryRaw(mapper.readTree(jsons.head))
     // tags/types must agree across entries — a Str where the first entry had
     // an Integer would otherwise surface later as an opaque encoder
     // ClassCastException at materialization instead of at parse time.
@@ -123,7 +127,7 @@ object TaggedJson {
       case _ => false
     }
     val rest = jsons.tail.map { j =>
-      val (s2, r) = parseEntryRaw(j)
+      val (s2, r) = parseEntryRaw(mapper.readTree(j))
       require(s2.fieldNames.sameElements(rawSchema.fieldNames),
         s"Missmatched Input: ${s2.fieldNames.mkString(",")} vs ${rawSchema.fieldNames.mkString(",")}")
       s2.fields.zip(rawSchema.fields).foreach { case (got, want) =>
@@ -160,7 +164,8 @@ object TaggedJson {
       case "Array" =>
         val (et, seq) = payload.asInstanceOf[(DataType, Any)]
         val arr = node.putArray(tag)
-        seq.asInstanceOf[Seq[Any]].foreach { el =>
+        // collect() hands arrays back as a mutable.ArraySeq
+        seq.asInstanceOf[scala.collection.Seq[Any]].foreach { el =>
           writeTagged(arr.addObject(), et, el)
         }
       case "Map" =>
@@ -172,13 +177,17 @@ object TaggedJson {
     }
   }
 
-  /** Serialize a row to the tagged wire format (nulls omitted, like the
+  /** A row in the tagged wire format (nulls omitted, like the
     * reference's sparse entries). */
-  def toTaggedJson(row: Row, schema: StructType): String = {
+  def toTaggedNode(row: Row, schema: StructType): ObjectNode = {
     val node = mapper.createObjectNode()
     schema.fields.zipWithIndex.foreach { case (f, i) =>
       if (!row.isNullAt(i)) writeTagged(node.putObject(f.name), f.dataType, row.get(i))
     }
-    mapper.writeValueAsString(node)
+    node
   }
+
+  /** [[toTaggedNode]] as a JSON string. */
+  def toTaggedJson(row: Row, schema: StructType): String =
+    mapper.writeValueAsString(toTaggedNode(row, schema))
 }

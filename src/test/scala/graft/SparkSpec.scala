@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -25,7 +28,10 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .withExtensions(_.injectResolutionRule(_ => AnalysisProbe))
       .getOrCreate()
+    // as GraftSession does: Spark's INFO lines would bury the test results
+    s.sparkContext.setLogLevel("WARN")
     // suites must not depend on which one first exercised an operator
     // that registers the native functions
     graft.expr.GraftFunctions.register(s)
@@ -33,9 +39,42 @@ object TestSpark {
   }
 }
 
+/** A no-op resolution rule: while a [[SparkSpec.analysesOn]] recording
+  * is on, it notes each query the analyzer resolves on a recorded thread.
+  * The analyzer runs its rules over one query's plan once per pass, all
+  * under that query's planning tracker, so the tracker names the query. */
+object AnalysisProbe extends Rule[LogicalPlan] {
+  @volatile private[graft] var recording: Option[(Thread => Boolean, java.util.Map[AnyRef, String])] = None
+
+  def apply(plan: LogicalPlan): LogicalPlan = {
+    recording.foreach { case (on, seen) =>
+      if (on(Thread.currentThread()))
+        seen.putIfAbsent(QueryPlanningTracker.get.getOrElse(plan), plan.simpleString(2))
+    }
+    plan
+  }
+}
+
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   override def afterAll(): Unit = () // keep the shared session alive
+
+  /** The queries the analyzer resolves on the calling thread while `body`
+    * runs: each Dataset built, each plan analyzed for an action. */
+  def analysesDuring(body: => Unit): Analyses = {
+    val caller = Thread.currentThread()
+    analysesOn(_ eq caller)(body)
+  }
+
+  /** [[analysesDuring]] on the threads `on` selects. */
+  def analysesOn(on: Thread => Boolean)(body: => Unit): Analyses = {
+    spark // the probe is installed with the session
+    val seen = java.util.Collections.synchronizedMap(new java.util.IdentityHashMap[AnyRef, String])
+    AnalysisProbe.recording = Some((on, seen))
+    try body finally AnalysisProbe.recording = None
+    import scala.jdk.CollectionConverters._
+    seen.synchronized(Analyses(seen.values.asScala.toSeq))
+  }
 
   /** The Spark jobs started while `body` runs, on any thread, each named
     * by its call site: that of the DataFrame action it runs for, else its
@@ -78,6 +117,14 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       Jobs(sites.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
+}
+
+/** Queries counted by [[SparkSpec.analysesDuring]]; prints as the count
+  * and each query's top operator. */
+final case class Analyses(plans: Seq[String]) {
+  def count: Int = plans.size
+  override def toString: String =
+    s"$count analyzed plans" + (if (plans.isEmpty) "" else plans.mkString(" (", "; ", ")"))
 }
 
 /** Spark jobs counted by [[SparkSpec.jobsDuring]]; prints as the count and

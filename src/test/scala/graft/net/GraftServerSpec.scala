@@ -1,7 +1,7 @@
 package graft.net
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.SparkSpec
+import graft.{Analyses, SparkSpec}
 import graft.config.PipelineConfig
 import graft.operators.{ActionRegistry, GraftAction, IncrementalGraph}
 import java.io.{DataInputStream, DataOutputStream}
@@ -111,12 +111,14 @@ class GraftServerSpec extends SparkSpec {
       out.write(buf.array()); out.flush()
     }
     def pending: Int = in.available()
-    def recv(): JsonNode = {
+    /** The next frame's payload, as sent. */
+    def recvRaw(): String = {
       val size = in.readInt()
       val buf = new Array[Byte](size)
       in.readFully(buf)
-      mapper.readTree(new String(buf, UTF_8))
+      new String(buf, UTF_8)
     }
+    def recv(): JsonNode = mapper.readTree(recvRaw())
     /** Skip interleaved messages (e.g. Events vs RequestResponses) until
       * one matches. */
     def recvMatching(pred: JsonNode => Boolean, max: Int = 20): JsonNode = {
@@ -382,6 +384,44 @@ class GraftServerSpec extends SparkSpec {
     refusesLength(Int.MaxValue)
   }
 
+  // Every byte but the arrays' matches what the server sent before rows
+  // were rendered without a frame; an array column then failed the whole
+  // answer with a ClassCastException (Spark hands arrays back as a
+  // mutable.ArraySeq).
+  test("an InsertData response and its Event keep their exact wire bytes for every tag; a null column is omitted") {
+    val server = new GraftServer(new IncrementalGraph(spark, PipelineConfig.fromYaml(
+      """tables:
+        |  - name: zoo
+        |    kind: source
+        |    columns: {i: Integer, s: Str, b: Bool, d: Decimal, f: Float, a: "array<integer>", n: Str}
+        |  - name: zooFn
+        |    kind: function
+        |    source_table: zoo
+        |    functions:
+        |      - 'm ~ named_struct("k", i, "t", s)'
+        |      - 'd2 ~ d * 2'
+        |      - 'f2 ~ f + 1'
+        |      - 'a2 ~ a'
+        |      - 'b2 ~ b'
+        |      - 'n2 ~ n'
+        |""".stripMargin)))
+    val c = new WireClient(server.port)
+    try {
+      c.send("""{"StartListen":{"table_name":"zooFn","event":"Insert"}}""")
+      c.send(query(1, """{"InsertData":{"table":"zoo","entry":{"i":{"Integer":7},"s":{"Str":"x\"y"},""" +
+        """"b":{"Bool":true},"d":{"Decimal":"1.5"},"f":{"Float":2.25},""" +
+        """"a":{"Array":[{"Integer":1},{"Integer":2}]},"_entryId":{"Str":"fixed-id"}}}}"""))
+      val zooFn = """{"m":{"Map":{"k":{"Integer":7},"t":{"Str":"x\"y"}}},""" +
+        """"d2":{"Decimal":"3.000000"},"f2":{"Float":3.25},""" +
+        """"a2":{"Array":[{"Integer":1},{"Integer":2}]},"b2":{"Bool":true},"_sourceEntryId":{"Str":"fixed-id"}}"""
+      assert(c.recvRaw() == s"""{"Event":{"table_name":"zooFn","event":"Insert","value":{"ManyResults":{"Ok":[$zooFn]}}}}""")
+      assert(c.recvRaw() == s"""{"RequestResponse":{"request_id":"${idOf(1)}","response":{"ManyResults":{"Ok":[""" +
+        """{"i":{"Integer":7},"s":{"Str":"x\"y"},"b":{"Bool":true},"d":{"Decimal":"1.500000000000000000"},""" +
+        """"f":{"Float":2.25},"a":{"Array":[{"Integer":1},{"Integer":2}]},"_entryId":{"Str":"fixed-id"}},""" +
+        s"""$zooFn]}}}}""")
+    } finally { c.close(); server.close() }
+  }
+
   test("a one-row InsertData through source→function→filter runs no Spark job, rendering included") {
     val server = new GraftServer(new IncrementalGraph(spark, PipelineConfig.fromYaml(
       """tables:
@@ -410,6 +450,32 @@ class GraftServerSpec extends SparkSpec {
       // source row, derived row, and the filter-passing row
       assert(edits.size() == 3)
       assert(edits.get(2).get("newColumn").get("Integer").asLong() == 7L)
+    } finally { c.close(); server.close() }
+  }
+
+  test("a one-row InsertData resolves no plan once its nodes are bound, its response and Event included") {
+    val server = newServer()
+    val c = new WireClient(server.port)
+    def insert(id: Int, it: Int): (JsonNode, JsonNode) = {
+      c.send(query(id, s"""{"InsertData":{"table":"testTable","entry":{"testForIndex":{"Integer":1},"testForIteration":{"Integer":$it}}}}"""))
+      val event = c.recv()
+      (event, c.recv())
+    }
+    try {
+      c.send("""{"StartListen":{"table_name":"derived","event":"Insert"}}""")
+      insert(1, 20)
+      var answer: (JsonNode, JsonNode) = null
+      val caller = Thread.currentThread()
+      var analyses = Analyses(Nil)
+      val jobs = jobsDuring {
+        analyses = analysesOn(t => (t eq caller) || t.getName.startsWith("graft-net-")) { answer = insert(2, 30) }
+      }
+      assert(analyses.count == 0, s"$analyses for a one-row InsertData")
+      assert(jobs.count == 0, s"$jobs for a one-row InsertData")
+      val (event, resp) = answer
+      assert(event.get("Event").get("value").get("ManyResults").get("Ok").get(0).get("newColumn").get("Integer").asLong() == 32L)
+      // source row, derived row, and the filter-passing row
+      assert(rows(resp).size() == 3)
     } finally { c.close(); server.close() }
   }
 

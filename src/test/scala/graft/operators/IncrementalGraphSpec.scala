@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Analyses, Jobs, SparkSpec}
 import graft.config.PipelineConfig
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -458,9 +458,8 @@ class IncrementalGraphSpec extends SparkSpec {
     val schema = StructType(Seq(StructField("name", StringType), StructField("grade", LongType),
       StructField("score", DoubleType)))
     val inc = new IncrementalGraph(spark, cfg)
-    val probe = rows(schema)
     cfg.tables.collect { case a: graft.config.AggregationTableConfig => a }.foreach { a =>
-      assert(Transforms.exactFold(probe, a.aggregatedColumn, a.functions).isEmpty,
+      assert(Transforms.exactFold(spark, schema, a.aggregatedColumn, a.functions).isEmpty,
         s"${a.name} must recompute")
     }
     inc.insert("scores", rows(schema, Row("a", 1L, 0.1), Row("a", 2L, 0.2), Row("b", 3L, 0.3)))
@@ -861,5 +860,207 @@ class IncrementalGraphSpec extends SparkSpec {
     inc.insert("grades", rows(taggedGrades, Row("Zed", "8", 1L)))
     assert(inc.table("profile").collect().map(r => r.getAs[String]("matchingKey") -> r.get(r.fieldIndex("tag")).toString)
       .toMap == Map("Alex" -> "7", "Zed" -> "8"))
+  }
+
+  test("a one-row testTable insert resolves no plan and runs no job once its nodes are bound") {
+    val inc = testCfgGraph()
+    val testSchema = StructType(Seq(StructField("testForIndex", LongType), StructField("testForIteration", LongType)))
+    // the first local edit through each node binds it
+    inc.insert("testTable", rows(testSchema, Row(1L, 20L)))
+    val df = rows(testSchema, Row(2L, 30L))
+    var edits: Seq[(String, DataFrame, DataFrame)] = Nil
+    var analyses = Analyses(Nil)
+    val jobs = jobsDuring { analyses = analysesDuring { edits = inc.insertWithEdits("testTable", df) } }
+    assert(analyses.count == 0, s"$analyses for a one-row testTable insert")
+    assert(jobs.count == 0, s"$jobs for a one-row testTable insert")
+    assert(edits.map(_._1) == Seq("testTable", "derived", "filterTest"))
+    assert(edits(1)._2.collect().map(_.getAs[Long]("newColumn")).toSeq == Seq(32L))
+    assert(edits(2)._2.collect().map(_.getAs[Long]("testForIteration")).toSeq == Seq(30L))
+    // the row form the façade uses
+    var deltas: Seq[(String, IncrementalGraph.Delta, IncrementalGraph.Delta)] = Nil
+    val rowAnalyses = analysesDuring { deltas = inc.insertRows("testTable", testSchema, Seq(Row(3L, 40L))) }
+    assert(rowAnalyses.count == 0, s"$rowAnalyses for a one-row testTable insert of rows")
+    assert(deltas.map(d => d._1 -> d._2.rows.get.size) == Seq("testTable" -> 1, "derived" -> 1, "filterTest" -> 1))
+    assert(bag(inc.table("derived")) == Seq("22", "32", "42"))
+  }
+
+  test("a one-row users insert resolves only the plans of its keyed base read, a grades insert only those of its two") {
+    val inc = testCfgGraph()
+    inc.insert("users", rows(userSchema, Row("Alex", 22L)))
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 90L)))
+    def counted(table: String, df: DataFrame): (Analyses, Jobs) = {
+      var analyses = Analyses(Nil)
+      val jobs = jobsDuring { analyses = analysesDuring(inc.insertWithEdits(table, df)) }
+      (analyses, jobs)
+    }
+    // new keys: each Union and Aggregation reads its base under the key,
+    // which resolves the key filter and the row deserializer of its collect
+    def baseReads(analyses: Analyses): Int = {
+      assert(analyses.plans.forall(p => p.startsWith("Filter coalesce(") || p.startsWith("DeserializeToObject")),
+        s"$analyses besides base reads")
+      analyses.plans.count(_.startsWith("Filter"))
+    }
+    val (users, usersJobs) = counted("users", rows(userSchema, Row("Bea", 30L)))
+    assert(baseReads(users) == 1 && users.count == 2 && usersJobs.count == 1,
+      s"$users and $usersJobs for a one-row users insert")
+    val (grades, gradesJobs) = counted("grades", rows(gradeSchema, Row("Cal", 70L)))
+    assert(baseReads(grades) == 2 && grades.count == 4 && gradesJobs.count == 2,
+      s"$grades and $gradesJobs for a one-row grades insert")
+    assertRecomputes(inc, Seq("aggregationTest", "actionTest", "derived", "filterTest"))
+    assert(bag(inc.table("unionTest")) == Seq("22|90|Alex", "30|null|Bea", "null|70|Cal"))
+  }
+
+  /** Grades, users and measures (a Decimal and a Double) through every
+    * row-wise node kind, a Union and two Aggregations (one folds exactly,
+    * one recomputes). */
+  private val rowPathYaml =
+    """tables:
+      |  - name: grades
+      |    kind: source
+      |    columns: {name: Str, grade: Integer}
+      |  - name: users
+      |    kind: source
+      |    columns: {name: Str, age: Integer}
+      |  - name: measures
+      |    kind: source
+      |    columns: {name: Str, d: Decimal, f: Float}
+      |  - name: curved
+      |    kind: function
+      |    source_table: grades
+      |    functions: ["curvedGrade ~ grade + 5", "name ~ name"]
+      |  - name: passing
+      |    kind: filter
+      |    source_table: grades
+      |    filter: "grade >= 60"
+      |  - name: stats
+      |    kind: aggregation
+      |    source_table: grades
+      |    aggregated_column: name
+      |    functions: ["cnt ~ memo.cnt + 1", "sum ~ memo.sum + grade", "avg ~ memo.sum / memo.cnt"]
+      |  - name: profile
+      |    kind: union
+      |    tables_and_foreign_keys: [[users, name], [grades, name]]
+      |  - name: scaled
+      |    kind: function
+      |    source_table: measures
+      |    functions: ["d3 ~ d * 3", "f4 ~ f / 4", "mix ~ d + f", "name ~ name"]
+      |  - name: big
+      |    kind: filter
+      |    source_table: measures
+      |    filter: "f > 1.5"
+      |  - name: totals
+      |    kind: aggregation
+      |    source_table: measures
+      |    aggregated_column: name
+      |    functions: ["n ~ memo.n + 1", "dsum ~ memo.dsum + d", "fsum ~ memo.fsum + f"]
+      |""".stripMargin
+  private val rowPathTables = Seq("grades", "users", "measures", "curved", "passing", "stats", "profile",
+    "scaled", "big", "totals")
+
+  /** The same insert into two graphs over `rowPathYaml`: as a local batch
+    * into `local`, and into `planned` as a frame that plans to a Spark job
+    * (a cross join with `spark.range`). Each edit's rows, each table, and
+    * any failure must be the same. `ids` keeps `_entryId`s in the
+    * comparison, for rows that carry their own. */
+  private def sameOnBothPaths(local: IncrementalGraph, planned: IncrementalGraph, table: String,
+                              schema: StructType, ids: Boolean = false)(rs: Row*): Unit = {
+    def rowsOf(df: DataFrame): Seq[String] =
+      if (ids) df.collect().map(_.toSeq.mkString("|")).toSeq.sorted else bag(df)
+    // a failure is named by its innermost Spark error: the frame path's
+    // comes wrapped in the failed job's
+    def edits(inc: IncrementalGraph, df: DataFrame): Either[(String, String), Seq[(String, Seq[String], Seq[String])]] =
+      try Right(inc.insertWithEdits(table, df).map { case (t, i, d) => (t, rowsOf(i), rowsOf(d)) }.toList)
+      catch { case e: Exception =>
+        val cause = causes(e).collect { case t: org.apache.spark.SparkThrowable => t }.toSeq.lastOption
+        Left(cause.map(t => (t.getClass.getName, t.getCondition)).getOrElse((e.getClass.getName, e.getMessage)))
+      }
+    val frame = rows(schema, rs: _*).crossJoin(spark.range(1)).drop("id")
+    assert(!IncrementalGraph.isLocal(frame))
+    val before = rowPathTables.map(t => t -> bag(local.table(t))).toMap
+    val (l, p) = (edits(local, rows(schema, rs: _*)), edits(planned, frame))
+    assert(l == p, s"the row path and the frame path differ on $table ${rs.mkString(",")}")
+    rowPathTables.foreach { t =>
+      assert(bag(local.table(t)) == bag(planned.table(t)), s"table $t diverged")
+      if (l.isLeft) assert(bag(local.table(t)) == before(t), s"$t not rolled back")
+    }
+  }
+
+  private def rowPathGraphs(): (IncrementalGraph, IncrementalGraph) = {
+    val cfg = PipelineConfig.fromYaml(rowPathYaml)
+    val graphs = (new IncrementalGraph(spark, cfg), new IncrementalGraph(spark, cfg))
+    sameOnBothPaths(graphs._1, graphs._2, "grades", gradeSchema)(Row("Alex", 90L), Row("Bob", 50L))
+    sameOnBothPaths(graphs._1, graphs._2, "users", userSchema)(Row("Alex", 22L))
+    graphs
+  }
+
+  test("row path ≡ frame path: a missing column is null-filled") {
+    val (local, planned) = rowPathGraphs()
+    val nameOnly = StructType(Seq(StructField("name", StringType)))
+    sameOnBothPaths(local, planned, "grades", nameOnly)(Row("Alex"), Row("Cara"))
+    sameOnBothPaths(local, planned, "users", nameOnly)(Row("Dan"))
+    assert(local.table("grades").filter("grade is null").count() == 2)
+  }
+
+  test("row path ≡ frame path: a Str for an Integer column fails the same ANSI cast and rolls every table back") {
+    val (local, planned) = rowPathGraphs()
+    val strGrade = StructType(Seq(StructField("name", StringType), StructField("grade", StringType)))
+    sameOnBothPaths(local, planned, "grades", strGrade)(Row("Alex", "abc"))
+    val e = intercept[Exception](local.insert("grades", rows(strGrade, Row("Alex", "abc"))))
+    assert(causes(e).exists(x => String.valueOf(x.getMessage).contains("CAST_INVALID_INPUT")), s"$e")
+    // a Str that is a number casts on both paths
+    sameOnBothPaths(local, planned, "grades", strGrade)(Row("Alex", "7"))
+  }
+
+  test("row path ≡ frame path: a caller-supplied _entryId is kept") {
+    val (local, planned) = rowPathGraphs()
+    val withId = gradeSchema.add("_entryId", StringType)
+    sameOnBothPaths(local, planned, "grades", withId, ids = true)(Row("Eve", 61L, "id-1"), Row("Eve", 3L, "id-2"))
+    assert(local.table("curved").filter("_sourceEntryId = 'id-1'").count() == 1)
+  }
+
+  test("row path ≡ frame path: Decimal and Double columns") {
+    val (local, planned) = rowPathGraphs()
+    val measures = StructType(Seq(StructField("name", StringType), StructField("d", DecimalType(38, 18)),
+      StructField("f", DoubleType)))
+    def dec(s: String) = new java.math.BigDecimal(s)
+    // Double sums per key stay exact in any order: at most two addends,
+    // or dyadic ones
+    sameOnBothPaths(local, planned, "measures", measures)(
+      Row("d", dec("1.123456789012345678"), 0.1), Row("a", dec("-2.5"), 2.75), Row("b", dec("12345678901234567890.5"), 1e16))
+    sameOnBothPaths(local, planned, "measures", measures)(Row("a", dec("0.000000000000000001"), 1.5), Row("c", null, -0.0))
+    // a Double and a Long column cast to the declared Decimal and Float
+    val loose = StructType(Seq(StructField("name", StringType), StructField("d", DoubleType), StructField("f", LongType)))
+    sameOnBothPaths(local, planned, "measures", loose)(Row("b", 0.1, 3L))
+  }
+
+  test("row path ≡ frame path: a Function over nulls") {
+    val (local, planned) = rowPathGraphs()
+    sameOnBothPaths(local, planned, "grades", gradeSchema)(Row("Alex", null), Row(null, 70L), Row(null, null))
+    assert(bag(local.table("curved")).count(_.startsWith("null|")) == 2)
+  }
+
+  test("row path ≡ frame path: a Filter whose predicate is null drops the row") {
+    val (local, planned) = rowPathGraphs()
+    val measures = StructType(Seq(StructField("name", StringType), StructField("f", DoubleType)))
+    sameOnBothPaths(local, planned, "grades", gradeSchema)(Row("Fay", null), Row("Fay", 60L))
+    sameOnBothPaths(local, planned, "measures", measures)(Row("g", null), Row("g", 2.0))
+    assert(local.table("passing").filter("name = 'Fay'").count() == 1)
+    assert(local.table("big").count() == 1)
+  }
+
+  test("a non-deterministic expression fails a local edit loudly instead of being bound") {
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(
+      """tables:
+        |  - name: grades
+        |    kind: source
+        |    columns: {name: Str, grade: Integer}
+        |  - name: noisy
+        |    kind: function
+        |    source_table: grades
+        |    functions: ["r ~ rand()"]
+        |""".stripMargin))
+    val e = intercept[IllegalArgumentException](inc.insert("grades", rows(gradeSchema, Row("Alex", 1L))))
+    assert(e.getMessage.contains("non-deterministic"), e.getMessage)
+    assert(inc.table("grades").count() == 0)
   }
 }
