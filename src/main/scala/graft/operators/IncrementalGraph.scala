@@ -378,8 +378,8 @@ final class IncrementalGraph(
                 localDelta(plan.schema, plan(f.localRows(grouped(rs, inserted.schema.fieldIndex(a.aggregatedColumn))
                   .map { case (key, rows) => (key, groupRows.get(groupKey(key)), rows) })))
               case _ =>
-                freeze(inOrder(Transforms.aggregation(keys.select(table(a.sourceTable), a.aggregatedColumn),
-                  a.aggregatedColumn, a.functions), old.schema), old.rows.isDefined)
+                replacing(old, Transforms.aggregation(keys.select(table(a.sourceTable), a.aggregatedColumn),
+                  a.aggregatedColumn, a.functions))
             }
           }
         case u: UnionTableConfig =>
@@ -406,8 +406,8 @@ final class IncrementalGraph(
                     .map { case (schema, f) => localDelta(schema, f(olds +: fks.map(_ => rs))) }
                 case _ => None
               }
-              merged.getOrElse(freeze(inOrder(Transforms.union(
-                (old.df, MatchingKey) +: fks.map(fk => (inserted.df, fk))), old.schema), old.rows.isDefined))
+              merged.getOrElse(replacing(old,
+                Transforms.union((old.df, MatchingKey) +: fks.map(fk => (inserted.df, fk)))))
             } else {
               // Delete (or derived upsert = delete+insert): rebuild the
               // affected keys from the remaining input rows. An append-log
@@ -421,7 +421,7 @@ final class IncrementalGraph(
               // arrival order like the reference — the arrival order of
               // edits across tables is not recorded, so a rebuild cannot
               // reproduce it.
-              freeze(inOrder(Transforms.union(u.tablesAndForeignKeys.map { case (t, fk) =>
+              replacing(old, Transforms.union(u.tablesAndForeignKeys.map { case (t, fk) =>
                 val affected = keys.select(table(t), fk)
                 val collapsed =
                   if (!affected.columns.contains(EntryId)) affected
@@ -432,7 +432,7 @@ final class IncrementalGraph(
                       .where(col("__rn") === 1).drop("__rn")
                   }
                 (collapsed, fk)
-              }), old.schema), old.rows.isDefined)
+              }))
             }
           }
       }
@@ -451,6 +451,10 @@ final class IncrementalGraph(
       localDelta(plan.schema, plan(rs))
     case _ => frameDelta(checkpoint(compute(d, Map(src -> in.df))))
   }
+
+  /** `df` as the replacement of the keyed rows `old`: in their column
+    * order, frozen like them. */
+  private def replacing(old: Delta, df: DataFrame): Delta = freeze(inOrder(df, old.schema), old.rows.isDefined)
 
   /** Replace the rows of keyed table `name` under `keys` with
     * `replacement(old rows)`, which are in the table's column order and
