@@ -3,7 +3,7 @@ package graft.net
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.ListenEvent
-import graft.operators.{IncrementalGraph, QueryService}
+import graft.operators.{IncrementalGraph, QueryService, Resident}
 import graft.sources.TaggedJson
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.StructType
@@ -53,27 +53,35 @@ import scala.util.control.NonFatal
   * every query through one thread; each connection has a reader and a
   * writer thread (client_connection.rs:10-25). A read (FindOne, GetAll,
   * LessThan, GreaterThan) is planned against the graph's last committed
-  * state ([[IncrementalGraph.atCommitted]]; table states are immutable
-  * values): by the connection's reader thread as it arrives, or, when that
-  * connection still has requests in the dispatch loop, by the dispatch
-  * thread after them. So a read never waits for another connection's edit,
-  * and a read after an insert on one connection sees that insert. Its
-  * Spark jobs and rendering then run on one read thread, so an edit does
-  * not queue behind them and at most one read's rows are held at a time.
-  * Per-connection order is kept: the read's pending answer takes its place
-  * in the connection's outbound queue when it is planned, after the Events
-  * of every edit it sees and before those of the edits it does not, and
-  * the writer sends the queue in order.
+  * state ([[IncrementalGraph.pinnedAt]]; table states and their resident
+  * forms are immutable values): by the connection's reader thread as it
+  * arrives, or, when that connection still has requests in the dispatch
+  * loop, by the dispatch thread after them. So a read never waits for
+  * another connection's edit, and a read after an insert on one connection
+  * sees that insert. When the table is resident, the index lookup is made
+  * while planning, under the graph's commit lock. The rendering, and the
+  * first read's collect() that makes a table resident or the Spark jobs of
+  * a read the index cannot answer, run on one read thread, so an edit
+  * does not queue behind them and at most one read's rows are held at a
+  * time. Per-connection order is kept: the read's pending answer takes its
+  * place in the connection's outbound queue when it is planned, after the
+  * Events of every edit it sees and before those of the edits it does not,
+  * and the writer sends the queue in order. A connection with more than
+  * `MaxQueuedFrames` frames unsent (a subscriber that stopped reading) is
+  * closed, and its pending reads are cancelled; no other connection waits
+  * for it.
   *
   * Scale note: this façade is the reference-parity POINT-QUERY surface
   * (find/range/insert/delete/listen on graph tables). An InsertData's
   * entry goes to the graph as a driver row, and its edits come back as
   * driver rows, which the response and every Event render directly: no
-  * frame, no Spark job. Query results and other edits stream off the
-  * cluster via toLocalIterator. Either way a batch beyond
-  * [[maxResultRows]] fails that request loudly rather than buffering a
-  * cluster's output in the server heap. Bulk analytics belong on the
-  * DataFrame surface, not behind a socket.
+  * frame, no Spark job. A read of a resident table (at most
+  * [[IncrementalGraph.ResidentCap]] rows) is answered from its driver-side
+  * index with no Spark job either, the reference's B-tree walk. Other reads
+  * and non-local edits stream off the cluster via toLocalIterator. Either
+  * way a batch beyond [[maxResultRows]] fails that request loudly rather
+  * than buffering a cluster's output in the server heap. Bulk analytics
+  * belong on the DataFrame surface, not behind a socket.
   *
   * Divergences from the reference, on purpose: a malformed frame or an
   * unknown listen table answers that CLIENT with an Err instead of
@@ -105,16 +113,38 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
   /** Bound port (pass requestedPort=0 for an ephemeral test port). */
   def port: Int = serverSocket.getLocalPort
 
+  /** Frames a connection may have waiting to be sent. A client that lets
+    * more pile up (say, a subscriber that stops reading its socket) is
+    * closed: its pending reads are cancelled and its frames dropped, and no
+    * other connection waits for it. */
+  private val MaxQueuedFrames = 1024
+
   private object PoisonPill
   /** One connection. Its outbound queue holds, in dispatch order, the
     * frames to send: a rendered String, or the Future of a read's frame. */
   private final class Client(val id: UUID, val socket: Socket) {
-    val out = new LinkedBlockingQueue[AnyRef]()
+    val out = new LinkedBlockingQueue[AnyRef](MaxQueuedFrames + 1)
     /** This connection's requests in the dispatch loop, not yet answered. */
     val queued = new AtomicInteger
-    def send(message: JsonNode): Unit = out.put(mapper.writeValueAsString(message))
-    def sendLater(frame: Future[String]): Unit = out.put(frame)
-    def close(): Unit = { out.put(PoisonPill); try socket.close() catch { case _: Exception => } }
+    @volatile private var open = true
+    def send(message: JsonNode): Unit = enqueue(mapper.writeValueAsString(message))
+    def sendLater(frame: Future[String]): Unit = enqueue(frame)
+    private def enqueue(frame: AnyRef): Unit =
+      if (open && (out.size >= MaxQueuedFrames || !out.offer(frame))) {
+        System.err.println(s"[graft-net] closing client $id: over $MaxQueuedFrames frames unsent")
+        close()
+      }
+    /** Close the socket and end the writer, dropping what it has not sent. */
+    def close(): Unit = {
+      open = false
+      try socket.close() catch { case _: Exception => }
+      var f = out.poll()
+      while (f != null) {
+        f match { case read: Future[_] => read.cancel(false); case _ => }
+        f = out.poll()
+      }
+      out.offer(PoisonPill)
+    }
   }
 
   private val clients = java.util.concurrent.ConcurrentHashMap.newKeySet[Client]()
@@ -173,7 +203,7 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
       case PoisonPill => live = false
       case payload: String => write(payload)
       case read: Future[_] => write(read.get().asInstanceOf[String])
-    } catch { case _: Exception => /* connection gone, or the server closed */ }
+    } catch { case _: Exception => /* connection gone, a read cancelled, or the server closed */ }
   }
 
   private def startReader(client: Client): Unit = thread(s"graft-net-reader-${client.id}") {
@@ -275,15 +305,28 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
       val table = body.get("table").asText()
       val column = body.get("column").asText()
       val key = TaggedJson.parseValue(body.get("key"))
-      graph.atCommitted { frames =>
-        val frame = frames(table)
-        val queries = new QueryService(_ => frame)
+      graph.pinnedAt { pin =>
+        val pinned = pin(table)
+        def indexed(r: Resident): Option[(Iterable[Row], StructType)] = (kind match {
+          case "FindOne" => r.findOne(column, key)
+          case "LessThan" => r.lessThan(column, key)
+          case "GreaterThan" => r.greaterThan(column, key)
+          case _ => r.getAll(column, key)
+        }).map(_ -> r.schema)
+        // the index lookup runs here, under the commit lock; the rows are
+        // rendered on the read thread
+        val found = pinned.resident.flatMap(indexed)
         val answer: Callable[String] = () =>
-          try mapper.writeValueAsString(requestResponse(requestId, kind match {
-            case "FindOne" => oneResult(entriesOf(queries.findOne(table, column, key)).headOption)
-            case "LessThan" => manyResults(entriesOf(queries.lessThan(table, column, key)))
-            case "GreaterThan" => manyResults(entriesOf(queries.greaterThan(table, column, key)))
-            case _ => manyResults(entriesOf(queries.getAll(table, column, key)))
+          try mapper.writeValueAsString(requestResponse(requestId, {
+            lazy val rows = found.orElse(pinned.built().flatMap(indexed))
+              .map { case (rs, schema) => entriesOf(rs.iterator, schema) }
+            lazy val queries = new QueryService(_ => pinned.frame)
+            kind match {
+              case "FindOne" => oneResult(rows.getOrElse(entriesOf(queries.findOne(table, column, key))).headOption)
+              case "LessThan" => manyResults(rows.getOrElse(entriesOf(queries.lessThan(table, column, key))))
+              case "GreaterThan" => manyResults(rows.getOrElse(entriesOf(queries.greaterThan(table, column, key))))
+              case _ => manyResults(rows.getOrElse(entriesOf(queries.getAll(table, column, key))))
+            }
           }))
           catch { case NonFatal(e) => mapper.writeValueAsString(failed(requestId, Some(kind), e)) }
         client.sendLater(reads.submit(answer))

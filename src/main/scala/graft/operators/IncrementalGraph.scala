@@ -46,30 +46,56 @@ import scala.jdk.CollectionConverters._
   *     nodes, run the bound expressions over the delta's rows: no job;
   *   - an Action node runs no job: its row function is applied to the
   *     delta's rows on the driver ([[Transforms.actionRows]]);
-  *   - an Aggregation or Union node runs one job to read its current rows
-  *     under the keys it replaces (none when they are all dead already),
-  *     then folds the new rows onto them with bound expressions: a Union
-  *     pairs them by key and merges them as [[Transforms.union]] does; an
-  *     Aggregation whose accumulators fold exactly ([[Transforms.exactFold]])
-  *     folds each key's new rows onto its group row. It appends the
-  *     replacement rows and tombstones the keys;
+  *   - an Aggregation or Union node finds its current rows under the keys
+  *     it replaces in its resident form (below): no job. It then folds the
+  *     new rows onto them with bound expressions: a Union pairs them by key
+  *     and merges them as [[Transforms.union]] does; an Aggregation whose
+  *     accumulators fold exactly ([[Transforms.exactFold]]) folds each
+  *     key's new rows onto its group row. It appends the replacement rows
+  *     and tombstones the keys. A table above the cap reads its checkpointed
+  *     base under the keys instead: one job;
   *   - an Aggregation that does not fold exactly (a Double sum, a `first()`
   *     overwrite), and a Union fed an update (a delete, or an upstream
   *     Aggregation's Delete+Insert), recompute the keys from their input
-  *     tables: one job to read them and the jobs of the recompute;
+  *     tables: the jobs of the recompute;
   *   - when a table's local rows plus dead keys pass [[IncrementalGraph.CompactAt]]
   *     the table compacts into a new checkpointed base: one job.
+  *
+  * Residency. Every table with at most [[IncrementalGraph.ResidentCap]]
+  * rows may also be held on the driver as a [[Resident]] form: all its
+  * rows, indexed by key and by every indexable column in persistent maps.
+  * A table becomes resident on its first keyed upsert (an Aggregation or
+  * Union) or its first read through [[pinnedAt]], by one collect() of at
+  * most the cap plus one rows; past the cap it is marked as such instead.
+  * Every local edit then maintains the form from the edit's deltas (views
+  * included), so a snapshot or a rollback of the state is one of the forms
+  * too. The two constants make one rule: a table is rebased (a new
+  * checkpointed base) every CompactAt local rows and dead keys, and
+  * compaction keeps its rows, so it keeps its form; a table is resident
+  * while it has at most ResidentCap rows, and a table above it stays
+  * marked so until a rebase. Each resident row costs the heap its Row and
+  * one sorted-map entry per indexable column: measured on a 64-bit JVM
+  * with compressed pointers, about 56 bytes per Long column and 144 per
+  * short string column on top of the Row's own 170–200 bytes, so 0.43 KB
+  * for a row of two Longs and an `_entryId`.
   *
   * Other inserts and every delete are O(table): the delta is checkpointed,
   * and each affected materialized table is rebuilt from its current rows
   * (exceptAll for Action, a broadcast key semi/anti-join for
   * Aggregation/Union) and checkpointed as a new base, so lineage stays
-  * O(1) in the number of edits.
+  * O(1) in the number of edits. This rebase drops the resident forms of
+  * the tables it rebuilds and of their views; the next keyed upsert or
+  * read builds them again.
   *
   * Threading: the edits ([[insert]], [[delete]] and their `WithEdits`
   * forms), [[listen]] and [[table]] are called from one thread at a time.
-  * [[atCommitted]] may be called from any thread; it sees the last
-  * committed state, never a cascade in progress.
+  * [[atCommitted]] and [[pinnedAt]] may be called from any thread; they
+  * see the last committed state, never a cascade in progress. A read that
+  * builds a form collects it on its own thread, without a lock; an edit
+  * never waits for it. The form is attached to the committed state only if
+  * the build is still registered, with the deltas committed since its pin
+  * replayed onto it; a rebase of its table, or CompactAt commits of it,
+  * give the build up.
   *
   * Aggregation configs must use decomposable memo folds (the
   * [[Transforms.aggregation]] contract); order-dependent general folds
@@ -113,9 +139,15 @@ final class IncrementalGraph(
       size > 256
   }
   private val views = new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
-  /** The table states as of the last committed edit; read and written
-    * under `commitLock` only. */
-  private var committed: Map[String, Mat] = Map.empty
+  /** The resident forms of the edit in progress, by table; `None` marks a
+    * table above [[IncrementalGraph.ResidentCap]]. Dispatch thread only. */
+  private var forms: Map[String, Option[Resident]] = Map.empty
+  /** The table states and forms as of the last committed edit; read and
+    * written under `commitLock` only. */
+  private var committed = State(Map.empty, Map.empty)
+  /** Resident forms that reads are building, each with the deltas of its
+    * table committed since it was pinned; under `commitLock` only. */
+  private var builds: List[Build] = Nil
   private val commitLock = new Object
 
   private val downstream: Map[String, Seq[DerivedTableConfig]] =
@@ -143,7 +175,7 @@ final class IncrementalGraph(
       }
       mat(d.name) = Mat(checkpoint(compute(d, d.inputTables.map(n => n -> table(n)).toMap)), key)
   }
-  committed = mat.toMap
+  committed = State(mat.toMap, Map.empty)
 
   private def compute(d: DerivedTableConfig, inputs: Map[String, DataFrame]): DataFrame = d match {
     case f: FunctionTableConfig => Transforms.function(inputs(f.sourceTable), f.functions)
@@ -165,8 +197,54 @@ final class IncrementalGraph(
     * those of every edit it does not. Keep `f` short: it holds off the
     * next commit. */
   def atCommitted[A](f: (String => DataFrame) => A): A = commitLock.synchronized {
-    val state = committed
+    val state = committed.mats
     f(frameOf(_, state))
+  }
+
+  /** [[atCommitted]] for reads: `f` pins tables as they were at the last
+    * committed edit, each with its resident form when it has one. A pin of
+    * a table without one also claims its build, which [[Pinned.built]]
+    * runs on the read's own thread. */
+  private[graft] def pinnedAt[A](f: (String => Pinned) => A): A = commitLock.synchronized {
+    val state = committed
+    f { name =>
+      if (!byName.contains(name)) throw new NoSuchElementException(s"no table named $name")
+      val build = if (state.forms.contains(name)) None else {
+        val b = new Build(name)
+        builds ::= b
+        Some(b)
+      }
+      new Pinned(name, state, build)
+    }
+  }
+
+  /** A table as a read pinned it: its frame, built on first use, and its
+    * resident form. Any thread may use it. */
+  private[graft] final class Pinned(name: String, state: State, build: Option[Build]) {
+    lazy val frame: DataFrame = frameOf(name, state.mats)
+    val resident: Option[Resident] = state.forms.get(name).flatten
+
+    /** The resident form, built on the calling thread with one collect()
+      * when the pin claimed the build, and attached to the committed state
+      * with the edits committed since the pin replayed onto it. The form
+      * returned is as pinned. None above the cap, or when another read
+      * built the form first (this one was pinned before it). */
+    def built(): Option[Resident] = resident.orElse(build.flatMap { b =>
+      try {
+        val first = commitLock.synchronized(!committed.forms.contains(name))
+        val made = if (first) Some(residentOf(frame, state.mats.get(name).flatMap(_.key))) else None
+        made.foreach(attach(b, _))
+        made.flatten
+      } finally commitLock.synchronized { builds = builds.filterNot(_ eq b) }
+    })
+  }
+
+  /** Attach form `f`, built for `b` as of its pin, to the committed state,
+    * unless the build was given up. */
+  private def attach(b: Build, f: Option[Resident]): Unit = commitLock.synchronized {
+    if (builds.exists(_ eq b) && !committed.forms.contains(b.table))
+      b.log.foldLeft(Option(f)) { case (g, (ins, del)) => g.flatMap(advanced(_, ins, del)) }
+        .foreach(now => committed = committed.copy(forms = committed.forms.updated(b.table, now)))
   }
 
   private def frameOf(name: String, state: scala.collection.Map[String, Mat]): DataFrame =
@@ -243,6 +321,8 @@ final class IncrementalGraph(
     * visible. Impure Action functions are outside the transaction boundary
     * (as are the reference's embedded-Python actions). */
   private def transactional(body: Pending => Unit): Seq[(String, Delta, Delta)] = {
+    val start = commitLock.synchronized(committed)
+    forms = start.forms
     val snapshot = mat.toMap
     val pending: Pending = scala.collection.mutable.ArrayBuffer.empty
     try body(pending)
@@ -252,12 +332,32 @@ final class IncrementalGraph(
         throw e
     }
     commitLock.synchronized {
-      committed = mat.toMap
+      def deltas(t: String) = pending.iterator.filter(_._1 == t).map(e => (e._2, e._3))
+      // a form a read attached while this edit ran is as of the edit's start
+      committed.forms.foreach { case (t, f) =>
+        if (!start.forms.contains(t) && !forms.contains(t))
+          deltas(t).foldLeft(Option(f)) { case (g, (ins, del)) => g.flatMap(advanced(_, ins, del)) }
+            .foreach(now => forms = forms.updated(t, now))
+      }
+      // a build keeps the deltas to replay; it is given up on a rebase or
+      // once it falls CompactAt edits behind
+      builds = builds.filter { b =>
+        deltas(b.table).foreach(d => b.log :+= d)
+        b.log.size <= CompactAt && b.log.forall { case (ins, del) => ins.rows.isDefined && del.rows.isDefined }
+      }
+      committed = State(mat.toMap, forms)
       pending.foreach { case (t, ins, del) => notifyListeners(t, ins, del) }
     }
     pending.toList
   }
   private type Pending = scala.collection.mutable.ArrayBuffer[(String, Delta, Delta)]
+
+  /** Add an edit of table `t` to `pending`, and bring its resident form
+    * up to date with it. */
+  private def record(pending: Pending, t: String, ins: Delta, del: Delta): Unit = {
+    pending += ((t, ins, del))
+    forms.get(t).foreach(f => forms = advanced(f, ins, del).fold(forms - t)(forms.updated(t, _)))
+  }
 
   /** Insert rows; all derived tables are brought current before this
     * returns (the reference's eager cascade). Returns the committed rows.
@@ -304,7 +404,7 @@ final class IncrementalGraph(
         case Some(rs) => m.append(rs)
         case None => m.rebased(m.frame.unionByName(committed.df))
       }
-      pending += ((tableName, committed, none))
+      record(pending, tableName, committed, none)
       propagate(tableName, committed, none, pending)
     }
   }
@@ -332,7 +432,7 @@ final class IncrementalGraph(
     val none = localDelta(deleted.schema, Nil)
     transactional { pending =>
       mat(tableName) = m.rebased(cur.filter(!(col(column) <=> lit(key))))
-      pending += ((tableName, none, deleted))
+      record(pending, tableName, none, deleted)
       propagate(tableName, none, deleted, pending)
     }
   }
@@ -436,7 +536,7 @@ final class IncrementalGraph(
             }
           }
       }
-      pending += ((d.name, ins, del))
+      record(pending, d.name, ins, del)
       propagate(d.name, ins, del, pending)
     }
   }
@@ -463,7 +563,12 @@ final class IncrementalGraph(
     val m = mat(name)
     keys match {
       case LocalKeys(ks) =>
-        val old = localDelta(m.schema, m.rowsUnder(ks))
+        val form = forms.getOrElse(name, {
+          val made = residentOf(m.frame, m.key)
+          forms = forms.updated(name, made)
+          made
+        })
+        val old = localDelta(m.schema, form.fold(m.rowsUnder(ks))(_.rowsUnder(ks)))
         val rep = replacement(old)
         mat(name) = m.upsert(ks, rep.rows.get)
         (rep, old)
@@ -488,10 +593,39 @@ object IncrementalGraph {
     lazy val isEmpty: Boolean = rows.fold(df.isEmpty)(_.isEmpty)
   }
 
+  /** The committed state: each materialized table, and the resident form
+    * of each table that has one (`None` above [[ResidentCap]]). */
+  private[operators] final case class State(mats: Map[String, Mat], forms: Map[String, Option[Resident]])
+
+  /** A resident form being built off the dispatch thread for `table`, and
+    * the deltas of that table committed since its pin, in commit order. */
+  private[operators] final class Build(val table: String) {
+    var log: Vector[(Delta, Delta)] = Vector.empty
+  }
+
+  /** The resident form of `frame`'s rows, keyed on `key`: one collect() of
+    * at most [[ResidentCap]] + 1 rows; None when there are more. */
+  private def residentOf(frame: DataFrame, key: Option[String]): Option[Resident] = {
+    val rows = frame.limit(ResidentCap + 1).collect()
+    if (rows.length > ResidentCap) None else Some(Resident(frame.schema, rows.toSeq, key))
+  }
+
+  /** Form `f` after an edit of its table inserted `ins` and deleted `del`;
+    * None, to drop it, unless both are local rows that line up with it. A
+    * table above the cap stays so until a rebase drops the mark. */
+  private def advanced(f: Option[Resident], ins: Delta, del: Delta): Option[Option[Resident]] =
+    (ins.rows, del.rows, f) match {
+      case (Some(_), Some(_), None) => Some(None)
+      case (Some(is), Some(ds), Some(r)) if (is.isEmpty || r.accepts(ins.schema)) && (ds.isEmpty || r.accepts(del.schema)) =>
+        val next = r.updated(is, ds)
+        Some(if (next.size > ResidentCap) None else Some(next))
+      case _ => None
+    }
+
   /** One materialized table: the rows of the checkpointed `base` whose
     * `key` is not in `dead`, plus driver-local `rows` (in base column
     * order). Immutable, so a map snapshot of these is a rollback point. */
-  private final case class Mat(base: DataFrame, key: Option[String] = None,
+  private[operators] final case class Mat(base: DataFrame, key: Option[String] = None,
                                dead: Set[Any] = Set.empty, rows: Vector[Row] = Vector.empty) {
     /** Schema of the local rows: the base's, every column nullable. */
     def schema: StructType = StructType(base.schema.map(_.copy(nullable = true)))
@@ -507,14 +641,17 @@ object IncrementalGraph {
       * not already dead. */
     def rowsUnder(keys: Set[Any]): Seq[Row] = {
       val inBase = keys -- dead
-      rows.filter(r => keys(keyOf(r))) ++
+      val under = keys.map(Resident.keyOf)
+      rows.filter(r => under(Resident.keyOf(keyOf(r)))) ++
         (if (inBase.isEmpty) Nil else base.filter(keyIn(base(key.get), inBase)).collect().toSeq)
     }
 
     def append(more: Seq[Row]): Mat = copy(rows = rows ++ more).compacted
 
-    def upsert(keys: Set[Any], replacement: Seq[Row]): Mat =
-      copy(dead = dead ++ keys, rows = rows.filterNot(r => keys(keyOf(r))) ++ replacement).compacted
+    def upsert(keys: Set[Any], replacement: Seq[Row]): Mat = {
+      val under = keys.map(Resident.keyOf)
+      copy(dead = dead ++ keys, rows = rows.filterNot(r => under(Resident.keyOf(keyOf(r)))) ++ replacement).compacted
+    }
 
     // compaction keeps the base's partition count: a toLocalIterator read
     // runs one job per partition, so appended partitions would add up
@@ -544,6 +681,9 @@ object IncrementalGraph {
   /** Local rows plus dead keys a materialized table holds before it
     * compacts into a new checkpointed base. */
   private[operators] val CompactAt = 64
+
+  /** Rows a table may have and still be held resident on the driver. */
+  private[operators] val ResidentCap = 1 << 14
 
   /** True when `df` plans to driver-local rows, which `collect()` returns
     * without running a Spark job. */

@@ -633,6 +633,10 @@ class GraftServerSpec extends SparkSpec {
     val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
     val readErrors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val readCount = new java.util.concurrent.atomic.AtomicInteger
+    // (sent, answered, position in its batch, answer) of each read
+    val answered = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Int, JsonNode)]()
+    // (sent, answered) of each edit, in commit order
+    val edits = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     // one connection reads a materialized aggregation, a Function view and
     // the source the writer compacts, three frames in flight at a time
     val readerThread = new Thread(() => try {
@@ -640,20 +644,25 @@ class GraftServerSpec extends SparkSpec {
       while (writing.get) {
         val ids = (id + 1 to id + 3).toVector
         id += 3
+        val sent = System.nanoTime()
         reader.sendAll(
           query(ids(0), """{"GreaterThan":{"table":"aggregationTest","column":"count","key":{"Integer":0}}}"""),
           query(ids(1), """{"LessThan":{"table":"derived","column":"newColumn","key":{"Integer":7}}}"""),
           query(ids(2), """{"GreaterThan":{"table":"testTable","column":"testForIndex","key":{"Integer":18}}}"""))
-        ids.foreach { want =>
+        ids.zipWithIndex.foreach { case (want, i) =>
           val m = reader.recv()
           if (requestId(m) != idOf(want) || !response(m).get("ManyResults").has("Ok")) readErrors.add(m.toString)
+          else answered.add((sent, System.nanoTime(), i, rows(m)))
           readCount.incrementAndGet()
         }
       }
     } catch { case e: Exception => readErrors.add(e.toString) }, "graft-test-pipelined-reader")
     def edit(id: Int, q: String): JsonNode = {
+      val sent = System.nanoTime()
       writer.send(query(id, q))
-      writer.recv()
+      val m = writer.recv()
+      if (id > 10000) edits.add((sent, System.nanoTime()))
+      m
     }
     val work = scala.concurrent.Future {
       var id = 10000
@@ -678,11 +687,221 @@ class GraftServerSpec extends SparkSpec {
       assert(!readerThread.isAlive, "the reader stalled")
       assert(readErrors.isEmpty, readErrors.asScala.take(3).mkString("\n"))
       assert(readCount.get > 0)
+      // each read saw the committed state after some k edits: at least
+      // every edit answered before it was sent, none sent after its answer
+      type Seen = (Map[String, Long], Set[Long], Seq[Long])
+      val states = (0 until 3).foldLeft(Vector[Seen]((Map("g0" -> 3L, "g1" -> 3L, "g2" -> 3L, "g3" -> 3L),
+          (1L to 20L).toSet, (3L to 6L)))) { case (acc, round) =>
+        val afterDelete = acc :+ acc.last.copy(_1 = acc.last._1 - s"g$round")
+        val afterInserts = (0 until 65).foldLeft(afterDelete) { (a, i) =>
+          a :+ a.last.copy(_2 = a.last._2 + (1000L * (round + 1) + i)) }
+        afterInserts :+ afterInserts.last.copy(_1 = afterInserts.last._1.updated("g3", afterInserts.last._1("g3") + 1))
+      }
+      val done = edits.asScala.toVector
+      assert(done.size == states.size - 1)
+      def longs(entries: JsonNode, c: String): Seq[Long] = (0 until entries.size()).map(entries.get(_).get(c).get("Integer").asLong())
+      answered.asScala.foreach { case (sent, got, i, entries) =>
+        val lo = done.count(_._2 < sent)
+        val hi = done.count(_._1 < got)
+        val matches: Seen => Boolean = i match {
+          case 0 => _._1 == (0 until entries.size()).map(j =>
+            entries.get(j).get("aggregatedColumn").get("Str").asText() -> entries.get(j).get("count").get("Integer").asLong()).toMap
+          case 1 => _._3 == longs(entries, "newColumn")
+          case _ => st => longs(entries, "testForIndex") == st._2.filter(_ >= 18).toSeq.sorted
+        }
+        assert((lo to hi).exists(k => matches(states(k))),
+          s"read ${i + 1} of its batch saw no committed state between edits $lo and $hi: $entries")
+      }
       val all = edit(1, """{"GreaterThan":{"table":"testTable","column":"testForIndex","key":{"Integer":0}}}""")
       assert(rows(all).size() == 20 + 3 * 65)
       // g0..g2 were deleted, so only g3's group is left
       val g3 = rows(edit(2, """{"GreaterThan":{"table":"aggregationTest","column":"count","key":{"Integer":0}}}"""))
       assert(g3.size() == 1 && g3.get(0).get("count").get("Integer").asLong() == 3 + 3)
     } finally { writing.set(false); reader.close(); writer.close(); server.close() }
+  }
+
+  test("FindOne, GetAll, LessThan and GreaterThan on resident tables run no Spark job and resolve no plan") {
+    val server = seededServer()
+    val c = new WireClient(server.port)
+    def ask(id: Int, kind: String, table: String, column: String, key: String): JsonNode = {
+      c.send(query(id, s"""{"$kind":{"table":"$table","column":"$column","key":$key}}"""))
+      val m = c.recv()
+      assert(requestId(m) == idOf(id))
+      response(m)
+    }
+    // a source, a Function view, an Aggregation and a Union, each read on
+    // a column and key that hit
+    val reads = Seq(
+      ("testTable", "testForIndex", """{"Integer":5}"""),
+      ("derived", "newColumn", """{"Integer":7}"""),
+      ("aggregationTest", "aggregatedColumn", """{"Str":"Alex"}"""),
+      ("unionTest", "matchingKey", """{"Str":"Alex"}"""))
+    val kinds = Seq("FindOne", "GetAll", "LessThan", "GreaterThan")
+    try {
+      c.send(query(1, """{"InsertData":{"table":"users","entry":{"name":{"Str":"Alex"},"age":{"Integer":22}}}}"""))
+      c.recv()
+      c.send(query(2, """{"InsertData":{"table":"grades","entry":{"name":{"Str":"Alex"},"grade":{"Integer":90}}}}"""))
+      c.recv()
+      // the first read of each table makes it resident
+      reads.zipWithIndex.foreach { case ((t, col, key), i) => ask(10 + i, "GetAll", t, col, key) }
+      val caller = Thread.currentThread()
+      var answers = Seq.empty[JsonNode]
+      var analyses = Analyses(Nil)
+      val jobs = jobsDuring {
+        analyses = analysesOn(t => (t eq caller) || t.getName.startsWith("graft-net-")) {
+          answers = for (((t, col, key), i) <- reads.zipWithIndex; (kind, j) <- kinds.zipWithIndex)
+            yield ask(100 + 4 * i + j, kind, t, col, key)
+        }
+      }
+      assert(jobs.count == 0, s"$jobs for reads of resident tables")
+      assert(analyses.count == 0, s"$analyses for reads of resident tables")
+      def entries(r: JsonNode): Seq[JsonNode] = Option(r.get("OneResult")).map(o => Seq(o.get("Ok")))
+        .getOrElse { val ok = r.get("ManyResults").get("Ok"); (0 until ok.size()).map(ok.get) }
+      def longs(r: JsonNode, c: String): Seq[Long] = entries(r).map(_.get(c).get("Integer").asLong())
+      // testTable holds (i, i) for i in 1..20; derived adds newColumn = i + 2
+      assert(longs(answers(0), "testForIndex") == Seq(5L))
+      assert(longs(answers(1), "testForIteration") == Seq(5L))
+      assert(longs(answers(2), "testForIndex") == (1L to 4L))
+      assert(longs(answers(3), "testForIndex") == (5L to 20L))
+      assert(longs(answers(4), "newColumn") == Seq(7L))
+      assert(longs(answers(6), "newColumn") == (3L to 6L))
+      assert(longs(answers(7), "newColumn") == (7L to 22L))
+      assert(longs(answers(9), "sum") == Seq(90L))
+      assert(entries(answers(10)).isEmpty && longs(answers(11), "count") == Seq(1L))
+      assert(longs(answers(13), "age") == Seq(22L) && longs(answers(15), "grade") == Seq(90L))
+    } finally { c.close(); server.close() }
+  }
+
+  test("a subscriber that stops reading is disconnected past its queue cap; other connections are answered throughout") {
+    val server = new GraftServer(new IncrementalGraph(spark, PipelineConfig.fromYaml(
+      """tables:
+        |  - name: notes
+        |    kind: source
+        |    columns: {id: Integer, body: Str}
+        |  - name: grades
+        |    kind: source
+        |    columns: {name: Str, grade: Integer}
+        |""".stripMargin)))
+    def writers(): Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && t.getName.startsWith("graft-net-writer-")).toSet
+    val others = writers()
+    // a small receive window: the server's writer blocks after a few frames
+    val stalled = new Socket()
+    stalled.setReceiveBufferSize(4096)
+    stalled.connect(new java.net.InetSocketAddress("127.0.0.1", server.port))
+    val stalledOut = new DataOutputStream(stalled.getOutputStream)
+    val c = new WireClient(server.port)
+    val body = "x" * 4096
+    try {
+      val listen = """{"StartListen":{"table_name":"notes","event":"Insert"}}""".getBytes(UTF_8)
+      stalledOut.writeInt(listen.length); stalledOut.write(listen); stalledOut.flush()
+      // the listen is live once a read queued behind it on that connection
+      // would be answered; here, once the first insert's Event is queued
+      c.send(query(1, """{"InsertData":{"table":"grades","entry":{"name":{"Str":"Bo"},"grade":{"Integer":1}}}}"""))
+      assert(rows(c.recv()).size() == 1)
+      // the writers of this test's two connections
+      val ours = writers() -- others
+      assert(ours.size == 2, s"writer threads: $ours")
+      var n = 0
+      while (ours.forall(_.isAlive) && n < 20000) {
+        n += 1
+        c.send(query(10 + n, s"""{"InsertData":{"table":"notes","entry":{"id":{"Integer":$n},"body":{"Str":"$body"}}}}"""))
+        val m = c.recv()
+        assert(requestId(m) == idOf(10 + n) && rows(m).size() == 1, s"insert $n: $m")
+        if (n % 50 == 0) {
+          c.send(query(5, """{"GetAll":{"table":"grades","column":"name","key":{"Str":"Bo"}}}"""))
+          assert(rows(c.recv()).size() == 1, s"a read after $n inserts")
+        }
+      }
+      assert(ours.count(_.isAlive) == 1, s"the stalled subscriber was not disconnected after $n inserts")
+      assert(n > 1024, s"disconnected after only $n Events")
+      // the other connection keeps being answered
+      c.send(query(6, """{"GetAll":{"table":"notes","column":"id","key":{"Integer":1}}}"""))
+      assert(rows(c.recv()).size() == 1)
+      // the subscriber gets what was sent before the close, then the end
+      val in = new DataInputStream(stalled.getInputStream)
+      stalled.setSoTimeout(30000)
+      var events = 0
+      val ended = try { while (true) { val b = new Array[Byte](in.readInt()); in.readFully(b); events += 1 }; false }
+        catch {
+          case _: java.net.SocketTimeoutException => false
+          case _: java.io.IOException => true
+        }
+      assert(ended && events < n, s"$events of $n Events before the end")
+    } finally { stalled.close(); c.close(); server.close() }
+  }
+
+  test("fuzzed frames get an Err or a close; the dispatch and read threads live on and a fresh connection is answered") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val server = seededServer()
+    val port = server.port
+    def dispatchAlive: Boolean = Thread.getAllStackTraces.keySet.asScala.exists(t => t.isAlive && t.getName == "graft-net-dispatch")
+    def nested(depth: Int): String = """{"a":""" * depth + "1" + "}" * depth
+    // whole frames: each must be answered with an Err, and only that
+    val wrongShape: Gen[String] = Gen.oneOf(
+      Gen.const("""{"Query":{"query":{"FindOne":{"table":"testTable","column":"testForIndex","key":{"Integer":1}}}}}"""),
+      Gen.const("""{"Query":{"request_id":"x","query":{"GetAll":{"table":7,"column":"c","key":{"Integer":1}}}}}"""),
+      Gen.const("""{"FindOne":{"table":["testTable"],"column":"testForIndex","key":{"Integer":1}}}"""),
+      Gen.alphaStr.map(tag => s"""{"GetAll":{"table":"testTable","column":"testForIndex","key":{"No$tag":1}}}"""),
+      Gen.alphaStr.map(kind => s"""{"Query":{"request_id":"x","query":{"Un$kind":{}}}}"""),
+      Gen.alphaStr.map(kind => s"""{"Un$kind":{"table":"testTable"}}"""),
+      Gen.choose(1, 3000).map(d => s"""{"Query":{"request_id":"x","query":{"FindOne":${nested(d)}}}}"""),
+      Gen.choose(1, 3000).map(nested),
+      Gen.choose(1, 3000).map(d => "[" * d + "]" * d),
+      Gen.const("{}"), Gen.const("null"), Gen.const("[]"), Gen.const("\"\""))
+    sealed trait Frames
+    final case class Whole(json: String) extends Frames
+    final case class Raw(bytes: Array[Byte]) extends Frames
+    final case class Truncated(json: String, keep: Int) extends Frames
+    final case class Prefix(length: Int) extends Frames
+    val frames: Gen[Frames] = Gen.frequency(
+      4 -> wrongShape.map(Whole),
+      2 -> Gen.choose(0, 64).flatMap(n => Gen.listOfN(n, Gen.choose(Byte.MinValue, Byte.MaxValue))).map(b => Raw(b.toArray)),
+      2 -> wrongShape.flatMap(j => Gen.choose(0, j.length).map(Truncated(j, _))),
+      2 -> Gen.oneOf(Gen.const(0), Gen.choose(Int.MinValue, -1), Gen.choose((16 << 20) + 1, Int.MaxValue)).map(Prefix))
+    val p = Prop.forAll(frames) { f =>
+      val socket = new Socket("127.0.0.1", port)
+      socket.setSoTimeout(30000)
+      val out = new DataOutputStream(socket.getOutputStream)
+      val in = new DataInputStream(socket.getInputStream)
+      def answers(): Seq[JsonNode] = {
+        val got = scala.collection.mutable.ArrayBuffer.empty[JsonNode]
+        try while (true) { val b = new Array[Byte](in.readInt()); in.readFully(b); got += mapper.readTree(new String(b, UTF_8)) }
+        catch { case _: java.io.IOException => }
+        got.toSeq
+      }
+      def isErr(m: JsonNode): Boolean = Option(m.get("RequestResponse")).map(_.get("response"))
+        .exists(r => r.properties().asScala.exists(e => e.getValue.has("Err")))
+      try f match {
+        case Whole(json) =>
+          val b = json.getBytes(UTF_8)
+          out.writeInt(b.length); out.write(b); out.flush()
+          val m = mapper.readTree({ val b2 = new Array[Byte](in.readInt()); in.readFully(b2); new String(b2, UTF_8) })
+          isErr(m)
+        case Raw(bytes) =>
+          out.write(bytes); out.flush(); socket.shutdownOutput()
+          answers().forall(isErr)
+        case Truncated(json, keep) =>
+          val b = json.getBytes(UTF_8)
+          out.writeInt(b.length); out.write(b, 0, math.min(keep, b.length - 1)); out.flush(); socket.shutdownOutput()
+          answers().isEmpty
+        case Prefix(length) =>
+          out.writeInt(length); out.flush()
+          answers().isEmpty // closed by the server, with no answer
+      } finally socket.close()
+    }
+    try {
+      val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(60), p)
+      assert(r.passed, r.status.toString)
+      assert(dispatchAlive, "the dispatch thread died")
+      val c = new WireClient(port)
+      try {
+        c.send(query(1, """{"FindOne":{"table":"testTable","column":"testForIndex","key":{"Integer":3}}}"""))
+        val m = c.recv()
+        assert(requestId(m) == idOf(1))
+        assert(response(m).get("OneResult").get("Ok").get("testForIteration").get("Integer").asLong() == 3L)
+        assert(readThreads(port).nonEmpty, "the read thread died")
+      } finally c.close()
+    } finally server.close()
   }
 }

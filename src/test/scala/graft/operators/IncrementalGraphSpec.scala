@@ -52,6 +52,20 @@ class IncrementalGraphSpec extends SparkSpec {
     df.select(keep.head, keep.tail.toIndexedSeq: _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
   }
 
+  /** Table `t`'s rows as its resident form reads them, as [[bag]] renders
+    * them: GreaterThan on the first of a few columns every test table
+    * fills, from its smallest value. */
+  private def residentBag(inc: IncrementalGraph, t: String): Seq[String] = {
+    val form = inc.pinnedAt(pin => pin(t)).built().getOrElse(fail(s"$t is not resident"))
+    val names = form.schema.fieldNames
+    val keep = names.filterNot(Seq("_entryId", "_sourceEntryId").contains).sorted.map(names.indexOf(_))
+    val read = (Seq("name", "matchingKey", "aggregatedColumn").map(_ -> "") ++
+        Seq("testForIndex", "newColumn", "curvedGrade").map(_ -> Long.MinValue))
+      .collectFirst { case (c, min) if names.contains(c) => form.greaterThan(c, min).get }
+      .getOrElse(fail(s"no column to read $t by"))
+    read.map(r => keep.map(r.get).mkString("|")).toSeq.sorted
+  }
+
   /** Each of `tables` equals a from-scratch recompute: a lazy graph seeded
     * with the SAME current source contents (ids included). */
   private def assertRecomputes(inc: IncrementalGraph, tables: Seq[String]): Unit = {
@@ -231,13 +245,16 @@ class IncrementalGraphSpec extends SparkSpec {
     val calls = scala.collection.mutable.ArrayBuffer.empty[String]
     tables.foreach(t => inc.listen(t)((_, _) => calls += t))
     val before = tables.map(t => t -> bag(inc.table(t))).toMap
+    tables.foreach(t => assert(residentBag(inc, t) == before(t), s"$t's resident form"))
 
     explode = true
     val batch = (0 to IncrementalGraph.CompactAt).map(i => Row(s"n$i", i.toLong))
     Seq(rows(gradeSchema, Row("Alex", 80L)), rows(gradeSchema, batch: _*)).foreach { edit =>
       assertThrows[RuntimeException](inc.insert("grades", edit))
-      // every table — including those UPSTREAM of the failure — restored
+      // every table — including those UPSTREAM of the failure — restored,
+      // and so is its resident form
       tables.foreach(t => assert(bag(inc.table(t)) == before(t), s"$t not rolled back"))
+      tables.foreach(t => assert(residentBag(inc, t) == before(t), s"$t's resident form not rolled back"))
       assert(calls.isEmpty, s"subscribers must not see a rolled-back edit: $calls")
     }
 
@@ -366,18 +383,19 @@ class IncrementalGraphSpec extends SparkSpec {
     new IncrementalGraph(spark, PipelineConfig.fromYaml(testCfg))
   }
 
-  test("a one-row grades insert through test_cfg runs at most 2 Spark jobs: the keyed base reads") {
+  test("a one-row grades insert through test_cfg runs no Spark job once its keyed tables are resident") {
     val inc = testCfgGraph()
     inc.insert("users", rows(userSchema, Row("Alex", 22L)))
+    // the first keyed upserts make unionTest and aggregationTest resident
     inc.insert("grades", rows(gradeSchema, Row("Alex", 90L)))
-    // compact, so the key's rows are read from a checkpointed base
+    // compact: the resident forms outlive the new checkpointed bases
     inc.insert("grades", rows(gradeSchema, (0 to IncrementalGraph.CompactAt).map(i => Row(s"n$i", 1L)): _*))
     var edits: Seq[(String, Seq[Row], Seq[Row])] = Nil
     val jobs = jobsDuring {
       edits = inc.insertWithEdits("grades", rows(gradeSchema, Row("n1", 80L)))
         .map { case (t, ins, del) => (t, ins.collect().toSeq, del.collect().toSeq) }
     }
-    assert(jobs.count <= 2, s"$jobs for a one-row grades insert")
+    assert(jobs.count == 0, s"$jobs for a one-row grades insert")
     assert(edits.map(_._1) == Seq("grades", "unionTest", "aggregationTest", "actionTest"))
     val byTable = edits.map(e => e._1 -> e).toMap
     val union = byTable("unionTest")
@@ -481,10 +499,12 @@ class IncrementalGraphSpec extends SparkSpec {
     val calls = scala.collection.mutable.ArrayBuffer.empty[String]
     tables.foreach(t => inc.listen(t)((_, _) => calls += t))
     val before = tables.map(t => t -> bag(inc.table(t))).toMap
+    tables.foreach(t => assert(residentBag(inc, t) == before(t), s"$t's resident form"))
     edits.foreach { edit =>
       val e = intercept[Exception](edit())
       assert(expected(e), s"unexpected failure $e")
       tables.foreach(t => assert(bag(inc.table(t)) == before(t), s"$t not rolled back"))
+      tables.foreach(t => assert(residentBag(inc, t) == before(t), s"$t's resident form not rolled back"))
       assert(calls.isEmpty, s"subscribers must not see a rolled-back edit: $calls")
     }
   }
@@ -884,8 +904,9 @@ class IncrementalGraphSpec extends SparkSpec {
     assert(bag(inc.table("derived")) == Seq("22", "32", "42"))
   }
 
-  test("a one-row users insert resolves only the plans of its keyed base read, a grades insert only those of its two") {
+  test("a one-row users or grades insert resolves no plan and runs no job once its keyed tables are resident") {
     val inc = testCfgGraph()
+    // the first keyed upserts make unionTest and aggregationTest resident
     inc.insert("users", rows(userSchema, Row("Alex", 22L)))
     inc.insert("grades", rows(gradeSchema, Row("Alex", 90L)))
     def counted(table: String, df: DataFrame): (Analyses, Jobs) = {
@@ -893,21 +914,17 @@ class IncrementalGraphSpec extends SparkSpec {
       val jobs = jobsDuring { analyses = analysesDuring(inc.insertWithEdits(table, df)) }
       (analyses, jobs)
     }
-    // new keys: each Union and Aggregation reads its base under the key,
-    // which resolves the key filter and the row deserializer of its collect
-    def baseReads(analyses: Analyses): Int = {
-      assert(analyses.plans.forall(p => p.startsWith("Filter coalesce(") || p.startsWith("DeserializeToObject")),
-        s"$analyses besides base reads")
-      analyses.plans.count(_.startsWith("Filter"))
-    }
+    // new keys: each Union and Aggregation finds the key's rows (none) in
+    // its resident form
     val (users, usersJobs) = counted("users", rows(userSchema, Row("Bea", 30L)))
-    assert(baseReads(users) == 1 && users.count == 2 && usersJobs.count == 1,
-      s"$users and $usersJobs for a one-row users insert")
+    assert(users.count == 0 && usersJobs.count == 0, s"$users and $usersJobs for a one-row users insert")
     val (grades, gradesJobs) = counted("grades", rows(gradeSchema, Row("Cal", 70L)))
-    assert(baseReads(grades) == 2 && grades.count == 4 && gradesJobs.count == 2,
-      s"$grades and $gradesJobs for a one-row grades insert")
+    assert(grades.count == 0 && gradesJobs.count == 0, s"$grades and $gradesJobs for a one-row grades insert")
+    // an existing key: its rows come from the form too
+    val (again, againJobs) = counted("grades", rows(gradeSchema, Row("Alex", 10L)))
+    assert(again.count == 0 && againJobs.count == 0, s"$again and $againJobs for a grades insert on an existing key")
     assertRecomputes(inc, Seq("aggregationTest", "actionTest", "derived", "filterTest"))
-    assert(bag(inc.table("unionTest")) == Seq("22|90|Alex", "30|null|Bea", "null|70|Cal"))
+    assert(bag(inc.table("unionTest")) == Seq("22|10|Alex", "30|null|Bea", "null|70|Cal"))
   }
 
   /** Grades, users and measures (a Decimal and a Double) through every
