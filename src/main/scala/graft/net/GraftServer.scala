@@ -297,9 +297,10 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
     if (readKinds(kind)) planRead(client, requestId, kind, body)
     else client.send(requestResponse(requestId, edit(kind, body)))
 
-  /** Pin the read's table frame as of the last committed edit and queue
-    * its answer on `client`; the Spark jobs and rendering run later on the
-    * read thread. A read that cannot be planned is answered at once. */
+  /** Pin the read's table as of the last committed edit, look the key up
+    * in its resident form, and queue the answer on `client`; the rendering,
+    * and a collect() or Spark jobs the form leaves, run later on the read
+    * thread. A read that cannot be planned is answered at once. */
   private def planRead(client: Client, requestId: String, kind: String, body: JsonNode): Unit =
     try {
       val table = body.get("table").asText()
@@ -317,18 +318,21 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
         // rendered on the read thread
         val found = pinned.resident.flatMap(indexed)
         val answer: Callable[String] = () =>
-          try mapper.writeValueAsString(requestResponse(requestId, {
-            lazy val rows = found.orElse(pinned.built().flatMap(indexed))
-              .map { case (rs, schema) => entriesOf(rs.iterator, schema) }
-            lazy val queries = new QueryService(_ => pinned.frame)
-            kind match {
-              case "FindOne" => oneResult(rows.getOrElse(entriesOf(queries.findOne(table, column, key))).headOption)
-              case "LessThan" => manyResults(rows.getOrElse(entriesOf(queries.lessThan(table, column, key))))
-              case "GreaterThan" => manyResults(rows.getOrElse(entriesOf(queries.greaterThan(table, column, key))))
-              case _ => manyResults(rows.getOrElse(entriesOf(queries.getAll(table, column, key))))
+          try {
+            val entries = found.orElse(pinned.built().flatMap(indexed)) match {
+              case Some((rows, schema)) => entriesOf(rows.iterator, schema)
+              case None =>
+                val queries = new QueryService(_ => pinned.frame)
+                entriesOf(kind match {
+                  case "FindOne" => queries.findOne(table, column, key)
+                  case "LessThan" => queries.lessThan(table, column, key)
+                  case "GreaterThan" => queries.greaterThan(table, column, key)
+                  case _ => queries.getAll(table, column, key)
+                })
             }
-          }))
-          catch { case NonFatal(e) => mapper.writeValueAsString(failed(requestId, Some(kind), e)) }
+            mapper.writeValueAsString(requestResponse(requestId,
+              if (kind == "FindOne") oneResult(entries.headOption) else manyResults(entries)))
+          } catch { case NonFatal(e) => mapper.writeValueAsString(failed(requestId, Some(kind), e)) }
         client.sendLater(reads.submit(answer))
       }
     } catch { case NonFatal(e) => client.send(failed(requestId, Some(kind), e)) }

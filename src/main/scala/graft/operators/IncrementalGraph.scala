@@ -89,13 +89,12 @@ import scala.jdk.CollectionConverters._
   *
   * Threading: the edits ([[insert]], [[delete]] and their `WithEdits`
   * forms), [[listen]] and [[table]] are called from one thread at a time.
-  * [[atCommitted]] and [[pinnedAt]] may be called from any thread; they
-  * see the last committed state, never a cascade in progress. A read that
-  * builds a form collects it on its own thread, without a lock; an edit
-  * never waits for it. The form is attached to the committed state only if
-  * the build is still registered, with the deltas committed since its pin
-  * replayed onto it; a rebase of its table, or CompactAt commits of it,
-  * give the build up.
+  * [[pinnedAt]] may be called from any thread; it sees the last committed
+  * state, never a cascade in progress. A read that builds a form collects
+  * it on its own thread, without a lock; an edit never waits for it. The
+  * form is attached to the committed state only if the build is still
+  * registered, with the deltas committed since its pin replayed onto it; a
+  * rebase of its table, or CompactAt commits of it, give the build up.
   *
   * Aggregation configs must use decomposable memo folds (the
   * [[Transforms.aggregation]] contract); order-dependent general folds
@@ -189,22 +188,15 @@ final class IncrementalGraph(
 
   def table(name: String): DataFrame = frameOf(name, mat)
 
-  /** Run `f` over the tables as of the last committed edit. Unlike
-    * [[table]], this may be called from any thread, also while an edit
-    * runs on another. Commits and their subscriber notifications wait for
-    * `f`, so whatever `f` hands on (say, to a connection's outbound queue)
-    * is ordered after the notifications of every edit it sees and before
-    * those of every edit it does not. Keep `f` short: it holds off the
-    * next commit. */
-  def atCommitted[A](f: (String => DataFrame) => A): A = commitLock.synchronized {
-    val state = committed.mats
-    f(frameOf(_, state))
-  }
-
-  /** [[atCommitted]] for reads: `f` pins tables as they were at the last
-    * committed edit, each with its resident form when it has one. A pin of
-    * a table without one also claims its build, which [[Pinned.built]]
-    * runs on the read's own thread. */
+  /** Run `f` over the tables as of the last committed edit: `f` pins the
+    * tables it reads, each with its resident form when it has one. Unlike
+    * [[table]], this may be called from any thread, also while an edit runs
+    * on another. Commits and their subscriber notifications wait for `f`,
+    * so whatever `f` hands on (say, to a connection's outbound queue) is
+    * ordered after the notifications of every edit it sees and before those
+    * of every edit it does not. Keep `f` short: it holds off the next
+    * commit. A pin of a table without a form also claims its build, which
+    * [[Pinned.built]] runs on the caller's own thread. */
   private[graft] def pinnedAt[A](f: (String => Pinned) => A): A = commitLock.synchronized {
     val state = committed
     f { name =>
@@ -243,8 +235,7 @@ final class IncrementalGraph(
     * unless the build was given up. */
   private def attach(b: Build, f: Option[Resident]): Unit = commitLock.synchronized {
     if (builds.exists(_ eq b) && !committed.forms.contains(b.table))
-      b.log.foldLeft(Option(f)) { case (g, (ins, del)) => g.flatMap(advanced(_, ins, del)) }
-        .foreach(now => committed = committed.copy(forms = committed.forms.updated(b.table, now)))
+      replayed(f, b.log).foreach(now => committed = committed.copy(forms = committed.forms.updated(b.table, now)))
   }
 
   private def frameOf(name: String, state: scala.collection.Map[String, Mat]): DataFrame =
@@ -332,12 +323,11 @@ final class IncrementalGraph(
         throw e
     }
     commitLock.synchronized {
-      def deltas(t: String) = pending.iterator.filter(_._1 == t).map(e => (e._2, e._3))
+      def deltas(t: String) = pending.filter(_._1 == t).map(e => (e._2, e._3))
       // a form a read attached while this edit ran is as of the edit's start
       committed.forms.foreach { case (t, f) =>
         if (!start.forms.contains(t) && !forms.contains(t))
-          deltas(t).foldLeft(Option(f)) { case (g, (ins, del)) => g.flatMap(advanced(_, ins, del)) }
-            .foreach(now => forms = forms.updated(t, now))
+          replayed(f, deltas(t)).foreach(now => forms = forms.updated(t, now))
       }
       // a build keeps the deltas to replay; it is given up on a rebase or
       // once it falls CompactAt edits behind
@@ -621,6 +611,11 @@ object IncrementalGraph {
         Some(if (next.size > ResidentCap) None else Some(next))
       case _ => None
     }
+
+  /** Form `f` after the edits `deltas` of its table, in order; None once
+    * one of them drops it. */
+  private def replayed(f: Option[Resident], deltas: Iterable[(Delta, Delta)]): Option[Option[Resident]] =
+    deltas.foldLeft(Option(f)) { case (g, (ins, del)) => g.flatMap(advanced(_, ins, del)) }
 
   /** One materialized table: the rows of the checkpointed `base` whose
     * `key` is not in `dead`, plus driver-local `rows` (in base column
