@@ -11,7 +11,7 @@ import java.io.{BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
-import java.util.concurrent.{Callable, Executors, Future, LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors, Future, LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -53,50 +53,42 @@ import scala.util.control.NonFatal
   * every query through one thread; each connection has a reader and a
   * writer thread (client_connection.rs:10-25). A read (FindOne, GetAll,
   * LessThan, GreaterThan) is planned against the graph's last committed
-  * state ([[IncrementalGraph.pinnedAt]]; table states and their resident
-  * forms are immutable values): by the connection's reader thread as it
-  * arrives, or, when that connection still has requests in the dispatch
-  * loop, by the dispatch thread after them. So a read never waits for
-  * another connection's edit, and a read after an insert on one connection
-  * sees that insert. When the table is resident, the index lookup is made
-  * while planning, under the graph's commit lock. The rendering, and the
-  * first read's collect() that makes a table resident or the Spark jobs of
-  * a read the index cannot answer, run on one read thread, so an edit
-  * does not queue behind them and at most one read's rows are held at a
-  * time. Per-connection order is kept: the read's pending answer takes its
-  * place in the connection's outbound queue when it is planned, after the
-  * Events of every edit it sees and before those of the edits it does not,
-  * and the writer sends the queue in order. A connection with more than
-  * `MaxQueuedFrames` frames unsent (a subscriber that stopped reading) is
-  * closed, and its pending reads are cancelled; no other connection waits
-  * for it.
+  * state ([[IncrementalGraph.pinnedAt]]): by the connection's reader thread
+  * as it arrives, or, when that connection still has requests in the
+  * dispatch loop, by the dispatch thread after them. So a read never waits
+  * for another connection's edit, and a read after an insert on one
+  * connection sees that insert. A resident table's index lookup is made
+  * while planning, under the graph's commit lock; the rendering, and the
+  * Spark jobs of a read the index cannot answer, run on one read thread, so
+  * an edit does not queue behind them and at most one read's rows are held
+  * at a time. Per-connection order is kept: a read's pending answer takes
+  * its place in the connection's outbound queue when it is planned, after
+  * the Events of every edit it sees and before those of the edits it does
+  * not. A connection with more than `MaxQueuedFrames` frames unsent (a
+  * subscriber that stopped reading) is closed, and its pending reads are
+  * cancelled. A closed connection's subscriptions end with it.
   *
-  * Scale note: this façade is the reference-parity POINT-QUERY surface
-  * (find/range/insert/delete/listen on graph tables). An InsertData's
-  * entry goes to the graph as a driver row, and its edits come back as
-  * driver rows, which the response and every Event render directly: no
-  * frame, no Spark job. A read of a resident table (at most
-  * [[IncrementalGraph.ResidentCap]] rows) is answered from its driver-side
-  * index with no Spark job either, the reference's B-tree walk. Other reads
-  * and non-local edits stream off the cluster via toLocalIterator. Either
-  * way a batch beyond [[maxResultRows]] fails that request loudly rather
-  * than buffering a cluster's output in the server heap. Bulk analytics
-  * belong on the DataFrame surface, not behind a socket.
+  * Scale note: this façade is the reference-parity POINT-QUERY surface. An
+  * InsertData's entry goes to the graph as a driver row, and its edits come
+  * back as driver rows, which the response and every Event render with no
+  * frame and no Spark job. A read of a resident table (at most
+  * [[IncrementalGraph.ResidentCap]] rows, resident from bootstrap on), and
+  * a DeleteData's search of one, use its driver-side index with no Spark
+  * job either, the reference's B-tree walk. Other reads and non-local edits
+  * stream off the cluster via toLocalIterator. Either way a batch beyond
+  * [[maxResultRows]] fails that request loudly rather than buffering a
+  * cluster's output in the server heap.
   *
   * Divergences from the reference, on purpose: a malformed frame or an
   * unknown listen table answers that CLIENT with an Err instead of
   * panicking the whole db thread (client_connection.rs:74, db_thread.rs:123
-  * crash the process). A frame that is not JSON is answered with an Err
-  * carrying the nil request_id; a request that fails in dispatch is
-  * answered with an Err carrying its request_id (nil when it has none); a
-  * negative length prefix, or one over a fixed frame cap, closes that
-  * connection, since the stream can no longer be framed.
-  * InsertData/DeleteData respond with ALL committed edits — source plus
-  * cascaded derived rows, like the reference (db_thread.rs:82-104) — with
-  * one rendering nuance: an aggregation
-  * upsert (Update = delete old + insert new) surfaces as its new row in an
-  * InsertData response and its removed rows in a DeleteData response;
-  * both sides of every edit stream to StartListen subscribers.
+  * crash the process): a frame that is not JSON on the nil request_id, a
+  * request that fails in dispatch on its own. A negative length prefix, or
+  * one over a fixed frame cap, closes the connection, which can no longer
+  * be framed. InsertData/DeleteData respond with ALL committed edits, like
+  * the reference (db_thread.rs:82-104), but an aggregation upsert (delete
+  * old + insert new) shows its new row in an InsertData response and its
+  * removed rows in a DeleteData response; subscribers get both sides.
   */
 final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
   private val mapper = new ObjectMapper()
@@ -126,6 +118,8 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
     val out = new LinkedBlockingQueue[AnyRef](MaxQueuedFrames + 1)
     /** This connection's requests in the dispatch loop, not yet answered. */
     val queued = new AtomicInteger
+    /** What ends each of this connection's subscriptions, run on close. */
+    private val subscriptions = new ConcurrentLinkedQueue[() => Unit]
     @volatile private var open = true
     def send(message: JsonNode): Unit = enqueue(mapper.writeValueAsString(message))
     def sendLater(frame: Future[String]): Unit = enqueue(frame)
@@ -134,9 +128,13 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
         System.err.println(s"[graft-net] closing client $id: over $MaxQueuedFrames frames unsent")
         close()
       }
-    /** Close the socket and end the writer, dropping what it has not sent. */
+    def subscribed(end: () => Unit): Unit = { subscriptions.add(end); if (!open) unsubscribe() }
+    private def unsubscribe(): Unit = Iterator.continually(subscriptions.poll()).takeWhile(_ != null).foreach(_())
+    /** Close the socket, end the subscriptions and the writer, dropping
+      * what it has not sent. */
     def close(): Unit = {
       open = false
+      unsubscribe()
       try socket.close() catch { case _: Exception => }
       var f = out.poll()
       while (f != null) {
@@ -299,7 +297,7 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
 
   /** Pin the read's table as of the last committed edit, look the key up
     * in its resident form, and queue the answer on `client`; the rendering,
-    * and a collect() or Spark jobs the form leaves, run later on the read
+    * and the Spark jobs of a read the form leaves, run later on the read
     * thread. A read that cannot be planned is answered at once. */
   private def planRead(client: Client, requestId: String, kind: String, body: JsonNode): Unit =
     try {
@@ -319,7 +317,7 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
         val found = pinned.resident.flatMap(indexed)
         val answer: Callable[String] = () =>
           try {
-            val entries = found.orElse(pinned.built().flatMap(indexed)) match {
+            val entries = found match {
               case Some((rows, schema)) => entriesOf(rows.iterator, schema)
               case None =>
                 val queries = new QueryService(_ => pinned.frame)
@@ -375,9 +373,9 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
           errResponse("ManyResults", s"unknown listen event: $other")))
         return
     }
-    try graph.listenDeltas(table, kind) { (ins, del) =>
+    try client.subscribed(graph.listenDeltas(table, kind) { (ins, del) =>
       client.send(eventMessage(table, event, manyResults(entriesOf(if (kind == ListenEvent.Insert) ins else del))))
-    } catch {
+    }) catch {
       // unknown table: tell the subscribing client instead of panicking the
       // dispatch thread (the reference's db_thread.rs:123 crashes here)
       case e: Exception => client.send(eventMessage(table, event, errResponse("ManyResults", e.getMessage)))

@@ -3,7 +3,7 @@ package graft.operators
 import graft.config._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema, UserDefinedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,87 +14,67 @@ import scala.jdk.CollectionConverters._
   * reference: database.rs:125-195) re-expressed delta-driven.
   *
   * Where [[PipelineGraph]] keeps derived tables lazy and recomputes on
-  * access, this keeps every table current and applies per-edit deltas:
+  * access, this keeps every table current and applies per-edit deltas.
+  * Function/Filter tables are VIEWS: deterministic per-row functions, whose
+  * delta is the transform of the input's delta. Aggregation/Union replace
+  * ONLY the affected keys (the reference re-reads exactly these groups per
+  * insert, transform.rs:239); the old group rows become the Delete half of
+  * the update, the reference's Update ≡ Delete(old)+Insert(new)
+  * (database.rs:282-286).
   *
-  *   - Function/Filter tables are VIEWS: deterministic per-row functions
-  *     (every ExprCompiler builtin is deterministic), so `table(name)` is
-  *     the transform over the input's current state, cached per input
-  *     frame, and their delta is the transform of the input's delta.
-  *   - Source, Aggregation, Union and Action tables are materialized, each
-  *     as a checkpointed base, minus a null-safe set of dead keys (keyed
-  *     Aggregation/Union tables only), plus driver-local rows.
-  *   - Aggregation/Union replace ONLY the affected keys (the reference
-  *     re-reads exactly these groups per insert, transform.rs:239): a
-  *     local insert folds its rows onto the keys' current rows, any other
-  *     edit recomputes the keys; the old group rows become the Delete half
-  *     of the update, matching the reference's Update ≡
-  *     Delete(old)+Insert(new) (database.rs:282-286).
+  * Residency. A table of at most [[IncrementalGraph.ResidentCap]] rows is
+  * held on the driver as its [[Resident]] form alone: its rows, indexed by
+  * key and by every indexable column, as the reference keeps one store per
+  * table (storage_manager_table.rs:14-23). Its frame, for [[table]] and the
+  * Spark path of a read, scans those rows. A larger table
+  * is a checkpointed base, minus a null-safe set of dead keys (keyed
+  * tables), plus driver-local rows; a view of one has no state. One rule
+  * decides, at bootstrap and at each rebase (a non-local insert, a delete
+  * from a table above the cap, a keyed recompute from a frame, a form that
+  * crosses the cap): read at most the cap plus one rows of the new frame,
+  * and hold them if that is all of them, else checkpoint the frame. A
+  * view of a held table takes its rows from its input's through its bound
+  * plan, with no job, unless it calls a user-registered or non-deterministic
+  * function: that view is read through its input. A local edit updates the
+  * state it finds, so a table above the cap stays so until a rebase. A
+  * resident row costs its Row (170–200 bytes) plus one sorted-map entry per
+  * indexable column, about 56 bytes per Long and 144 per short string on a
+  * 64-bit JVM with compressed pointers.
   *
-  * Cost model. An insert of rows already on the driver (a façade
-  * InsertData, [[insertRows]], or a frame that plans to a LocalRelation,
-  * such as a `createDataFrame` batch) is a LOCAL edit: its `_entryId`s
-  * are assigned on the driver and its deltas are driver rows, which flow
-  * from node to node with no Catalyst planning. The first local edit
-  * through a node binds the node's expressions once: they are taken from
-  * the analyzed plan of the same [[Transforms]] call over an empty
-  * relation of the delta's schema, and every later edit evaluates them
-  * row by row ([[RowPlan]]). A delta builds its frame only for a caller
-  * that asks for one ([[insertWithEdits]], a [[listen]] subscriber).
-  * Then:
+  * Cost model. An edit of rows on the driver (a façade InsertData,
+  * [[insertRows]], a frame that plans to a LocalRelation, a delete from a
+  * held source) is LOCAL: its deltas are driver rows, run through each
+  * node's expressions, bound once from the analyzed plan of the same
+  * [[Transforms]] call ([[RowPlan]]), with no planning and no job. A
+  * delta builds its frame only for a caller that asks ([[insertWithEdits]],
+  * a [[listen]] subscriber). Then:
   *
-  *   - the source's alignment and casts, and the Function and Filter
-  *     nodes, run the bound expressions over the delta's rows: no job;
-  *   - an Action node runs no job: its row function is applied to the
-  *     delta's rows on the driver ([[Transforms.actionRows]]);
-  *   - an Aggregation or Union node finds its current rows under the keys
-  *     it replaces in its resident form (below): no job. It then folds the
-  *     new rows onto them with bound expressions: a Union pairs them by key
-  *     and merges them as [[Transforms.union]] does; an Aggregation whose
-  *     accumulators fold exactly ([[Transforms.exactFold]]) folds each
-  *     key's new rows onto its group row. It appends the replacement rows
-  *     and tombstones the keys. A table above the cap reads its checkpointed
-  *     base under the keys instead: one job;
-  *   - an Aggregation that does not fold exactly (a Double sum, a `first()`
-  *     overwrite), and a Union fed an update (a delete, or an upstream
-  *     Aggregation's Delete+Insert), recompute the keys from their input
-  *     tables: the jobs of the recompute;
-  *   - when a table's local rows plus dead keys pass [[IncrementalGraph.CompactAt]]
-  *     the table compacts into a new checkpointed base: one job.
+  *   - a delete from a held source finds its rows, null-safe `<=>`, in the
+  *     column's index, or, for an unindexable column or a key the
+  *     comparison would cast, by Spark's filter over its frame;
+  *   - an Action applies its row function to the delta's rows
+  *     ([[Transforms.actionRows]]); a held Action table drops a delete's
+  *     rows as a multiset;
+  *   - an Aggregation or Union finds the rows under its keys in its form,
+  *     and folds the new rows onto them: a Union merges them by key as
+  *     [[Transforms.union]] does, an Aggregation whose accumulators fold
+  *     exactly ([[Transforms.exactFold]]) folds each key's rows onto its
+  *     group row. Above the cap it reads its base under the keys: one job;
+  *   - an Aggregation that does not fold exactly, or fed a delete, and a
+  *     Union fed an update, recompute the keys from their inputs' frames;
+  *   - a held table never compacts; a table above the cap compacts into a
+  *     new checkpointed base past [[IncrementalGraph.CompactAt]] local rows
+  *     and dead keys: one job.
   *
-  * Residency. Every table with at most [[IncrementalGraph.ResidentCap]]
-  * rows may also be held on the driver as a [[Resident]] form: all its
-  * rows, indexed by key and by every indexable column in persistent maps.
-  * A table becomes resident on its first keyed upsert (an Aggregation or
-  * Union) or its first read through [[pinnedAt]], by one collect() of at
-  * most the cap plus one rows; past the cap it is marked as such instead.
-  * Every local edit then maintains the form from the edit's deltas (views
-  * included), so a snapshot or a rollback of the state is one of the forms
-  * too. The two constants make one rule: a table is rebased (a new
-  * checkpointed base) every CompactAt local rows and dead keys, and
-  * compaction keeps its rows, so it keeps its form; a table is resident
-  * while it has at most ResidentCap rows, and a table above it stays
-  * marked so until a rebase. Each resident row costs the heap its Row and
-  * one sorted-map entry per indexable column: measured on a 64-bit JVM
-  * with compressed pointers, about 56 bytes per Long column and 144 per
-  * short string column on top of the Row's own 170–200 bytes, so 0.43 KB
-  * for a row of two Longs and an `_entryId`.
-  *
-  * Other inserts and every delete are O(table): the delta is checkpointed,
-  * and each affected materialized table is rebuilt from its current rows
-  * (exceptAll for Action, a broadcast key semi/anti-join for
-  * Aggregation/Union) and checkpointed as a new base, so lineage stays
-  * O(1) in the number of edits. This rebase drops the resident forms of
-  * the tables it rebuilds and of their views; the next keyed upsert or
-  * read builds them again.
+  * A non-local insert and a delete from a table above the cap are O(table):
+  * the delta is checkpointed, and each affected table is rebased from its
+  * current rows by the rule, so lineage stays O(1) in the number of edits.
   *
   * Threading: the edits ([[insert]], [[delete]] and their `WithEdits`
   * forms), [[listen]] and [[table]] are called from one thread at a time.
   * [[pinnedAt]] may be called from any thread; it sees the last committed
-  * state, never a cascade in progress. A read that builds a form collects
-  * it on its own thread, without a lock; an edit never waits for it. The
-  * form is attached to the committed state only if the build is still
-  * registered, with the deltas committed since its pin replayed onto it; a
-  * rebase of its table, or CompactAt commits of it, give the build up.
+  * state, in which every table has its final form: a read builds none, and
+  * an edit never waits for a read.
   *
   * Aggregation configs must use decomposable memo folds (the
   * [[Transforms.aggregation]] contract); order-dependent general folds
@@ -115,9 +95,6 @@ final class IncrementalGraph(
 
   private def frameDelta(df: DataFrame): Delta = new Delta(df.schema, None, () => df)
 
-  private def freeze(df: DataFrame, local: Boolean): Delta =
-    if (local) localDelta(df.schema, df.collect().toSeq) else frameDelta(checkpoint(df))
-
   private def keysOf(deltas: Seq[Delta], columns: Seq[String]): Keys =
     if (deltas.forall(_.rows.isDefined))
       LocalKeys((for (d <- deltas; c <- columns; i = d.schema.fieldIndex(c); r <- d.rows.get)
@@ -127,7 +104,9 @@ final class IncrementalGraph(
         .reduce(_.unionByName(_)).distinct())
 
   private val byName = config.byName
-  private val mat = scala.collection.mutable.Map.empty[String, Mat]
+  /** Each table's state in the edit in progress. A view that is not held
+    * has none: it is read through its input. Dispatch thread only. */
+  private var tables: Map[String, Table] = Map.empty
   private val folds = scala.collection.mutable.Map.empty[String, Option[Transforms.ExactFold]]
   /** What a node binds on its first local edit, per node and input
     * schemas: row plans, a Union's bound merge. An entry is small; the
@@ -138,15 +117,9 @@ final class IncrementalGraph(
       size > 256
   }
   private val views = new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
-  /** The resident forms of the edit in progress, by table; `None` marks a
-    * table above [[IncrementalGraph.ResidentCap]]. Dispatch thread only. */
-  private var forms: Map[String, Option[Resident]] = Map.empty
-  /** The table states and forms as of the last committed edit; read and
-    * written under `commitLock` only. */
-  private var committed = State(Map.empty, Map.empty)
-  /** Resident forms that reads are building, each with the deltas of its
-    * table committed since it was pinned; under `commitLock` only. */
-  private var builds: List[Build] = Nil
+  /** The table states as of the last committed edit; read and written
+    * under `commitLock` only. */
+  private var committed: Map[String, Table] = Map.empty
   private val commitLock = new Object
 
   private val downstream: Map[String, Seq[DerivedTableConfig]] =
@@ -154,27 +127,32 @@ final class IncrementalGraph(
       .flatMap(d => d.inputTables.distinct.map(_ -> d))
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
 
-  // initial materialization: sources from the seed, derived via one full
-  // compute in topo order (the once-per-deployment bootstrap); views are
-  // built (analyzed, not run) so a bad expression fails here
+  /** The key column of each keyed table: an Aggregation's or a Union's. */
+  private val keyOf: Map[String, String] = config.tables.collect {
+    case a: AggregationTableConfig => a.name -> AggregationKey
+    case u: UnionTableConfig => u.name -> MatchingKey
+  }.toMap
+
+  // bootstrap, once per deployment: each table's first state by the
+  // residency rule, in topo order. Seeds are aligned as inserts are, and
+  // views bound, so a bad seed or expression fails here.
   config.topoOrder.foreach {
     case s: SourceTableConfig =>
-      // seeds go through the same validation/alignment as insert() — an
-      // unaligned seed (missing or undeclared columns) would otherwise
-      // break the first unionByName mid-stream instead of erroring here
-      mat(s.name) = Mat(initialSources.get(s.name)
-        .map(df => SourceOps.ensureEntryId(SourceOps.alignForInsert(s, df)))
-        .getOrElse(spark.createDataFrame(new java.util.ArrayList[Row](), SourceOps.sourceSchema(s))))
-    case v: DerivedTableConfig if isView(v) => table(v.name)
+      tables += s.name -> initialSources.get(s.name)
+        .fold[Table](held(SourceOps.sourceSchema(s), Nil, None))(seeded(s, _))
+    case v: DerivedTableConfig if isView(v) => reviewed(v)
+    case a: ActionTableConfig =>
+      // the Action runs once: over held rows on the driver, else into the
+      // checkpoint that the rule reads
+      val out = through(a, a.sourceTable, tables.get(a.sourceTable) match {
+        case Some(h: Held) => localDelta(h.form.schema, h.form.rows.toSeq)
+        case _ => frameDelta(table(a.sourceTable))
+      })
+      tables += a.name -> out.rows.fold(settled(out.df, None))(held(out.schema, _, None))
     case d: DerivedTableConfig =>
-      val key = d match {
-        case _: AggregationTableConfig => Some(AggregationKey)
-        case _: UnionTableConfig => Some(MatchingKey)
-        case _ => None
-      }
-      mat(d.name) = Mat(checkpoint(compute(d, d.inputTables.map(n => n -> table(n)).toMap)), key)
+      tables += d.name -> settled(compute(d, d.inputTables.map(n => n -> table(n)).toMap), keyOf.get(d.name))
   }
-  committed = State(mat.toMap, Map.empty)
+  committed = tables
 
   private def compute(d: DerivedTableConfig, inputs: Map[String, DataFrame]): DataFrame = d match {
     case f: FunctionTableConfig => Transforms.function(inputs(f.sourceTable), f.functions)
@@ -186,70 +164,46 @@ final class IncrementalGraph(
     case a: ActionTableConfig => Transforms.action(inputs(a.sourceTable), ActionRegistry.get(a.actionName))
   }
 
-  def table(name: String): DataFrame = frameOf(name, mat)
+  def table(name: String): DataFrame = frameOf(name, tables)
 
-  /** Run `f` over the tables as of the last committed edit: `f` pins the
-    * tables it reads, each with its resident form when it has one. Unlike
-    * [[table]], this may be called from any thread, also while an edit runs
-    * on another. Commits and their subscriber notifications wait for `f`,
-    * so whatever `f` hands on (say, to a connection's outbound queue) is
-    * ordered after the notifications of every edit it sees and before those
-    * of every edit it does not. Keep `f` short: it holds off the next
-    * commit. A pin of a table without a form also claims its build, which
-    * [[Pinned.built]] runs on the caller's own thread. */
+  /** Run `f` over the tables as of the last committed edit, from any
+    * thread, also while an edit runs on another. Commits and their
+    * notifications wait for `f`, so whatever `f` hands on (say, to a
+    * connection's outbound queue) is ordered after the notifications of
+    * every edit it sees and before those of every edit it does not. Keep
+    * `f` short: it holds off the next commit. */
   private[graft] def pinnedAt[A](f: (String => Pinned) => A): A = commitLock.synchronized {
     val state = committed
     f { name =>
       if (!byName.contains(name)) throw new NoSuchElementException(s"no table named $name")
-      val build = if (state.forms.contains(name)) None else {
-        val b = new Build(name)
-        builds ::= b
-        Some(b)
-      }
-      new Pinned(name, state, build)
+      new Pinned(name, state)
     }
   }
 
-  /** A table as a read pinned it: its frame, built on first use, and its
-    * resident form. Any thread may use it. */
-  private[graft] final class Pinned(name: String, state: State, build: Option[Build]) {
-    lazy val frame: DataFrame = frameOf(name, state.mats)
-    val resident: Option[Resident] = state.forms.get(name).flatten
-
-    /** The resident form, built on the calling thread with one collect()
-      * when the pin claimed the build, and attached to the committed state
-      * with the edits committed since the pin replayed onto it. The form
-      * returned is as pinned. None above the cap, or when another read
-      * built the form first (this one was pinned before it). */
-    def built(): Option[Resident] = resident.orElse(build.flatMap { b =>
-      try {
-        val first = commitLock.synchronized(!committed.forms.contains(name))
-        val made = if (first) Some(residentOf(frame, state.mats.get(name).flatMap(_.key))) else None
-        made.foreach(attach(b, _))
-        made.flatten
-      } finally commitLock.synchronized { builds = builds.filterNot(_ eq b) }
-    })
+  /** A table as a read pinned it, for any thread: its frame, built on
+    * first use, and its resident form (None above the cap). */
+  private[graft] final class Pinned(name: String, state: Map[String, Table]) {
+    lazy val frame: DataFrame = frameOf(name, state)
+    val resident: Option[Resident] = state.get(name).collect { case h: Held => h.form }
   }
 
-  /** Attach form `f`, built for `b` as of its pin, to the committed state,
-    * unless the build was given up. */
-  private def attach(b: Build, f: Option[Resident]): Unit = commitLock.synchronized {
-    if (builds.exists(_ eq b) && !committed.forms.contains(b.table))
-      replayed(f, b.log).foreach(now => committed = committed.copy(forms = committed.forms.updated(b.table, now)))
-  }
-
-  private def frameOf(name: String, state: scala.collection.Map[String, Mat]): DataFrame =
-    byName.get(name) match {
+  private def frameOf(name: String, state: Map[String, Table]): DataFrame = state.get(name) match {
+    case Some(t) => t.frame
+    case None => byName.get(name) match {
       case Some(v: DerivedTableConfig) if isView(v) => view(v, frameOf(v.inputTables.head, state))
-      case Some(_) => state(name).frame
-      case None => throw new NoSuchElementException(s"no table named $name")
+      case _ => throw new NoSuchElementException(s"no table named $name")
     }
+  }
 
   /** What node `name` binds over input `schemas`, made on first use. */
   private def boundFor[A <: AnyRef](name: String, schemas: StructType*)(make: => A): A = {
     val key = (name, schemas)
     Option(bound.get(key)).getOrElse { val made = make; bound.put(key, made); made }.asInstanceOf[A]
   }
+
+  /** Row-wise table `d` bound over rows of `schema` from its input `src`. */
+  private def rowPlan(d: DerivedTableConfig, src: String, schema: StructType): RowPlan =
+    boundFor(d.name, schema)(RowPlan.over(spark, schema)(df => compute(d, Map(src -> df))))
 
   /** A Function/Filter table over its input frame `in`, rebuilt only when
     * that frame changes. */
@@ -263,13 +217,75 @@ final class IncrementalGraph(
     }
   }
 
+  private def held(schema: StructType, rows: Seq[Row], key: Option[String]): Held =
+    new Held(spark, Resident(schema, rows, key))
+
+  /** The rows of `df` when there are at most [[ResidentCap]]. */
+  private def fits(df: DataFrame): Option[Seq[Row]] = {
+    val rows = df.limit(ResidentCap + 1).collect()
+    if (rows.length > ResidentCap) None else Some(rows.toSeq)
+  }
+
+  /** The state of a materialized table whose rows are now `df`'s. */
+  private def settled(df: DataFrame, key: Option[String]): Table =
+    fits(df).fold[Table](Mat(checkpoint(df), key))(held(df.schema, _, key))
+
+  /** The state of a materialized table whose rows are now `form`'s: past
+    * the cap, a checkpoint of them. */
+  private def kept(form: Resident, key: Option[String]): Table =
+    if (form.size <= ResidentCap) new Held(spark, form)
+    else Mat(checkpoint(localFrame(spark, form.rows.toSeq, form.schema)), key)
+
+  /** A source's first state from its seed, aligned as an insert is: held
+    * with `_entryId`s assigned on the driver, or past the cap checkpointed
+    * with ids assigned by Spark. */
+  private def seeded(s: SourceTableConfig, seed: DataFrame): Table = {
+    val aligned = SourceOps.alignForInsert(s, seed)
+    fits(aligned).fold[Table](Mat(SourceOps.ensureEntryId(aligned))) { rows =>
+      val (schema, withIds) = SourceOps.withEntryIds(aligned.schema, rows)
+      held(schema, withIds, None)
+    }
+  }
+
+  /** View `v`'s state from its input's. A view that calls a user-registered
+    * function, which may block or cost anything, or a non-deterministic
+    * one, whose rows a form would fix, has none. */
+  private def reviewed(v: DerivedTableConfig): Unit = {
+    val src = v.inputTables.head
+    def holdable(df: DataFrame) = df.queryExecution.analyzed.find(_.expressions
+      .exists(e => !e.deterministic || e.exists(_.isInstanceOf[UserDefinedExpression]))).isEmpty
+    val state = tables.get(src) match {
+      case Some(h: Held) =>
+        Option.when(holdable(compute(v, Map(src -> RowPlan.empty(spark, h.form.schema))))) {
+          val plan = rowPlan(v, src, h.form.schema)
+          held(plan.schema, plan(h.form.rows.toSeq), None)
+        }
+      case _ =>
+        val df = view(v, frameOf(src, tables))
+        if (holdable(df)) fits(df).map(held(df.schema, _, None)) else None
+    }
+    tables = state.fold(tables - v.name)(tables.updated(v.name, _))
+  }
+
+  /** Source or Action table `name` after an edit inserted `ins` and
+    * deleted `del`, a multiset difference. */
+  private def applied(name: String, ins: Delta, del: Delta): Unit =
+    tables += name -> ((tables(name), ins.rows, del.rows) match {
+      case (h: Held, Some(is), Some(ds)) => kept(h.form.updated(is, ds), None)
+      case (m: Mat, Some(is), Some(Seq())) => m.append(is)
+      case (t, _, _) =>
+        val left = if (del.rows.exists(_.isEmpty)) t.frame else t.frame.exceptAll(del.df)
+        settled(if (ins.rows.exists(_.isEmpty)) left else left.unionByName(ins.df), None)
+    })
+
   // ── Listen: per-edit push to subscribers (the reference's ListenerHook
   //    fan-out, listener_hook.rs:56-87). Because this engine is eager,
   //    every edit's exact per-table delta already exists — subscribers get
   //    (inserts, deletes) where an upsert surfaces as Delete(old)+
   //    Insert(new), the reference's Update encoding (database.rs:282-286).
-  private val listeners = scala.collection.mutable.Map
-    .empty[String, List[(graft.ListenEvent, (Delta, Delta) => Unit)]]
+  private type Listener = (graft.ListenEvent, (Delta, Delta) => Unit)
+  /** Under `commitLock` only. */
+  private var listeners = Map.empty[String, List[Listener]]
 
   /** Subscribe to a table's change feed; `event` restricts delivery to one
     * change kind — the reference's per-kind listener map
@@ -281,11 +297,16 @@ final class IncrementalGraph(
     listenDeltas(tableName, event)((ins, del) => cb(ins.df, del.df))
 
   /** [[listen]] with each edit's deltas, whose frames are built only if
-    * `cb` asks for them. */
+    * `cb` asks for them. Returns what ends the subscription, which any
+    * thread may call, also from within a notification. */
   private[graft] def listenDeltas(tableName: String, event: graft.ListenEvent = graft.ListenEvent.Both)
-                                 (cb: (Delta, Delta) => Unit): Unit = {
+                                 (cb: (Delta, Delta) => Unit): () => Unit = {
     require(byName.contains(tableName), s"no table named $tableName")
-    listeners(tableName) = (event, cb) :: listeners.getOrElse(tableName, Nil)
+    val l: Listener = (event, cb)
+    def change(f: List[Listener] => List[Listener]) =
+      commitLock.synchronized { listeners = listeners.updated(tableName, f(listeners.getOrElse(tableName, Nil))) }
+    change(l :: _)
+    () => change(_.filterNot(_ eq l))
   }
 
   /** An Insert subscriber gets an empty delta for the deletes, and a
@@ -302,52 +323,29 @@ final class IncrementalGraph(
 
   /** Run an edit transactionally — the reference's rollback
     * (database.rs:317-396), without the edit-inversion machinery: every
-    * table's state is an immutable value, so the pre-edit snapshot of the
-    * name→state map IS the rollback (views follow their inputs). On ANY
-    * failure mid-cascade every table restores to its pre-edit state and
-    * subscribers are never called (notifications collect into `pending`
-    * and fire only after the whole cascade commits — the reference's hooks
-    * also run against committed edits, listener_hook.rs:56-66).
-    * Checkpoints already written for a rolled-back edit are orphaned, not
-    * visible. Impure Action functions are outside the transaction boundary
-    * (as are the reference's embedded-Python actions). */
+    * table's state is an immutable value, so the pre-edit name→state map
+    * IS the rollback. On ANY failure mid-cascade every table restores and
+    * no subscriber is called: notifications fire only after the whole
+    * cascade commits, as the reference's hooks run against committed edits
+    * (listener_hook.rs:56-66). Impure Action functions are outside the
+    * transaction boundary (as are the reference's embedded-Python
+    * actions). */
   private def transactional(body: Pending => Unit): Seq[(String, Delta, Delta)] = {
-    val start = commitLock.synchronized(committed)
-    forms = start.forms
-    val snapshot = mat.toMap
+    val start = tables
     val pending: Pending = scala.collection.mutable.ArrayBuffer.empty
     try body(pending)
     catch {
       case e: Throwable =>
-        mat.clear(); mat ++= snapshot
+        tables = start
         throw e
     }
     commitLock.synchronized {
-      def deltas(t: String) = pending.filter(_._1 == t).map(e => (e._2, e._3))
-      // a form a read attached while this edit ran is as of the edit's start
-      committed.forms.foreach { case (t, f) =>
-        if (!start.forms.contains(t) && !forms.contains(t))
-          replayed(f, deltas(t)).foreach(now => forms = forms.updated(t, now))
-      }
-      // a build keeps the deltas to replay; it is given up on a rebase or
-      // once it falls CompactAt edits behind
-      builds = builds.filter { b =>
-        deltas(b.table).foreach(d => b.log :+= d)
-        b.log.size <= CompactAt && b.log.forall { case (ins, del) => ins.rows.isDefined && del.rows.isDefined }
-      }
-      committed = State(mat.toMap, forms)
+      committed = tables
       pending.foreach { case (t, ins, del) => notifyListeners(t, ins, del) }
     }
     pending.toList
   }
   private type Pending = scala.collection.mutable.ArrayBuffer[(String, Delta, Delta)]
-
-  /** Add an edit of table `t` to `pending`, and bring its resident form
-    * up to date with it. */
-  private def record(pending: Pending, t: String, ins: Delta, del: Delta): Unit = {
-    pending += ((t, ins, del))
-    forms.get(t).foreach(f => forms = advanced(f, ins, del).fold(forms - t)(forms.updated(t, _)))
-  }
 
   /** Insert rows; all derived tables are brought current before this
     * returns (the reference's eager cascade). Returns the committed rows.
@@ -389,12 +387,8 @@ final class IncrementalGraph(
   private def commitInsert(tableName: String, committed: Delta): Seq[(String, Delta, Delta)] = {
     val none = localDelta(committed.schema, Nil)
     transactional { pending =>
-      val m = mat(tableName)
-      mat(tableName) = committed.rows match {
-        case Some(rs) => m.append(rs)
-        case None => m.rebased(m.frame.unionByName(committed.df))
-      }
-      record(pending, tableName, committed, none)
+      applied(tableName, committed, none)
+      pending += ((tableName, committed, none))
       propagate(tableName, committed, none, pending)
     }
   }
@@ -410,19 +404,27 @@ final class IncrementalGraph(
   def deleteWithEdits(tableName: String, column: String, key: Any): Seq[(String, DataFrame, DataFrame)] =
     deleteDeltas(tableName, column, key).map { case (t, ins, del) => (t, ins.df, del.df) }
 
-  /** [[deleteWithEdits]], returning each edit's deltas. */
+  /** [[deleteWithEdits]], returning each edit's deltas. A held source finds
+    * the rows in its form, and the delete is a local edit. */
   private[graft] def deleteDeltas(tableName: String, column: String, key: Any): Seq[(String, Delta, Delta)] = {
-    val m = mat.getOrElse(tableName,
+    val t = tables.getOrElse(tableName,
       throw new IllegalArgumentException(s"no table named $tableName"))
     require(byName.get(tableName).exists(_.isInstanceOf[SourceTableConfig]),
       s"$tableName is not a source table")
-    // null-safe on BOTH sides — see PipelineGraph.delete
-    val cur = m.frame
-    val deleted = frameDelta(checkpoint(cur.filter(col(column) <=> lit(key))))
+    // null-safe on BOTH sides — see PipelineGraph.delete; Spark's filter
+    // finds the rows where the form cannot (its coercion and ANSI errors)
+    val deleted = t match {
+      case h: Held => localDelta(h.form.schema, h.form.matching(column, key)
+        .getOrElse(h.frame.filter(col(column) <=> lit(key)).collect().toSeq))
+      case m: Mat => frameDelta(checkpoint(m.frame.filter(col(column) <=> lit(key))))
+    }
     val none = localDelta(deleted.schema, Nil)
     transactional { pending =>
-      mat(tableName) = m.rebased(cur.filter(!(col(column) <=> lit(key))))
-      record(pending, tableName, none, deleted)
+      t match {
+        case m: Mat => tables += tableName -> settled(m.frame.filter(!(col(column) <=> lit(key))), None)
+        case _ => applied(tableName, none, deleted)
+      }
+      pending += ((tableName, none, deleted))
       propagate(tableName, none, deleted, pending)
     }
   }
@@ -432,22 +434,24 @@ final class IncrementalGraph(
     // spurious listener calls for an edit that changed nothing
     if (inserted.isEmpty && deleted.isEmpty) return
     downstream.getOrElse(src, Nil).foreach { d =>
-      // deltas are FROZEN FIRST and tables are updated from the frozen
-      // deltas — building the new state from the raw plans would execute
-      // every delta plan twice (once for the table, once downstream), and,
-      // for an impure Action fn, desynchronize the table from what
-      // propagates
+      // deltas are FROZEN FIRST and tables are updated from them: the raw
+      // plans would run twice (for the table and downstream), and an
+      // impure Action's table would diverge from what propagates
       val (ins, del) = d match {
         case _: FunctionTableConfig | _: FilterTableConfig =>
-          (through(d, src, inserted), through(d, src, deleted))
+          val (add, rem) = (through(d, src, inserted), through(d, src, deleted))
+          (tables.get(d.name), add.rows, rem.rows) match {
+            case (Some(h: Held), Some(is), Some(ds)) =>
+              val next = h.form.updated(is, ds)
+              tables = if (next.size <= ResidentCap) tables.updated(d.name, new Held(spark, next)) else tables - d.name
+            // a view without a state stays so until its input is rebased
+            case (None, Some(_), Some(_)) =>
+            case _ => reviewed(d)
+          }
+          (add, rem)
         case _: ActionTableConfig =>
           val (add, rem) = (through(d, src, inserted), through(d, src, deleted))
-          val m = mat(d.name)
-          mat(d.name) = (add.rows, rem.rows) match {
-            case (Some(rs), Some(Seq())) => m.append(rs)
-            // multiset semantics: duplicate derived rows subtract by count
-            case _ => m.rebased(m.frame.exceptAll(rem.df).unionByName(add.df))
-          }
+          applied(d.name, add, rem)
           (add, rem)
         case a: AggregationTableConfig =>
           val keys = keysOf(Seq(inserted, deleted), Seq(a.aggregatedColumn))
@@ -478,16 +482,13 @@ final class IncrementalGraph(
           val keys = keysOf(if (insertOnly) Seq(inserted) else Seq(inserted, deleted), fks)
           upsert(u.name, keys) { old =>
             if (insertOnly) {
-              // Pure insert — the reference's per-row upsert, applied per
-              // batch: each incoming row merges ONTO the current derived
-              // row for its key (incoming columns overwrite,
-              // transform.rs:176-228); an unseen key creates a new row.
-              // O(delta) — no replay of the source log, so duplicate keys
-              // accumulated in an append-log source can never fan out into
-              // duplicate derived rows. (Rows within ONE insert batch are
-              // assumed key-unique per fk; the reference would fold them in
-              // arrival order, which a batch does not define.) Local
-              // rows pair by key on the driver and merge through the
+              // Pure insert — the reference's per-row upsert, per batch:
+              // each incoming row merges ONTO the current derived row for
+              // its key (incoming columns overwrite, transform.rs:176-228);
+              // an unseen key creates a new row. No replay of the source
+              // log, so an append-log source's repeated keys never fan out.
+              // (Rows within ONE batch are assumed key-unique per fk.)
+              // Local rows pair by key on the driver and merge through the
               // bound plan, unless the keys differ in type.
               val merged = (old.rows, inserted.rows) match {
                 case (Some(olds), Some(rs)) =>
@@ -500,17 +501,13 @@ final class IncrementalGraph(
                 Transforms.union((old.df, MatchingKey) +: fks.map(fk => (inserted.df, fk)))))
             } else {
               // Delete (or derived upsert = delete+insert): rebuild the
-              // affected keys from the remaining input rows. An append-log
-              // source may hold several rows for a rebuilt key (repeated
-              // upsert inserts): collapse each such input to its LATEST row
-              // per key (max _entryId — ingest ids are time-prefixed, see
-              // SourceOps.ensureEntryId, so max = latest edit) so the
-              // rebuild can never fan out duplicate derived rows.
-              // KNOWN DIVERGENCE: a rebuild merges tables in config order
-              // (later table wins), while the insert path above merges in
-              // arrival order like the reference — the arrival order of
-              // edits across tables is not recorded, so a rebuild cannot
-              // reproduce it.
+              // affected keys from the remaining input rows, each input
+              // collapsed to its LATEST row per key (max _entryId: ids are
+              // time-prefixed, SourceOps.ensureEntryId), so repeated upsert
+              // inserts never fan out. KNOWN DIVERGENCE: a rebuild merges
+              // tables in config order (later table wins), the insert path
+              // in arrival order like the reference; the arrival order of
+              // edits across tables is not recorded.
               replacing(old, Transforms.union(u.tablesAndForeignKeys.map { case (t, fk) =>
                 val affected = keys.select(table(t), fk)
                 val collapsed =
@@ -526,7 +523,7 @@ final class IncrementalGraph(
             }
           }
       }
-      record(pending, d.name, ins, del)
+      pending += ((d.name, ins, del))
       propagate(d.name, ins, del, pending)
     }
   }
@@ -537,35 +534,40 @@ final class IncrementalGraph(
       val (schema, f) = Transforms.actionRows(ActionRegistry.get(a.actionName), in.schema)
       localDelta(schema, rs.flatMap(r => f(new GenericRowWithSchema(r.toSeq.toArray, in.schema))))
     case (_, Some(rs)) =>
-      val plan = boundFor(d.name, in.schema)(RowPlan.over(spark, in.schema)(df => compute(d, Map(src -> df))))
+      val plan = rowPlan(d, src, in.schema)
       localDelta(plan.schema, plan(rs))
     case _ => frameDelta(checkpoint(compute(d, Map(src -> in.df))))
   }
 
   /** `df` as the replacement of the keyed rows `old`: in their column
     * order, frozen like them. */
-  private def replacing(old: Delta, df: DataFrame): Delta = freeze(inOrder(df, old.schema), old.rows.isDefined)
+  private def replacing(old: Delta, df: DataFrame): Delta = {
+    val rep = inOrder(df, old.schema)
+    if (old.rows.isDefined) localDelta(rep.schema, rep.collect().toSeq) else frameDelta(checkpoint(rep))
+  }
 
   /** Replace the rows of keyed table `name` under `keys` with
     * `replacement(old rows)`, which are in the table's column order and
     * frozen like the old rows; returns the (inserted, deleted) deltas. */
   private def upsert(name: String, keys: Keys)(replacement: Delta => Delta): (Delta, Delta) = {
-    val m = mat(name)
+    val key = keyOf.get(name)
+    val t = tables(name)
     keys match {
       case LocalKeys(ks) =>
-        val form = forms.getOrElse(name, {
-          val made = residentOf(m.frame, m.key)
-          forms = forms.updated(name, made)
-          made
-        })
-        val old = localDelta(m.schema, form.fold(m.rowsUnder(ks))(_.rowsUnder(ks)))
+        val old = t match {
+          case h: Held => localDelta(h.form.schema, h.form.rowsUnder(ks))
+          case m: Mat => localDelta(m.schema, m.rowsUnder(ks))
+        }
         val rep = replacement(old)
-        mat(name) = m.upsert(ks, rep.rows.get)
+        tables += name -> (t match {
+          case h: Held => kept(h.form.updated(rep.rows.get, old.rows.get), key)
+          case m: Mat => m.upsert(ks, rep.rows.get)
+        })
         (rep, old)
       case k: FrameKeys =>
-        val old = frameDelta(checkpoint(k.select(m.frame, m.key.get)))
+        val old = frameDelta(checkpoint(k.select(t.frame, key.get)))
         val rep = replacement(old)
-        mat(name) = m.rebased(k.drop(m.frame, m.key.get).unionByName(rep.df))
+        tables += name -> settled(k.drop(t.frame, key.get).unionByName(rep.df), key)
         (rep, old)
     }
   }
@@ -576,52 +578,32 @@ object IncrementalGraph {
   import Transforms.groupKey
 
   /** One table's change in an edit, frozen: driver-local `rows` of
-    * `schema` when the edit is local, else a checkpointed frame. Local
-    * rows get their frame, a LocalRelation, only when it is asked for. */
+    * `schema` when the edit is local, whose LocalRelation frame is built
+    * only when asked for, else a checkpointed frame. */
   private[graft] final class Delta(val schema: StructType, val rows: Option[Seq[Row]], frame: () => DataFrame) {
     lazy val df: DataFrame = frame()
     lazy val isEmpty: Boolean = rows.fold(df.isEmpty)(_.isEmpty)
   }
 
-  /** The committed state: each materialized table, and the resident form
-    * of each table that has one (`None` above [[ResidentCap]]). */
-  private[operators] final case class State(mats: Map[String, Mat], forms: Map[String, Option[Resident]])
+  /** A materialized table's state in a commit. Immutable, so a map of
+    * these is a snapshot and a rollback point. */
+  private[operators] sealed trait Table { def frame: DataFrame }
 
-  /** A resident form being built off the dispatch thread for `table`, and
-    * the deltas of that table committed since its pin, in commit order. */
-  private[operators] final class Build(val table: String) {
-    var log: Vector[(Delta, Delta)] = Vector.empty
+  /** A table of at most [[ResidentCap]] rows: its resident form, the
+    * table's only copy. Its frame scans the form's rows as they are, an
+    * RDD of them built once, when first asked for: a LocalRelation would
+    * copy them, and the optimizer runs a filter over one row by row before
+    * it folds the filter's casts, so a key failing its ANSI cast would read
+    * as no rows when every value it meets is null. */
+  private[operators] final class Held(spark: SparkSession, val form: Resident) extends Table {
+    lazy val frame: DataFrame = spark.createDataFrame(spark.sparkContext.parallelize(form.rows.toSeq, 1), form.schema)
   }
 
-  /** The resident form of `frame`'s rows, keyed on `key`: one collect() of
-    * at most [[ResidentCap]] + 1 rows; None when there are more. */
-  private def residentOf(frame: DataFrame, key: Option[String]): Option[Resident] = {
-    val rows = frame.limit(ResidentCap + 1).collect()
-    if (rows.length > ResidentCap) None else Some(Resident(frame.schema, rows.toSeq, key))
-  }
-
-  /** Form `f` after an edit of its table inserted `ins` and deleted `del`;
-    * None, to drop it, unless both are local rows that line up with it. A
-    * table above the cap stays so until a rebase drops the mark. */
-  private def advanced(f: Option[Resident], ins: Delta, del: Delta): Option[Option[Resident]] =
-    (ins.rows, del.rows, f) match {
-      case (Some(_), Some(_), None) => Some(None)
-      case (Some(is), Some(ds), Some(r)) if (is.isEmpty || r.accepts(ins.schema)) && (ds.isEmpty || r.accepts(del.schema)) =>
-        val next = r.updated(is, ds)
-        Some(if (next.size > ResidentCap) None else Some(next))
-      case _ => None
-    }
-
-  /** Form `f` after the edits `deltas` of its table, in order; None once
-    * one of them drops it. */
-  private def replayed(f: Option[Resident], deltas: Iterable[(Delta, Delta)]): Option[Option[Resident]] =
-    deltas.foldLeft(Option(f)) { case (g, (ins, del)) => g.flatMap(advanced(_, ins, del)) }
-
-  /** One materialized table: the rows of the checkpointed `base` whose
-    * `key` is not in `dead`, plus driver-local `rows` (in base column
-    * order). Immutable, so a map snapshot of these is a rollback point. */
+  /** A table above [[ResidentCap]] rows: the rows of the checkpointed
+    * `base` whose `key` is not in `dead`, plus driver-local `rows` (in base
+    * column order). */
   private[operators] final case class Mat(base: DataFrame, key: Option[String] = None,
-                               dead: Set[Any] = Set.empty, rows: Vector[Row] = Vector.empty) {
+                               dead: Set[Any] = Set.empty, rows: Vector[Row] = Vector.empty) extends Table {
     /** Schema of the local rows: the base's, every column nullable. */
     def schema: StructType = StructType(base.schema.map(_.copy(nullable = true)))
 
@@ -652,9 +634,7 @@ object IncrementalGraph {
     // runs one job per partition, so appended partitions would add up
     private def compacted: Mat =
       if (rows.size + dead.size <= CompactAt) this
-      else rebased(frame.coalesce(math.max(1, base.queryExecution.toRdd.getNumPartitions)))
-
-    def rebased(next: DataFrame): Mat = Mat(checkpoint(next), key)
+      else Mat(checkpoint(frame.coalesce(math.max(1, base.queryExecution.toRdd.getNumPartitions))), key)
   }
 
   /** The keys an edit touches: a driver-local set when every delta they
@@ -673,8 +653,8 @@ object IncrementalGraph {
       df.join(broadcast(keys), df(column) <=> keys("__k"), "left_anti")
   }
 
-  /** Local rows plus dead keys a materialized table holds before it
-    * compacts into a new checkpointed base. */
+  /** Local rows plus dead keys a [[Mat]] holds before it compacts into a
+    * new checkpointed base. */
   private[operators] val CompactAt = 64
 
   /** Rows a table may have and still be held resident on the driver. */

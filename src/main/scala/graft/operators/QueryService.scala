@@ -6,12 +6,13 @@ import org.apache.spark.sql.functions._
 /** The reference's client-facing query surface over materialized tables
   * (reference: reactive_db/src/networking/network_types.rs:58-66, dispatch
   * db_thread.rs:52-113), as Spark plans: each operation is a filter (and a
-  * sort) over the table's frame, run as Spark jobs when the caller
-  * collects it. The façade answers these reads from a table's driver-side
-  * index instead, [[Resident]], and comes here only when the table is
-  * above the resident cap, the column is not indexable, or the key is of
-  * another type than the column (so the coercion and ANSI errors are
-  * Spark's). Both answer with the same rows.
+  * sort) over the table's frame, run when the caller collects it. The
+  * façade answers these reads from a resident table's driver-side index
+  * instead, [[Resident]], the table's only store, and comes here only when
+  * the table is above the resident cap (a Spark job over its checkpoint),
+  * the column is not indexable, or the key is of another type than the
+  * column (over a scan of the table's rows, so the coercion and ANSI
+  * errors are Spark's). Both answer with the same rows.
   *
   * Quirk preserved for API fidelity: `greaterThan` is INCLUSIVE (>=), like
   * the reference's btree walk (reference: btree.rs:208-213). Range results

@@ -3,10 +3,9 @@ package graft.operators
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.types._
-import scala.collection.immutable.{HashMap, TreeMap}
+import scala.collection.immutable.{HashMap, TreeMap, VectorMap}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
@@ -24,6 +23,9 @@ import scala.util.Try
   *   - A keyed table (an Aggregation or a Union) also maps each key, under
   *     Spark's key equality ([[Transforms.groupKey]]), to its rows; null is
   *     a key of its own.
+  *   - A multiset of every row lists the table's rows, so a table it holds
+  *     needs no other copy. It keeps arrival order, which a Double sum over
+  *     a frame of the rows depends on.
   *
   * The reads answer as [[QueryService]] does over the table's frame, row
   * for row: equality as `===`, `lessThan` strict, `greaterThan` inclusive,
@@ -36,31 +38,32 @@ private[graft] final class Resident private (
     val schema: StructType,
     val size: Int,
     key: Option[Int],
+    all: VectorMap[Row, Int],
     byKey: HashMap[Any, List[Row]],
     sorted: Map[Int, TreeMap[Any, List[Row]]]) {
   import Resident._
 
+  /** Every row, as often as the table holds it, in arrival order (a
+    * row's copies together). */
+  def rows: Iterator[Row] = all.iterator.flatMap { case (r, n) => Iterator.fill(n)(r) }
+
   /** Rows whose key is one of `keys` (null-safe). */
   def rowsUnder(keys: Set[Any]): Seq[Row] = keys.toSeq.map(keyOf).distinct.flatMap(byKey.getOrElse(_, Nil))
-
-  /** Whether rows of `s` line up with this form's: the same columns, in
-    * the same order, of the same types. */
-  def accepts(s: StructType): Boolean =
-    s.fieldNames.sameElements(schema.fieldNames) &&
-      s.fields.zip(schema.fields).forall { case (a, b) => DataTypeUtils.equalsIgnoreNullability(a.dataType, b.dataType) }
 
   /** This form after an edit deleted the rows `del` (each one of this
     * form's rows, by value) and inserted `ins`, both in this schema. */
   def updated(ins: Seq[Row], del: Seq[Row]): Resident = {
+    var a = all
     var k = byKey
     var s = sorted
-    def each(rs: Seq[Row], f: Row => Option[List[Row]] => Option[List[Row]]): Unit = rs.foreach { r =>
+    def each(rs: Seq[Row], count: Int, f: Row => Option[List[Row]] => Option[List[Row]]): Unit = rs.foreach { r =>
+      a = a.updatedWith(r)(n => Some(n.getOrElse(0) + count).filter(_ > 0))
       key.foreach(i => k = k.updatedWith(keyOf(r.get(i)))(f(r)))
       s = s.map { case (i, m) => i -> (if (r.isNullAt(i)) m else m.updatedWith(catalyst(i)(r.get(i)))(f(r))) }
     }
-    each(del, removing)
-    each(ins, adding)
-    new Resident(schema, size + ins.size - del.size, key, k, s)
+    each(del, -1, removing)
+    each(ins, 1, adding)
+    new Resident(schema, size + ins.size - del.size, key, a, k, s)
   }
 
   private lazy val catalyst: Map[Int, Any => Any] =
@@ -78,6 +81,12 @@ private[graft] final class Resident private (
     }
   }
 
+  /** Rows whose `column` matches `key` under Spark's null-safe `<=>`; None
+    * when the Spark path must find them, as for a read. */
+  def matching(column: String, key: Any): Option[Seq[Row]] =
+    if (key != null) getAll(column, key).map(_.toSeq)
+    else Some(schema.fieldNames.indexOf(column)).filter(_ >= 0).map(i => rows.filter(_.isNullAt(i)).toSeq)
+
   def findOne(column: String, key: Any): Option[Iterable[Row]] = getAll(column, key).map(_.take(1))
 
   def getAll(column: String, key: Any): Option[Iterable[Row]] = probe(column, key).map {
@@ -94,9 +103,12 @@ private[graft] final class Resident private (
 }
 
 private[graft] object Resident {
-  /** The form of `rows` of `schema`, keyed on column `key` when given. */
-  def apply(schema: StructType, rows: Seq[Row], key: Option[String]): Resident = {
+  /** The form of `rows` of `schema`, keyed on column `key` when given.
+    * Every column of the form is nullable, as any edit may fill it so. */
+  def apply(schema0: StructType, rows: Seq[Row], key: Option[String]): Resident = {
+    val schema = StructType(schema0.map(_.copy(nullable = true)))
     val k = key.map(schema.fieldIndex)
+    val all = rows.foldLeft(VectorMap.empty[Row, Int])((m, r) => m.updatedWith(r)(n => Some(n.getOrElse(0) + 1)))
     val byKey = k.fold(HashMap.empty[Any, List[Row]]) { i =>
       rows.foldLeft(HashMap.empty[Any, List[Row]])((m, r) => m.updatedWith(keyOf(r.get(i)))(adding(r)))
     }
@@ -109,7 +121,7 @@ private[graft] object Resident {
       rows.foreach(r => if (!r.isNullAt(i)) groups.merge(toCatalyst(r.get(i)), List(r), (a, b) => b ::: a))
       i -> TreeMap.from(groups.asScala)(ordering)
     }.toMap
-    new Resident(schema, rows.size, k, byKey, sorted)
+    new Resident(schema, rows.size, k, all, byKey, sorted)
   }
 
   /** Types whose Spark ordering is a total order that `===`, `<` and `>=`

@@ -140,8 +140,7 @@ class GraftServerSpec extends SparkSpec {
   private def idOf(id: Int): String = f"00000000-0000-0000-0000-$id%012d"
   private def query(id: Int, q: String): String = s"""{"Query":{"request_id":"${idOf(id)}","query":$q}}"""
 
-  /** The test_cfg server with `testTable` seeded by a checkpointed frame,
-    * so reads of it run Spark jobs while a testTable insert runs none. */
+  /** The test_cfg server with `testTable` seeded with (i, i) for i in 1..20. */
   private def seededServer(): GraftServer = {
     ActionRegistry.register(GraftAction("TestAction", identity))
     val seed = spark.createDataFrame(
@@ -534,8 +533,8 @@ class GraftServerSpec extends SparkSpec {
       (0 until ok.size()).map(i => ok.get(i).get("testForIteration").get("Integer").asLong()).toSet
     }
     try {
-      // each read runs Spark jobs over the seeded base; the insert after
-      // it runs none, so it finishes first unless order is kept
+      // reads run on the read thread and inserts on the dispatch thread,
+      // so an insert could overtake the read before it unless order is kept
       c.sendAll(query(1, getAll), query(2, insert(500)), query(3, getAll), query(4, insert(501)),
         query(5, getAll))
       val answers = (1 to 5).map(_ => c.recv())
@@ -669,7 +668,8 @@ class GraftServerSpec extends SparkSpec {
       (0 until 3).foreach { round =>
         id += 1
         assert(rows(edit(id, s"""{"DeleteData":{"table":"grades","column":"name","key":{"Str":"g$round"}}}""")).size() > 0)
-        // past IncrementalGraph.CompactAt local rows: testTable compacts
+        // past IncrementalGraph.CompactAt local rows, which a resident
+        // testTable takes without a compaction
         (0 until 65).foreach { i =>
           id += 1
           val it = 1000 * (round + 1) + i
@@ -742,7 +742,7 @@ class GraftServerSpec extends SparkSpec {
       c.recv()
       c.send(query(2, """{"InsertData":{"table":"grades","entry":{"name":{"Str":"Alex"},"grade":{"Integer":90}}}}"""))
       c.recv()
-      // the first read of each table makes it resident
+      // a first read of each table, before the counted ones
       reads.zipWithIndex.foreach { case ((t, col, key), i) => ask(10 + i, "GetAll", t, col, key) }
       val caller = Thread.currentThread()
       var answers = Seq.empty[JsonNode]
@@ -829,6 +829,46 @@ class GraftServerSpec extends SparkSpec {
         }
       assert(ended && events < n, s"$events of $n Events before the end")
     } finally { stalled.close(); c.close(); server.close() }
+  }
+
+  test("a closed subscriber's subscriptions end with its connection: a later insert renders no Event for it") {
+    ActionRegistry.register(GraftAction("TestAction", identity))
+    val graph = new IncrementalGraph(spark, PipelineConfig.fromYaml(yaml))
+    val server = new GraftServer(graph)
+    val long = StructType(Seq(StructField("testForIndex", LongType), StructField("testForIteration", LongType)))
+    // a frame that plans to a Spark job: its edit's deltas are frames, and
+    // each subscriber's Event streams its rows off them with one job
+    def insertJobs(i: Long): Int =
+      jobsDuring(graph.insert("testTable", spark.createDataFrame(Seq(Row(i, i)).asJava, long).repartition(1))).count
+    val (gone, kept) = (new WireClient(server.port), new WireClient(server.port))
+    def event(c: WireClient): JsonNode = c.recvMatching(_.has("Event"))
+    try {
+      val none = insertJobs(1)
+      Seq(gone, kept).zipWithIndex.foreach { case (c, i) =>
+        c.send("""{"StartListen":{"table_name":"derived","event":"Insert"}}""")
+        // a read behind the listen on its connection is answered once the
+        // listen is live
+        c.send(query(i + 1, """{"GetAll":{"table":"derived","column":"newColumn","key":{"Integer":3}}}"""))
+        assert(rows(c.recvMatching(_.has("RequestResponse"))).size() == 1)
+      }
+      val both = insertJobs(2)
+      assert(both > none, s"$both Spark jobs with two subscribers, $none with none")
+      Seq(gone, kept).foreach(c => assert(event(c).get("Event").get("table_name").asText() == "derived"))
+      gone.close()
+      // the server learns of the close on that connection's reader thread
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(10)
+      var i = 3L
+      var one = insertJobs(i)
+      while (one == both && System.nanoTime() < deadline) {
+        event(kept)
+        Thread.sleep(50)
+        i += 1
+        one = insertJobs(i)
+      }
+      // one render job fewer: the closed subscriber's
+      assert(one == both - 1, s"$one Spark jobs after one of two subscribers closed: $none with none, $both with two")
+      assert(event(kept).get("Event").get("table_name").asText() == "derived")
+    } finally { gone.close(); kept.close(); server.close() }
   }
 
   test("fuzzed frames get an Err or a close; the dispatch and read threads live on and a fresh connection is answered") {

@@ -56,7 +56,7 @@ class IncrementalGraphSpec extends SparkSpec {
     * them: GreaterThan on the first of a few columns every test table
     * fills, from its smallest value. */
   private def residentBag(inc: IncrementalGraph, t: String): Seq[String] = {
-    val form = inc.pinnedAt(pin => pin(t)).built().getOrElse(fail(s"$t is not resident"))
+    val form = inc.pinnedAt(pin => pin(t)).resident.getOrElse(fail(s"$t is not resident"))
     val names = form.schema.fieldNames
     val keep = names.filterNot(Seq("_entryId", "_sourceEntryId").contains).sorted.map(names.indexOf(_))
     val read = (Seq("name", "matchingKey", "aggregatedColumn").map(_ -> "") ++
@@ -209,7 +209,7 @@ class IncrementalGraphSpec extends SparkSpec {
     // a flaky action: bootstraps fine, then throws while the cascade
     // computes the action table's delta — AFTER the Function, Aggregation
     // and Union nodes upstream of it in the cascade applied their part of
-    // the edit (local rows, tombstones, and on the batch edit a compaction)
+    // the edit to their resident forms
     @volatile var explode = false
     ActionRegistry.register(GraftAction("flakyAction", identity,
       s => { if (explode) throw new RuntimeException("boom"); s }))
@@ -386,9 +386,9 @@ class IncrementalGraphSpec extends SparkSpec {
   test("a one-row grades insert through test_cfg runs no Spark job once its keyed tables are resident") {
     val inc = testCfgGraph()
     inc.insert("users", rows(userSchema, Row("Alex", 22L)))
-    // the first keyed upserts make unionTest and aggregationTest resident
     inc.insert("grades", rows(gradeSchema, Row("Alex", 90L)))
-    // compact: the resident forms outlive the new checkpointed bases
+    // a batch past CompactAt rows: resident tables take it without a
+    // compaction
     inc.insert("grades", rows(gradeSchema, (0 to IncrementalGraph.CompactAt).map(i => Row(s"n$i", 1L)): _*))
     var edits: Seq[(String, Seq[Row], Seq[Row])] = Nil
     val jobs = jobsDuring {
@@ -882,9 +882,10 @@ class IncrementalGraphSpec extends SparkSpec {
       .toMap == Map("Alex" -> "7", "Zed" -> "8"))
   }
 
+  private val testSchema = StructType(Seq(StructField("testForIndex", LongType), StructField("testForIteration", LongType)))
+
   test("a one-row testTable insert resolves no plan and runs no job once its nodes are bound") {
     val inc = testCfgGraph()
-    val testSchema = StructType(Seq(StructField("testForIndex", LongType), StructField("testForIteration", LongType)))
     // the first local edit through each node binds it
     inc.insert("testTable", rows(testSchema, Row(1L, 20L)))
     val df = rows(testSchema, Row(2L, 30L))
@@ -906,7 +907,6 @@ class IncrementalGraphSpec extends SparkSpec {
 
   test("a one-row users or grades insert resolves no plan and runs no job once its keyed tables are resident") {
     val inc = testCfgGraph()
-    // the first keyed upserts make unionTest and aggregationTest resident
     inc.insert("users", rows(userSchema, Row("Alex", 22L)))
     inc.insert("grades", rows(gradeSchema, Row("Alex", 90L)))
     def counted(table: String, df: DataFrame): (Analyses, Jobs) = {
@@ -1079,5 +1079,120 @@ class IncrementalGraphSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](inc.insert("grades", rows(gradeSchema, Row("Alex", 1L))))
     assert(e.getMessage.contains("non-deterministic"), e.getMessage)
     assert(inc.table("grades").count() == 0)
+  }
+
+  /** The test_cfg graph seeded as the `ivm_ingest` benchmark seeds it:
+    * each source a frame over an RDD of `defaultParallelism` slices, one
+    * users and one grades row per name. */
+  private def seededTestCfgGraph(): IncrementalGraph = {
+    ActionRegistry.register(GraftAction("IdentityAction", identity))
+    def frame(schema: StructType, rs: Seq[Row]): DataFrame =
+      spark.createDataFrame(spark.sparkContext.parallelize(rs, spark.sparkContext.defaultParallelism), schema)
+    new IncrementalGraph(spark, PipelineConfig.fromYaml(testCfg), Map(
+      "testTable" -> frame(testSchema, (0L until 200L).map(i => Row(i % 20, 10 + i))),
+      "users" -> frame(userSchema, (0 until 20).map(i => Row(s"u$i", 20L + i))),
+      "grades" -> frame(gradeSchema, (0 until 20).map(i => Row(s"u$i", 50L + i)))))
+  }
+
+  /** Whether `e` or one of its causes is Spark's failed ANSI cast. */
+  private def castFailed(e: Throwable): Boolean =
+    causes(e).exists(x => String.valueOf(x.getMessage).contains("CAST_INVALID_INPUT"))
+
+  test("a seeded test_cfg bootstrap runs one read per source and per keyed table, and nothing else") {
+    var inc: IncrementalGraph = null
+    val jobs = jobsDuring { inc = seededTestCfgGraph() }
+    // each source's seed read: 2 jobs, the limit's first slice, then the
+    // other three; unionTest's read: a shuffle stage per input, then the
+    // read; aggregationTest's: a shuffle stage, then the read. The
+    // Function, Filter and Action tables take their rows from their
+    // inputs' on the driver
+    assert(jobs.count == 11, s"$jobs for a seeded bootstrap")
+    assertRecomputes(inc, testCfgTables.filterNot(_ == "unionTest"))
+    assert(bag(inc.table("unionTest")).size == 20)
+  }
+
+  test("right after a seeded bootstrap, the first FindOne, GetAll, LessThan and GreaterThan on every table run no Spark job") {
+    val inc = seededTestCfgGraph()
+    val reads = Seq("testTable" -> ("testForIndex" -> 3L), "users" -> ("name" -> "u3"), "grades" -> ("grade" -> 53L),
+      "derived" -> ("newColumn" -> 15L), "unionTest" -> ("matchingKey" -> "u3"), "filterTest" -> ("testForIndex" -> 3L),
+      "aggregationTest" -> ("aggregatedColumn" -> "u3"), "actionTest" -> ("name" -> "u3"))
+    assert(reads.map(_._1).sorted == testCfgTables.sorted)
+    var answers = Seq.empty[Seq[Int]]
+    val jobs = jobsDuring {
+      answers = reads.map { case (t, (c, k)) =>
+        val form = inc.pinnedAt(pin => pin(t)).resident.getOrElse(fail(s"$t is not resident"))
+        Seq(form.findOne(c, k), form.getAll(c, k), form.lessThan(c, k), form.greaterThan(c, k))
+          .map(_.getOrElse(fail(s"$t.$c = $k is not answered from the form")).size)
+      }
+    }
+    assert(jobs.count == 0, s"$jobs for the first reads after a bootstrap")
+    val q = new QueryService(inc.table _)
+    reads.zip(answers).foreach { case ((t, (c, k)), sizes) =>
+      assert(sizes == Seq(q.findOne(t, c, k), q.getAll(t, c, k), q.lessThan(t, c, k), q.greaterThan(t, c, k))
+        .map(_.count().toInt), s"$t.$c = $k")
+      assert(sizes(1) > 0, s"$t.$c = $k reads no row")
+    }
+  }
+
+  test("on a seeded bootstrap, the first one-row users insert and the first grades insert run no Spark job") {
+    val inc = seededTestCfgGraph()
+    val users = jobsDuring(inc.insertWithEdits("users", rows(userSchema, Row("u3", 44L))))
+    assert(users.count == 0, s"$users for the first users insert")
+    val grades = jobsDuring(inc.insertWithEdits("grades", rows(gradeSchema, Row("u4", 80L))))
+    assert(grades.count == 0, s"$grades for the first grades insert")
+    assertRecomputes(inc, Seq("derived", "filterTest", "aggregationTest", "actionTest"))
+    val union = inc.table("unionTest").collect().map(r => r.getAs[String]("matchingKey") ->
+      ((r.getAs[Any]("age"), r.getAs[Any]("grade")))).toMap
+    assert(union("u3") == ((44L, 53L)) && union("u4") == ((24L, 80L)))
+  }
+
+  test("on a seeded bootstrap, a testTable delete finds its rows in the form: no Spark job and no plan") {
+    val inc = seededTestCfgGraph()
+    var deltas: Seq[(String, IncrementalGraph.Delta, IncrementalGraph.Delta)] = Nil
+    var analyses = Analyses(Nil)
+    val jobs = jobsDuring { analyses = analysesDuring { deltas = inc.deleteDeltas("testTable", "testForIteration", 17L) } }
+    assert(jobs.count == 0, s"$jobs for a testTable delete")
+    assert(analyses.count == 0, s"$analyses for a testTable delete")
+    assert(deltas.map(d => (d._1, d._2.rows.get.size, d._3.rows.get.size)) ==
+      Seq(("testTable", 0, 1), ("derived", 0, 1), ("filterTest", 0, 1)))
+    assertRecomputes(inc, Seq("derived", "filterTest"))
+    assert(inc.table("testTable").count() == 199)
+  }
+
+  test("on a seeded bootstrap, a grades delete runs only the key recomputes of its Union and Aggregation") {
+    val inc = seededTestCfgGraph()
+    var deltas: Seq[(String, IncrementalGraph.Delta, IncrementalGraph.Delta)] = Nil
+    val jobs = jobsDuring { deltas = inc.deleteDeltas("grades", "name", "u3") }
+    // the collects of the two recomputes, 2 jobs each
+    assert(jobs.count == 4, s"$jobs for a grades delete")
+    assert(jobs.callSites.forall(_.startsWith("collect at IncrementalGraph.scala")), s"$jobs")
+    assert(deltas.map(d => (d._1, d._2.rows.get.size, d._3.rows.get.size)) ==
+      Seq(("grades", 0, 1), ("unionTest", 1, 1), ("aggregationTest", 0, 1), ("actionTest", 0, 1)))
+    assertRecomputes(inc, testCfgTables)
+  }
+
+  test("a null-key delete removes the rows whose column is null, through the form, and cascades them") {
+    val inc = seededTestCfgGraph()
+    inc.insert("testTable", rows(testSchema, Row(null, 15L), Row(null, 16L), Row(3L, null)))
+    inc.insert("grades", rows(gradeSchema, Row(null, 7L), Row("u5", null)))
+    val jobs = jobsDuring {
+      assert(inc.deleteDeltas("testTable", "testForIndex", null).head._3.rows.get.size == 2)
+    }
+    assert(jobs.count == 0, s"$jobs for a null-key testTable delete")
+    assert(bag(inc.table("testTable")).count(_.startsWith("null|")) == 0)
+    assert(inc.delete("grades", "name", null).count() == 1)
+    assert(inc.delete("grades", "grade", null).count() == 1)
+    assertRecomputes(inc, testCfgTables)
+  }
+
+  test("a Str key on an Integer column fails a delete with Spark's CAST_INVALID_INPUT and rolls back; a numeric Str casts") {
+    val inc = seededTestCfgGraph()
+    assertRollsBack(inc, testCfgTables, Seq(
+      () => inc.delete("testTable", "testForIndex", "abc"),
+      () => inc.delete("grades", "grade", "x")), expected = castFailed)
+    // the form leaves the key to Spark, whose cast makes "3" a 3
+    assert(inc.delete("testTable", "testForIndex", "3").count() == 10)
+    assert(inc.table("testTable").filter("testForIndex = 3").isEmpty)
+    assertRecomputes(inc, testCfgTables)
   }
 }

@@ -84,8 +84,8 @@ class ResidentPropertySpec extends SparkSpec {
     assert(r.passed, r.status.toString)
   }
 
-  /** Table `t`'s resident form, built if it has none. */
-  private def resident(inc: IncrementalGraph, t: String): Option[Resident] = inc.pinnedAt(pin => pin(t)).built()
+  /** Table `t`'s resident form in the last committed state. */
+  private def resident(inc: IncrementalGraph, t: String): Option[Resident] = inc.pinnedAt(pin => pin(t)).resident
 
   private val kinds = Seq("FindOne", "GetAll", "LessThan", "GreaterThan")
 
@@ -181,8 +181,9 @@ class ResidentPropertySpec extends SparkSpec {
 
   test("tables straddling the resident cap and crossing a compaction answer as the Spark path") {
     val cap = IncrementalGraph.ResidentCap
-    // the CompactAt + 1st single-row insert compacts the source, and the
-    // CompactAt + 5th takes it past the cap
+    // the CompactAt + 5th single-row insert takes the source past the cap,
+    // where a batch of CompactAt + 1 rows compacts it; deletes then take
+    // it back under the cap
     check(Prop.forAll(Gen.listOfN(IncrementalGraph.CompactAt + 6, item), Gen.long) { (more, readSeed) =>
       val rnd = new Random(readSeed)
       val start = cap - IncrementalGraph.CompactAt - 4
@@ -198,16 +199,28 @@ class ResidentPropertySpec extends SparkSpec {
           |    source_table: items
           |    functions: ["k ~ k", "g ~ i", "h ~ f * 2"]
           |""".stripMargin), Map("items" -> seed))
-      val under = Seq("items", "shaped").forall(t => sameRead(inc, t, rnd))
-      val crossing = more.zipWithIndex.forall { case (r, n) =>
-        inc.insert("items", frame(itemSchema, Seq(r)))
-        val rows = start + n + 1
-        Seq("items", "shaped").forall { t =>
-          resident(inc, t).isDefined == (rows <= cap) &&
-            (rows > cap || sameRead(inc, t, rnd))
-        }
+      var rows = start.toInt
+      // both tables are resident exactly while within the cap, and every
+      // read answers as the Spark path on either side of it
+      def reads(): Boolean = Seq("items", "shaped").forall { t =>
+        resident(inc, t).isDefined == (rows <= cap) && (rows > cap || sameRead(inc, t, rnd))
       }
-      under && crossing
+      val under = reads()
+      val crossing = more.forall { r =>
+        inc.insert("items", frame(itemSchema, Seq(r)))
+        rows += 1
+        reads()
+      }
+      inc.insert("items", frame(itemSchema, more.take(IncrementalGraph.CompactAt + 1)))
+      rows += IncrementalGraph.CompactAt + 1
+      val compacted = reads()
+      // a seed row each (no generated row has these `i`), then every seed
+      // row whose `k` is "3" (no generated row has it)
+      val back = Seq[(String, Any)]("i" -> 100L, "i" -> 101L, "k" -> "3").forall { case (c, key) =>
+        rows -= inc.delete("items", c, key).count().toInt
+        reads()
+      }
+      under && crossing && compacted && back && rows <= cap
     }, n = 2)
   }
 }
