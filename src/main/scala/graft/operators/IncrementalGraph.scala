@@ -247,22 +247,18 @@ final class IncrementalGraph(
     }
   }
 
-  /** View `v`'s state from its input's. A view that calls a user-registered
-    * function, which may block or cost anything, or a non-deterministic
-    * one, whose rows a form would fix, has none. */
+  /** View `v`'s state: held, through its bound plan, when its input is
+    * held, unless it calls a user-registered function, which may block or
+    * cost anything, or a non-deterministic one, whose rows a form would
+    * fix. Otherwise it has none. */
   private def reviewed(v: DerivedTableConfig): Unit = {
     val src = v.inputTables.head
     def holdable(df: DataFrame) = df.queryExecution.analyzed.find(_.expressions
       .exists(e => !e.deterministic || e.exists(_.isInstanceOf[UserDefinedExpression]))).isEmpty
-    val state = tables.get(src) match {
-      case Some(h: Held) =>
-        Option.when(holdable(compute(v, Map(src -> RowPlan.empty(spark, h.form.schema))))) {
-          val plan = rowPlan(v, src, h.form.schema)
-          held(plan.schema, plan(h.form.rows.toSeq), None)
-        }
-      case _ =>
-        val df = view(v, frameOf(src, tables))
-        if (holdable(df)) fits(df).map(held(df.schema, _, None)) else None
+    val state = tables.get(src).collect {
+      case h: Held if holdable(compute(v, Map(src -> RowPlan.empty(spark, h.form.schema)))) =>
+        val plan = rowPlan(v, src, h.form.schema)
+        held(plan.schema, plan(h.form.rows.toSeq), None)
     }
     tables = state.fold(tables - v.name)(tables.updated(v.name, _))
   }
@@ -596,7 +592,7 @@ object IncrementalGraph {
     * it folds the filter's casts, so a key failing its ANSI cast would read
     * as no rows when every value it meets is null. */
   private[operators] final class Held(spark: SparkSession, val form: Resident) extends Table {
-    lazy val frame: DataFrame = spark.createDataFrame(spark.sparkContext.parallelize(form.rows.toSeq, 1), form.schema)
+    lazy val frame: DataFrame = spark.createDataFrame(spark.sparkContext.parallelize(form.rows.toIndexedSeq, 1), form.schema)
   }
 
   /** A table above [[ResidentCap]] rows: the rows of the checkpointed

@@ -39,6 +39,7 @@ private[graft] final class Resident private (
     val size: Int,
     key: Option[Int],
     all: VectorMap[Row, Int],
+    dropped: Int,
     byKey: HashMap[Any, List[Row]],
     sorted: Map[Int, TreeMap[Any, List[Row]]]) {
   import Resident._
@@ -50,20 +51,29 @@ private[graft] final class Resident private (
   /** Rows whose key is one of `keys` (null-safe). */
   def rowsUnder(keys: Set[Any]): Seq[Row] = keys.toSeq.map(keyOf).distinct.flatMap(byKey.getOrElse(_, Nil))
 
-  /** This form after an edit deleted the rows `del` (each one of this
-    * form's rows, by value) and inserted `ins`, both in this schema. */
+  /** This form after an edit deleted the rows `del` and inserted `ins`,
+    * both in this schema. A deleted row this form does not hold is not
+    * deleted. */
   def updated(ins: Seq[Row], del: Seq[Row]): Resident = {
-    var a = all
-    var k = byKey
-    var s = sorted
-    def each(rs: Seq[Row], count: Int, f: Row => Option[List[Row]] => Option[List[Row]]): Unit = rs.foreach { r =>
-      a = a.updatedWith(r)(n => Some(n.getOrElse(0) + count).filter(_ > 0))
+    var (a, d, n, k, s) = (all, dropped, size, byKey, sorted)
+    def indexed(r: Row, f: Row => Option[List[Row]] => Option[List[Row]]): Unit = {
       key.foreach(i => k = k.updatedWith(keyOf(r.get(i)))(f(r)))
       s = s.map { case (i, m) => i -> (if (r.isNullAt(i)) m else m.updatedWith(catalyst(i)(r.get(i)))(f(r))) }
     }
-    each(del, -1, removing)
-    each(ins, 1, adding)
-    new Resident(schema, size + ins.size - del.size, key, a, k, s)
+    del.foreach(r => a.get(r).foreach { c =>
+      a = if (c > 1) a.updated(r, c - 1) else { d += 1; a.removed(r) }
+      n -= 1
+      indexed(r, removing)
+    })
+    ins.foreach { r =>
+      a = a.updatedWith(r)(c => Some(c.getOrElse(0) + 1))
+      n += 1
+      indexed(r, adding)
+    }
+    // a VectorMap keeps a slot for each key removed from its middle:
+    // rebuilt once those outnumber its keys, it stays as large as its rows
+    if (d > a.size) { a = (VectorMap.newBuilder[Row, Int] ++= a).result(); d = 0 }
+    new Resident(schema, n, key, a, d, k, s)
   }
 
   private lazy val catalyst: Map[Int, Any => Any] =
@@ -121,7 +131,7 @@ private[graft] object Resident {
       rows.foreach(r => if (!r.isNullAt(i)) groups.merge(toCatalyst(r.get(i)), List(r), (a, b) => b ::: a))
       i -> TreeMap.from(groups.asScala)(ordering)
     }.toMap
-    new Resident(schema, rows.size, k, all, byKey, sorted)
+    new Resident(schema, rows.size, k, all, 0, byKey, sorted)
   }
 
   /** Types whose Spark ordering is a total order that `===`, `<` and `>=`

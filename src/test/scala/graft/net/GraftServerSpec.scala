@@ -527,17 +527,24 @@ class GraftServerSpec extends SparkSpec {
     val c = new WireClient(server.port)
     def insert(it: Int) =
       s"""{"InsertData":{"table":"testTable","entry":{"testForIndex":{"Integer":7},"testForIteration":{"Integer":$it}}}}"""
-    val getAll = """{"GetAll":{"table":"testTable","column":"testForIndex","key":{"Integer":7}}}"""
+    // a Str key on an Integer column: the index leaves the read to Spark,
+    // which casts the key, so each read runs Spark jobs
+    val getAll = """{"GetAll":{"table":"testTable","column":"testForIndex","key":{"Str":"7"}}}"""
     def iterations(m: JsonNode): Set[Long] = {
       val ok = response(m).get("ManyResults").get("Ok")
       (0 until ok.size()).map(i => ok.get(i).get("testForIteration").get("Integer").asLong()).toSet
     }
     try {
-      // reads run on the read thread and inserts on the dispatch thread,
-      // so an insert could overtake the read before it unless order is kept
-      c.sendAll(query(1, getAll), query(2, insert(500)), query(3, getAll), query(4, insert(501)),
-        query(5, getAll))
-      val answers = (1 to 5).map(_ => c.recv())
+      // each read runs Spark jobs on the read thread; the insert after it
+      // runs none on the dispatch thread, so it finishes first unless order
+      // is kept
+      var answers = Seq.empty[JsonNode]
+      val jobs = jobsDuring {
+        c.sendAll(query(1, getAll), query(2, insert(500)), query(3, getAll), query(4, insert(501)),
+          query(5, getAll))
+        answers = (1 to 5).map(_ => c.recv())
+      }
+      assert(jobs.count >= 3, s"$jobs: the reads must run Spark jobs for an insert to overtake")
       assert(answers.map(requestId) == (1 to 5).map(idOf))
       assert(iterations(answers(0)) == Set(7L))
       assert(iterations(answers(2)) == Set(7L, 500L))

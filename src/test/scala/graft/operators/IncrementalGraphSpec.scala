@@ -1195,4 +1195,50 @@ class IncrementalGraphSpec extends SparkSpec {
     assert(inc.table("testTable").filter("testForIndex = 3").isEmpty)
     assertRecomputes(inc, testCfgTables)
   }
+
+  test("a held Union's form stays as large as its rows, however many upserts it takes") {
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(yaml))
+    val names = (0 until 20).map(i => s"n$i")
+    inc.insert("users", rows(userSchema, names.map(Row(_, 20L)): _*))
+    def form = inc.pinnedAt(pin => pin("profile")).resident.getOrElse(fail("profile is not resident"))
+    // keys in random order, so most upserts replace a row from the middle
+    // of the form's arrival order
+    val rnd = new scala.util.Random(7)
+    val ages = scala.collection.mutable.Map(names.map(_ -> 20L): _*)
+    def upserts(n: Int): Unit = (0 until n).foreach { _ =>
+      val (name, age) = (names(rnd.nextInt(names.size)), 20L + rnd.nextInt(50))
+      inc.insert("users", rows(userSchema, Row(name, age)))
+      ages(name) = age
+    }
+    upserts(50)
+    val before = org.apache.spark.util.SizeEstimator.estimate(form)
+    upserts(2000)
+    val after = org.apache.spark.util.SizeEstimator.estimate(form)
+    assert(form.size == names.size && form.rows.size == names.size)
+    assert(after < before * 3 / 2, s"$before bytes after 50 upserts, $after after 2,050")
+    assert(inc.table("profile").collect().map(r => r.getAs[String]("matchingKey") -> r.getAs[Long]("age")).toMap ==
+      ages.toMap)
+  }
+
+  test("an impure Action's held table keeps its rows and its count when a delete's rows match none of them") {
+    val stamp = new java.util.concurrent.atomic.AtomicLong
+    ActionRegistry.register(GraftAction("Stamping", r => Row.fromSeq(r.toSeq :+ stamp.incrementAndGet()),
+      _.add("stamp", LongType)))
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(
+      """tables:
+        |  - name: grades
+        |    kind: source
+        |    columns: {name: Str, grade: Integer}
+        |  - name: stamped
+        |    kind: action
+        |    source_table: grades
+        |    action: Stamping
+        |""".stripMargin))
+    inc.insert("grades", rows(gradeSchema, Row("Alex", 90L), Row("Bob", 80L)))
+    // the delete runs the Action again: its row has a new stamp
+    inc.delete("grades", "name", "Alex")
+    val form = inc.pinnedAt(pin => pin("stamped")).resident.getOrElse(fail("stamped is not resident"))
+    assert(form.size == 2 && form.rows.size == 2)
+    assert(inc.table("stamped").count() == 2)
+  }
 }
