@@ -26,7 +26,7 @@ import scala.jdk.CollectionConverters._
   * held on the driver as its [[Resident]] form alone: its rows, indexed by
   * key and by every indexable column, as the reference keeps one store per
   * table (storage_manager_table.rs:14-23). Its frame, for [[table]] and the
-  * Spark path of a read, scans those rows. A larger table
+  * Spark path of a read, builds those rows when it is computed. A larger table
   * is a checkpointed base, minus a null-safe set of dead keys (keyed
   * tables), plus driver-local rows; a view of one has no state. One rule
   * decides, at bootstrap and at each rebase (a non-local insert, a delete
@@ -36,10 +36,14 @@ import scala.jdk.CollectionConverters._
   * view of a held table takes its rows from its input's through its bound
   * plan, with no job, unless it calls a user-registered or non-deterministic
   * function: that view is read through its input. A local edit updates the
-  * state it finds, so a table above the cap stays so until a rebase. A
-  * resident row costs its Row (170–200 bytes) plus one sorted-map entry per
-  * indexable column, about 56 bytes per Long and 144 per short string on a
-  * 64-bit JVM with compressed pointers.
+  * state it finds, so a table above the cap stays so until a rebase or its
+  * next compaction, which decides by the same rule. A resident row is
+  * stored by column ([[Resident]]): 8 bytes per number, date or timestamp,
+  * a string's UTF-8 bytes plus a 4-byte offset, and 4 bytes per indexable
+  * column for its sorted permutation. A row of two Longs and a 53-character
+  * `_entryId` costs about 85 bytes (a Row object and its sorted-map
+  * entries, as held before, cost about 500), measured with Spark's
+  * `SizeEstimator` on a 64-bit JVM with compressed pointers.
   *
   * Cost model. An edit of rows on the driver (a façade InsertData,
   * [[insertRows]], a frame that plans to a LocalRelation, a delete from a
@@ -62,9 +66,10 @@ import scala.jdk.CollectionConverters._
   *     group row. Above the cap it reads its base under the keys: one job;
   *   - an Aggregation that does not fold exactly, or fed a delete, and a
   *     Union fed an update, recompute the keys from their inputs' frames;
-  *   - a held table never compacts; a table above the cap compacts into a
-  *     new checkpointed base past [[IncrementalGraph.CompactAt]] local rows
-  *     and dead keys: one job.
+  *   - a held table never compacts; a table above the cap compacts past
+  *     [[IncrementalGraph.CompactAt]] local rows and dead keys, by the
+  *     residency rule: the read of at most the cap plus one rows, then, if
+  *     they are not all, a new checkpointed base.
   *
   * A non-local insert and a delete from a table above the cap are O(table):
   * the delta is checkpointed, and each affected table is rebased from its
@@ -220,21 +225,12 @@ final class IncrementalGraph(
   private def held(schema: StructType, rows: Seq[Row], key: Option[String]): Held =
     new Held(spark, Resident(schema, rows, key))
 
-  /** The rows of `df` when there are at most [[ResidentCap]]. */
-  private def fits(df: DataFrame): Option[Seq[Row]] = {
-    val rows = df.limit(ResidentCap + 1).collect()
-    if (rows.length > ResidentCap) None else Some(rows.toSeq)
-  }
-
-  /** The state of a materialized table whose rows are now `df`'s. */
-  private def settled(df: DataFrame, key: Option[String]): Table =
-    fits(df).fold[Table](Mat(checkpoint(df), key))(held(df.schema, _, key))
-
   /** The state of a materialized table whose rows are now `form`'s: past
-    * the cap, a checkpoint of them. */
-  private def kept(form: Resident, key: Option[String]): Table =
-    if (form.size <= ResidentCap) new Held(spark, form)
-    else Mat(checkpoint(localFrame(spark, form.rows.toSeq, form.schema)), key)
+    * the cap, a checkpoint of the rows its frame builds. */
+  private def kept(form: Resident, key: Option[String]): Table = {
+    val h = new Held(spark, form)
+    if (form.size <= ResidentCap) h else Mat(checkpoint(h.frame), key)
+  }
 
   /** A source's first state from its seed, aligned as an insert is: held
     * with `_entryId`s assigned on the driver, or past the cap checkpointed
@@ -586,13 +582,13 @@ object IncrementalGraph {
   private[operators] sealed trait Table { def frame: DataFrame }
 
   /** A table of at most [[ResidentCap]] rows: its resident form, the
-    * table's only copy. Its frame scans the form's rows as they are, an
-    * RDD of them built once, when first asked for: a LocalRelation would
-    * copy them, and the optimizer runs a filter over one row by row before
-    * it folds the filter's casts, so a key failing its ANSI cast would read
-    * as no rows when every value it meets is null. */
+    * table's only copy. Its frame is an RDD of one partition that builds
+    * the form's rows each time it is computed, so the frame holds no copy
+    * of them. A LocalRelation would, and the optimizer runs a filter over
+    * one row by row before it folds the filter's casts, so a key failing
+    * its ANSI cast would read as no rows when every value it meets is null. */
   private[operators] final class Held(spark: SparkSession, val form: Resident) extends Table {
-    lazy val frame: DataFrame = spark.createDataFrame(spark.sparkContext.parallelize(form.rows.toIndexedSeq, 1), form.schema)
+    lazy val frame: DataFrame = spark.createDataFrame(spark.sparkContext.parallelize(Seq(form), 1).flatMap(_.rows), form.schema)
   }
 
   /** A table above [[ResidentCap]] rows: the rows of the checkpointed
@@ -619,19 +615,32 @@ object IncrementalGraph {
         (if (inBase.isEmpty) Nil else base.filter(keyIn(base(key.get), inBase)).collect().toSeq)
     }
 
-    def append(more: Seq[Row]): Mat = copy(rows = rows ++ more).compacted
+    def append(more: Seq[Row]): Table = copy(rows = rows ++ more).compacted
 
-    def upsert(keys: Set[Any], replacement: Seq[Row]): Mat = {
+    def upsert(keys: Set[Any], replacement: Seq[Row]): Table = {
       val under = keys.map(Resident.keyOf)
       copy(dead = dead ++ keys, rows = rows.filterNot(r => under(Resident.keyOf(keyOf(r)))) ++ replacement).compacted
     }
 
-    // compaction keeps the base's partition count: a toLocalIterator read
-    // runs one job per partition, so appended partitions would add up
-    private def compacted: Mat =
+    // compaction decides by the residency rule, so a table that local
+    // edits brought under the cap is held from then on; past the cap it
+    // keeps the base's partition count: a toLocalIterator read runs one
+    // job per partition, so appended partitions would add up
+    private def compacted: Table =
       if (rows.size + dead.size <= CompactAt) this
-      else Mat(checkpoint(frame.coalesce(math.max(1, base.queryExecution.toRdd.getNumPartitions))), key)
+      else settled(frame.coalesce(math.max(1, base.queryExecution.toRdd.getNumPartitions)), key)
   }
+
+  /** The rows of `df` when there are at most [[ResidentCap]]. */
+  private def fits(df: DataFrame): Option[Seq[Row]] = {
+    val rows = df.limit(ResidentCap + 1).collect()
+    if (rows.length > ResidentCap) None else Some(rows.toSeq)
+  }
+
+  /** The state of a materialized table whose rows are now `df`'s: held
+    * when they fit under the cap, else a checkpoint of them. */
+  private def settled(df: DataFrame, key: Option[String]): Table =
+    fits(df).fold[Table](Mat(checkpoint(df), key))(rows => new Held(df.sparkSession, Resident(df.schema, rows, key)))
 
   /** The keys an edit touches: a driver-local set when every delta they
     * come from is local, else a distinct frame of `__k`. */

@@ -92,7 +92,10 @@ final class PipelineGraph(
       // inside unionByName instead of erroring here)
       sources(s.name) = initialSources.get(s.name)
         .map(df => SourceOps.ensureEntryId(SourceOps.alignForInsert(s, df)))
-        .getOrElse(spark.createDataFrame(new java.util.ArrayList[Row](), SourceOps.sourceSchema(s)))
+        // an RDD frame, as a held table's: the optimizer drops a filter over
+        // an empty LocalRelation before it folds the filter's casts, so a
+        // key failing its ANSI cast would match no rows instead of failing
+        .getOrElse(spark.createDataFrame(spark.sparkContext.parallelize(Seq.empty[Row], 1), SourceOps.sourceSchema(s)))
     case _ =>
   }
 

@@ -1241,4 +1241,114 @@ class IncrementalGraphSpec extends SparkSpec {
     assert(form.size == 2 && form.rows.size == 2)
     assert(inc.table("stamped").count() == 2)
   }
+
+  test("a resident form of two Longs and an _entryId costs at most 100 bytes a row, before and after local edits that cross a freeze") {
+    val (schema, seed) = SourceOps.withEntryIds(StructType(Seq(StructField("a", LongType), StructField("b", LongType))),
+      (0 until 10000).map(i => Row(i.toLong, (i * 7 % 1000).toLong)))
+    var form = Resident(schema, seed, None)
+    def perRow(f: Resident) = org.apache.spark.util.SizeEstimator.estimate(f).toDouble / f.size
+    assert(perRow(form) <= 100, s"${perRow(form)} bytes a row")
+    // inserts of new rows and of copies, deletes of one copy of seed and of
+    // inserted rows; the form drops the newest copy, so the model does too
+    val rnd = new scala.util.Random(11)
+    val model = scala.collection.mutable.ArrayBuffer(seed: _*)
+    var froze = false
+    (0 until 1000).foreach { e =>
+      val pending = form.pending
+      if (rnd.nextBoolean()) {
+        val r = if (rnd.nextInt(3) == 0) model(rnd.nextInt(model.size))
+          else Row(-e.toLong, rnd.nextInt(1000).toLong, f"$e%016X-" + java.util.UUID.randomUUID())
+        form = form.updated(Seq(r), Nil)
+        model += r
+      } else {
+        val r = model(rnd.nextInt(model.size))
+        form = form.updated(Nil, Seq(r))
+        model.remove(model.lastIndexOf(r))
+      }
+      froze ||= form.pending < pending
+    }
+    assert(froze, s"no freeze in 1,000 edits; ${form.pending} pending")
+    assert(form.size == model.size && form.rows.toSeq == model, "the rows in arrival order")
+    Seq(0L, 1L, 999L, -5L).foreach { k =>
+      assert(form.getAll("a", k).get.toSeq.sortBy(_.toString) == model.filter(_.getLong(0) == k).sortBy(_.toString))
+      assert(form.lessThan("b", k).get.map(_.getLong(1)).toSeq == model.map(_.getLong(1)).filter(_ < k).sorted)
+    }
+    assert(perRow(form) <= 100, s"${perRow(form)} bytes a row after the edits")
+  }
+
+  test("a Mat that local deletes bring under the cap is held from its next compaction") {
+    val cap = IncrementalGraph.ResidentCap
+    val half = cap / 2 + 8
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(
+      """tables:
+        |  - name: users
+        |    kind: source
+        |    columns: {name: Str, age: Integer}
+        |  - name: grades
+        |    kind: source
+        |    columns: {name: Str, grade: Integer}
+        |  - name: profile
+        |    kind: union
+        |    tables_and_foreign_keys: [[users, name], [grades, name]]
+        |""".stripMargin), Map(
+      "users" -> spark.range(half).selectExpr("concat('u', id) as name", "id % 200 as age"),
+      "grades" -> spark.range(half).selectExpr("concat('g', id) as name", "id as grade")))
+    def held(t: String) = inc.pinnedAt(pin => pin(t)).resident.isDefined
+    assert(held("users") && held("grades") && !held("profile"), "two held sources, their Union above the cap")
+    // each delete removes 41 users' rows from the Union, which takes it
+    // under the cap; past CompactAt dead keys it compacts
+    inc.delete("users", "age", 0L)
+    assert(!held("profile"), "41 dead keys: not compacted yet")
+    inc.delete("users", "age", 1L)
+    assert(held("profile"), "a compaction under the cap holds the table")
+    assert(inc.table("profile").count() <= cap)
+    assertRecomputes(inc, Seq("profile"))
+    inc.insert("users", rows(userSchema, Row("u0", 5L)))
+    assertRecomputes(inc, Seq("profile"))
+  }
+
+  test("a Str key that fails its cast on an Integer column fails an unseeded PipelineGraph as it fails the IncrementalGraph") {
+    val cfg = PipelineConfig.fromYaml(yaml)
+    val (inc, scratch) = (new IncrementalGraph(spark, cfg), new PipelineGraph(spark, cfg))
+    Seq[() => Any](
+      () => inc.delete("grades", "grade", "1x"),
+      () => scratch.delete("grades", "grade", "1x"),
+      () => new QueryService(inc.table _).getAll("grades", "grade", "1x").collect(),
+      () => new QueryService(scratch).getAll("grades", "grade", "1x").collect()).foreach { read =>
+      val e = intercept[Exception](read())
+      assert(castFailed(e), s"unexpected failure $e")
+    }
+  }
+
+  test("an edit that would freeze a resident form and then fails restores the pre-edit form") {
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(
+      """tables:
+        |  - name: grades
+        |    kind: source
+        |    columns: {name: Str, grade: Integer}
+        |  - name: curved
+        |    kind: function
+        |    source_table: grades
+        |    functions: ["curvedGrade ~ grade + 5"]
+        |  - name: stats
+        |    kind: aggregation
+        |    source_table: grades
+        |    aggregated_column: name
+        |    functions: ["cnt ~ memo.cnt + 1", "sum ~ memo.sum + grade"]
+        |""".stripMargin), Map("grades" -> spark.range(200).selectExpr("concat('n', id % 50) as name", "id as grade")))
+    inc.insert("grades", rows(gradeSchema, Row("n1", 7L)))
+    inc.delete("grades", "grade", 3L)
+    val tables = Seq("grades", "curved", "stats")
+    def form(t: String) = inc.pinnedAt(pin => pin(t)).resident.getOrElse(fail(s"$t is not resident"))
+    val before = tables.map(t => t -> form(t)).toMap
+    assert(before("grades").pending == 2, "an insert and a delete since the seed's freeze")
+    // the batch passes a sixteenth of the grades rows, so the source and
+    // its Function freeze before the Aggregation's fold overflows
+    val batch = (0 until 20).map(i => Row(s"n$i", if (i == 19) Long.MaxValue else i.toLong))
+    assertRollsBack(inc, tables, Seq(() => inc.insert("grades", rows(gradeSchema, batch: _*))))
+    tables.foreach(t => assert(form(t) eq before(t), s"$t's pre-edit form"))
+    val ok = inc.insert("grades", rows(gradeSchema, batch.init: _*))
+    assert(ok.count() == 19 && form("grades").pending == 0, "the same edit less its overflow freezes")
+    assertRecomputes(inc, tables)
+  }
 }

@@ -10,7 +10,8 @@ import scala.util.{Random, Try}
 
 /** A table's resident form answers every read as [[QueryService]] does
   * over the table's frame: after random local inserts, keyed upserts and
-  * deletes, each FindOne, GetAll, LessThan and GreaterThan read from the
+  * deletes, across freezes of its overlay into a new base, and with copies
+  * of rows, each FindOne, GetAll, LessThan and GreaterThan read from the
   * form returns the same rows as the Spark path, for values that order
   * differently under Java's UTF-16 compareTo and Spark's UTF-8 bytes, for
   * decimals of different scales, NaN, ±0.0, ±∞, booleans and nulls. A key
@@ -75,7 +76,8 @@ class ResidentPropertySpec extends SparkSpec {
   private val op: Gen[Op] = Gen.frequency(
     5 -> Gen.choose(1, 3).flatMap(Gen.listOfN(_, item)).map(InsertItems),
     3 -> Gen.choose(1, 2).flatMap(Gen.listOfN(_, tag)).map(InsertTags),
-    1 -> Gen.oneOf(Gen.oneOf(strs).map(Delete("k", _)), Gen.oneOf(longs).map(Delete("i", _))))
+    2 -> Gen.oneOf(orNull(Gen.oneOf(strs)).map(Delete("k", _)), Gen.oneOf(longs).map(Delete("i", _)),
+      orNull(Gen.oneOf(doubles)).map(Delete("f", _))))
 
   private def frame(schema: StructType, rows: Seq[Row]): DataFrame = spark.createDataFrame(rows.asJava, schema)
 
@@ -164,9 +166,11 @@ class ResidentPropertySpec extends SparkSpec {
   }) // an overflowing fold fails and rolls back; the forms must follow
 
   test("a resident form answers FindOne, GetAll, LessThan and GreaterThan as the Spark path after random edits") {
+    // a seed of 16 or more rows keeps an edit or more in the overlay
+    // before a freeze; smaller tables freeze on every edit
     val gen = for {
-      seed <- Gen.listOfN(6, item)
-      ops <- Gen.choose(2, 7).flatMap(Gen.listOfN(_, op))
+      seed <- Gen.choose(6, 40).flatMap(Gen.listOfN(_, item))
+      ops <- Gen.choose(2, 9).flatMap(Gen.listOfN(_, op))
       reads <- Gen.long
     } yield (seed, ops, reads)
     check(Prop.forAll(gen) { case (seed, ops, readSeed) =>
@@ -222,5 +226,80 @@ class ResidentPropertySpec extends SparkSpec {
       }
       under && crossing && compacted && back && rows <= cap
     }, n = 2)
+  }
+
+  test("a form edited directly across freezes, with copies of rows, keeps its rows and answers reads as the Spark path") {
+    def pick[A](xs: Seq[A], rnd: Random): Any = if (rnd.nextInt(7) == 0) null else xs(rnd.nextInt(xs.size))
+    // decimals at the column's scale, as the Spark path returns them
+    def norm(r: Row): Row =
+      Row.fromSeq(r.toSeq.updated(2, Option(r.getDecimal(2)).map(_.setScale(18)).orNull))
+    def fresh(rnd: Random): Row = norm(Row(pick(strs, rnd), pick(longs, rnd), pick(decs, rnd), pick(doubles, rnd),
+      pick(Seq(true, false), rnd)))
+    val gen = for {
+      seed <- Gen.choose(16, 60).flatMap(Gen.listOfN(_, item))
+      key <- Gen.oneOf(None, Some("k"), Some("f"), Some("d"))
+      edits <- Gen.long
+    } yield (seed, key, edits)
+    check(Prop.forAll(gen) { case (seed, key, edits) =>
+      val rnd = new Random(edits)
+      var form = Resident(itemSchema, seed.map(norm), key)
+      // the form drops the newest copy of a deleted row, so the model does
+      val model = scala.collection.mutable.ArrayBuffer(seed.map(norm): _*)
+      var freezes = 0
+      val edited = (1 to 24).forall { e =>
+        val pending = form.pending
+        rnd.nextInt(5) match {
+          case 0 if model.nonEmpty => // a copy of a row, old or new
+            val r = model(rnd.nextInt(model.size))
+            form = form.updated(Seq(r), Nil)
+            model += r
+          case 1 | 2 if model.nonEmpty => // one copy of a row: anywhere, or among the newest
+            val r = model(if (rnd.nextBoolean()) rnd.nextInt(model.size) else model.size - 1 - rnd.nextInt(model.size min 3))
+            form = form.updated(Nil, Seq(r))
+            model.remove(model.lastIndexOf(r))
+          case 3 => // a row that may not be there at all
+            val r = fresh(rnd)
+            form = form.updated(Nil, Seq(r))
+            val i = model.lastIndexOf(r)
+            if (i >= 0) model.remove(i)
+          case _ =>
+            val r = fresh(rnd)
+            form = form.updated(Seq(r), Nil)
+            model += r
+        }
+        if (form.pending < pending) freezes += 1
+        val keyed = key.forall { c =>
+          val i = itemSchema.fieldIndex(c)
+          val k = pick(model.map(_.get(i)).toSeq ++ (c match {
+            case "k" => strs
+            case "f" => doubles
+            case _ => decs
+          }), rnd)
+          sorted(form.rowsUnder(Set(k))) == sorted(model.filter(r => Resident.keyOf(r.get(i)) == Resident.keyOf(k)))
+        }
+        val same = form.size == model.size && form.rows.toSeq == model.toSeq && keyed
+        if (!same) info(s"edit $e: form ${form.rows.toSeq} vs model $model")
+        same && (e % 3 != 0 || {
+          val field = itemSchema(rnd.nextInt(itemSchema.size))
+          val c = field.name
+          val k = keyFor(field.dataType, model.map(_.get(itemSchema.fieldIndex(c))).toSeq, rnd)
+          val kind = kinds(rnd.nextInt(kinds.size))
+          val q = new QueryService(_ => frame(itemSchema, model.toSeq))
+          val spark = (kind match {
+            case "FindOne" => q.getAll("items", c, k)
+            case "GetAll" => q.getAll("items", c, k)
+            case "LessThan" => q.lessThan("items", c, k)
+            case _ => q.greaterThan("items", c, k)
+          }).collect().toSeq
+          val rows = fromForm(form, kind, c, k).getOrElse(fail(s"$kind $c = $k was not answered from the form"))
+          val ok = if (kind == "FindOne") rows.size == math.min(1, spark.size) && sorted(rows).forall(sorted(spark).contains)
+            else sorted(rows) == sorted(spark) &&
+              (kind == "GetAll" || Seq(rows.toSeq, spark).map(_.map(r => Resident.keyOf(r.get(itemSchema.fieldIndex(c))))).distinct.size == 1)
+          if (!ok) info(s"$kind $c $k: form ${sorted(rows)} vs spark ${sorted(spark)}")
+          ok
+        })
+      }
+      edited && freezes > 0
+    }, n = 8)
   }
 }
