@@ -69,15 +69,16 @@ import scala.util.control.NonFatal
   * cancelled. A closed connection's subscriptions end with it.
   *
   * Scale note: this façade is the reference-parity POINT-QUERY surface. An
-  * InsertData's entry goes to the graph as a driver row, and its edits come
-  * back as driver rows, which the response and every Event render with no
-  * frame and no Spark job. A read of a resident table (at most
+  * InsertData's entry goes to the graph as a driver row, and every edit
+  * comes back as driver rows, which the response and every Event render
+  * with no frame and no Spark job. A read of a resident table (at most
   * [[IncrementalGraph.ResidentCap]] rows, resident from bootstrap on), and
   * a DeleteData's search of one, use its driver-side index with no Spark
-  * job either, the reference's B-tree walk. Other reads and non-local edits
-  * stream off the cluster via toLocalIterator. Either way a batch beyond
-  * [[maxResultRows]] fails that request loudly rather than buffering a
-  * cluster's output in the server heap.
+  * job either, the reference's B-tree walk; a DeleteData on a larger table
+  * collects its rows in one job. Other reads stream off the cluster via
+  * toLocalIterator, so a read never buffers more of a cluster's output in
+  * the server heap than [[maxResultRows]]. Either way a batch beyond that
+  * fails its request loudly.
   *
   * Divergences from the reference, on purpose: a malformed frame or an
   * unknown listen table answers that CLIENT with an Err instead of
@@ -390,11 +391,9 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
   private def entriesOf(df: DataFrame): Seq[ObjectNode] =
     entriesOf(df.toLocalIterator().asScala, df.schema)
 
-  /** An edit's entries: a local edit's rows as they are, else its frame's. */
-  private def entriesOf(delta: IncrementalGraph.Delta): Seq[ObjectNode] = delta.rows match {
-    case Some(rows) => entriesOf(rows.iterator, delta.schema)
-    case None => entriesOf(delta.df)
-  }
+  /** An edit's entries, from its driver rows. */
+  private def entriesOf(delta: IncrementalGraph.Delta): Seq[ObjectNode] =
+    entriesOf(delta.rows.iterator, delta.schema)
 
   private def entriesOf(it: Iterator[Row], schema: StructType): Seq[ObjectNode] = {
     val limit = maxResultRows

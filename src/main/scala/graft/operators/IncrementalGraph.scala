@@ -29,33 +29,37 @@ import scala.jdk.CollectionConverters._
   * Spark path of a read, builds those rows when it is computed. A larger table
   * is a checkpointed base, minus a null-safe set of dead keys (keyed
   * tables), plus driver-local rows; a view of one has no state. One rule
-  * decides, at bootstrap and at each rebase (a non-local insert, a delete
-  * from a table above the cap, a keyed recompute from a frame, a form that
-  * crosses the cap): read at most the cap plus one rows of the new frame,
-  * and hold them if that is all of them, else checkpoint the frame. A
-  * view of a held table takes its rows from its input's through its bound
-  * plan, with no job, unless it calls a user-registered or non-deterministic
-  * function: that view is read through its input. A local edit updates the
-  * state it finds, so a table above the cap stays so until a rebase or its
-  * next compaction, which decides by the same rule. A resident row is
-  * stored by column ([[Resident]]): 8 bytes per number, date or timestamp,
-  * a string's UTF-8 bytes plus a 4-byte offset, and 4 bytes per indexable
-  * column for its sorted permutation. A row of two Longs and a 53-character
+  * decides, at bootstrap and at each rebase (a delete from a source above
+  * the cap, a form that crosses the cap): read at most the cap plus one
+  * rows of the new frame, and hold them if that is all of them, else
+  * checkpoint the frame. A view of a held table takes its rows from its
+  * input's through its bound plan, with no job, unless it calls a
+  * user-registered function: that view is read through its input. A view
+  * with no state is reviewed at each edit that reaches it while its input
+  * is held. An edit updates the state it finds, so a table above the cap
+  * stays so until a rebase or its next compaction, which decides by the
+  * same rule. A resident row is stored by column ([[Resident]]): 8 bytes
+  * per number, date or timestamp, a string's UTF-8 bytes plus a 4-byte
+  * offset, and 4 bytes per indexable column for its sorted permutation. A row of two Longs and a 53-character
   * `_entryId` costs about 85 bytes (a Row object and its sorted-map
   * entries, as held before, cost about 500), measured with Spark's
   * `SizeEstimator` on a 64-bit JVM with compressed pointers.
   *
-  * Cost model. An edit of rows on the driver (a façade InsertData,
-  * [[insertRows]], a frame that plans to a LocalRelation, a delete from a
-  * held source) is LOCAL: its deltas are driver rows, run through each
-  * node's expressions, bound once from the analyzed plan of the same
-  * [[Transforms]] call ([[RowPlan]]), with no planning and no job. A
-  * delta builds its frame only for a caller that asks ([[insertWithEdits]],
-  * a [[listen]] subscriber). Then:
+  * Cost model. Every edit is LOCAL: its deltas are driver rows, run
+  * through each node's expressions, bound once from the analyzed plan of
+  * the same [[Transforms]] call ([[RowPlan]]), with no planning and no job;
+  * every view is bound at construction, so one that no edit could run (a
+  * non-deterministic expression, a plan of more than Projects and Filters)
+  * fails there. A delta builds its frame only for a caller that asks
+  * ([[insertWithEdits]], a [[listen]] subscriber). An insert's rows are the
+  * driver's: a façade InsertData's, [[insertRows]]', or a frame's, which
+  * costs no job when it plans to a LocalRelation and one `collect()`
+  * otherwise. Then:
   *
   *   - a delete from a held source finds its rows, null-safe `<=>`, in the
   *     column's index, or, for an unindexable column or a key the
-  *     comparison would cast, by Spark's filter over its frame;
+  *     comparison would cast, by Spark's filter over its frame; a delete
+  *     from a source above the cap collects its rows, one job;
   *   - an Action applies its row function to the delta's rows
   *     ([[Transforms.actionRows]]); a held Action table drops a delete's
   *     rows as a multiset;
@@ -71,9 +75,9 @@ import scala.jdk.CollectionConverters._
   *     residency rule: the read of at most the cap plus one rows, then, if
   *     they are not all, a new checkpointed base.
   *
-  * A non-local insert and a delete from a table above the cap are O(table):
-  * the delta is checkpointed, and each affected table is rebased from its
-  * current rows by the rule, so lineage stays O(1) in the number of edits.
+  * Only a delete from a source above the cap is O(table): the source is
+  * rebased from its remaining rows by the rule, so lineage stays O(1) in
+  * the number of edits. Its deltas are driver rows like any edit's.
   *
   * Threading: the edits ([[insert]], [[delete]] and their `WithEdits`
   * forms), [[listen]] and [[table]] are called from one thread at a time.
@@ -95,28 +99,20 @@ final class IncrementalGraph(
   import SystemColumns._
   import Transforms.groupKey
 
-  private def localDelta(schema: StructType, rows: Seq[Row]): Delta =
-    new Delta(schema, Some(rows), () => localFrame(spark, rows, schema))
+  private def delta(schema: StructType, rows: Seq[Row]): Delta = new Delta(spark, schema, rows)
 
-  private def frameDelta(df: DataFrame): Delta = new Delta(df.schema, None, () => df)
-
-  private def keysOf(deltas: Seq[Delta], columns: Seq[String]): Keys =
-    if (deltas.forall(_.rows.isDefined))
-      LocalKeys((for (d <- deltas; c <- columns; i = d.schema.fieldIndex(c); r <- d.rows.get)
-        yield r.get(i)).toSet)
-    else
-      FrameKeys((for (d <- deltas; c <- columns) yield d.df.select(col(c).as("__k")))
-        .reduce(_.unionByName(_)).distinct())
+  /** The values of `columns` in the rows of `deltas`: the keys an edit touches. */
+  private def keysOf(deltas: Seq[Delta], columns: Seq[String]): Set[Any] =
+    (for (d <- deltas; c <- columns; i = d.schema.fieldIndex(c); r <- d.rows) yield r.get(i)).toSet
 
   private val byName = config.byName
   /** Each table's state in the edit in progress. A view that is not held
     * has none: it is read through its input. Dispatch thread only. */
   private var tables: Map[String, Table] = Map.empty
-  private val folds = scala.collection.mutable.Map.empty[String, Option[Transforms.ExactFold]]
-  /** What a node binds on its first local edit, per node and input
-    * schemas: row plans, a Union's bound merge. An entry is small; the
-    * cap only bounds what clients sending entries of ever-new shapes can
-    * make the graph hold. */
+  /** What a node binds, per node and input schemas: row plans, an
+    * Aggregation's exact fold, a Union's bound merge. An entry is small;
+    * the cap only bounds what clients sending entries of ever-new shapes
+    * can make the graph hold. */
   private val bound = new java.util.LinkedHashMap[(String, Seq[StructType]), AnyRef](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[(String, Seq[StructType]), AnyRef]): Boolean =
       size > 256
@@ -140,20 +136,25 @@ final class IncrementalGraph(
 
   // bootstrap, once per deployment: each table's first state by the
   // residency rule, in topo order. Seeds are aligned as inserts are, and
-  // views bound, so a bad seed or expression fails here.
+  // every view bound over its input's rows, so a bad seed, or a view that
+  // no edit could run, fails here.
   config.topoOrder.foreach {
     case s: SourceTableConfig =>
       tables += s.name -> initialSources.get(s.name)
         .fold[Table](held(SourceOps.sourceSchema(s), Nil, None))(seeded(s, _))
-    case v: DerivedTableConfig if isView(v) => reviewed(v)
+    case v: DerivedTableConfig if isView(v) =>
+      val src = v.inputTables.head
+      viewPlan(v, tables.get(src).collect { case h: Held => h.form.schema }.getOrElse(table(src).schema))
+      reviewed(v)
     case a: ActionTableConfig =>
       // the Action runs once: over held rows on the driver, else into the
       // checkpoint that the rule reads
-      val out = through(a, a.sourceTable, tables.get(a.sourceTable) match {
-        case Some(h: Held) => localDelta(h.form.schema, h.form.rows.toSeq)
-        case _ => frameDelta(table(a.sourceTable))
+      tables += a.name -> (tables.get(a.sourceTable) match {
+        case Some(h: Held) =>
+          val out = through(a, delta(h.form.schema, h.form.rows.toSeq))
+          held(out.schema, out.rows, None)
+        case _ => settled(checkpoint(compute(a, Map(a.sourceTable -> table(a.sourceTable)))), None)
       })
-      tables += a.name -> out.rows.fold(settled(out.df, None))(held(out.schema, _, None))
     case d: DerivedTableConfig =>
       tables += d.name -> settled(compute(d, d.inputTables.map(n => n -> table(n)).toMap), keyOf.get(d.name))
   }
@@ -206,9 +207,16 @@ final class IncrementalGraph(
     Option(bound.get(key)).getOrElse { val made = make; bound.put(key, made); made }.asInstanceOf[A]
   }
 
-  /** Row-wise table `d` bound over rows of `schema` from its input `src`. */
-  private def rowPlan(d: DerivedTableConfig, src: String, schema: StructType): RowPlan =
-    boundFor(d.name, schema)(RowPlan.over(spark, schema)(df => compute(d, Map(src -> df))))
+  /** View `v` bound over input rows of `schema`: its plan, and whether a
+    * form may hold its rows, which it may unless it calls a user-registered
+    * function, which may block or cost anything. Fails for a view whose
+    * plan does not bind, such as one with a non-deterministic expression. */
+  private def viewPlan(v: DerivedTableConfig, schema: StructType): (RowPlan, Boolean) =
+    boundFor(v.name, schema) {
+      val out = compute(v, Map(v.inputTables.head -> RowPlan.empty(spark, schema)))
+      (new RowPlan(out),
+        out.queryExecution.analyzed.find(_.expressions.exists(_.exists(_.isInstanceOf[UserDefinedExpression]))).isEmpty)
+    }
 
   /** A Function/Filter table over its input frame `in`, rebuilt only when
     * that frame changes. */
@@ -244,30 +252,20 @@ final class IncrementalGraph(
   }
 
   /** View `v`'s state: held, through its bound plan, when its input is
-    * held, unless it calls a user-registered function, which may block or
-    * cost anything, or a non-deterministic one, whose rows a form would
-    * fix. Otherwise it has none. */
+    * held and a form may hold its rows. Otherwise it has none. */
   private def reviewed(v: DerivedTableConfig): Unit = {
-    val src = v.inputTables.head
-    def holdable(df: DataFrame) = df.queryExecution.analyzed.find(_.expressions
-      .exists(e => !e.deterministic || e.exists(_.isInstanceOf[UserDefinedExpression]))).isEmpty
-    val state = tables.get(src).collect {
-      case h: Held if holdable(compute(v, Map(src -> RowPlan.empty(spark, h.form.schema)))) =>
-        val plan = rowPlan(v, src, h.form.schema)
-        held(plan.schema, plan(h.form.rows.toSeq), None)
-    }
+    val state = tables.get(v.inputTables.head).collect { case h: Held => (h, viewPlan(v, h.form.schema)) }
+      .collect { case (h, (plan, true)) => held(plan.schema, plan(h.form.rows.toSeq), None) }
     tables = state.fold(tables - v.name)(tables.updated(v.name, _))
   }
 
   /** Source or Action table `name` after an edit inserted `ins` and
     * deleted `del`, a multiset difference. */
   private def applied(name: String, ins: Delta, del: Delta): Unit =
-    tables += name -> ((tables(name), ins.rows, del.rows) match {
-      case (h: Held, Some(is), Some(ds)) => kept(h.form.updated(is, ds), None)
-      case (m: Mat, Some(is), Some(Seq())) => m.append(is)
-      case (t, _, _) =>
-        val left = if (del.rows.exists(_.isEmpty)) t.frame else t.frame.exceptAll(del.df)
-        settled(if (ins.rows.exists(_.isEmpty)) left else left.unionByName(ins.df), None)
+    tables += name -> (tables(name) match {
+      case h: Held => kept(h.form.updated(ins.rows, del.rows), None)
+      case m: Mat if del.isEmpty => m.append(ins.rows)
+      case m: Mat => settled(m.frame.exceptAll(del.df).unionByName(ins.df), None)
     })
 
   // ── Listen: per-edit push to subscribers (the reference's ListenerHook
@@ -301,17 +299,18 @@ final class IncrementalGraph(
     () => change(_.filterNot(_ eq l))
   }
 
+  /** How many subscriptions table `tableName` has. */
+  private[graft] def listenerCount(tableName: String): Int =
+    commitLock.synchronized(listeners.getOrElse(tableName, Nil).size)
+
   /** An Insert subscriber gets an empty delta for the deletes, and a
     * Delete subscriber one for the inserts. */
   private def notifyListeners(tableName: String, ins: Delta, del: Delta): Unit =
     listeners.getOrElse(tableName, Nil).foreach {
       case (graft.ListenEvent.Both, cb) => cb(ins, del)
-      case (graft.ListenEvent.Insert, cb) => if (!ins.isEmpty) cb(ins, emptied(del))
-      case (graft.ListenEvent.Delete, cb) => if (!del.isEmpty) cb(emptied(ins), del)
+      case (graft.ListenEvent.Insert, cb) => if (!ins.isEmpty) cb(ins, delta(del.schema, Nil))
+      case (graft.ListenEvent.Delete, cb) => if (!del.isEmpty) cb(delta(ins.schema, Nil), del)
     }
-
-  private def emptied(d: Delta): Delta =
-    if (d.rows.exists(_.isEmpty)) d else localDelta(d.schema, Nil)
 
   /** Run an edit transactionally — the reference's rollback
     * (database.rs:317-396), without the edit-inversion machinery: every
@@ -352,13 +351,10 @@ final class IncrementalGraph(
     * edits, including cascaded derived-table writes; an Update edit
     * surfaces as its delete+insert pair here). */
   def insertWithEdits(tableName: String, rows: DataFrame): Seq[(String, DataFrame, DataFrame)] = {
-    val edits = localRows(rows) match {
-      case Some((schema, local)) => insertRows(tableName, schema, local)
-      case None => commitInsert(tableName,
-        frameDelta(SourceOps.ensureEntryId(SourceOps.alignForInsert(sourceConfig(tableName), rows))))
-    }
+    // rows that the frame does not plan to on the driver take one job
+    val (schema, local) = localRows(rows).getOrElse((rows.schema, rows.collect().toSeq))
     // each edit's frames are built when the caller reaches it
-    edits.to(LazyList).map { case (t, ins, del) => (t, ins.df, del.df) }
+    insertRows(tableName, schema, local).to(LazyList).map { case (t, ins, del) => (t, ins.df, del.df) }
   }
 
   /** [[insertWithEdits]] for rows of `schema` on the driver, returning each
@@ -368,21 +364,17 @@ final class IncrementalGraph(
     val cfg = sourceConfig(tableName)
     val align = boundFor(tableName, schema)(RowPlan.over(spark, schema)(SourceOps.alignForInsert(cfg, _)))
     val (withIds, local) = SourceOps.withEntryIds(align.schema, align(rows))
-    commitInsert(tableName, localDelta(withIds, local))
-  }
-
-  private def sourceConfig(tableName: String): SourceTableConfig = byName.get(tableName) match {
-    case Some(s: SourceTableConfig) => s
-    case _ => throw new IllegalArgumentException(s"$tableName is not a source table")
-  }
-
-  private def commitInsert(tableName: String, committed: Delta): Seq[(String, Delta, Delta)] = {
-    val none = localDelta(committed.schema, Nil)
+    val (committed, none) = (delta(withIds, local), delta(withIds, Nil))
     transactional { pending =>
       applied(tableName, committed, none)
       pending += ((tableName, committed, none))
       propagate(tableName, committed, none, pending)
     }
+  }
+
+  private def sourceConfig(tableName: String): SourceTableConfig = byName.get(tableName) match {
+    case Some(s: SourceTableConfig) => s
+    case _ => throw new IllegalArgumentException(s"$tableName is not a source table")
   }
 
   /** Delete all rows with `column == key`; cascades eagerly. Returns the
@@ -397,7 +389,8 @@ final class IncrementalGraph(
     deleteDeltas(tableName, column, key).map { case (t, ins, del) => (t, ins.df, del.df) }
 
   /** [[deleteWithEdits]], returning each edit's deltas. A held source finds
-    * the rows in its form, and the delete is a local edit. */
+    * the rows in its form; one above the cap collects them, and is rebased
+    * from its other rows. */
   private[graft] def deleteDeltas(tableName: String, column: String, key: Any): Seq[(String, Delta, Delta)] = {
     val t = tables.getOrElse(tableName,
       throw new IllegalArgumentException(s"no table named $tableName"))
@@ -406,11 +399,11 @@ final class IncrementalGraph(
     // null-safe on BOTH sides — see PipelineGraph.delete; Spark's filter
     // finds the rows where the form cannot (its coercion and ANSI errors)
     val deleted = t match {
-      case h: Held => localDelta(h.form.schema, h.form.matching(column, key)
+      case h: Held => delta(h.form.schema, h.form.matching(column, key)
         .getOrElse(h.frame.filter(col(column) <=> lit(key)).collect().toSeq))
-      case m: Mat => frameDelta(checkpoint(m.frame.filter(col(column) <=> lit(key))))
+      case m: Mat => delta(m.schema, m.frame.filter(col(column) <=> lit(key)).collect().toSeq)
     }
-    val none = localDelta(deleted.schema, Nil)
+    val none = delta(deleted.schema, Nil)
     transactional { pending =>
       t match {
         case m: Mat => tables += tableName -> settled(m.frame.filter(!(col(column) <=> lit(key))), None)
@@ -426,45 +419,40 @@ final class IncrementalGraph(
     // spurious listener calls for an edit that changed nothing
     if (inserted.isEmpty && deleted.isEmpty) return
     downstream.getOrElse(src, Nil).foreach { d =>
-      // deltas are FROZEN FIRST and tables are updated from them: the raw
-      // plans would run twice (for the table and downstream), and an
-      // impure Action's table would diverge from what propagates
+      // each table is updated from the delta that propagates, so an impure
+      // Action's table cannot diverge from it
       val (ins, del) = d match {
         case _: FunctionTableConfig | _: FilterTableConfig =>
-          val (add, rem) = (through(d, src, inserted), through(d, src, deleted))
-          (tables.get(d.name), add.rows, rem.rows) match {
-            case (Some(h: Held), Some(is), Some(ds)) =>
-              val next = h.form.updated(is, ds)
+          val (add, rem) = (through(d, inserted), through(d, deleted))
+          tables.get(d.name) match {
+            case Some(h: Held) =>
+              val next = h.form.updated(add.rows, rem.rows)
               tables = if (next.size <= ResidentCap) tables.updated(d.name, new Held(spark, next)) else tables - d.name
-            // a view without a state stays so until its input is rebased
-            case (None, Some(_), Some(_)) =>
+            // held again once its input is, say after the input's compaction
             case _ => reviewed(d)
           }
           (add, rem)
         case _: ActionTableConfig =>
-          val (add, rem) = (through(d, src, inserted), through(d, src, deleted))
+          val (add, rem) = (through(d, inserted), through(d, deleted))
           applied(d.name, add, rem)
           (add, rem)
         case a: AggregationTableConfig =>
           val keys = keysOf(Seq(inserted, deleted), Seq(a.aggregatedColumn))
-          val fold = for {
-            rs <- inserted.rows if deleted.isEmpty
-            f <- folds.getOrElseUpdate(a.name,
-              Transforms.exactFold(spark, inserted.schema, a.aggregatedColumn, a.functions))
-          } yield (f, rs)
+          val fold = if (!deleted.isEmpty) None else boundFor(a.name, inserted.schema)(
+            Transforms.exactFold(spark, inserted.schema, a.aggregatedColumn, a.functions))
           upsert(a.name, keys) { old =>
-            (fold, old.rows) match {
+            fold match {
               // the reference's per-row memo fold (transform.rs:244-271):
               // each key's new rows onto its group row, or onto zero
-              case (Some((f, rs)), Some(olds)) =>
+              case Some(f) =>
                 val k = old.schema.fieldIndex(AggregationKey)
-                val groupRows = olds.map(r => groupKey(r.get(k)) -> r).toMap
-                val plan = boundFor(a.name, inserted.schema)(
+                val groupRows = old.rows.map(r => groupKey(r.get(k)) -> r).toMap
+                val plan = boundFor(a.name, inserted.schema, old.schema)(
                   RowPlan.over(spark, f.localSchema)(local => inOrder(f(local), old.schema)))
-                localDelta(plan.schema, plan(f.localRows(grouped(rs, inserted.schema.fieldIndex(a.aggregatedColumn))
+                delta(plan.schema, plan(f.localRows(grouped(inserted.rows, inserted.schema.fieldIndex(a.aggregatedColumn))
                   .map { case (key, rows) => (key, groupRows.get(groupKey(key)), rows) })))
-              case _ =>
-                replacing(old, Transforms.aggregation(keys.select(table(a.sourceTable), a.aggregatedColumn),
+              case None =>
+                replacing(old, Transforms.aggregation(under(a.sourceTable, a.aggregatedColumn, keys),
                   a.aggregatedColumn, a.functions))
             }
           }
@@ -480,17 +468,12 @@ final class IncrementalGraph(
               // an unseen key creates a new row. No replay of the source
               // log, so an append-log source's repeated keys never fan out.
               // (Rows within ONE batch are assumed key-unique per fk.)
-              // Local rows pair by key on the driver and merge through the
-              // bound plan, unless the keys differ in type.
-              val merged = (old.rows, inserted.rows) match {
-                case (Some(olds), Some(rs)) =>
-                  boundFor(s"${u.name} <- $src", old.schema, inserted.schema)(Transforms.unionRows(spark,
-                    (old.schema, MatchingKey) +: fks.map(fk => (inserted.schema, fk)), inOrder(_, old.schema)))
-                    .map { case (schema, f) => localDelta(schema, f(olds +: fks.map(_ => rs))) }
-                case _ => None
-              }
-              merged.getOrElse(replacing(old,
-                Transforms.union((old.df, MatchingKey) +: fks.map(fk => (inserted.df, fk)))))
+              // Rows pair by key on the driver and merge through the bound
+              // plan, unless the keys differ in type.
+              boundFor(s"${u.name} <- $src", old.schema, inserted.schema)(Transforms.unionRows(spark,
+                (old.schema, MatchingKey) +: fks.map(fk => (inserted.schema, fk)), inOrder(_, old.schema)))
+                .map { case (schema, f) => delta(schema, f(old.rows +: fks.map(_ => inserted.rows))) }
+                .getOrElse(replacing(old, Transforms.union((old.df, MatchingKey) +: fks.map(fk => (inserted.df, fk)))))
             } else {
               // Delete (or derived upsert = delete+insert): rebuild the
               // affected keys from the remaining input rows, each input
@@ -501,7 +484,7 @@ final class IncrementalGraph(
               // in arrival order like the reference; the arrival order of
               // edits across tables is not recorded.
               replacing(old, Transforms.union(u.tablesAndForeignKeys.map { case (t, fk) =>
-                val affected = keys.select(table(t), fk)
+                val affected = under(t, fk, keys)
                 val collapsed =
                   if (!affected.columns.contains(EntryId)) affected
                   else {
@@ -520,48 +503,44 @@ final class IncrementalGraph(
     }
   }
 
-  /** Delta `in` of `src` through row-wise table `d`, frozen like `in`. */
-  private def through(d: DerivedTableConfig, src: String, in: Delta): Delta = (d, in.rows) match {
-    case (a: ActionTableConfig, Some(rs)) =>
+  /** Delta `in` of `d`'s input through row-wise table `d`. */
+  private def through(d: DerivedTableConfig, in: Delta): Delta = d match {
+    case a: ActionTableConfig =>
       val (schema, f) = Transforms.actionRows(ActionRegistry.get(a.actionName), in.schema)
-      localDelta(schema, rs.flatMap(r => f(new GenericRowWithSchema(r.toSeq.toArray, in.schema))))
-    case (_, Some(rs)) =>
-      val plan = rowPlan(d, src, in.schema)
-      localDelta(plan.schema, plan(rs))
-    case _ => frameDelta(checkpoint(compute(d, Map(src -> in.df))))
+      delta(schema, in.rows.flatMap(r => f(new GenericRowWithSchema(r.toSeq.toArray, in.schema))))
+    case _ =>
+      val (plan, _) = viewPlan(d, in.schema)
+      delta(plan.schema, plan(in.rows))
   }
 
-  /** `df` as the replacement of the keyed rows `old`: in their column
-    * order, frozen like them. */
+  /** The rows of table `name` whose `column` is in `keys`. */
+  private def under(name: String, column: String, keys: Set[Any]): DataFrame = {
+    val df = table(name)
+    df.filter(keyIn(df(column), keys))
+  }
+
+  /** The rows of `df` as the replacement of the keyed rows `old`, in their
+    * column order. */
   private def replacing(old: Delta, df: DataFrame): Delta = {
     val rep = inOrder(df, old.schema)
-    if (old.rows.isDefined) localDelta(rep.schema, rep.collect().toSeq) else frameDelta(checkpoint(rep))
+    delta(rep.schema, rep.collect().toSeq)
   }
 
   /** Replace the rows of keyed table `name` under `keys` with
-    * `replacement(old rows)`, which are in the table's column order and
-    * frozen like the old rows; returns the (inserted, deleted) deltas. */
-  private def upsert(name: String, keys: Keys)(replacement: Delta => Delta): (Delta, Delta) = {
-    val key = keyOf.get(name)
+    * `replacement(old rows)`, which are in the table's column order;
+    * returns the (inserted, deleted) deltas. */
+  private def upsert(name: String, keys: Set[Any])(replacement: Delta => Delta): (Delta, Delta) = {
     val t = tables(name)
-    keys match {
-      case LocalKeys(ks) =>
-        val old = t match {
-          case h: Held => localDelta(h.form.schema, h.form.rowsUnder(ks))
-          case m: Mat => localDelta(m.schema, m.rowsUnder(ks))
-        }
-        val rep = replacement(old)
-        tables += name -> (t match {
-          case h: Held => kept(h.form.updated(rep.rows.get, old.rows.get), key)
-          case m: Mat => m.upsert(ks, rep.rows.get)
-        })
-        (rep, old)
-      case k: FrameKeys =>
-        val old = frameDelta(checkpoint(k.select(t.frame, key.get)))
-        val rep = replacement(old)
-        tables += name -> settled(k.drop(t.frame, key.get).unionByName(rep.df), key)
-        (rep, old)
+    val old = t match {
+      case h: Held => delta(h.form.schema, h.form.rowsUnder(keys))
+      case m: Mat => delta(m.schema, m.rowsUnder(keys))
     }
+    val rep = replacement(old)
+    tables += name -> (t match {
+      case h: Held => kept(h.form.updated(rep.rows, old.rows), keyOf.get(name))
+      case m: Mat => m.upsert(keys, rep.rows)
+    })
+    (rep, old)
   }
 }
 
@@ -569,12 +548,11 @@ object IncrementalGraph {
   import SystemColumns._
   import Transforms.groupKey
 
-  /** One table's change in an edit, frozen: driver-local `rows` of
-    * `schema` when the edit is local, whose LocalRelation frame is built
-    * only when asked for, else a checkpointed frame. */
-  private[graft] final class Delta(val schema: StructType, val rows: Option[Seq[Row]], frame: () => DataFrame) {
-    lazy val df: DataFrame = frame()
-    lazy val isEmpty: Boolean = rows.fold(df.isEmpty)(_.isEmpty)
+  /** One table's change in an edit: driver `rows` of `schema`, whose
+    * LocalRelation frame is built only when asked for. */
+  private[graft] final class Delta(spark: SparkSession, val schema: StructType, val rows: Seq[Row]) {
+    lazy val df: DataFrame = localFrame(spark, rows, schema)
+    def isEmpty: Boolean = rows.isEmpty
   }
 
   /** A materialized table's state in a commit. Immutable, so a map of
@@ -642,22 +620,6 @@ object IncrementalGraph {
   private def settled(df: DataFrame, key: Option[String]): Table =
     fits(df).fold[Table](Mat(checkpoint(df), key))(rows => new Held(df.sparkSession, Resident(df.schema, rows, key)))
 
-  /** The keys an edit touches: a driver-local set when every delta they
-    * come from is local, else a distinct frame of `__k`. */
-  private sealed trait Keys { def select(df: DataFrame, column: String): DataFrame }
-  private final case class LocalKeys(values: Set[Any]) extends Keys {
-    def select(df: DataFrame, column: String): DataFrame = df.filter(keyIn(df(column), values))
-  }
-  private final case class FrameKeys(keys: DataFrame) extends Keys {
-    // null-safe key joins throughout: insert() null-fills missing columns,
-    // so a null group exists in a full recompute and must recompute
-    // incrementally too (equi-semi-joins would skip it)
-    def select(df: DataFrame, column: String): DataFrame =
-      df.join(broadcast(keys), df(column) <=> keys("__k"), "left_semi")
-    def drop(df: DataFrame, column: String): DataFrame =
-      df.join(broadcast(keys), df(column) <=> keys("__k"), "left_anti")
-  }
-
   /** Local rows plus dead keys a [[Mat]] holds before it compacts into a
     * new checkpointed base. */
   private[operators] val CompactAt = 64
@@ -716,7 +678,8 @@ object IncrementalGraph {
     groups.values.toSeq
   }
 
-  /** Null-safe `c ∈ keys`. */
+  /** Null-safe `c ∈ keys`: insert() null-fills missing columns, so a null
+    * group exists in a full recompute and must recompute incrementally too. */
   private def keyIn(c: Column, keys: Set[Any]): Column = {
     val nonNull = keys.filter(_ != null).toSeq
     val hit = if (nonNull.isEmpty) lit(false) else coalesce(c.isin(nonNull: _*), lit(false))

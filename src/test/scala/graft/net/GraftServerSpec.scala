@@ -843,14 +843,14 @@ class GraftServerSpec extends SparkSpec {
     val graph = new IncrementalGraph(spark, PipelineConfig.fromYaml(yaml))
     val server = new GraftServer(graph)
     val long = StructType(Seq(StructField("testForIndex", LongType), StructField("testForIteration", LongType)))
-    // a frame that plans to a Spark job: its edit's deltas are frames, and
-    // each subscriber's Event streams its rows off them with one job
-    def insertJobs(i: Long): Int =
-      jobsDuring(graph.insert("testTable", spark.createDataFrame(Seq(Row(i, i)).asJava, long).repartition(1))).count
+    def insert(i: Long): Unit = graph.insert("testTable", spark.createDataFrame(Seq(Row(i, i)).asJava, long))
+    // the subscriptions that an edit of derived notifies
+    def subscribers: Int = graph.listenerCount("derived")
     val (gone, kept) = (new WireClient(server.port), new WireClient(server.port))
     def event(c: WireClient): JsonNode = c.recvMatching(_.has("Event"))
     try {
-      val none = insertJobs(1)
+      insert(1)
+      assert(subscribers == 0)
       Seq(gone, kept).zipWithIndex.foreach { case (c, i) =>
         c.send("""{"StartListen":{"table_name":"derived","event":"Insert"}}""")
         // a read behind the listen on its connection is answered once the
@@ -858,23 +858,17 @@ class GraftServerSpec extends SparkSpec {
         c.send(query(i + 1, """{"GetAll":{"table":"derived","column":"newColumn","key":{"Integer":3}}}"""))
         assert(rows(c.recvMatching(_.has("RequestResponse"))).size() == 1)
       }
-      val both = insertJobs(2)
-      assert(both > none, s"$both Spark jobs with two subscribers, $none with none")
+      assert(subscribers == 2)
+      insert(2)
       Seq(gone, kept).foreach(c => assert(event(c).get("Event").get("table_name").asText() == "derived"))
       gone.close()
       // the server learns of the close on that connection's reader thread
       val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(10)
-      var i = 3L
-      var one = insertJobs(i)
-      while (one == both && System.nanoTime() < deadline) {
-        event(kept)
-        Thread.sleep(50)
-        i += 1
-        one = insertJobs(i)
-      }
-      // one render job fewer: the closed subscriber's
-      assert(one == both - 1, s"$one Spark jobs after one of two subscribers closed: $none with none, $both with two")
+      while (subscribers == 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(subscribers == 1, s"$subscribers subscriptions after one of two subscribers closed")
+      insert(3)
       assert(event(kept).get("Event").get("table_name").asText() == "derived")
+      assert(subscribers == 1)
     } finally { gone.close(); kept.close(); server.close() }
   }
 

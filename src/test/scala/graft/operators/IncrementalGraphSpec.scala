@@ -74,6 +74,55 @@ class IncrementalGraphSpec extends SparkSpec {
     tables.foreach(t => assert(bag(inc.table(t)) == bag(scratch.table(t)), s"table $t diverged"))
   }
 
+  /** A failure named by its innermost Spark error: a failed job's comes
+    * wrapped in the job's own. */
+  private def condition(e: Throwable): (String, String) =
+    causes(e).collect { case t: org.apache.spark.SparkThrowable => t }.toSeq.lastOption
+      .map(t => (t.getClass.getName, t.getCondition)).getOrElse((e.getClass.getName, e.getMessage))
+
+  /** A from-scratch reference fed the same edits as an [[IncrementalGraph]]:
+    * a [[PipelineGraph]], which aligns each batch with Spark's own frames
+    * and recomputes each derived table from its sources. A Union named in
+    * `merging` upserts by key, and a recompute would fan out a key its
+    * sources repeat; it instead merges each batch of its inputs onto its
+    * pre-edit rows by [[Transforms.union]], the rule of a Union's insert.
+    * A failed insert changes nothing. */
+  private final class Recompute(cfg: PipelineConfig, merging: Seq[String] = Nil) {
+    private val sources = cfg.tables.collect { case s: graft.config.SourceTableConfig => s.name }
+    private var graph = new PipelineGraph(spark, cfg)
+    private var merged = merging.map(u => u -> graph.table(u)).toMap
+
+    def table(t: String): DataFrame = merged.getOrElse(t, graph.table(t))
+
+    /** Inserts `df` into source `t`: its committed rows, or the failure's
+      * [[condition]]. Every table is read, so a failure anywhere shows. */
+    def insert(t: String, df: DataFrame): Either[(String, String), DataFrame] = {
+      val (before, mergedBefore) = (sources.map(s => s -> graph.table(s)).toMap, merged)
+      try {
+        val batch = graph.insert(t, df)
+        merged = merged.map { case (u, rows) =>
+          val fks = cfg.byName(u) match {
+            case c: graft.config.UnionTableConfig => c.tablesAndForeignKeys.collect { case (`t`, fk) => fk }
+            case other => fail(s"${other.name} is not a Union")
+          }
+          u -> (if (fks.isEmpty) rows
+            else Transforms.union((rows, SystemColumns.MatchingKey) +: fks.map(batch -> _)).localCheckpoint(true))
+        }
+        cfg.tables.foreach(c => table(c.name).collect())
+        Right(batch)
+      } catch { case e: Exception =>
+        graph = new PipelineGraph(spark, cfg, before)
+        merged = mergedBefore
+        Left(condition(e))
+      }
+    }
+
+    def delete(t: String, column: String, key: Any): Unit = {
+      assert(merging.isEmpty, "a merged Union takes inserts only")
+      graph.delete(t, column, key)
+    }
+  }
+
   test("incremental tables equal from-scratch recompute after mixed edits") {
     val cfg = PipelineConfig.fromYaml(yaml)
     val inc = new IncrementalGraph(spark, cfg)
@@ -270,28 +319,32 @@ class IncrementalGraphSpec extends SparkSpec {
 
   test("incremental tables equal from-scratch recompute across compaction, local and non-local edits") {
     val cfg = PipelineConfig.fromYaml(yaml)
-    val inc = new IncrementalGraph(spark, cfg)
-    def grades(rs: Row*): Unit = inc.insert("grades", rows(gradeSchema, rs: _*))
+    val (inc, scratch) = (new IncrementalGraph(spark, cfg), new Recompute(cfg))
+    def insert(t: String, df: DataFrame): Unit = { inc.insert(t, df); assert(scratch.insert(t, df).isRight) }
+    def delete(t: String, column: String, key: Any): Unit = { inc.delete(t, column, key); scratch.delete(t, column, key) }
+    def grades(rs: Row*): Unit = insert("grades", rows(gradeSchema, rs: _*))
 
     grades((0 until 20).map(i => Row(s"n$i", 40L + 3 * i)): _*)
     // user names stay unique: the union upserts by key, a recompute would
     // fan out a repeated one
-    inc.insert("users", rows(userSchema, (0 until 25).map(i => Row(s"n$i", 20L + i)): _*))
+    insert("users", rows(userSchema, (0 until 25).map(i => Row(s"n$i", 20L + i)): _*))
     // a non-local insert: the rows come from a Spark job, not the driver
-    inc.insert("grades", spark.range(10)
+    insert("grades", spark.range(10)
       .select(concat(lit("n"), col("id").cast("string")).as("name"), (col("id") * 7 + 30).as("grade")))
-    inc.delete("grades", "name", "n3")
+    delete("grades", "name", "n3")
     (0 until 4).foreach(i => grades(Row(s"n${i * 5}", 61L + i)))
     // one batch of new keys past the compaction cap of stats and profile
     grades((0 to IncrementalGraph.CompactAt + 5).map(i => Row(s"m$i", i % 100L)): _*)
-    inc.insert("users", rows(userSchema, Row("m1", 40L)))
+    insert("users", rows(userSchema, Row("m1", 40L)))
     grades(Row("m1", 77L), Row("n1", 99L))
-    inc.delete("users", "name", "n7")
+    delete("users", "name", "n7")
     grades(Row(null, 55L))
-    inc.insert("grades", spark.range(1).select(lit("m2").as("name"), lit(12L).as("grade")))
+    insert("grades", spark.range(1).select(lit("m2").as("name"), lit(12L).as("grade")))
     grades(Row("m2", 13L))
 
-    assertRecomputes(inc, Seq("curved", "passing", "stats", "profile"))
+    Seq("grades", "users", "curved", "passing", "stats", "profile").foreach { t =>
+      assert(bag(inc.table(t)) == bag(scratch.table(t)), s"table $t diverged from the reference fed the same edits")
+    }
     val stats = inc.table("stats").collect()
       .map(r => r.getAs[String]("aggregatedColumn") -> r.getAs[Long]("sum")).toMap
     assert(stats("m2") == 2L + 12L + 13L)
@@ -433,14 +486,18 @@ class IncrementalGraphSpec extends SparkSpec {
   }
 
   test("union pairing and action rows on the driver equal the Spark join and mapPartitions path") {
-    // the same edits, once as local batches and once as frames that plan
-    // to a Spark job (which take the join, recompute and mapPartitions path)
+    // the same edits as local batches, as frames that plan to a Spark job
+    // (whose rows are collected), and into the reference, which joins the
+    // Union's batches onto its rows and maps the Action over partitions
     val (local, planned) = (testCfgGraph(), testCfgGraph())
+    val scratch = new Recompute(local.config, merging = Seq("unionTest"))
     def both(table: String, schema: StructType, rs: Row*): Unit = {
       local.insert(table, rows(schema, rs: _*))
       val df = rows(schema, rs: _*).repartition(1)
       assert(!IncrementalGraph.isLocal(df))
       planned.insert(table, df)
+      assert(scratch.insert(table, df).isRight)
+      testCfgTables.foreach(t => assert(bag(local.table(t)) == bag(scratch.table(t)), s"table $t diverged from the reference"))
     }
     both("users", userSchema, Row("Alex", 22L), Row("Cara", 30L), Row(null, 40L))
     both("grades", gradeSchema, Row("Alex", 90L), Row("Bob", 50L), Row(null, 7L))
@@ -901,7 +958,7 @@ class IncrementalGraphSpec extends SparkSpec {
     var deltas: Seq[(String, IncrementalGraph.Delta, IncrementalGraph.Delta)] = Nil
     val rowAnalyses = analysesDuring { deltas = inc.insertRows("testTable", testSchema, Seq(Row(3L, 40L))) }
     assert(rowAnalyses.count == 0, s"$rowAnalyses for a one-row testTable insert of rows")
-    assert(deltas.map(d => d._1 -> d._2.rows.get.size) == Seq("testTable" -> 1, "derived" -> 1, "filterTest" -> 1))
+    assert(deltas.map(d => d._1 -> d._2.rows.size) == Seq("testTable" -> 1, "derived" -> 1, "filterTest" -> 1))
     assert(bag(inc.table("derived")) == Seq("22", "32", "42"))
   }
 
@@ -974,111 +1031,120 @@ class IncrementalGraphSpec extends SparkSpec {
   private val rowPathTables = Seq("grades", "users", "measures", "curved", "passing", "stats", "profile",
     "scaled", "big", "totals")
 
-  /** The same insert into two graphs over `rowPathYaml`: as a local batch
-    * into `local`, and into `planned` as a frame that plans to a Spark job
-    * (a cross join with `spark.range`). Each edit's rows, each table, and
-    * any failure must be the same. `ids` keeps `_entryId`s in the
+  /** Two graphs over `rowPathYaml`, and their from-scratch reference. */
+  private final class RowPaths(val local: IncrementalGraph, val planned: IncrementalGraph, val scratch: Recompute)
+
+  /** The same insert into the graphs of `paths`: as a local batch into
+    * `local`, and as a frame that plans to a Spark job (a cross join with
+    * `spark.range`) into `planned`, whose rows it collects, and into the
+    * reference, whose frames align the batch and recompute each table
+    * (the frame path). Each edit's rows must be the same on both graphs,
+    * the committed rows and any failure the same as the reference's, and
+    * every table the same on all three. `ids` keeps `_entryId`s in the
     * comparison, for rows that carry their own. */
-  private def sameOnBothPaths(local: IncrementalGraph, planned: IncrementalGraph, table: String,
-                              schema: StructType, ids: Boolean = false)(rs: Row*): Unit = {
+  private def sameOnBothPaths(paths: RowPaths, table: String, schema: StructType, ids: Boolean = false)
+                             (rs: Row*): Unit = {
+    import paths._
     def rowsOf(df: DataFrame): Seq[String] =
       if (ids) df.collect().map(_.toSeq.mkString("|")).toSeq.sorted else bag(df)
-    // a failure is named by its innermost Spark error: the frame path's
-    // comes wrapped in the failed job's
     def edits(inc: IncrementalGraph, df: DataFrame): Either[(String, String), Seq[(String, Seq[String], Seq[String])]] =
       try Right(inc.insertWithEdits(table, df).map { case (t, i, d) => (t, rowsOf(i), rowsOf(d)) }.toList)
-      catch { case e: Exception =>
-        val cause = causes(e).collect { case t: org.apache.spark.SparkThrowable => t }.toSeq.lastOption
-        Left(cause.map(t => (t.getClass.getName, t.getCondition)).getOrElse((e.getClass.getName, e.getMessage)))
-      }
+      catch { case e: Exception => Left(condition(e)) }
     val frame = rows(schema, rs: _*).crossJoin(spark.range(1)).drop("id")
     assert(!IncrementalGraph.isLocal(frame))
     val before = rowPathTables.map(t => t -> bag(local.table(t))).toMap
     val (l, p) = (edits(local, rows(schema, rs: _*)), edits(planned, frame))
-    assert(l == p, s"the row path and the frame path differ on $table ${rs.mkString(",")}")
+    assert(l.map(_.head._2) == scratch.insert(table, frame).map(rowsOf),
+      s"the row path and the frame path differ on $table ${rs.mkString(",")}")
+    assert(l == p, s"a local and a collected batch differ on $table ${rs.mkString(",")}")
     rowPathTables.foreach { t =>
-      assert(bag(local.table(t)) == bag(planned.table(t)), s"table $t diverged")
+      assert(bag(local.table(t)) == bag(scratch.table(t)), s"table $t diverged from the frame path")
+      assert(bag(planned.table(t)) == bag(local.table(t)), s"table $t diverged on a collected batch")
       if (l.isLeft) assert(bag(local.table(t)) == before(t), s"$t not rolled back")
     }
   }
 
-  private def rowPathGraphs(): (IncrementalGraph, IncrementalGraph) = {
+  private def rowPathGraphs(): RowPaths = {
     val cfg = PipelineConfig.fromYaml(rowPathYaml)
-    val graphs = (new IncrementalGraph(spark, cfg), new IncrementalGraph(spark, cfg))
-    sameOnBothPaths(graphs._1, graphs._2, "grades", gradeSchema)(Row("Alex", 90L), Row("Bob", 50L))
-    sameOnBothPaths(graphs._1, graphs._2, "users", userSchema)(Row("Alex", 22L))
-    graphs
+    val paths = new RowPaths(new IncrementalGraph(spark, cfg), new IncrementalGraph(spark, cfg),
+      new Recompute(cfg, merging = Seq("profile")))
+    sameOnBothPaths(paths, "grades", gradeSchema)(Row("Alex", 90L), Row("Bob", 50L))
+    sameOnBothPaths(paths, "users", userSchema)(Row("Alex", 22L))
+    paths
   }
 
   test("row path ≡ frame path: a missing column is null-filled") {
-    val (local, planned) = rowPathGraphs()
+    val paths = rowPathGraphs()
     val nameOnly = StructType(Seq(StructField("name", StringType)))
-    sameOnBothPaths(local, planned, "grades", nameOnly)(Row("Alex"), Row("Cara"))
-    sameOnBothPaths(local, planned, "users", nameOnly)(Row("Dan"))
-    assert(local.table("grades").filter("grade is null").count() == 2)
+    sameOnBothPaths(paths, "grades", nameOnly)(Row("Alex"), Row("Cara"))
+    sameOnBothPaths(paths, "users", nameOnly)(Row("Dan"))
+    assert(paths.local.table("grades").filter("grade is null").count() == 2)
   }
 
   test("row path ≡ frame path: a Str for an Integer column fails the same ANSI cast and rolls every table back") {
-    val (local, planned) = rowPathGraphs()
+    val paths = rowPathGraphs()
     val strGrade = StructType(Seq(StructField("name", StringType), StructField("grade", StringType)))
-    sameOnBothPaths(local, planned, "grades", strGrade)(Row("Alex", "abc"))
-    val e = intercept[Exception](local.insert("grades", rows(strGrade, Row("Alex", "abc"))))
+    sameOnBothPaths(paths, "grades", strGrade)(Row("Alex", "abc"))
+    val e = intercept[Exception](paths.local.insert("grades", rows(strGrade, Row("Alex", "abc"))))
     assert(causes(e).exists(x => String.valueOf(x.getMessage).contains("CAST_INVALID_INPUT")), s"$e")
     // a Str that is a number casts on both paths
-    sameOnBothPaths(local, planned, "grades", strGrade)(Row("Alex", "7"))
+    sameOnBothPaths(paths, "grades", strGrade)(Row("Alex", "7"))
   }
 
   test("row path ≡ frame path: a caller-supplied _entryId is kept") {
-    val (local, planned) = rowPathGraphs()
+    val paths = rowPathGraphs()
     val withId = gradeSchema.add("_entryId", StringType)
-    sameOnBothPaths(local, planned, "grades", withId, ids = true)(Row("Eve", 61L, "id-1"), Row("Eve", 3L, "id-2"))
-    assert(local.table("curved").filter("_sourceEntryId = 'id-1'").count() == 1)
+    sameOnBothPaths(paths, "grades", withId, ids = true)(Row("Eve", 61L, "id-1"), Row("Eve", 3L, "id-2"))
+    assert(paths.local.table("curved").filter("_sourceEntryId = 'id-1'").count() == 1)
   }
 
   test("row path ≡ frame path: Decimal and Double columns") {
-    val (local, planned) = rowPathGraphs()
+    val paths = rowPathGraphs()
     val measures = StructType(Seq(StructField("name", StringType), StructField("d", DecimalType(38, 18)),
       StructField("f", DoubleType)))
     def dec(s: String) = new java.math.BigDecimal(s)
     // Double sums per key stay exact in any order: at most two addends,
     // or dyadic ones
-    sameOnBothPaths(local, planned, "measures", measures)(
+    sameOnBothPaths(paths, "measures", measures)(
       Row("d", dec("1.123456789012345678"), 0.1), Row("a", dec("-2.5"), 2.75), Row("b", dec("12345678901234567890.5"), 1e16))
-    sameOnBothPaths(local, planned, "measures", measures)(Row("a", dec("0.000000000000000001"), 1.5), Row("c", null, -0.0))
+    sameOnBothPaths(paths, "measures", measures)(Row("a", dec("0.000000000000000001"), 1.5), Row("c", null, -0.0))
     // a Double and a Long column cast to the declared Decimal and Float
     val loose = StructType(Seq(StructField("name", StringType), StructField("d", DoubleType), StructField("f", LongType)))
-    sameOnBothPaths(local, planned, "measures", loose)(Row("b", 0.1, 3L))
+    sameOnBothPaths(paths, "measures", loose)(Row("b", 0.1, 3L))
   }
 
   test("row path ≡ frame path: a Function over nulls") {
-    val (local, planned) = rowPathGraphs()
-    sameOnBothPaths(local, planned, "grades", gradeSchema)(Row("Alex", null), Row(null, 70L), Row(null, null))
-    assert(bag(local.table("curved")).count(_.startsWith("null|")) == 2)
+    val paths = rowPathGraphs()
+    sameOnBothPaths(paths, "grades", gradeSchema)(Row("Alex", null), Row(null, 70L), Row(null, null))
+    assert(bag(paths.local.table("curved")).count(_.startsWith("null|")) == 2)
   }
 
   test("row path ≡ frame path: a Filter whose predicate is null drops the row") {
-    val (local, planned) = rowPathGraphs()
+    val paths = rowPathGraphs()
     val measures = StructType(Seq(StructField("name", StringType), StructField("f", DoubleType)))
-    sameOnBothPaths(local, planned, "grades", gradeSchema)(Row("Fay", null), Row("Fay", 60L))
-    sameOnBothPaths(local, planned, "measures", measures)(Row("g", null), Row("g", 2.0))
-    assert(local.table("passing").filter("name = 'Fay'").count() == 1)
-    assert(local.table("big").count() == 1)
+    sameOnBothPaths(paths, "grades", gradeSchema)(Row("Fay", null), Row("Fay", 60L))
+    sameOnBothPaths(paths, "measures", measures)(Row("g", null), Row("g", 2.0))
+    assert(paths.local.table("passing").filter("name = 'Fay'").count() == 1)
+    assert(paths.local.table("big").count() == 1)
   }
 
-  test("a non-deterministic expression fails a local edit loudly instead of being bound") {
-    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(
-      """tables:
-        |  - name: grades
-        |    kind: source
-        |    columns: {name: Str, grade: Integer}
-        |  - name: noisy
-        |    kind: function
-        |    source_table: grades
-        |    functions: ["r ~ rand()"]
-        |""".stripMargin))
-    val e = intercept[IllegalArgumentException](inc.insert("grades", rows(gradeSchema, Row("Alex", 1L))))
-    assert(e.getMessage.contains("non-deterministic"), e.getMessage)
-    assert(inc.table("grades").count() == 0)
+  test("a non-deterministic expression fails the graph's construction loudly instead of being bound") {
+    // a Function or a Filter, over an empty and over a seeded source: no
+    // edit could run through it, so the graph is refused at build
+    val views = Seq("kind: function\n    functions: [\"r ~ rand()\"]", "kind: filter\n    filter: \"rand() > 0.5\"")
+    for (view <- views; seed <- Seq(Map.empty[String, DataFrame], Map("grades" -> rows(gradeSchema, Row("Alex", 1L))))) {
+      val cfg = PipelineConfig.fromYaml(
+        s"""tables:
+          |  - name: grades
+          |    kind: source
+          |    columns: {name: Str, grade: Integer}
+          |  - name: noisy
+          |    source_table: grades
+          |    $view
+          |""".stripMargin)
+      val e = intercept[IllegalArgumentException](new IncrementalGraph(spark, cfg, seed))
+      assert(e.getMessage.contains("non-deterministic"), e.getMessage)
+    }
   }
 
   /** The test_cfg graph seeded as the `ivm_ingest` benchmark seeds it:
@@ -1153,7 +1219,7 @@ class IncrementalGraphSpec extends SparkSpec {
     val jobs = jobsDuring { analyses = analysesDuring { deltas = inc.deleteDeltas("testTable", "testForIteration", 17L) } }
     assert(jobs.count == 0, s"$jobs for a testTable delete")
     assert(analyses.count == 0, s"$analyses for a testTable delete")
-    assert(deltas.map(d => (d._1, d._2.rows.get.size, d._3.rows.get.size)) ==
+    assert(deltas.map(d => (d._1, d._2.rows.size, d._3.rows.size)) ==
       Seq(("testTable", 0, 1), ("derived", 0, 1), ("filterTest", 0, 1)))
     assertRecomputes(inc, Seq("derived", "filterTest"))
     assert(inc.table("testTable").count() == 199)
@@ -1166,7 +1232,7 @@ class IncrementalGraphSpec extends SparkSpec {
     // the collects of the two recomputes, 2 jobs each
     assert(jobs.count == 4, s"$jobs for a grades delete")
     assert(jobs.callSites.forall(_.startsWith("collect at IncrementalGraph.scala")), s"$jobs")
-    assert(deltas.map(d => (d._1, d._2.rows.get.size, d._3.rows.get.size)) ==
+    assert(deltas.map(d => (d._1, d._2.rows.size, d._3.rows.size)) ==
       Seq(("grades", 0, 1), ("unionTest", 1, 1), ("aggregationTest", 0, 1), ("actionTest", 0, 1)))
     assertRecomputes(inc, testCfgTables)
   }
@@ -1176,7 +1242,7 @@ class IncrementalGraphSpec extends SparkSpec {
     inc.insert("testTable", rows(testSchema, Row(null, 15L), Row(null, 16L), Row(3L, null)))
     inc.insert("grades", rows(gradeSchema, Row(null, 7L), Row("u5", null)))
     val jobs = jobsDuring {
-      assert(inc.deleteDeltas("testTable", "testForIndex", null).head._3.rows.get.size == 2)
+      assert(inc.deleteDeltas("testTable", "testForIndex", null).head._3.rows.size == 2)
     }
     assert(jobs.count == 0, s"$jobs for a null-key testTable delete")
     assert(bag(inc.table("testTable")).count(_.startsWith("null|")) == 0)
@@ -1350,5 +1416,89 @@ class IncrementalGraphSpec extends SparkSpec {
     val ok = inc.insert("grades", rows(gradeSchema, batch.init: _*))
     assert(ok.count() == 19 && form("grades").pending == 0, "the same edit less its overflow freezes")
     assertRecomputes(inc, tables)
+  }
+
+  test("on a seeded bootstrap, a one-row non-local testTable, users or grades insert runs one Spark job and leaves every table as the local insert does") {
+    val (local, collected) = (seededTestCfgGraph(), seededTestCfgGraph())
+    Seq(("testTable", testSchema, Row(3L, 33L)), ("users", userSchema, Row("u3", 44L)),
+        ("grades", gradeSchema, Row("u4", 80L))).foreach { case (t, schema, r) =>
+      local.insert(t, rows(schema, r))
+      val df = rows(schema, r).repartition(1)
+      assert(!IncrementalGraph.isLocal(df))
+      // the frame's collect, and nothing else: the cascade runs on the
+      // driver. Under AQE a collect over a shuffle runs its map stage as a
+      // job of its own, so the one collect is counted against that of an
+      // equal frame (a frame's own second collect reuses its shuffle)
+      val collect = jobsDuring(rows(schema, r).repartition(1).collect())
+      val jobs = jobsDuring(collected.insertWithEdits(t, df))
+      assert(jobs.count == collect.count && jobs.callSites.forall(_.startsWith("collect at IncrementalGraph.scala")),
+        s"$jobs for a one-row non-local $t insert, $collect for its frame's collect")
+      testCfgTables.foreach(x => assert(bag(collected.table(x)) == bag(local.table(x)), s"table $x after a $t insert"))
+    }
+    assertRecomputes(collected, testCfgTables.filterNot(_ == "unionTest"))
+  }
+
+  test("a view over a Mat that local deletes bring under the cap is held from that table's compaction") {
+    val half = IncrementalGraph.ResidentCap / 2 + 8
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(
+      """tables:
+        |  - name: users
+        |    kind: source
+        |    columns: {name: Str, age: Integer}
+        |  - name: grades
+        |    kind: source
+        |    columns: {name: Str, grade: Integer}
+        |  - name: profile
+        |    kind: union
+        |    tables_and_foreign_keys: [[users, name], [grades, name]]
+        |  - name: older
+        |    kind: function
+        |    source_table: profile
+        |    functions: ["name ~ matchingKey", "older ~ age + 1"]
+        |  - name: graded
+        |    kind: filter
+        |    source_table: profile
+        |    filter: "grade >= 0"
+        |""".stripMargin), Map(
+      "users" -> spark.range(half).selectExpr("concat('u', id) as name", "id % 200 as age"),
+      "grades" -> spark.range(half).selectExpr("concat('g', id) as name", "id as grade")))
+    def held(t: String) = inc.pinnedAt(pin => pin(t)).resident.isDefined
+    val views = Seq("older", "graded")
+    assert(!held("profile") && !views.exists(held), "a Union above the cap, and its views with no state")
+    inc.delete("users", "age", 0L)
+    assert(!held("profile") && !views.exists(held), "41 dead keys: not compacted yet")
+    // the compaction holds the Union, and the edit reaches its views
+    inc.delete("users", "age", 1L)
+    assert(held("profile"), "a compaction under the cap holds the table")
+    views.foreach(v => assert(held(v), s"$v is not held after its input's compaction"))
+    assertRecomputes(inc, "profile" +: views)
+    inc.insert("users", rows(userSchema, Row("u0", 5L)))
+    inc.delete("grades", "grade", 7L)
+    assertRecomputes(inc, "profile" +: views)
+    views.foreach(v => assert(residentBag(inc, v) == bag(inc.table(v)), s"$v's form"))
+  }
+
+  test("a delete from a source above the cap cascades into a held Aggregation and a held Union, and equals the recompute") {
+    val n = IncrementalGraph.ResidentCap + 100
+    val inc = new IncrementalGraph(spark, PipelineConfig.fromYaml(yaml), Map(
+      "grades" -> spark.range(n).selectExpr("concat('n', id % 50) as name", "id as grade"),
+      "users" -> spark.range(50).selectExpr("concat('n', id) as name", "20 + id as age")))
+    def held(t: String) = inc.pinnedAt(pin => pin(t)).resident.isDefined
+    assert(!held("grades") && held("stats") && held("profile"), "a source above the cap, its Aggregation and Union held")
+    val profile = recordEdits(inc, "profile")
+    // one row of n7's group, then the whole of n3's
+    val jobs = jobsDuring(inc.delete("grades", "grade", 57L))
+    inc.delete("grades", "name", "n3")
+    assert(held("stats") && held("profile"), "the Aggregation and the Union stay held")
+    Seq("stats", "profile").foreach(t => assert(residentBag(inc, t) == bag(inc.table(t)), s"$t's form"))
+    assertRecomputes(inc, Seq("curved", "passing", "stats", "profile"))
+    // each Union edit replaces one key's row: its sum, then its grade-less row
+    assert(profile.map { case (i, d) => (i.map(_.getAs[String]("matchingKey")), d.map(_.getAs[String]("matchingKey"))) } ==
+      Seq((Seq("n7"), Seq("n7")), (Seq("n3"), Seq("n3"))))
+    assert(profile.last._1.head.isNullAt(profile.last._1.head.fieldIndex("sum")))
+    // the delete's collect, the source's rebase (its one checkpoint), and
+    // the key recomputes of the Aggregation and the Union: no delta is
+    // checkpointed
+    assert(jobs.callSites.count(_.startsWith("localCheckpoint")) == 1, s"$jobs")
   }
 }
